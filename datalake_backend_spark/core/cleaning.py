@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -142,7 +142,13 @@ def non_empty(df: DataFrame) -> bool:
 
     Replaces the reference's full-scan guards (``df.count() == 0``,
     ``agg(sum(size(detections)))`` — ``basic_processing_common.py:20``,
-    ``basic_preprocessing_vehicle.py:45-48``) with ``isEmpty``, which
-    stops at the first non-empty partition.
+    ``basic_preprocessing_vehicle.py:45-48``) with one job that consumes
+    ``df`` in full through the ``noop`` sink and counts its rows as an
+    ``observe()`` metric. Consuming in full, where ``isEmpty`` would stop
+    at the first row, lets every other ``observe()`` metric in ``df``'s
+    plan (the engine's bronze corrupt count) report from the same job.
     """
-    return not df.isEmpty()
+    rows = Observation()
+    probe = df.observe(rows, F.count(F.lit(1)).alias("n"))
+    probe.write.format("noop").mode("overwrite").save()
+    return rows.get["n"] > 0

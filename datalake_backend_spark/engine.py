@@ -14,9 +14,14 @@ zone alongside the compatibility JSON.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from datalake_backend_spark.config import get_spark
 from datalake_backend_spark.core.cleaning import non_empty
@@ -56,6 +61,35 @@ STATUS_OK = 1
 STATUS_EMPTY = -1
 
 
+def _row_count():
+    """The ``observe()`` metric every zone count uses: ``n`` rows."""
+    return F.count(F.lit(1)).alias("n")
+
+
+def _concurrently(spark: SparkSession, *tasks: Callable[[], object]) -> list:
+    """Run independent zone writes at once and return their results.
+
+    The pool is per call and as wide as the task list, capped at the
+    session's default parallelism: a session with fewer task slots than
+    sinks (``local[2]``) could not run the extra jobs at once anyway,
+    and the cap keeps the jobs in flight, each holding its plan on the
+    driver, within what the session can schedule. Every task inherits
+    the caller's local properties (job group, description, scheduler
+    pool) and session tags, so each Spark job stays attributed to the
+    upload that issued it. All tasks are joined before this returns;
+    the first failure, in task order, is re-raised only after every
+    sibling has finished.
+    """
+    width = min(len(tasks), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(width, thread_name_prefix="zone-writer") as pool:
+        # one wrapper per task: each wrapper holds its own copy of the
+        # properties, which the task's thread then owns and may change
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(t)) for t in tasks
+        ]
+    return [f.result() for f in futures]
+
+
 @dataclass
 class ProcessResult:
     status: int
@@ -83,8 +117,28 @@ class Engine:
         constraints: list | None = None,
     ) -> ProcessResult:
         """Full lifecycle for one raw detection document (or a glob of
-        them): bronze → silver parquet + processed JSON → gold parquet +
-        refined JSON → feature splits → optional bulk index export.
+        them), in three steps:
+
+        1. **bronze → silver.** The parsed bronze frame is cached for
+           this step only. One probe (``non_empty``, through the ``noop``
+           sink) parses the JSON into that cache and reports the
+           corrupt-document count, an ``observe()`` metric on the bronze
+           frame. An upload with no silver rows (empty or malformed)
+           returns ``STATUS_EMPTY`` with its ``corrupt_docs`` and writes
+           to no zone. Otherwise the silver parquet is written from the
+           cache, with its row count observed. The cache is dropped when
+           the step ends, on every path.
+        2. **silver → processed + gold**, written concurrently, each
+           reading the silver zone back with its known schema (plus the
+           constraint report, when asked for).
+        3. **gold → refine + every feature split + index export**,
+           written concurrently, each reading the gold zone back with
+           its known schema.
+
+        ``gold_<domain>`` is registered after step 3, or right after the
+        commit with ``versioned_gold``, so a failing step-3 sink leaves
+        the committed snapshot served. Nothing stays cached. Concurrent
+        writes run on a per-call pool (:func:`_concurrently`).
 
         ``versioned_gold=True`` routes the gold zone through
         :class:`~datalake_backend_spark.sources.versioned.VersionedTable`:
@@ -105,39 +159,80 @@ class Engine:
         count before serving.
         """
         pipe = get_pipeline(domain)
-        raw = read_raw_json(self.spark, path, domain=domain)
-        clean, corrupt = split_corrupt(raw)
-        n_corrupt = corrupt.count()
-        silver = pipe.silver(clean)
-        if not non_empty(silver):
-            return ProcessResult(STATUS_EMPTY, domain, corrupt_docs=n_corrupt)
-
-        result = ProcessResult(STATUS_OK, domain, corrupt_docs=n_corrupt)
         zones = {
             "silver": os.path.join(out_dir, "silver", domain),
             "processed": os.path.join(out_dir, "processed", domain),
             "gold": os.path.join(out_dir, "gold", domain),
             "refine": os.path.join(out_dir, "refine", domain),
         }
-
-        # zone layout at scale: partition by ingest date so time-bounded
-        # reprocessing and retention prune at the directory level
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        # row counts ride the write job as observe() metrics — the
-        # written parquet is not re-scanned just to count it
-        obs_silver = Observation()
-        write_table(
-            silver.withColumn("ingest_date", F.current_date()).observe(
-                obs_silver, F.count(F.lit(1)).alias("n")
-            ),
-            zones["silver"],
-            partition_by=["ingest_date"],
+        # the probe fills the bronze cache and the silver write reads it,
+        # so the JSON is parsed once
+        raw = read_raw_json(self.spark, path, domain=domain).cache()
+        try:
+            clean, corrupt = split_corrupt(raw)
+            silver = pipe.silver(clean)
+            if not non_empty(silver):
+                return ProcessResult(
+                    STATUS_EMPTY, domain, corrupt_docs=int(corrupt.get["n"])
+                )
+            # zone layout at scale: partition by ingest date so
+            # time-bounded reprocessing and retention prune at the
+            # directory level; the row count rides the write job
+            silver_rows = Observation()
+            write_table(
+                silver.withColumn("ingest_date", F.current_date()).observe(
+                    silver_rows, _row_count()
+                ),
+                zones["silver"],
+                partition_by=["ingest_date"],
+            )
+        finally:
+            raw.unpersist()
+        result = ProcessResult(
+            STATUS_OK,
+            domain,
+            silver_rows=int(silver_rows.get["n"]),
+            corrupt_docs=int(corrupt.get["n"]),
         )
-        result.silver_rows = int(obs_silver.get["n"])
+        silver_zone = self.spark.read.schema(silver.schema).parquet(
+            zones["silver"]
+        )
 
-        if constraints:
+        def processed() -> None:
+            # the re-nested frame JSON (the reference's shape)
+            frame_cols = [c for c in FRAME_COLS[domain] if c in silver.columns]
+            detail_cols = [c for c in silver.columns if c not in frame_cols]
+            nested = renest_frames(
+                silver_zone, frame_cols, detail_cols, sort_cols=detail_cols[:1]
+            )
+            write_json_document(
+                json_array_document(nested, sort_cols=frame_cols[:1]),
+                zones["processed"],
+            )
+
+        def gold_zone() -> tuple[int, DataFrame]:
+            gold = pipe.gold(silver_zone)
+            if versioned_gold:
+                from datalake_backend_spark.sources.versioned import (
+                    VersionedTable,
+                )
+
+                tbl = VersionedTable(zones["gold"])
+                v = tbl.commit(gold, op="upload")
+                # selective serving reads route through footer-stats
+                # data skipping (serve_gold_where / query_gold)
+                register_versioned_gold(self.spark, domain, tbl, v)
+                return int(tbl.manifest(v)["num_rows"]), tbl.read(self.spark, v)
+            # the row count rides the write job; downstream sinks read
+            # the MATERIALIZED zone instead of recomputing the gold plan
+            obs = Observation()
+            write_table(gold.observe(obs, _row_count()), zones["gold"])
+            return (
+                int(obs.get["n"]),
+                self.spark.read.schema(gold.schema).parquet(zones["gold"]),
+            )
+
+        def constraint_report() -> None:
             from datalake_backend_spark.operators.constraints import (
                 check_constraints,
             )
@@ -153,52 +248,26 @@ class Engine:
             )
             result.outputs["constraint_report"] = report_path
 
-        # processed zone: re-nested frame JSON (the reference's shape)
-        frame_cols = [c for c in FRAME_COLS[domain] if c in silver.columns]
-        detail_cols = [c for c in silver.columns if c not in frame_cols]
-        nested = renest_frames(
-            silver, frame_cols, detail_cols, sort_cols=detail_cols[:1]
-        )
-        write_json_document(
-            json_array_document(nested, sort_cols=frame_cols[:1]),
-            zones["processed"],
-        )
+        step2 = [processed, gold_zone, *([constraint_report] if constraints else [])]
+        result.gold_rows, gold_df = _concurrently(self.spark, *step2)[1]
 
-        gold = pipe.gold(silver)
-        if versioned_gold:
-            from datalake_backend_spark.sources.versioned import VersionedTable
-
-            tbl = VersionedTable(zones["gold"])
-            v = tbl.commit(gold, op="upload")
-            result.gold_rows = int(tbl.manifest(v)["num_rows"])
-            gold_df = tbl.read(self.spark, v)
-            # selective serving reads route through footer-stats data
-            # skipping (serve_gold_where / query_gold)
-            register_versioned_gold(self.spark, domain, tbl, v)
-        else:
-            obs_gold = Observation()
-            write_table(
-                gold.observe(obs_gold, F.count(F.lit(1)).alias("n")),
-                zones["gold"],
+        sinks = [
+            partial(
+                write_json_document, json_array_document(gold_df), zones["refine"]
             )
-            result.gold_rows = int(obs_gold.get["n"])
-            # downstream consumers read the MATERIALIZED gold zone
-            # (cheap columnar scan) instead of recomputing the gold
-            # plan per sink
-            gold_df = self.spark.read.parquet(zones["gold"])
-        write_json_document(json_array_document(gold_df), zones["refine"])
-
+        ]
         if domain in SPLIT_SPECS:
             for name, df in run_splitter(gold_df, domain).items():
                 split_path = os.path.join(out_dir, "split", domain, name)
-                write_table(df, split_path)
+                sinks.append(partial(write_table, df, split_path))
                 result.outputs[f"split/{name}"] = split_path
-
         if export_index:
             idx_path = os.path.join(out_dir, "index", domain)
+            index = f"datalake-{domain}-data"
             id_col = gold_df.columns[0]
-            write_bulk_export(gold_df, idx_path, f"datalake-{domain}-data", id_col)
+            sinks.append(partial(write_bulk_export, gold_df, idx_path, index, id_col))
             result.outputs["index"] = idx_path
+        _concurrently(self.spark, *sinks)
 
         if not versioned_gold:
             register_gold(self.spark, domain, gold_df)

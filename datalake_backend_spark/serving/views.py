@@ -244,11 +244,15 @@ def search_top_docs(
     )
 
 
-def register_serving_views(spark: SparkSession, domains: list[str] | None = None) -> list[str]:
+def register_serving_views(spark: SparkSession) -> list[str]:
     """Create every dashboard view whose gold source is registered.
-    Returns the view names created."""
+    Returns the view names created.
+
+    Each gold source is probed by name with ``tableExists``: listing
+    the whole catalog runs Spark jobs, which a dashboard read would pay
+    on every refresh."""
     available = {
-        t.name for t in spark.catalog.listTables() if t.name.startswith("gold_")
+        src for src in set(VIEW_SOURCES.values()) if spark.catalog.tableExists(src)
     }
     created = []
     for name, sql in DASHBOARD_VIEWS.items():

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -65,20 +65,25 @@ def read_raw_json(
     )
 
 
-def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined) split of a bronze frame.
+def split_corrupt(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """(clean, corrupt count) split of a bronze frame, with no job and
+    no cache.
 
-    Spark forbids projecting ONLY ``_corrupt_record`` straight off a
-    JSON scan (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN), so
-    the quarantine side caches the parsed batch first — correct for the
-    per-file ingest batches this mirrors (reference processes one
-    document per request). At lake scale the medallion flow materializes
-    bronze to parquet before this split, which lifts the restriction and
-    keeps the split fully distributed.
+    The quarantine count is an ``observe()`` metric ``n`` on the bronze
+    frame, reported by whichever action first consumes ``clean`` IN FULL
+    (the engine's emptiness probe). A limit-style action would report a
+    partial count, and one that prunes the scan down to
+    ``_corrupt_record`` alone is rejected by Spark
+    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN). A caller
+    that consumes ``clean`` more than once caches ``df`` itself and
+    unpersists it when done, as the engine does for its probe and
+    silver write.
     """
-    cached = df.cache()
-    corrupt = cached.where(F.col(CORRUPT_COL).isNotNull())
-    clean = cached.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+    corrupt = Observation()
+    observed = df.observe(
+        corrupt, F.count_if(F.col(CORRUPT_COL).isNotNull()).alias("n")
+    )
+    clean = observed.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     return clean, corrupt
 
 

@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
+from contextlib import contextmanager
 
 import pytest
 
@@ -60,6 +63,159 @@ def test_corrupt_document_counted(engine, tmp_path):
     res = engine.process_document(str(p), "safety", str(tmp_path / "lake3"))
     assert res.status == STATUS_EMPTY
     assert res.corrupt_docs == 1
+
+
+def _tree_bytes(root) -> dict[str, bytes]:
+    """Every file under ``root``: relative path → contents."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+@contextmanager
+def _job_group(sc, group: str):
+    """Tag this thread's Spark jobs with ``group``; on exit, wait for the
+    listener bus so the status tracker has seen every job, and untag."""
+    sc.setJobGroup(group, group)
+    try:
+        yield sc.statusTracker()
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+
+
+@pytest.mark.parametrize(
+    "text", ["[]", "{definitely not json"], ids=["empty", "malformed"]
+)
+def test_skipped_upload_leaves_zones_untouched(engine, tmp_path, text):
+    """An empty or malformed upload after a valid one of the same domain
+    reports STATUS_EMPTY and writes nothing to any zone."""
+    out = str(tmp_path / "lake")
+    ok = engine.process_document(
+        write_fixture(tmp_path, "vehicle"), "vehicle", out, export_index=True
+    )
+    assert ok.status == STATUS_OK
+    before = _tree_bytes(out)
+    bad = tmp_path / "skip.json"
+    bad.write_text(text)
+    res = engine.process_document(str(bad), "vehicle", out, export_index=True)
+    assert res.status == STATUS_EMPTY
+    assert res.corrupt_docs == int(text != "[]")
+    assert _tree_bytes(out) == before
+
+
+def test_glob_with_one_malformed_file(engine, tmp_path):
+    """A glob upload lands its valid documents and counts the bad one."""
+    docs = tmp_path / "docs"
+    docs.mkdir()
+    write_fixture(docs, "vehicle")
+    (docs / "bad.json").write_text("{definitely not json")
+    res = engine.process_document(
+        str(docs / "*.json"), "vehicle", str(tmp_path / "lake")
+    )
+    assert res.status == STATUS_OK
+    assert res.corrupt_docs == 1
+    assert res.silver_rows == 4 and res.gold_rows == 1
+
+
+@pytest.mark.parametrize("versioned", [False, True], ids=["plain", "versioned"])
+def test_sink_failure_propagates_after_siblings(
+    engine, spark, tmp_path, monkeypatch, versioned
+):
+    """A failing sink surfaces from process_document, but only after its
+    concurrent siblings finished; no writer thread outlives the call.
+    A versioned gold snapshot is served from its commit on, so it stays
+    registered; plain gold is registered only once every sink landed."""
+    from datalake_backend_spark import engine as engine_mod
+    from datalake_backend_spark.pipelines.splitter import SPLIT_SPECS
+
+    real_write_table = engine_mod.write_table
+    finished = []
+
+    def slow_write_table(df, path, *args, **kwargs):
+        if os.sep + "split" + os.sep in path:
+            time.sleep(0.2)
+        real_write_table(df, path, *args, **kwargs)
+        finished.append(path)
+
+    def failing_export(*args, **kwargs):
+        raise RuntimeError("index sink down")
+
+    monkeypatch.setattr(engine_mod, "write_table", slow_write_table)
+    monkeypatch.setattr(engine_mod, "write_bulk_export", failing_export)
+    spark.catalog.dropTempView("gold_vehicle")
+    with pytest.raises(RuntimeError, match="index sink down"):
+        engine.process_document(
+            write_fixture(tmp_path, "vehicle"),
+            "vehicle",
+            str(tmp_path / "lake"),
+            export_index=True,
+            versioned_gold=versioned,
+        )
+    spec = SPLIT_SPECS["vehicle"]
+    n_splits = len(spec.features) + len(spec.dist_cols) + 1  # + summary
+    assert sum(os.sep + "split" + os.sep in p for p in finished) == n_splits
+    assert not [t for t in threading.enumerate() if t.name.startswith("zone-writer")]
+    assert spark.catalog.tableExists("gold_vehicle") == versioned
+
+
+def test_upload_jobs_carry_callers_job_group(engine, spark, tmp_path):
+    """Every job an upload submits, from any writer thread, carries the
+    caller's job group: the ids between two marker jobs are exactly the
+    group's."""
+    sc = spark.sparkContext
+    path = write_fixture(tmp_path, "vehicle")
+    with _job_group(sc, "before-upload") as tracker:
+        sc.parallelize([0], 1).count()
+    (before,) = tracker.getJobIdsForGroup("before-upload")
+    with _job_group(sc, "upload-under-test"):
+        engine.process_document(
+            path, "vehicle", str(tmp_path / "lake"), export_index=True
+        )
+    with _job_group(sc, "after-upload"):
+        sc.parallelize([0], 1).count()
+    (after,) = tracker.getJobIdsForGroup("after-upload")
+    upload = set(tracker.getJobIdsForGroup("upload-under-test"))
+    assert upload and upload == set(range(before + 1, after))
+
+
+def test_uploads_leave_no_persisted_rdds(engine, spark, tmp_path):
+    """Repeated uploads on one long-lived session cache nothing.
+
+    Compared by RDD id, not by count: the context cleaner may unpersist
+    frames that earlier tests left cached while the uploads run."""
+    jsc = spark.sparkContext._jsc
+    start = set(jsc.getPersistentRDDs().keys())
+    for i, domain in enumerate(("vehicle", "common", "vehicle")):
+        d = tmp_path / str(i)
+        d.mkdir()
+        res = engine.process_document(
+            write_fixture(d, domain), domain, str(tmp_path / "lake")
+        )
+        assert res.status == STATUS_OK
+    assert set(jsc.getPersistentRDDs().keys()) - start == set()
+
+
+def test_serving_refresh_runs_no_jobs(engine, spark, tmp_path):
+    """A dashboard refresh submits no Spark job and creates exactly the
+    views whose gold source the catalog lists."""
+    from datalake_backend_spark.serving.views import DASHBOARD_VIEWS, VIEW_SOURCES
+
+    engine.process_document(
+        write_fixture(tmp_path, "vehicle"), "vehicle", str(tmp_path / "lake")
+    )
+    listed = {t.name for t in spark.catalog.listTables() if t.name.startswith("gold_")}
+    expected = [n for n in DASHBOARD_VIEWS if VIEW_SOURCES[n] in listed]
+    sc = spark.sparkContext
+    with _job_group(sc, "refresh-under-test") as tracker:
+        created = engine.refresh_serving_views()
+    assert tracker.getJobIdsForGroup("refresh-under-test") == []
+    assert created == expected
 
 
 @pytest.mark.parametrize("domain", sorted(DOCS))
