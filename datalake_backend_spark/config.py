@@ -33,6 +33,18 @@ from pyspark.sql import SparkSession
 # spark-submit and these are ignored.
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+
+def _local_driver_mem() -> str:
+    """Default heap of a local-mode driver JVM: 16g, capped at half of
+    physical memory. The JVM, the Python workers and the OS share the
+    host; a 16g heap on a 15 GB host grows past physical memory and the
+    OOM killer takes the JVM."""
+    try:
+        physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):  # no sysconf names here
+        return "16g"
+    return f"{min(16 << 10, physical // 2 >> 20)}m"
+
 #: Defaults applied to every session. Values chosen to be valid both on
 #: local[N] (single JVM) and on a large cluster (AQE re-plans at runtime).
 ENGINE_CONF: dict[str, str] = {
@@ -186,10 +198,10 @@ def get_spark(
         # data sizes the same code handles on a cluster (hit by the
         # 10x scale-stress). Only effective for the process's FIRST
         # session (the JVM is launched with it); later get_spark calls
-        # reuse the running JVM.
+        # reuse the running JVM. SPARK_GRAFT_DRIVER_MEM overrides.
         conf.setdefault(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _local_driver_mem(),
         )
     if extra_conf:
         conf.update(extra_conf)

@@ -22,7 +22,9 @@ import logging
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from datalake_backend_spark.core import onetask
 from datalake_backend_spark.core.cache import BoundedFrameCache
 from datalake_backend_spark.datapipe.text import tokens
 
@@ -929,7 +931,19 @@ def cluster_near_dups(
 
     Pair detection (MinHash / SimHash / embedding buckets) yields edges;
     canonical-keep needs COMPONENTS (a~b, b~c ⇒ keep one of {a,b,c} even
-    though (a,c) was never emitted as a pair). Fast path: iterative
+    though (a,c) was never emitted as a pair).
+
+    Two paths, chosen only by the size of the symmetrized edge frame
+    (the count the loop takes anyway to right-size itself). Up to
+    ``core.onetask._LOCAL_ROWS`` rows the components are found in ONE
+    task by union-find with min labels (``core.onetask``): the rounds
+    below cost one or more Spark jobs each, which on a duplicate-cluster
+    graph of a few hundred thousand edges is nearly all scheduling, and
+    one thread finishes first (the McSherry et al. "COST" argument;
+    the threshold and its crossover are in ``core.onetask``). The
+    one-task result is lazy: the solve runs with the caller's action.
+
+    Above the threshold, the distributed path: iterative
     min-label propagation — each round every node adopts the smallest
     label among itself and its neighbors, converging in O(component
     diameter) rounds. Near-dup components are duplicate clusters — tiny
@@ -955,13 +969,22 @@ def cluster_near_dups(
     und = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
+    # one count picks the path and sizes the loop (cheap: und is
+    # checkpointed)
+    n_edges = onetask.count_rows(und)
+    if onetask.fits_one_task(n_edges):
+        ids = und.schema["src"].dataType
+        return onetask.one_task(
+            {"edges": und},
+            onetask.component_rows,
+            StructType().add("node", ids).add("cluster_id", ids),
+        )
     # right-size the loop to the GRAPH, not the upstream partitioning:
     # the union inherits 2× the pair-join's partitions, and every
     # round's join/agg/convergence-probe then pays that task count as
     # fixed overhead. Duplicate-cluster graphs are typically orders of
     # magnitude smaller than the corpus that produced them — aim for
-    # ~1M edges per partition (the count is free: und is checkpointed).
-    n_edges = und.count()
+    # ~1M edges per partition.
     parts = int(max(2, min(und.rdd.getNumPartitions(), n_edges // 1_000_000 + 2)))
     if parts < und.rdd.getNumPartitions():
         und = und.repartition(parts, "src").localCheckpoint()
@@ -1002,8 +1025,10 @@ def cluster_near_dups(
             .localCheckpoint(eager=False)
         )
         row = prop.agg(
+            # null-safe: a node with no old label (NULL _old) counts
+            # as changed instead of dropping out of the sum
             F.sum(
-                (F.col("cluster_id") != F.col("_old")).cast("long")
+                (~F.col("cluster_id").eqNullSafe(F.col("_old"))).cast("long")
             ).alias("n_changed"),
             F.count(F.lit(1)).alias("n_nodes"),
         ).first()

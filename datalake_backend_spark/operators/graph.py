@@ -21,20 +21,31 @@ edge list. The flooring loses < 1 unit of mass per edge per round
 (≤ 5e-12 of total at default scale) — noise for ranking, determinism
 for the oracle.
 
-Scale shape: per iteration ONE equi-join (ranks ⋈ edges on src) and
-ONE groupBy(dst) aggregate; the node table and the 1-row node-count
+Scale shape: two paths, chosen only by the edge frame's row count.
+Up to ``core.onetask._LOCAL_ROWS`` rows (pagerank, personalized
+pagerank, BFS, k-core, bounded SSSP) the whole loop runs as ONE task:
+the inputs are unioned into one partition and a plain-Python solver
+runs the same integer algorithm over them (``core.onetask``) — a
+handful of Spark jobs per call instead of one or more per round, and
+the data still never visits the driver. Above it, the distributed loop:
+per iteration ONE equi-join (ranks ⋈ edges on src) and ONE
+groupBy(dst) aggregate; the node table and the 1-row node-count
 aggregate are reused across iterations (scalar-totals idiom, no
 ``collect()``). Iterations are a fixed small constant — the loop is
-driver-side control flow over lazy plans, the data never visits the
-driver. Dangling nodes (no out-edges) keep the teleport share and
-simply donate nothing, the standard "removed dangling mass"
-simplification.
+driver-side control flow over lazy plans. Both paths return the same
+rows with the same types. Dangling nodes (no out-edges) keep the
+teleport share and simply donate nothing, the standard "removed
+dangling mass" simplification.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from functools import reduce
 
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import LongType, StructType
+
+from datalake_backend_spark.core import onetask
 from datalake_backend_spark.core.cache import BoundedFrameCache
 
 #: bounded share-the-scan persists for NON-iterative graph operators
@@ -51,7 +62,7 @@ _GRAPH_CACHE = BoundedFrameCache(floor=4)
 _ROWS_PER_PART = 1_000_000
 
 
-def _right_size(df: DataFrame, key: str) -> DataFrame:
+def _right_size(df: DataFrame, key: str, n: int | None = None) -> DataFrame:
     """Right-size a PERSISTED loop-invariant frame to the graph, not
     the upstream partitioning (the CC-loop idiom, round-14): count it
     (materializing the cache — the loop's first iteration would pay
@@ -61,16 +72,44 @@ def _right_size(df: DataFrame, key: str) -> DataFrame:
     that maps over the cache then runs |parts| tasks instead of the
     inherited count. Scale-adaptive by construction: at real data
     sizes ``n // _ROWS_PER_PART`` exceeds the inherited count and this
-    is a no-op (the count probe is one pass over the cache)."""
-    n = df.count()
+    is a no-op (the count probe is one pass over the cache). A caller
+    that has already counted ``df`` passes the count as ``n``."""
+    if n is None:
+        n = onetask.count_rows(df)
     cur = df.rdd.getNumPartitions()
     parts = int(max(2, min(cur, n // _ROWS_PER_PART + 2)))
     if parts >= cur:
         return df
     sized = df.repartition(parts, key).persist()
-    sized.count()  # materialize before releasing the oversized copy
+    onetask.count_rows(sized)  # materialize before releasing the old copy
     df.unpersist()
     return sized
+
+
+def _small_graph(
+    solve, value: str, edges: DataFrame, sources: DataFrame | None = None, **params
+) -> DataFrame:
+    """The one-task path of an iterative operator: ``solve`` (a
+    ``core.onetask`` solver) over ``edges`` (``src``, ``dst`` and any
+    extra columns the solver reads) and the optional ``sources``.
+    Returns ``(node, <value>)`` with ``value`` BIGINT and node ids of
+    the type Spark's union gives src, dst and the source ``node`` — the
+    type the distributed loop returns for a graph whose src and dst
+    share one type."""
+    frames = {"edges": edges}
+    if sources is not None:
+        frames["sources"] = sources.select("node")
+    id_cols = ("src", "dst", "node")
+    ids = [df.select(c) for df in frames.values() for c in df.columns if c in id_cols]
+    node = reduce(DataFrame.union, ids).schema[0].dataType
+    inputs = {
+        name: df.select(
+            *[F.col(c).cast(node).alias(c) if c in id_cols else c for c in df.columns]
+        )
+        for name, df in frames.items()
+    }
+    schema = StructType().add("node", node).add(value, LongType())
+    return onetask.one_task(inputs, solve, schema, **params)
 
 
 def _finish(result: DataFrame, cached: list[DataFrame], materialize: bool) -> DataFrame:
@@ -118,6 +157,12 @@ def pagerank(
     re-execution cost, the same hazard the connected-components loop in
     ``datapipe.dedup`` checkpoints against. Checkpointing changes WORK
     SCHEDULING only, never the integer ranks.
+
+    Scale shape: an edge frame of at most ``core.onetask._LOCAL_ROWS``
+    rows is ranked in ONE task (edge count, solve, checkpoint: a few
+    jobs whatever ``iterations`` is; ``checkpoint_every`` is then
+    moot). Larger frames run the distributed loop of the module
+    docstring after that count.
     """
     if not 0 < teleport_pct < 100:
         raise ValueError("teleport_pct must be in (0, 100)")
@@ -128,8 +173,20 @@ def pagerank(
     # NOT right-sized (round-14, measured): the node/degree table is
     # derived FROM this cache, so shrinking it under-parallelizes the
     # explode+aggregate and the sizing cost outweighs the per-
-    # iteration task savings (min-of-3 x3 A/B: 4.5-4.9 -> 5.2-5.5 s)
+    # iteration task savings (min-of-3 x3 A/B: 4.5-4.9 -> 5.2-5.5 s).
+    # The size check's count doubles as the cache materializer.
     edges = edges.persist()
+    if onetask.fits_one_task(onetask.count_rows(edges)):
+        ranks = _small_graph(
+            onetask.rank_rows,
+            "rank_scaled",
+            edges.select("src", "dst"),
+            iterations=iterations,
+            scale=scale,
+            teleport_pct=teleport_pct,
+            seeded=False,
+        )
+        return _finish(ranks, [edges], materialize)
     # node set + out-degree in ONE aggregate (explode each edge to a
     # src row carrying 1 and a dst row carrying 0, sum per node) —
     # the union+distinct / groupBy-degree / join formulation costs
@@ -203,7 +260,9 @@ def bfs_hops(
     frontier sets and takes MIN(hop) — the anti-join pruning here
     changes WORK, never the result.
 
-    ``sources`` must have a ``node`` column. Scale shape: per level
+    ``sources`` must have a ``node`` column. Scale shape: an edge frame
+    of at most ``core.onetask._LOCAL_ROWS`` rows (the right-sizing
+    count decides) is searched in ONE task. Above it, per level
     ONE equi-join frontier⋈edges and ONE distinct, with the visited
     set pruned via left_anti so a dense graph's frontier never
     re-expands already-settled nodes (at web scale this pruning is the
@@ -213,7 +272,15 @@ def bfs_hops(
     typically derive it (join + distinct + symmetrize), and without the
     cache that derivation re-executes once per level.
     """
-    edges = _right_size(edges.persist(), "src")
+    edges = edges.persist()
+    n = onetask.count_rows(edges)
+    if onetask.fits_one_task(n):
+        hops = _small_graph(
+            onetask.bfs_rows, "hop", edges.select("src", "dst"), sources,
+            max_hops=max_hops,
+        )
+        return _finish(hops, [edges], materialize)
+    edges = _right_size(edges, "src", n)
     frontier = sources.select("node").distinct().withColumn(
         "hop", F.lit(0).cast("bigint")
     ).persist()
@@ -313,17 +380,34 @@ def personalized_pagerank(
     ``teleport·scale div (100·S)`` if it is a source (else 0) plus the
     damped in-neighbor contributions. All-BIGINT div arithmetic —
     bit-exact in any engine; nodes never reached keep rank 0 and are
-    still returned (the twin must too)."""
+    still returned (the twin must too).
+
+    Scale shape: as :func:`pagerank` — one task up to
+    ``core.onetask._LOCAL_ROWS`` edge rows, the distributed loop
+    above."""
     if not 0 < teleport_pct < 100:
         raise ValueError("teleport_pct must be in (0, 100)")
     damping = 100 - teleport_pct
-    src_set = sources.select("node").distinct()
     # fail fast on an empty seed set: `scale div _s` with _s=0 is NULL
     # in Spark, which would quietly yield all-NULL ranks instead of an
-    # error (the eager count is one tiny job over the seed frame)
-    if src_set.isEmpty():
+    # error (a limit-1 probe of the seed frame; emptiness needs no
+    # distinct, so no shuffle)
+    if sources.select("node").isEmpty():
         raise ValueError("personalized_pagerank needs a non-empty sources frame")
     edges = edges.persist()  # not right-sized - see pagerank
+    if onetask.fits_one_task(onetask.count_rows(edges)):
+        ranks = _small_graph(
+            onetask.rank_rows,
+            "rank_scaled",
+            edges.select("src", "dst"),
+            sources,
+            iterations=iterations,
+            scale=scale,
+            teleport_pct=teleport_pct,
+            seeded=True,
+        )
+        return _finish(ranks, [edges], materialize)
+    src_set = sources.select("node").distinct()
     # node set + out-degree in ONE aggregate (see pagerank), then a
     # FULL outer join with the seed set so seeds outside the edge set
     # still rank (teleport-only mass)
@@ -400,8 +484,10 @@ def kcore_peel(
     approximation and converges in practice within a few rounds on
     power-law graphs). Integer degrees, no floats anywhere.
 
-    Scale shape: per round ONE groupBy(src) degree aggregate over the
-    live edge set and TWO semi-joins (src-keep, dst-keep) — the keep
+    Scale shape: an edge frame of at most ``core.onetask._LOCAL_ROWS``
+    rows is peeled in ONE task. Above it, per round ONE groupBy(src)
+    degree aggregate over the live edge set and TWO semi-joins
+    (src-keep, dst-keep) — the keep
     set is node-sized, so AQE broadcasts it when small and
     shuffle-joins when not; the edge set never visits the driver.
     ``checkpoint_every`` truncates the growing lazy plan the same way
@@ -419,9 +505,15 @@ def kcore_peel(
     # NOT right-sized (round-14, measured): unlike the other loops'
     # edge tables, this frame is superseded by a NEW persisted frame
     # every round, so the sizing pass only added upfront cost
-    # (min-of-3 A/B: 2.1-2.6 s -> 3.5 s with sizing)
+    # (min-of-3 A/B: 2.1-2.6 s -> 3.5 s with sizing). The size check's
+    # count materializes the cache the first round reads.
     live = edges.select("src", "dst").persist()
     cached.append(live)
+    if onetask.fits_one_task(onetask.count_rows(live)):
+        core = _small_graph(
+            onetask.kcore_rows, "core_degree", live, k=k, rounds=rounds
+        )
+        return _finish(core, cached, materialize)
     for i in range(rounds):
         deg = live.groupBy("src").agg(F.count("*").alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("src").persist()
@@ -527,7 +619,9 @@ def bounded_sssp(
     neighborhood query), so the result is a deterministic integer
     function of the edge list and the oracle can pin it bit-exactly.
 
-    Scale shape: per round ONE equi-join (current frontier ⋈ edges on
+    Scale shape: an edge frame of at most ``core.onetask._LOCAL_ROWS``
+    rows (the right-sizing count decides) is relaxed in ONE task.
+    Above it, per round ONE equi-join (current frontier ⋈ edges on
     src) + ONE ``min`` aggregate, with the frontier pruned to rows
     that IMPROVED this round — settled nodes stop generating work, so
     dense graphs converge to empty frontiers well before the bound
@@ -538,12 +632,16 @@ def bounded_sssp(
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
     cached: list[DataFrame] = []
-    edges = _right_size(
-        edges.select(
-            "src", "dst", F.col("cost").cast("bigint").alias("cost")
-        ).persist(),
-        "src",
-    )
+    edges = edges.select(
+        "src", "dst", F.col("cost").cast("bigint").alias("cost")
+    ).persist()
+    n = onetask.count_rows(edges)
+    if onetask.fits_one_task(n):
+        dists = _small_graph(
+            onetask.sssp_rows, "dist", edges, sources, max_hops=max_hops
+        )
+        return _finish(dists, [edges], materialize)
+    edges = _right_size(edges, "src", n)
     cached.append(edges)
     best = sources.select("node").distinct().withColumn(
         "dist", F.lit(0).cast("bigint")

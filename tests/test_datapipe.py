@@ -781,13 +781,18 @@ def test_cluster_near_dups_transitive(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_cluster_near_dups_star_fallback_path_graph(spark):
+def test_cluster_near_dups_star_fallback_path_graph(spark, monkeypatch):
     """Worst-case diameter: a 60-edge path with star_after=2 exceeds
     the propagation budget and auto-switches to large-star/small-star
     — the pathological graph degrades gracefully (no RuntimeError) and
     the labels still match the single-component ground truth. A node
-    appearing only in a self-pair keeps itself as cluster id."""
+    appearing only in a self-pair keeps itself as cluster id. Runs the
+    distributed loop (a graph this small is otherwise solved in one
+    task)."""
+    from datalake_backend_spark.core import onetask
     from datalake_backend_spark.datapipe.dedup import cluster_near_dups
+
+    monkeypatch.setattr(onetask, "_LOCAL_ROWS", -1)
 
     n = 60
     pairs = [(i, i + 1) for i in range(n)] + [(99, 99)]

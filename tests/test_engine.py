@@ -255,6 +255,32 @@ def test_object_store_conf_shape(monkeypatch):
     assert explicit["spark.hadoop.fs.s3a.connection.ssl.enabled"] == "true"
 
 
+def test_local_driver_heap_fits_host(monkeypatch):
+    """The default local driver heap is 16g capped at half of physical
+    memory, so the JVM cannot outgrow a small host; 16g where memory
+    allows, 16g when the host's size cannot be read."""
+    import os
+
+    from datalake_backend_spark import config
+
+    pages = {"SC_PAGE_SIZE": 4096}
+
+    def sysconf(name):
+        return pages[name]
+
+    monkeypatch.setattr(os, "sysconf", sysconf)
+    pages["SC_PHYS_PAGES"] = (15 << 30) // 4096  # a 15 GB host
+    assert config._local_driver_mem() == "7680m"
+    pages["SC_PHYS_PAGES"] = (64 << 30) // 4096
+    assert config._local_driver_mem() == "16384m"
+
+    def unknown(name):
+        raise ValueError(name)
+
+    monkeypatch.setattr(os, "sysconf", unknown)
+    assert config._local_driver_mem() == "16g"
+
+
 def test_versioned_gold_upload_log(engine, spark, tmp_path):
     """versioned_gold=True turns the gold zone into a commit log: each
     upload is a snapshot, re-uploads stay time-travelable, and the

@@ -237,13 +237,17 @@ def test_pagerank_integer_exact(spark):
     assert again == five
 
 
-def test_pagerank_checkpoint_bounds_plan_depth(spark):
+def test_pagerank_checkpoint_bounds_plan_depth(spark, monkeypatch):
     """checkpoint_every cuts the iteration loop's lazy lineage: at 20
     iterations the un-checkpointed plan grows O(iterations) deep while
     checkpoint_every=5 keeps the analyzed plan bounded by one segment
     — and the integer ranks are bit-identical either way (the
-    checkpoint changes scheduling, never arithmetic)."""
+    checkpoint changes scheduling, never arithmetic). Runs the
+    distributed loop: the one-task path has no lineage to cut."""
+    from datalake_backend_spark.core import onetask
     from datalake_backend_spark.operators.graph import pagerank
+
+    monkeypatch.setattr(onetask, "_LOCAL_ROWS", -1)
 
     edges = spark.createDataFrame(
         [("a", "b"), ("c", "b"), ("b", "a"), ("b", "c"), ("a", "c")],
@@ -263,12 +267,16 @@ def test_pagerank_checkpoint_bounds_plan_depth(spark):
     }
 
 
-def test_ppr_checkpoint_bounds_plan_depth(spark):
+def test_ppr_checkpoint_bounds_plan_depth(spark, monkeypatch):
     """personalized_pagerank mirrors pagerank's checkpoint_every: at 20
     iterations the un-checkpointed lazy plan grows O(iterations) deep
     while checkpoint_every=5 stays bounded — integer ranks identical,
-    including via the default materialized path."""
+    including via the default materialized path. Runs the distributed
+    loop, as the pagerank test does."""
+    from datalake_backend_spark.core import onetask
     from datalake_backend_spark.operators.graph import personalized_pagerank
+
+    monkeypatch.setattr(onetask, "_LOCAL_ROWS", -1)
 
     edges = spark.createDataFrame(
         [("a", "b"), ("c", "b"), ("b", "a"), ("b", "c"), ("a", "c")],
@@ -289,12 +297,15 @@ def test_ppr_checkpoint_bounds_plan_depth(spark):
     assert {r.node: r.rank_scaled for r in dflt.collect()} == want
 
 
-def test_graph_ops_release_cached_frames(spark):
+def test_graph_ops_release_cached_frames(spark, monkeypatch):
     """All four graph operators persist their edge (and node/frontier)
     frames internally; with the default materialize=True they must
     unpersist them on exit — a long-lived session running graph queries
-    repeatedly must not accumulate pinned executor storage."""
+    repeatedly must not accumulate pinned executor storage. Holds on
+    the one-task path and on the distributed loop."""
     from pyspark import StorageLevel
+
+    from datalake_backend_spark.core import onetask
     from datalake_backend_spark.operators.graph import (
         bfs_hops,
         pagerank,
@@ -310,16 +321,19 @@ def test_graph_ops_release_cached_frames(spark):
             "src string, dst string",
         )
 
-    for call in (
+    calls = (
         lambda e: pagerank(e, iterations=2),
         lambda e: bfs_hops(e, srcs, max_hops=2),
         lambda e: triangle_count(e),
         lambda e: personalized_pagerank(e, srcs, iterations=2),
-    ):
-        e = fresh()
-        assert call(e).count() > 0
-        # the caller's frame was persisted inside; it must be released
-        assert e.storageLevel == StorageLevel.NONE
+    )
+    for local_rows in (onetask._LOCAL_ROWS, -1):  # one task, then distributed
+        monkeypatch.setattr(onetask, "_LOCAL_ROWS", local_rows)
+        for call in calls:
+            e = fresh()
+            assert call(e).count() > 0
+            # the caller's frame was persisted inside; it must be released
+            assert e.storageLevel == StorageLevel.NONE
 
 
 def test_ppr_empty_sources_raises(spark):

@@ -145,7 +145,12 @@ def test_scd2_invariants_property(spark, current_rows, change_rows):
 def test_cluster_near_dups_matches_union_find(spark, edges):
     """Min-label propagation equals a reference union-find on random
     edge lists: same node set, same component partition, cluster_id is
-    the component minimum."""
+    the component minimum. Checked on the one-task path (the default at
+    this size) and on the distributed loop, with and without the
+    large-star/small-star fallback."""
+    from unittest import mock
+
+    from datalake_backend_spark.core import onetask
     from datalake_backend_spark.datapipe.dedup import cluster_near_dups
 
     parent: dict[int, int] = {}
@@ -168,15 +173,18 @@ def test_cluster_near_dups_matches_union_find(spark, edges):
     want = {n: expected[find(n)] for n in parent}
 
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.node: r.cluster_id for r in cluster_near_dups(df).collect()}
-    assert got == want
-    # star_after=0 forces the large-star/small-star fallback on the
-    # same random graph — both algorithms must agree with union-find
-    star = {
-        r.node: r.cluster_id
-        for r in cluster_near_dups(df, star_after=0).collect()
-    }
-    assert star == want
+    one_task = {r.node: r.cluster_id for r in cluster_near_dups(df).collect()}
+    assert one_task == want
+    with mock.patch.object(onetask, "_LOCAL_ROWS", -1):
+        got = {r.node: r.cluster_id for r in cluster_near_dups(df).collect()}
+        assert got == want
+        # star_after=0 forces the large-star/small-star fallback on the
+        # same random graph — both algorithms must agree with union-find
+        star = {
+            r.node: r.cluster_id
+            for r in cluster_near_dups(df, star_after=0).collect()
+        }
+        assert star == want
 
 
 @given(
