@@ -24,9 +24,10 @@ Env: SPARK_GRAFT_SF_DIR            (default /root/testdata/sf0.1)
      SPARK_GRAFT_BENCH_CONCURRENCY (default 6; 1 = sequential only)
      SPARK_GRAFT_BENCH_SEQUENTIAL  (default 1; 0 skips the second pass)
 
-The bench also exports SPARK_GRAFT_EXPECTED_CONCURRENCY (engine-owned
-cache-retention knob, see operators/ranking._cache_keep) to its worker
-count, and the final JSON lines carry the EFFECTIVE master and
+Each query runs inside its own materialization scope
+(``core.materialize.scope``), so whatever it pins or checkpoints is
+released when its action ends and concurrent queries never evict each
+other's frames. The final JSON lines carry the EFFECTIVE master and
 sc.defaultParallelism so the driver can verify $SPARK_GRAFT_CPUS was
 honored.
 """
@@ -43,18 +44,13 @@ from concurrent.futures import ThreadPoolExecutor
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datalake_backend_spark import get_spark
+from datalake_backend_spark.core.materialize import scope
 from datalake_backend_spark.queries import QUERIES
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     workers = int(os.environ.get("SPARK_GRAFT_BENCH_CONCURRENCY", "6"))
-    # publish the effective concurrency through the ENGINE-owned knob so
-    # the kernel's share-the-scan cache sizes its retention for N
-    # concurrent callers (round-14 VERDICT #5: the engine reads
-    # SPARK_GRAFT_EXPECTED_CONCURRENCY, never a bench-named var; the
-    # bench, like any multi-threaded host, sets it explicitly)
-    os.environ.setdefault("SPARK_GRAFT_EXPECTED_CONCURRENCY", str(workers))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark("bench")
@@ -100,7 +96,8 @@ def main() -> None:
         name, spec = item
         t0 = time.perf_counter()
         try:
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            with scope(name):
+                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         except Exception as e:  # noqa: BLE001
             print(f"bench: {name} failed: {type(e).__name__}: {e}", file=sys.stderr)
             return name, f"ERR:{type(e).__name__}"

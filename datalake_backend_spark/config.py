@@ -25,7 +25,11 @@ nothing is baked into the engine defaults.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -57,7 +61,7 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.shuffle.partitions": _DEFAULT_CPUS,
     # DELIBERATELY LEFT AT DEFAULT (false), with measurements —
     # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning:
-    # flipping it true lets AQE coalesce the plans feeding .persist(),
+    # flipping it true lets AQE coalesce the plans feeding a persist,
     # which removed the static-task-count overhead on every cached
     # frame of the iterative operators (graph loops, kernel, CC: q147
     # 9.3->4.5s, r206 8.2->4.0s, r230 5.2->3.3s min-of-reps at sf0.1)
@@ -99,21 +103,16 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.execution.topKSortFallbackThreshold": "10000000",
     # Quieter, faster local runs; harmless on a cluster.
     "spark.ui.showConsoleProgress": "false",
-    # Storage-release path for the eager-localCheckpoint two-phase
-    # operators (ecdf_percentile, token_stream_offsets,
-    # sorted_neighborhood_pairs, text vocab-coverage): a checkpointed
-    # RDD is persisted MEMORY_AND_DISK and has NO public unpersist
-    # hook from the DataFrame API — it is released by the
-    # ContextCleaner when a JVM GC collects the last reference to the
-    # RDD. On a long-lived session with a large, lazily-collected
-    # heap that GC may not happen for a long time, so checkpoint
-    # storage accumulates across queries. Spark's own backstop is
-    # this periodic driver System.gc(); tightening it from the 30min
-    # default to 10min bounds the accumulation window on sessions
-    # that run thousands of queries (storage growth is bounded by
-    # ~10min of checkpoint output, not by session lifetime).
-    # tests/test_engine.py::test_two_phase_checkpoint_storage_released
-    # proves the release end-to-end.
+    # Release path for checkpoints made OUTSIDE every scope
+    # (core.materialize): a scope releases its own checkpoints when it
+    # exits, but an unscoped one (the driver contract's bare calls)
+    # may still be read by a live frame, so nothing evicts it — the
+    # ContextCleaner drops it once a JVM GC collects the last
+    # reference to its RDD. On a long-lived session with a large,
+    # lazily-collected heap that GC may not happen for a long time.
+    # Spark's own backstop is this periodic driver System.gc();
+    # tightening it from the 30min default to 10min bounds the
+    # accumulation window of unscoped checkpoints to ~10min of output.
     "spark.cleaner.periodicGC.interval": "10min",
 }
 
@@ -209,7 +208,32 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark)
     return spark
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Ship this package to the session's Python workers, once per
+    SparkContext: a zip of its sources through ``addPyFile``. Without
+    it the operators that run Python on executors (``mapInPandas``,
+    ``applyInPandasWithState``, Python UDFs) import the package only
+    when a worker's working directory happens to hold it."""
+    sc = spark.sparkContext
+    if getattr(sc, "_datalake_backend_spark_zip", None):
+        return
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    tmp = tempfile.mkdtemp(prefix="datalake_backend_spark-")
+    atexit.register(shutil.rmtree, tmp, True)
+    path = os.path.join(tmp, "datalake_backend_spark.zip")
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for root, dirs, files in os.walk(pkg):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    zf.write(full, os.path.relpath(full, os.path.dirname(pkg)))
+    sc.addPyFile(path)
+    sc._datalake_backend_spark_zip = path
 
 
 def stop_spark() -> None:

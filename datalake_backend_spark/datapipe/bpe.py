@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datalake_backend_spark.core.materialize import checkpoint, pin, scope
+
 #: end-of-word marker (the classic BPE word-boundary symbol)
 EOW = "</w>"
 
@@ -140,6 +142,7 @@ def _merge_pair_expr(syms_col: str, a: str, b: str):
     )
 
 
+@scope("bpe.train")
 def bpe_train_distributed(
     df: DataFrame,
     num_merges: int,
@@ -159,60 +162,54 @@ def bpe_train_distributed(
     pair asc — identical tie-break to the driver loop, so the learned
     merge list is bit-identical to :func:`bpe_train` on any corpus
     both can handle), then a native-expression rewrite of the symbol
-    arrays (:func:`_merge_pair_expr` — no Python in the loop). The
-    vocab frame is persisted each round and the lineage cut with an
-    eager ``localCheckpoint`` every ``checkpoint_every`` iterations
-    (the graph tier's iteration pattern, ``operators/graph.py``), so
-    plan depth stays bounded at any ``num_merges``.
+    arrays (:func:`_merge_pair_expr` — no Python in the loop). Each
+    round's vocab frame is pinned (filled by one job) and the lineage
+    cut with an eager ``localCheckpoint`` every ``checkpoint_every``
+    iterations (the graph tier's iteration pattern,
+    ``operators/graph.py``), so plan depth stays bounded at any
+    ``num_merges``. The call runs in its own scope: every round's vocab
+    stays materialized until it returns, when all are released.
 
     Cost model: ``num_merges`` shuffle jobs over the word table vs the
     driver loop's zero — use :func:`bpe_train` (which auto-routes
     here only above ``_MAX_DRIVER_WORDS``) unless the vocab genuinely
     can't fit on the driver."""
     wc = word_counts(df, text_col, top_words)
-    vocab = wc.select(
-        _word_syms().alias("syms"), F.col("count")
-    ).localCheckpoint(eager=True)
+    vocab = checkpoint(
+        wc.select(_word_syms().alias("syms"), F.col("count")), "bpe.vocab"
+    )
     merges: list[tuple[str, str]] = []
     pairs = F.expr(
         "transform(sequence(1, size(syms) - 1), "
         "i -> struct(syms[i - 1] AS a, syms[i] AS b))"
     )
-    try:
-        for it in range(num_merges):
-            top = (
-                # fully-merged words (1 symbol) have no pairs — and
-                # sequence(1, 0) runs DESCENDING, which would index
-                # syms[1] out of bounds under ANSI
-                vocab.where(F.size("syms") > 1)
-                .select("count", F.explode(pairs).alias("p"))
-                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-                .agg(F.sum("count").alias("pc"))
-                # TakeOrderedAndProject — partial per-partition top-1,
-                # never a global sort
-                .orderBy(F.desc("pc"), "a", "b")
-                .limit(1)
-                .collect()
-            )
-            if not top or int(top[0]["pc"]) < min_pair_count:
-                break
-            a, b = top[0]["a"], top[0]["b"]
-            merges.append((a, b))
-            step = vocab.select(
-                _merge_pair_expr("syms", a, b).alias("syms"), "count"
-            )
-            if (it + 1) % max(1, checkpoint_every) == 0:
-                # cut lineage: plan depth stays <= checkpoint_every
-                # selects; the dropped frame's blocks are reclaimed by
-                # the context cleaner once unreferenced
-                new_vocab = step.localCheckpoint(eager=True)
-            else:
-                new_vocab = step.persist()
-                new_vocab.count()  # materialize before dropping the parent
-            vocab.unpersist(False)
-            vocab = new_vocab
-    finally:
-        vocab.unpersist(False)
+    for it in range(num_merges):
+        top = (
+            # fully-merged words (1 symbol) have no pairs — and
+            # sequence(1, 0) runs DESCENDING, which would index
+            # syms[1] out of bounds under ANSI
+            vocab.where(F.size("syms") > 1)
+            .select("count", F.explode(pairs).alias("p"))
+            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+            .agg(F.sum("count").alias("pc"))
+            # TakeOrderedAndProject — partial per-partition top-1,
+            # never a global sort
+            .orderBy(F.desc("pc"), "a", "b")
+            .limit(1)
+            .collect()
+        )
+        if not top or int(top[0]["pc"]) < min_pair_count:
+            break
+        a, b = top[0]["a"], top[0]["b"]
+        merges.append((a, b))
+        step = vocab.select(
+            _merge_pair_expr("syms", a, b).alias("syms"), "count"
+        )
+        if (it + 1) % max(1, checkpoint_every) == 0:
+            # cut lineage: plan depth stays <= checkpoint_every selects
+            vocab = checkpoint(step, "bpe.vocab")
+        else:
+            vocab = pin(step, "bpe.vocab", eager=True)
     return merges
 
 

@@ -25,15 +25,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from datalake_backend_spark.core import onetask
-from datalake_backend_spark.core.cache import BoundedFrameCache
+from datalake_backend_spark.core.materialize import checkpoint, parts_for, pin
 from datalake_backend_spark.datapipe.text import tokens
 
 _LOG = logging.getLogger(__name__)
-
-#: round-14 VERDICT #4: bare persist() calls (tf_cosine's tf frame,
-#: set_similarity_join's ordered-token frame) leaked cached frames for
-#: the session's life; the family FIFO bounds them, eviction = recompute
-_DEDUP_CACHE = BoundedFrameCache(floor=4)
 
 #: Mersenne prime 2^31-1: modulus for the MinHash permutation family.
 #: It must sit just above the reduced hash universe (h < 2^31) so that
@@ -443,16 +438,12 @@ def near_dup_minhash(
     recall 1-3e-12 at j=0.95) — then the verified output equals the
     exact all-pairs answer at half the signature cost of k=128.
 
-    The tokenize→shingle projection is computed ONCE and persisted
+    The tokenize→shingle projection is computed ONCE and pinned
     (memory-and-disk, spills at corpus scale), then shared by the
     signature stage and the candidate-verify stage — previously each
     stage re-tokenized the full corpus.
     """
-    from pyspark import StorageLevel
-
-    sh = shingle_projection(df, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = pin(shingle_projection(df, text_col, id_col, n), "dedup.shingles")
     sig = sh.select(
         F.col(id_col), minhash_of_shingles("_sh", k).alias("minhash")
     )
@@ -799,7 +790,7 @@ def contamination_bloom(
     # the eval fingerprint set is consumed TWICE (the bloom build is an
     # eager action; the exact verify joins it again) — checkpoint it so
     # the tokenize→hash chain runs once, not per consumer
-    ev = ev.localCheckpoint()
+    ev = checkpoint(ev, "dedup.eval_fps")
     bits = build_bloom_filter(ev, "fp", m_bits, k_hashes)
     # range(1) + ONE string literal split/cast to array<long>: the
     # build side is PROVABLY one row in the physical plan (Range (0,
@@ -845,13 +836,13 @@ def _cluster_star(und: DataFrame, max_rounds: int = 64) -> DataFrame:
     ``und`` is the bidirectional edge list ``(src, dst)``; returns
     ``(node, cluster_id)`` for every node with at least one non-self
     edge (callers re-attach self-only nodes)."""
-    e = (
+    e = checkpoint(
         und.where(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "dedup.star_edges",
     )
 
     def checksum(df: DataFrame):
@@ -879,13 +870,13 @@ def _cluster_star(und: DataFrame, max_rounds: int = 64) -> DataFrame:
             .agg(F.min("v").alias("m"))
             .select("u", F.least("u", "m").alias("m"))
         )
-        e = (
+        e = checkpoint(
             nbrs.join(mins, "u")
             .where(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            "dedup.star_edges",
         )
         # small-star: link each node and its smaller neighbors to the
         # min. Lazy checkpoint — the checksum below is the action that
@@ -895,7 +886,7 @@ def _cluster_star(und: DataFrame, max_rounds: int = 64) -> DataFrame:
         # and a lazy checkpoint's first job would race both branches
         # over the unmaterialized partitions.
         mins = e.groupBy("u").agg(F.min("v").alias("m"))
-        e = (
+        e = checkpoint(
             e.join(mins, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mins.select(F.col("u"), F.col("m").alias("v")))
@@ -903,8 +894,9 @@ def _cluster_star(und: DataFrame, max_rounds: int = 64) -> DataFrame:
             .select(
                 F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
             )
-            .distinct()
-            .localCheckpoint(eager=False)
+            .distinct(),
+            "dedup.star_edges",
+            eager=False,
         )
         cur = checksum(e)
         if cur == prev:
@@ -961,14 +953,20 @@ def cluster_near_dups(
     gracefully instead of failing the job. This also bounds the number
     of driver-blocking convergence probes at ``star_after``.
 
+    Pairs with a NULL endpoint are dropped up front: a NULL id names no
+    document, and each path would otherwise label it differently.
     Returns ``(node, cluster_id)`` for every node that appears in a
-    pair; ``cluster_id`` is the component's minimum node id (the same
-    canonical-min rule ``dedup_keep_canonical`` uses for exact dups).
+    remaining pair; ``cluster_id`` is the component's minimum node id
+    (the same canonical-min rule ``dedup_keep_canonical`` uses for exact
+    dups).
     """
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    und = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).where(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
+    )
+    und = checkpoint(
+        edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
+        "dedup.cc_edges",
+    )
     # one count picks the path and sizes the loop (cheap: und is
     # checkpointed)
     n_edges = onetask.count_rows(und)
@@ -985,14 +983,15 @@ def cluster_near_dups(
     # fixed overhead. Duplicate-cluster graphs are typically orders of
     # magnitude smaller than the corpus that produced them — aim for
     # ~1M edges per partition.
-    parts = int(max(2, min(und.rdd.getNumPartitions(), n_edges // 1_000_000 + 2)))
-    if parts < und.rdd.getNumPartitions():
-        und = und.repartition(parts, "src").localCheckpoint()
-    labels = (
+    cur = und.rdd.getNumPartitions()
+    parts = parts_for(n_edges, cur, 1_000_000)
+    if parts < cur:
+        und = checkpoint(und.repartition(parts, "src"), "dedup.cc_edges")
+    labels = checkpoint(
         und.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("nbr_min"))
-        .select("node", F.least("node", "nbr_min").alias("cluster_id"))
-        .localCheckpoint()
+        .select("node", F.least("node", "nbr_min").alias("cluster_id")),
+        "dedup.cc_labels",
     )
     for it in range(min(max_iter, star_after)):
         # Convergence detection rides the round's OWN aggregate
@@ -1009,7 +1008,7 @@ def cluster_near_dups(
         # LogicalRDD, so the scalar aggregate is the working form.)
         # _old carries cluster_id's OWN type — node ids may be strings.
         cid_type = labels.schema["cluster_id"].dataType
-        prop = (
+        prop = checkpoint(
             und.join(labels, und.src == labels.node)
             .select(
                 F.col("dst").alias("node"),
@@ -1021,8 +1020,9 @@ def cluster_near_dups(
             .agg(
                 F.min("cluster_id").alias("cluster_id"),
                 F.min("_old").alias("_old"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            "dedup.cc_labels",
+            eager=False,
         )
         row = prop.agg(
             # null-safe: a node with no old label (NULL _old) counts
@@ -1366,14 +1366,15 @@ def tf_cosine_near_dups(
     """
     from datalake_backend_spark.datapipe.text import tokens
 
-    tf = _DEDUP_CACHE.persist(
+    tf = pin(
         df.select(
             F.col(id_col).alias("_d"),
             F.explode(tokens(F.col(text_col))).alias("w"),
         )
         .where(F.col("w") != "")
         .groupBy("_d", "w")
-        .agg(F.count("*").alias("c"))
+        .agg(F.count("*").alias("c")),
+        "dedup.tf",
     )
     norms = tf.groupBy("_d").agg(
         F.sum(F.col("c") * F.col("c")).alias("n2")
@@ -1526,12 +1527,11 @@ def set_similarity_join(
     Returns ``(id_a, id_b, n_inter, n_union)`` with ``id_a < id_b``.
     All-integer — bit-exact in any engine (oracle r166 brute-forces
     the same pairs in DuckDB)."""
-    # persisted: consumed four times (both candidate-join sides + both
+    # pinned: consumed four times (both candidate-join sides + both
     # verify sides) — each use otherwise re-runs the whole
-    # tokenize → df-rank → rare-first reorder pipeline (round-14);
-    # bounded FIFO so the cache is released as newer calls arrive
-    ordered = _DEDUP_CACHE.persist(
-        _ssj_ordered(df, tau_num, tau_den, text_col, id_col)
+    # tokenize → df-rank → rare-first reorder pipeline (round-14)
+    ordered = pin(
+        _ssj_ordered(df, tau_num, tau_den, text_col, id_col), "dedup.ssj_ordered"
     )
     cand = _ssj_candidates(ordered, tau_num, tau_den)
     # exact verify: fetch the ordered token arrays for the surviving

@@ -9,15 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from datalake_backend_spark.core.cache import BoundedFrameCache
-
-#: Share-the-scan persists (tf frames, bigram pairs, label-token
-#: explodes) accounted through the family's bounded FIFO — round-14
-#: VERDICT #4: bare persist() calls with no unpersist path accumulated
-#: cached frames for the life of the session. Floor 4 covers the
-#: deepest composition here (one shared frame per operator call);
-#: eviction only ever costs recompute.
-_TEXT_CACHE = BoundedFrameCache(floor=4)
+from datalake_backend_spark.core.materialize import pin
 
 #: whitespace tokenizer shared by every operator (and by the DuckDB
 #: oracles — keep in sync with regexp_split_to_array(trim(x), '\s+')).
@@ -393,8 +385,9 @@ def tfidf_top_terms(
     # both consume tf — without the persist each use re-runs the full
     # tokenize→explode→count pass over the corpus (round-14; same
     # idiom as tf_cosine_near_dups' shared tf frame)
-    tf = _TEXT_CACHE.persist(
-        toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = pin(
+        toks.groupBy(id_col, "term").agg(F.count("*").alias("tf")),
+        "text.tf",
     )
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     total = df.select(F.count("*").alias("_n"))
@@ -712,10 +705,11 @@ def lm_score_documents(
         ).alias("_p", "w"),
     )
     lagw = Window.partitionBy("_d").orderBy("_p")
-    pairs = _TEXT_CACHE.persist(
+    pairs = pin(
         toks.withColumn("w1", F.lag("w").over(lagw))
         .where(F.col("w1").isNotNull())
-        .select("_d", "w1", F.col("w").alias("w2"))
+        .select("_d", "w1", F.col("w").alias("w2")),
+        "text.bigrams",
     )
     c12 = pairs.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     c1 = pairs.groupBy("w1").agg(F.count("*").alias("c1"))
@@ -769,13 +763,14 @@ def nb_quality_score(
     share it), one count aggregate for the model, one equi-join on the
     token, one per-doc aggregate. Returns per doc: ``n_tok``,
     ``sum_p_scaled``, ``mean_p_scaled = sum div n``."""
-    toks = _TEXT_CACHE.persist(
+    toks = pin(
         df.select(
             F.col(id_col).alias("_d"),
             F.col(label_col).alias("_g"),
             F.explode(tokens(F.col(text_col))).alias("w"),
         )
-        .where(F.col("w") != "")
+        .where(F.col("w") != ""),
+        "text.label_tokens",
     )
     model = (
         toks.groupBy("w")
@@ -846,7 +841,7 @@ def bm25_scores(
     per-partition heap + driver merge of k rows, never a global
     sort."""
     terms = list(query_terms)
-    qtf = _TEXT_CACHE.persist(
+    qtf = pin(
         # inner projection materializes the tokenize ONCE per row; the
         # outer select references _t twice (dl + the explode child),
         # which CollapseProject will not inline past (non-cheap expr
@@ -864,7 +859,8 @@ def bm25_scores(
         )
         .where(F.col("term").isin(terms))
         .groupBy("doc_id", "dl", "term")
-        .agg(F.count("*").alias("tf"))
+        .agg(F.count("*").alias("tf")),
+        "text.query_tf",
     )
     corpus = doc_lengths(df, text_col, id_col).agg(
         F.count("*").alias("_n"), F.sum("dl").alias("_l")
@@ -938,7 +934,7 @@ def bm25_multi_query(
     ]
     qdf = spark.createDataFrame(qrows, "query_id string, term string")
     all_terms = sorted({t for ts in queries.values() for t in ts})
-    tf = _TEXT_CACHE.persist(
+    tf = pin(
         # two-level projection so the regex split runs once per row;
         # codegen-friendly array_remove/explode/where (see bm25_scores)
         df.select(
@@ -952,7 +948,8 @@ def bm25_multi_query(
         )
         .where(F.col("term").isin(all_terms))
         .groupBy("doc_id", "dl", "term")
-        .agg(F.count("*").alias("tf"))
+        .agg(F.count("*").alias("tf")),
+        "text.query_tf",
     )
     corpus = doc_lengths(df, text_col, id_col).agg(
         F.count("*").alias("_n"), F.sum("dl").alias("_l")

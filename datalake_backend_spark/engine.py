@@ -13,6 +13,7 @@ zone alongside the compatibility JSON.
 
 from __future__ import annotations
 
+import contextvars
 import os
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
@@ -25,6 +26,7 @@ from pyspark.sql import functions as F
 
 from datalake_backend_spark.config import get_spark
 from datalake_backend_spark.core.cleaning import non_empty
+from datalake_backend_spark.core.materialize import pin, scope
 from datalake_backend_spark.operators.renest import renest_frames
 from datalake_backend_spark.pipelines import get_pipeline
 from datalake_backend_spark.pipelines.splitter import SPLIT_SPECS, run_splitter
@@ -76,16 +78,20 @@ def _concurrently(spark: SparkSession, *tasks: Callable[[], object]) -> list:
     driver, within what the session can schedule. Every task inherits
     the caller's local properties (job group, description, scheduler
     pool) and session tags, so each Spark job stays attributed to the
-    upload that issued it. All tasks are joined before this returns;
-    the first failure, in task order, is re-raised only after every
-    sibling has finished.
+    upload that issued it, and runs in a copy of the caller's context,
+    so whatever it pins belongs to the caller's scope. All tasks are
+    joined before this returns; the first failure, in task order, is
+    re-raised only after every sibling has finished.
     """
     width = min(len(tasks), spark.sparkContext.defaultParallelism)
     with ThreadPoolExecutor(width, thread_name_prefix="zone-writer") as pool:
         # one wrapper per task: each wrapper holds its own copy of the
         # properties, which the task's thread then owns and may change
         futures = [
-            pool.submit(inheritable_thread_target(spark)(t)) for t in tasks
+            pool.submit(
+                contextvars.copy_context().run, inheritable_thread_target(spark)(t)
+            )
+            for t in tasks
         ]
     return [f.result() for f in futures]
 
@@ -107,6 +113,7 @@ class Engine:
     def __init__(self, spark: SparkSession | None = None):
         self.spark = spark or get_spark()
 
+    @scope("engine.upload")
     def process_document(
         self,
         path: str,
@@ -119,15 +126,13 @@ class Engine:
         """Full lifecycle for one raw detection document (or a glob of
         them), in three steps:
 
-        1. **bronze → silver.** The parsed bronze frame is cached for
-           this step only. One probe (``non_empty``, through the ``noop``
-           sink) parses the JSON into that cache and reports the
-           corrupt-document count, an ``observe()`` metric on the bronze
-           frame. An upload with no silver rows (empty or malformed)
-           returns ``STATUS_EMPTY`` with its ``corrupt_docs`` and writes
-           to no zone. Otherwise the silver parquet is written from the
-           cache, with its row count observed. The cache is dropped when
-           the step ends, on every path.
+        1. **bronze → silver.** The parsed bronze frame is pinned. One
+           probe (``non_empty``, through the ``noop`` sink) parses the
+           JSON into that cache and reports the corrupt-document count,
+           an ``observe()`` metric on the bronze frame. An upload with
+           no silver rows (empty or malformed) returns ``STATUS_EMPTY``
+           with its ``corrupt_docs`` and writes to no zone. Otherwise the silver parquet is written from the
+           cache, with its row count observed.
         2. **silver → processed + gold**, written concurrently, each
            reading the silver zone back with its known schema (plus the
            constraint report, when asked for).
@@ -137,8 +142,10 @@ class Engine:
 
         ``gold_<domain>`` is registered after step 3, or right after the
         commit with ``versioned_gold``, so a failing step-3 sink leaves
-        the committed snapshot served. Nothing stays cached. Concurrent
-        writes run on a per-call pool (:func:`_concurrently`).
+        the committed snapshot served. The upload runs in its own scope
+        (``core.materialize``): nothing it pins outlives it, on every
+        path. Concurrent writes run on a per-call pool
+        (:func:`_concurrently`).
 
         ``versioned_gold=True`` routes the gold zone through
         :class:`~datalake_backend_spark.sources.versioned.VersionedTable`:
@@ -167,27 +174,24 @@ class Engine:
         }
         # the probe fills the bronze cache and the silver write reads it,
         # so the JSON is parsed once
-        raw = read_raw_json(self.spark, path, domain=domain).cache()
-        try:
-            clean, corrupt = split_corrupt(raw)
-            silver = pipe.silver(clean)
-            if not non_empty(silver):
-                return ProcessResult(
-                    STATUS_EMPTY, domain, corrupt_docs=int(corrupt.get["n"])
-                )
-            # zone layout at scale: partition by ingest date so
-            # time-bounded reprocessing and retention prune at the
-            # directory level; the row count rides the write job
-            silver_rows = Observation()
-            write_table(
-                silver.withColumn("ingest_date", F.current_date()).observe(
-                    silver_rows, _row_count()
-                ),
-                zones["silver"],
-                partition_by=["ingest_date"],
+        raw = pin(read_raw_json(self.spark, path, domain=domain), "engine.bronze")
+        clean, corrupt = split_corrupt(raw)
+        silver = pipe.silver(clean)
+        if not non_empty(silver):
+            return ProcessResult(
+                STATUS_EMPTY, domain, corrupt_docs=int(corrupt.get["n"])
             )
-        finally:
-            raw.unpersist()
+        # zone layout at scale: partition by ingest date so
+        # time-bounded reprocessing and retention prune at the
+        # directory level; the row count rides the write job
+        silver_rows = Observation()
+        write_table(
+            silver.withColumn("ingest_date", F.current_date()).observe(
+                silver_rows, _row_count()
+            ),
+            zones["silver"],
+            partition_by=["ingest_date"],
+        )
         result = ProcessResult(
             STATUS_OK,
             domain,
@@ -292,6 +296,7 @@ class Engine:
         versioned (see serving.views.serve_gold_where)."""
         return serve_gold_where(self.spark, domain, predicates, columns)
 
+    @scope("engine.media")
     def process_media_dir(
         self,
         path: str,
@@ -336,14 +341,16 @@ class Engine:
         )
 
         # exact pass: byte-identical copies collapse on sha256. The
-        # ranked frame is PERSISTED so the directory scan (the most
+        # ranked frame is PINNED so the directory scan (the most
         # expensive stage at a 100 TB media dir: every payload read +
         # hashed) materializes exactly once; every later stage — the
         # perceptual hashers, the stat aggregates, the commit — replays
         # from cache, never from the source.
         hashed = media_fingerprint(media)
         w = Window.partitionBy("content_sha").orderBy("media_id")
-        exact = hashed.withColumn("_rk", F.row_number().over(w)).persist()
+        exact = pin(
+            hashed.withColumn("_rk", F.row_number().over(w)), "engine.media_exact"
+        )
         row = exact.agg(
             F.count("*").alias("n"),
             F.sum((F.col("_rk") > 1).cast("long")).alias("d"),
@@ -393,10 +400,12 @@ class Engine:
                 F.concat(F.lit("id-"), F.col("media_id").cast("string")),
             )
             pw = Window.partitionBy(pkey).orderBy("media_id")
-            # persisted: the count aggregate and the zone commit both
+            # pinned: the count aggregate and the zone commit both
             # consume this frame — without the cache the second action
             # would re-decode every image/audio/video payload
-            keyed = keyed.withColumn("_prk", F.row_number().over(pw)).persist()
+            keyed = pin(
+                keyed.withColumn("_prk", F.row_number().over(pw)), "engine.media_keyed"
+            )
             prow = keyed.agg(
                 F.sum((F.col("_prk") > 1).cast("long")).alias("d"),
                 F.sum((F.col("_prk") == 1).cast("long")).alias("k"),
@@ -407,19 +416,12 @@ class Engine:
 
         zone = _os.path.join(out_dir, "media")
         version = None
-        try:
-            if versioned:
-                from datalake_backend_spark.sources.versioned import (
-                    VersionedTable,
-                )
+        if versioned:
+            from datalake_backend_spark.sources.versioned import VersionedTable
 
-                version = VersionedTable(zone).commit(kept, op="media-ingest")
-            else:
-                kept.write.mode("overwrite").parquet(zone)
-        finally:
-            exact.unpersist()
-            if perceptual:
-                keyed.unpersist()
+            version = VersionedTable(zone).commit(kept, op="media-ingest")
+        else:
+            kept.write.mode("overwrite").parquet(zone)
         return {
             "n_files": n_files,
             "n_exact_dups": n_exact_dups,

@@ -12,11 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from datalake_backend_spark.core.cache import BoundedFrameCache
-
-#: bounded share-the-scan persists for this family's multi-consumer
-#: aggregate frames (round-15 scan audit); eviction = recompute
-_DIST_CACHE = BoundedFrameCache(floor=4)
+from datalake_backend_spark.core.materialize import pin
 
 
 def value_distribution(
@@ -343,19 +339,21 @@ def distribution_shift(
     Working in integers keeps every row exact in any engine; divide at
     the end (see :func:`total_variation`). Values absent from one side
     count as zero. Two hash aggregates + one outer join on the value.
-    Each side's count frame is bounded-persisted (round-15 scan audit:
+    Each side's count frame is pinned (round-15 scan audit:
     the totals and the join both consume it, and without the cache each
     consumer re-ran the raw-data groupBy — 4 full input scans for 2
     aggregates)."""
-    ca = _DIST_CACHE.persist(
+    ca = pin(
         df_a.select(F.col(col).alias("value"))
         .groupBy("value")
-        .agg(F.count(F.lit(1)).alias("cnt_a"))
+        .agg(F.count(F.lit(1)).alias("cnt_a")),
+        "distributions.counts_a",
     )
-    cb = _DIST_CACHE.persist(
+    cb = pin(
         df_b.select(F.col(col).alias("value"))
         .groupBy("value")
-        .agg(F.count(F.lit(1)).alias("cnt_b"))
+        .agg(F.count(F.lit(1)).alias("cnt_b")),
+        "distributions.counts_b",
     )
     na = ca.agg(F.sum("cnt_a").alias("_na"))
     nb = cb.agg(F.sum("cnt_b").alias("_nb"))
@@ -1312,7 +1310,7 @@ def spearman_rho(
     through one reducer.
 
     Round-15 fixed-cost rework (VERDICT #3): the (keys, x, y)
-    projection is persisted ONCE and shared by both rank passes and
+    projection is pinned ONCE and shared by both rank passes and
     the final join (one scan of the fact table instead of three), and
     when both variables are numeric a SINGLE job computes both
     columns' bucket cut points + the row/distinct counts, so neither
@@ -1321,16 +1319,10 @@ def spearman_rho(
     never results (the kernel's contract)."""
     from pyspark.sql.types import NumericType
 
-    from datalake_backend_spark.operators.ranking import (
-        _BOUNDS_MEMO,
-        _bounded_persist,
-        _bucket_count,
-        _memo_key,
-        _memo_put,
-    )
+    from datalake_backend_spark.operators.ranking import _bucket_count
 
     keys = keys or []
-    fact = _bounded_persist(df.select(*keys, x_col, y_col))
+    fact = pin(df.select(*keys, x_col, y_col), "distributions.spearman_fact")
     both_numeric = all(
         isinstance(fact.select(c).schema.fields[0].dataType, NumericType)
         for c in (x_col, y_col)
@@ -1338,34 +1330,17 @@ def spearman_rho(
     bx = by = ndx = ndy = None
     if both_numeric:
         n_buckets = _bucket_count(fact.sparkSession)
-        # memoized like the kernel's own boundary cuts (plan +
-        # data-fingerprint key): a repeat call — dashboards, the
-        # bench's concurrent-then-sequential passes — skips the job;
-        # the values only ever steer bucket balance and read sizing
-        memo_key = _memo_key(fact, [x_col, y_col], n_buckets)
-        memoed = _BOUNDS_MEMO.get(memo_key) if memo_key else None
-        if memoed is None:
-            qs = [i / n_buckets for i in range(1, n_buckets)]
-            row = fact.agg(
-                F.percentile_approx(
-                    F.col(x_col).cast("double"), qs, 100
-                ).alias("_bx"),
-                F.percentile_approx(
-                    F.col(y_col).cast("double"), qs, 100
-                ).alias("_by"),
-                # approximate distinct counts size the kernel's
-                # read-side coalesce of the grouped rank frames
-                F.approx_count_distinct(F.struct(*keys, x_col)).alias("_ndx"),
-                F.approx_count_distinct(F.struct(*keys, y_col)).alias("_ndy"),
-            ).first()
-            memoed = (
-                list(row["_bx"] or []),
-                list(row["_by"] or []),
-                int(row["_ndx"]),
-                int(row["_ndy"]),
-            )
-            _memo_put(memo_key, memoed)
-        bx, by, ndx, ndy = memoed
+        qs = [i / n_buckets for i in range(1, n_buckets)]
+        row = fact.agg(
+            F.percentile_approx(F.col(x_col).cast("double"), qs, 100).alias("_bx"),
+            F.percentile_approx(F.col(y_col).cast("double"), qs, 100).alias("_by"),
+            # approximate distinct counts size the kernel's read-side
+            # coalesce of the grouped rank frames
+            F.approx_count_distinct(F.struct(*keys, x_col)).alias("_ndx"),
+            F.approx_count_distinct(F.struct(*keys, y_col)).alias("_ndy"),
+        ).first()
+        bx, by = list(row["_bx"] or []), list(row["_by"] or [])
+        ndx, ndy = int(row["_ndx"]), int(row["_ndy"])
     rx = _doubled_ranks(
         fact, x_col, keys, bounds=bx, n_rows=ndx
     ).withColumnRenamed("_rank2", "_rx2")
@@ -1477,14 +1452,12 @@ def key_skew_profile(
     no window at all). The lower median stays positional (row
     ``(cnt+1) div 2`` in n-order) — deterministic, no interpolation,
     so the twin matches exactly."""
-    from datalake_backend_spark.operators.ranking import _bounded_persist
-
     sizes = df.groupBy(*keys).agg(F.count("*").alias("n"))
     key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in keys])
     # persisted: the moments aggregate and the size-distribution
     # aggregate both consume the per-key counts — one raw-data shuffle
-    # instead of two (bounded FIFO, eviction = recompute)
-    s = _bounded_persist(sizes.select(key_str.alias("_key"), "n"))
+    # instead of two
+    s = pin(sizes.select(key_str.alias("_key"), "n"), "distributions.key_sizes")
     # ONE global aggregate carries the moments AND the heaviest key
     # (min over the (-n, key) struct ordering = max n, smaller key on
     # ties) — round-14: these were two separate aggregates, each
@@ -1648,13 +1621,14 @@ def categorical_mi(
     Scale shape: ONE hash aggregate to the contingency cells, two
     metadata-sized re-aggregates for the marginals, broadcast total;
     everything after the first groupBy is cell-cardinality-sized. The
-    cells frame is bounded-persisted (round-15 scan audit: marginals ×2
+    cells frame is pinned (round-15 scan audit: marginals ×2
     + total + the join = FOUR consumers, each re-running the raw-data
     groupBy without the cache)."""
-    cells = _DIST_CACHE.persist(
+    cells = pin(
         df.groupBy(
             F.col(x_col).alias("_x"), F.col(y_col).alias("_y")
-        ).agg(F.count("*").alias("_nxy"))
+        ).agg(F.count("*").alias("_nxy")),
+        "distributions.cells",
     )
     mx = cells.groupBy("_x").agg(F.sum("_nxy").alias("_nx"))
     my = cells.groupBy("_y").agg(F.sum("_nxy").alias("_ny"))

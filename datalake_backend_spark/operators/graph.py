@@ -40,19 +40,13 @@ dangling mass" simplification.
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import reduce, wraps
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructType
 
 from datalake_backend_spark.core import onetask
-from datalake_backend_spark.core.cache import BoundedFrameCache
-
-#: bounded share-the-scan persists for NON-iterative graph operators
-#: (the iterative loops own their caches via the pin-then-release
-#: _finish discipline below); eviction = recompute
-_GRAPH_CACHE = BoundedFrameCache(floor=4)
-
+from datalake_backend_spark.core.materialize import checkpoint, parts_for, pin, scope
 
 #: target rows per partition for right-sized loop-invariant frames —
 #: the same ~1M-rows heuristic the connected-components loop uses
@@ -63,27 +57,22 @@ _ROWS_PER_PART = 1_000_000
 
 
 def _right_size(df: DataFrame, key: str, n: int | None = None) -> DataFrame:
-    """Right-size a PERSISTED loop-invariant frame to the graph, not
-    the upstream partitioning (the CC-loop idiom, round-14): count it
+    """Right-size a PINNED loop-invariant frame to the graph, not the
+    upstream partitioning (the CC-loop idiom, round-14): count it
     (materializing the cache — the loop's first iteration would pay
     that anyway), and if the frame is far smaller than its inherited
-    partition count, re-persist it hash-clustered on ``key`` at
+    partition count, pin it again hash-clustered on ``key`` at
     ~``_ROWS_PER_PART`` rows per partition. Every per-iteration stage
     that maps over the cache then runs |parts| tasks instead of the
-    inherited count. Scale-adaptive by construction: at real data
-    sizes ``n // _ROWS_PER_PART`` exceeds the inherited count and this
-    is a no-op (the count probe is one pass over the cache). A caller
-    that has already counted ``df`` passes the count as ``n``."""
+    inherited count. No-op at real data sizes (:func:`parts_for`). A
+    caller that has already counted ``df`` passes the count as ``n``."""
     if n is None:
         n = onetask.count_rows(df)
     cur = df.rdd.getNumPartitions()
-    parts = int(max(2, min(cur, n // _ROWS_PER_PART + 2)))
+    parts = parts_for(n, cur, _ROWS_PER_PART)
     if parts >= cur:
         return df
-    sized = df.repartition(parts, key).persist()
-    onetask.count_rows(sized)  # materialize before releasing the old copy
-    df.unpersist()
-    return sized
+    return pin(df.repartition(parts, key), "graph.sized", eager=True)
 
 
 def _small_graph(
@@ -112,34 +101,35 @@ def _small_graph(
     return onetask.one_task(inputs, solve, schema, **params)
 
 
-def _finish(result: DataFrame, cached: list[DataFrame], materialize: bool) -> DataFrame:
-    """Pin-then-release discipline shared by every graph operator: the
-    iterative loops persist edge/node/frontier frames (re-derivation
-    per iteration is the alternative), but a lazily-returned result
-    would leave those pinned in executor storage for the life of the
-    session — repeated calls accumulate until LRU eviction. With
-    ``materialize=True`` (the default) the result is computed ONCE via
-    an eager localCheckpoint and every cached intermediate is
-    unpersisted in a finally, so the caller gets a self-contained frame
-    and the operator leaves no storage behind. ``materialize=False``
-    returns the lazy plan (plan-inspection tests, callers composing
-    further before acting) — those callers own the unpersist."""
-    if not materialize:
-        return result
-    try:
-        return result.localCheckpoint(eager=True)
-    finally:
-        for df in cached:
-            df.unpersist()
+def _self_contained(op):
+    """Scope discipline shared by every iterative graph operator: the
+    loops pin edge/node/frontier frames (re-derivation per iteration is
+    the alternative). With ``materialize=True`` (the default) the
+    operator runs in its own scope and its result is computed ONCE as
+    an eager checkpoint owned by the CALLER's scope, so the scope's
+    exit releases every intermediate and the caller gets a
+    self-contained frame. ``materialize=False`` returns the lazy plan
+    (plan-inspection tests, callers composing further before acting);
+    its pins then belong to the caller's owner."""
+    name = f"graph.{op.__name__}"
+
+    @wraps(op)
+    def run(*args, materialize: bool = True, **kwargs) -> DataFrame:
+        if not materialize:
+            return op(*args, **kwargs)
+        with scope(name):
+            return checkpoint(op(*args, **kwargs), name, outer=True)
+
+    return run
 
 
+@_self_contained
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
     scale: int = 10**12,
     teleport_pct: int = 15,
     checkpoint_every: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Fixed-iteration integer PageRank over a directed edge list.
 
@@ -175,9 +165,9 @@ def pagerank(
     # explode+aggregate and the sizing cost outweighs the per-
     # iteration task savings (min-of-3 x3 A/B: 4.5-4.9 -> 5.2-5.5 s).
     # The size check's count doubles as the cache materializer.
-    edges = edges.persist()
+    edges = pin(edges, "graph.edges")
     if onetask.fits_one_task(onetask.count_rows(edges)):
-        ranks = _small_graph(
+        return _small_graph(
             onetask.rank_rows,
             "rank_scaled",
             edges.select("src", "dst"),
@@ -186,7 +176,6 @@ def pagerank(
             teleport_pct=teleport_pct,
             seeded=False,
         )
-        return _finish(ranks, [edges], materialize)
     # node set + out-degree in ONE aggregate (explode each edge to a
     # src row carrying 1 and a dst row carrying 0, sum per node) —
     # the union+distinct / groupBy-degree / join formulation costs
@@ -200,18 +189,20 @@ def pagerank(
     # scale by construction (n // _ROWS_PER_PART exceeds the inherited
     # partition count).
     nodes = _right_size(
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src").alias("node"), F.lit(1).alias("_o")),
-                    F.struct(F.col("dst").alias("node"), F.lit(0).alias("_o")),
-                )
-            ).alias("_x")
-        )
-        .select(F.col("_x.node").alias("node"), F.col("_x._o").alias("_o"))
-        .groupBy("node")
-        .agg(F.sum("_o").cast("bigint").alias("deg"))
-        .persist(),
+        pin(
+            edges.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("src").alias("node"), F.lit(1).alias("_o")),
+                        F.struct(F.col("dst").alias("node"), F.lit(0).alias("_o")),
+                    )
+                ).alias("_x")
+            )
+            .select(F.col("_x.node").alias("node"), F.col("_x._o").alias("_o"))
+            .groupBy("node")
+            .agg(F.sum("_o").cast("bigint").alias("deg")),
+            "graph.nodes",
+        ),
         "node",
     )
     ncnt = nodes.agg(F.count("*").alias("_n"))
@@ -239,20 +230,16 @@ def pagerank(
             .select("node", "deg", "r")
         )
         if checkpoint_every and it % checkpoint_every == 0 and it < iterations:
-            # lazy checkpoint: the caller's first action materializes it
-            ranks = ranks.localCheckpoint(eager=False)
-    return _finish(
-        ranks.select("node", F.col("r").alias("rank_scaled")),
-        [edges, nodes],
-        materialize,
-    )
+            # lazy checkpoint: the first action on the result fills it
+            ranks = checkpoint(ranks, "graph.ranks", eager=False)
+    return ranks.select("node", F.col("r").alias("rank_scaled"))
 
 
+@_self_contained
 def bfs_hops(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Bounded-depth BFS: the minimum hop count (0..max_hops) from any
     source node to every reachable node. All-integer, so bit-exact in
@@ -272,36 +259,35 @@ def bfs_hops(
     typically derive it (join + distinct + symmetrize), and without the
     cache that derivation re-executes once per level.
     """
-    edges = edges.persist()
+    edges = pin(edges, "graph.edges")
     n = onetask.count_rows(edges)
     if onetask.fits_one_task(n):
-        hops = _small_graph(
+        return _small_graph(
             onetask.bfs_rows, "hop", edges.select("src", "dst"), sources,
             max_hops=max_hops,
         )
-        return _finish(hops, [edges], materialize)
     edges = _right_size(edges, "src", n)
-    frontier = sources.select("node").distinct().withColumn(
-        "hop", F.lit(0).cast("bigint")
-    ).persist()
-    cached = [edges, frontier]
+    frontier = pin(
+        sources.select("node").distinct().withColumn("hop", F.lit(0).cast("bigint")),
+        "graph.frontier",
+    )
     visited = frontier
     for k in range(1, max_hops + 1):
-        nxt = (
+        nxt = pin(
             frontier.join(edges, frontier.node == edges.src)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(k).cast("bigint"))
-            .persist()
+            .withColumn("hop", F.lit(k).cast("bigint")),
+            "graph.frontier",
         )
-        cached.append(nxt)
         visited = visited.union(nxt)
         frontier = nxt
-    return _finish(visited, cached, materialize)
+    return visited
 
 
-def triangle_count(edges: DataFrame, materialize: bool = True) -> DataFrame:
+@_self_contained
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over an UNDIRECTED graph (``src``/
     ``dst`` in either orientation; self-loops and duplicates dropped).
     Returns ``(node, n_triangles)`` for every node in ≥1 triangle —
@@ -338,10 +324,13 @@ def triangle_count(edges: DataFrame, materialize: bool = True) -> DataFrame:
     # persisted: the oriented edge list is consumed THREE times (both
     # wedge sides + the closing-edge probe) — uncached, the whole
     # canon->deg->join lineage would re-execute per consumer
-    arrows = ranked.select(
-        F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
-    ).persist()
+    arrows = pin(
+        ranked.select(
+            F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
+        ),
+        "graph.arrows",
+    )
     wedges = arrows.alias("e1").join(
         arrows.alias("e2"), F.col("e1.b") == F.col("e2.a")
     ).select(
@@ -351,15 +340,14 @@ def triangle_count(edges: DataFrame, materialize: bool = True) -> DataFrame:
         arrows.select(F.col("a").alias("x"), F.col("b").alias("z")),
         ["x", "z"],
     )
-    return _finish(
+    return (
         tris.select(F.explode(F.array("x", "y", "z")).alias("node"))
         .groupBy("node")
-        .agg(F.count("*").alias("n_triangles")),
-        [arrows],
-        materialize,
+        .agg(F.count("*").alias("n_triangles"))
     )
 
 
+@_self_contained
 def personalized_pagerank(
     edges: DataFrame,
     sources: DataFrame,
@@ -367,7 +355,6 @@ def personalized_pagerank(
     scale: int = 10**12,
     teleport_pct: int = 15,
     checkpoint_every: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Personalized PageRank: identical integer update to
     :func:`pagerank`, but ALL teleport mass returns to the ``sources``
@@ -394,9 +381,9 @@ def personalized_pagerank(
     # distinct, so no shuffle)
     if sources.select("node").isEmpty():
         raise ValueError("personalized_pagerank needs a non-empty sources frame")
-    edges = edges.persist()  # not right-sized - see pagerank
+    edges = pin(edges, "graph.edges")  # not right-sized - see pagerank
     if onetask.fits_one_task(onetask.count_rows(edges)):
-        ranks = _small_graph(
+        return _small_graph(
             onetask.rank_rows,
             "rank_scaled",
             edges.select("src", "dst"),
@@ -406,28 +393,29 @@ def personalized_pagerank(
             teleport_pct=teleport_pct,
             seeded=True,
         )
-        return _finish(ranks, [edges], materialize)
     src_set = sources.select("node").distinct()
     # node set + out-degree in ONE aggregate (see pagerank), then a
     # FULL outer join with the seed set so seeds outside the edge set
     # still rank (teleport-only mass)
     # derived frame right-sized after derivation — see pagerank
     nodes = _right_size(
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src").alias("node"), F.lit(1).alias("_o")),
-                    F.struct(F.col("dst").alias("node"), F.lit(0).alias("_o")),
-                )
-            ).alias("_x")
-        )
-        .select(F.col("_x.node").alias("node"), F.col("_x._o").alias("_o"))
-        .groupBy("node")
-        .agg(F.sum("_o").cast("bigint").alias("deg"))
-        .join(src_set.withColumn("_is_src", F.lit(1)), "node", "full")
-        .withColumn("deg", F.coalesce("deg", F.lit(0)).cast("bigint"))
-        .withColumn("_is_src", F.coalesce("_is_src", F.lit(0)))
-        .persist(),
+        pin(
+            edges.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("src").alias("node"), F.lit(1).alias("_o")),
+                        F.struct(F.col("dst").alias("node"), F.lit(0).alias("_o")),
+                    )
+                ).alias("_x")
+            )
+            .select(F.col("_x.node").alias("node"), F.col("_x._o").alias("_o"))
+            .groupBy("node")
+            .agg(F.sum("_o").cast("bigint").alias("deg"))
+            .join(src_set.withColumn("_is_src", F.lit(1)), "node", "full")
+            .withColumn("deg", F.coalesce("deg", F.lit(0)).cast("bigint"))
+            .withColumn("_is_src", F.coalesce("_is_src", F.lit(0))),
+            "graph.nodes",
+        ),
         "node",
     )
     scnt = nodes.agg(F.sum("_is_src").alias("_s"))
@@ -459,20 +447,16 @@ def personalized_pagerank(
         )
         if checkpoint_every and it % checkpoint_every == 0 and it < iterations:
             # lazy lineage cut, same discipline as pagerank
-            ranks = ranks.localCheckpoint(eager=False)
-    return _finish(
-        ranks.select("node", F.col("r").alias("rank_scaled")),
-        [edges, nodes],
-        materialize,
-    )
+            ranks = checkpoint(ranks, "graph.ranks", eager=False)
+    return ranks.select("node", F.col("r").alias("rank_scaled"))
 
 
+@_self_contained
 def kcore_peel(
     edges: DataFrame,
     k: int = 3,
     rounds: int = 3,
     checkpoint_every: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """k-core peeling with a FIXED round budget: repeatedly drop every
     node whose current degree is below ``k`` (and all its edges), then
@@ -501,41 +485,35 @@ def kcore_peel(
         raise ValueError("k must be >= 1")
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    cached: list[DataFrame] = []
     # NOT right-sized (round-14, measured): unlike the other loops'
     # edge tables, this frame is superseded by a NEW persisted frame
     # every round, so the sizing pass only added upfront cost
     # (min-of-3 A/B: 2.1-2.6 s -> 3.5 s with sizing). The size check's
     # count materializes the cache the first round reads.
-    live = edges.select("src", "dst").persist()
-    cached.append(live)
+    live = pin(edges.select("src", "dst"), "graph.live")
     if onetask.fits_one_task(onetask.count_rows(live)):
-        core = _small_graph(
+        return _small_graph(
             onetask.kcore_rows, "core_degree", live, k=k, rounds=rounds
         )
-        return _finish(core, cached, materialize)
     for i in range(rounds):
         deg = live.groupBy("src").agg(F.count("*").alias("deg"))
-        keep = deg.where(F.col("deg") >= k).select("src").persist()
-        cached.append(keep)
+        keep = pin(deg.where(F.col("deg") >= k).select("src"), "graph.keep")
         live = (
             live.join(keep, "src", "left_semi")
             .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < rounds:
-            live = live.localCheckpoint(eager=True)
-        live = live.persist()
-        cached.append(live)
-    result = live.groupBy("src").agg(F.count("*").alias("core_degree")).select(
+            live = checkpoint(live, "graph.live")
+        live = pin(live, "graph.live")
+    return live.groupBy("src").agg(F.count("*").alias("core_degree")).select(
         F.col("src").alias("node"), "core_degree"
     )
-    return _finish(result, cached, materialize)
 
 
+@_self_contained
 def pointer_jump_roots(
     parents: DataFrame,
     max_depth: int = 32,
-    materialize: bool = True,
 ) -> DataFrame:
     """Resolve every node of a forest to its root AND exact depth in
     O(log depth) rounds via pointer jumping — the hierarchy-flattening
@@ -569,43 +547,41 @@ def pointer_jump_roots(
     if max_depth < 1:
         raise ValueError("max_depth must be >= 1")
     rounds = max(1, (max_depth - 1).bit_length())
-    cached: list[DataFrame] = []
-    state = parents.select(
-        F.col("node").cast("bigint").alias("node"),
-        F.col("parent").cast("bigint").alias("anc"),
-        F.when(F.col("parent") == F.col("node"), F.lit(0))
-        .otherwise(F.lit(1))
-        .cast("bigint")
-        .alias("d"),
-    ).persist()
-    cached.append(state)
+    state = pin(
+        parents.select(
+            F.col("node").cast("bigint").alias("node"),
+            F.col("parent").cast("bigint").alias("anc"),
+            F.when(F.col("parent") == F.col("node"), F.lit(0))
+            .otherwise(F.lit(1))
+            .cast("bigint")
+            .alias("d"),
+        ),
+        "graph.state",
+    )
     for _ in range(rounds):
         hop = state.select(
             F.col("node").alias("_j"),
             F.col("anc").alias("_janc"),
             F.col("d").alias("_jd"),
         )
-        state = (
-            state.join(hop, state.anc == hop._j)
-            .select(
+        state = pin(
+            state.join(hop, state.anc == hop._j).select(
                 "node",
                 F.col("_janc").alias("anc"),
                 (F.col("d") + F.col("_jd")).alias("d"),
-            )
-            .persist()
+            ),
+            "graph.state",
         )
-        cached.append(state)
-    result = state.select(
+    return state.select(
         "node", F.col("anc").alias("root"), F.col("d").alias("depth")
     )
-    return _finish(result, cached, materialize)
 
 
+@_self_contained
 def bounded_sssp(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Single-source (or multi-source) shortest paths with INTEGER
     edge costs, bounded to ``max_hops`` relaxation rounds — the
@@ -631,22 +607,20 @@ def bounded_sssp(
     """
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
-    cached: list[DataFrame] = []
-    edges = edges.select(
-        "src", "dst", F.col("cost").cast("bigint").alias("cost")
-    ).persist()
+    edges = pin(
+        edges.select("src", "dst", F.col("cost").cast("bigint").alias("cost")),
+        "graph.edges",
+    )
     n = onetask.count_rows(edges)
     if onetask.fits_one_task(n):
-        dists = _small_graph(
+        return _small_graph(
             onetask.sssp_rows, "dist", edges, sources, max_hops=max_hops
         )
-        return _finish(dists, [edges], materialize)
     edges = _right_size(edges, "src", n)
-    cached.append(edges)
-    best = sources.select("node").distinct().withColumn(
-        "dist", F.lit(0).cast("bigint")
-    ).persist()
-    cached.append(best)
+    best = pin(
+        sources.select("node").distinct().withColumn("dist", F.lit(0).cast("bigint")),
+        "graph.best",
+    )
     frontier = best
     for _ in range(max_hops):
         relaxed = (
@@ -658,7 +632,7 @@ def bounded_sssp(
         # table AND tags the improved rows — the separate
         # merged-then-rejoin-best formulation pays a second node-keyed
         # shuffle per round for the same information
-        merged = (
+        merged = pin(
             best.alias("b")
             .join(relaxed.alias("r"), F.col("b.node") == F.col("r.dst"), "full_outer")
             .select(
@@ -674,14 +648,13 @@ def bounded_sssp(
                     F.col("b.dist").isNull()
                     | (F.col("r.cand") < F.col("b.dist"))
                 ).alias("_improved"),
-            )
-            .persist()
+            ),
+            "graph.best",
         )
-        cached.append(merged)
         best = merged.select("node", "dist")
         # only rows whose best improved can relax their neighbors
         frontier = merged.where("_improved").select("node", "dist")
-    return _finish(best, cached, materialize)
+    return best
 
 
 def subtree_rollup(
@@ -745,21 +718,17 @@ def neighborhood_jaccard(
     ``edges`` themselves. Jaccard = exact division of BIGINTs —
     bit-identical on any engine.
     """
-    # bounded-persisted (round-15 scan audit): the deduped (optionally
+    # pinned (round-15 scan audit): the deduped (optionally
     # hub-capped) edge set is consumed FOUR times — the degree
     # aggregate (referenced by both finishing joins) and both wedge
     # sides — and its subtree shuffles (distinct), so each recompute
     # was a full edge scan + dedup. deg likewise backs two joins.
-    e = _GRAPH_CACHE.persist(edges.select(src, dst).distinct())
+    e = pin(edges.select(src, dst).distinct(), "graph.jaccard_edges")
     if max_degree is not None:
         fan = e.groupBy(dst).agg(F.count("*").alias("_fan"))
         hubs = fan.where(F.col("_fan") > max_degree)
-        e = _GRAPH_CACHE.persist(
-            e.join(hubs.select(dst), dst, "left_anti")
-        )
-    deg = _GRAPH_CACHE.persist(
-        e.groupBy(src).agg(F.count("*").alias("_deg"))
-    )
+        e = pin(e.join(hubs.select(dst), dst, "left_anti"), "graph.jaccard_edges")
+    deg = pin(e.groupBy(src).agg(F.count("*").alias("_deg")), "graph.jaccard_deg")
     a = e.select(F.col(src).alias("_a"), dst)
     b = e.select(F.col(src).alias("_b"), dst)
     common = (

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalake_backend_spark.core.materialize import parts_for, pin
+
 # Bucket-count ceiling (round-12 ADVICE): the bucket assignment is a
 # binary-search CASE tree (O(log B) comparisons per row, never an
 # N-deep WHEN chain), and each bucket is one window task, so 64
@@ -59,116 +61,6 @@ _SAMPLE_PER_PARTITION = 64
 # frame: 1M/task lost the win). Sizing only changes task counts,
 # never results.
 _ROWS_PER_PART = 100_000
-
-# Share-the-scan persists from recent keyed_running_sum calls, evicted
-# FIFO (round-12 ADVICE: an unbounded session accumulated one cached
-# frame per call). The floor of 4 covers the deepest current
-# composition (spearman ranks two columns; exact_percentiles feeds a
-# tie-aggregate that its caller also re-reads); under concurrent
-# callers the FIFO additionally scales with the engine-owned
-# SPARK_GRAFT_EXPECTED_CONCURRENCY (round-13 VERDICT watch-item #1: six
-# concurrent kernel-backed queries could evict a persist another
-# running query still wanted — correctness-safe, but it silently
-# re-executed upstreams), so N concurrent callers each keep their
-# deepest two frames live. Eviction only costs recompute, never
-# correctness. Round 15 moved the machinery to the shared
-# core.cache.BoundedFrameCache (the text/dedup/association families
-# now use the same discipline); the module-level aliases below keep
-# this module's established surface.
-from datalake_backend_spark.core.cache import BoundedFrameCache
-
-_FRAME_CACHE = BoundedFrameCache(floor=4)
-_LIVE_CACHE = _FRAME_CACHE._frames
-_CACHE_LOCK = _FRAME_CACHE._lock
-
-
-def _cache_keep() -> int:
-    return _FRAME_CACHE.keep()
-
-# Boundary-cut memo keyed by the md5 of the input's ANALYZED plan (+
-# order columns + bucket count): a long-lived engine session calls the
-# same prefix-sum plans repeatedly (dashboards, retries, the bench's
-# concurrent-then-sequential passes), and the cut points are frozen
-# literals that only affect bucket BALANCE — never results — so
-# reusing them is always safe and skips the whole boundary job on a
-# repeat call. Bounded FIFO. The key folds in a cheap DATA fingerprint
-# (input file count + total bytes + max mtime from df.inputFiles(),
-# round-13 VERDICT ask #3): a long-lived session whose table grows
-# 100x under the same plan string must re-derive cut points, or one
-# hot bucket re-creates the skew the kernel exists to kill. A frame
-# with no file inputs (in-memory fixtures) fingerprints as empty and
-# memoizes on the plan alone — still balance-only, never correctness.
-_BOUNDS_MEMO: dict[str, list] = {}
-_BOUNDS_MEMO_MAX = 256
-# driver-side stat() calls per memo probe are capped; beyond this the
-# count+bytes of the first N files plus the total count still shifts
-# whenever data is appended, which is all invalidation needs
-_FINGERPRINT_MAX_FILES = 4096
-
-
-def _data_fingerprint(df: DataFrame) -> str:
-    """``count|bytes|max_mtime_ns`` over the frame's input files —
-    driver-side metadata only (one ``stat`` per file, capped at
-    ``_FINGERPRINT_MAX_FILES``). Any append/compact/overwrite of a
-    local table shifts at least one component; non-local or
-    non-file-backed inputs degrade to the file-name hash (object
-    stores rewrite names on commit) or empty."""
-    import hashlib
-    import os
-
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:  # noqa: BLE001 — connect-mode or API drift
-        return ""
-    if not files:
-        return ""
-    total, mx, statted = 0, 0, 0
-    for uri in files[:_FINGERPRINT_MAX_FILES]:
-        path = uri[7:] if uri.startswith("file://") else (
-            uri[5:] if uri.startswith("file:") else uri
-        )
-        try:
-            st = os.stat(path)
-        except OSError:
-            continue
-        total += st.st_size
-        mx = max(mx, st.st_mtime_ns)
-        statted += 1
-    if statted == 0:
-        # non-local storage: names change on commit, so hash them
-        names = hashlib.md5("\n".join(files).encode()).hexdigest()
-        return f"{len(files)}|names:{names}"
-    return f"{len(files)}|{total}|{mx}"
-
-
-def _memo_key(df: DataFrame, order_cols: list[str], n_buckets: int) -> str | None:
-    import hashlib
-
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:  # noqa: BLE001 — connect-mode or API drift
-        return None
-    raw = f"{plan}|{order_cols}|{n_buckets}|{_data_fingerprint(df)}".encode()
-    return hashlib.md5(raw).hexdigest()
-
-
-def _memo_put(key: str | None, bounds: list) -> None:
-    if key is None:
-        return
-    _BOUNDS_MEMO[key] = bounds
-    while len(_BOUNDS_MEMO) > _BOUNDS_MEMO_MAX:
-        _BOUNDS_MEMO.pop(next(iter(_BOUNDS_MEMO)))
-
-
-def release_caches() -> None:
-    """Drop every share-the-scan persist this module still holds, and
-    the boundary-cut memo with it."""
-    _BOUNDS_MEMO.clear()
-    _FRAME_CACHE.release()
-
-
-def _bounded_persist(df: DataFrame) -> DataFrame:
-    return _FRAME_CACHE.persist(df)
 
 
 def _bucket_count(spark) -> int:
@@ -361,8 +253,8 @@ def keyed_running_sum(
     metadata rows joined back. The offsets join is NOT hint-broadcast
     (round-12 ADVICE: #buckets×#key-cardinality rows is unbounded —
     AQE picks broadcast at runtime exactly when the key count makes it
-    safe). The persist is bounded by a FIFO of ``_CACHE_KEEP`` cached
-    frames so long-lived sessions never accumulate (round-12 ADVICE).
+    safe). The input is pinned (``core.materialize``) under the
+    caller's owner, which releases it.
 
     ``total_col``: when set, each row also carries its key's GRAND
     total of ``value_col`` under that name — computed from the same
@@ -378,8 +270,8 @@ def keyed_running_sum(
     value for the exclusive prefix.
 
     ``df`` must be DETERMINISTIC under recomputation (round-13
-    ADVICE): the base and offsets branches read the bounded persist,
-    and if that cache is evicted (FIFO overflow, executor memory
+    ADVICE): the base and offsets branches read the pinned input, and
+    if that cache is dropped (its owner released it, executor memory
     pressure) each branch recomputes the input from lineage. A
     nondeterministic upstream — ``rand()``/``sample()`` without a
     seed, ``row_number`` over a non-total order — could then yield
@@ -400,7 +292,7 @@ def keyed_running_sum(
     than its inherited partition count the base/offsets branches read
     it through a narrow ``coalesce`` — no shuffle, no re-persist, the
     same cached partitions in fewer tasks. No-op at real scale by
-    construction (rows // ~1M exceeds the inherited count)."""
+    construction (``core.materialize.parts_for``)."""
     from pyspark.sql.types import (
         ByteType,
         IntegerType,
@@ -424,7 +316,7 @@ def keyed_running_sum(
         )
     spark = df.sparkSession
     n_buckets = _bucket_count(spark)
-    src = _bounded_persist(df)
+    src = pin(df, "ranking.input")
     first = order_cols[0]
     first_type = df.select(first).schema.fields[0].dataType
     plain_numeric = isinstance(
@@ -432,7 +324,7 @@ def keyed_running_sum(
     )
     n_est: int | None = n_rows
     if bounds is not None and plain_numeric and not tuple_splitters:
-        # caller-supplied cut points: no boundary job, no memo
+        # caller-supplied cut points: no boundary job
         bounds = sorted({b for b in bounds if b is not None and b == b})
         bucket = (
             _binary_search_bucket(
@@ -443,62 +335,46 @@ def keyed_running_sum(
             else F.lit(0)
         )
     elif tuple_splitters or not plain_numeric:
-        memo_key = _memo_key(df, order_cols, n_buckets)
-        memoed = _BOUNDS_MEMO.get(memo_key) if memo_key else None
-        if memoed is None:
-            memoed = _sample_splitters(src, order_cols, n_buckets)
-            _memo_put(memo_key, memoed)
-        splitters, memo_n = memoed
-        n_est = n_est if n_est is not None else memo_n
+        splitters, n_seen = _sample_splitters(src, order_cols, n_buckets)
+        n_est = n_est if n_est is not None else n_seen
         bucket = _bucket_expr(src, order_cols, splitters)
     else:
-        memo_key = _memo_key(df, order_cols, n_buckets)
-        memoed = _BOUNDS_MEMO.get(memo_key) if memo_key else None
-        if memoed is None:
-            qs = [i / n_buckets for i in range(1, n_buckets)]
-            # count folded into the SAME boundary job (round-15): the
-            # pass already scans the cache; the row count feeds the
-            # read-side coalesce below for free
-            row = src.agg(
-                F.percentile_approx(
-                    F.col(first).cast("double"), qs, 100
-                ).alias("_b"),
-                F.count(F.lit(1)).alias("_n"),
-            ).first()
-            # NaN cut points dropped (round-13 ADVICE): NaN breaks the
-            # sorted() invariant the binary-search tree needs; NaN
-            # rows order last (Spark) into the top bucket regardless
-            raw = (row["_b"] or []) if row else []
-            memoed = (
-                sorted({b for b in raw if b is not None and b == b}),
-                int(row["_n"]) if row else 0,
+        qs = [i / n_buckets for i in range(1, n_buckets)]
+        # count folded into the SAME boundary job (round-15): the pass
+        # already scans the cache; the row count feeds the read-side
+        # coalesce below for free
+        row = src.agg(
+            F.percentile_approx(F.col(first).cast("double"), qs, 100).alias("_b"),
+            F.count(F.lit(1)).alias("_n"),
+        ).first()
+        # NaN cut points dropped (round-13 ADVICE): NaN breaks the
+        # sorted() invariant the binary-search tree needs; NaN rows
+        # order last (Spark) into the top bucket regardless
+        cuts = sorted({b for b in (row["_b"] or []) if b is not None and b == b})
+        n_est = n_est if n_est is not None else int(row["_n"])
+        # cut-point count strictly below the value via the binary-search
+        # CASE tree (depth O(log B); NULL values land in bucket 0,
+        # matching NULLS FIRST), monotone because bigint→double casts
+        # are monotone even where lossy
+        bucket = (
+            _binary_search_bucket(
+                F.col(first).cast("double"), [F.lit(float(b)) for b in cuts]
             )
-            _memo_put(memo_key, memoed)
-        mbounds, memo_n = memoed
-        n_est = n_est if n_est is not None else memo_n
-        if mbounds:
-            # cut-point count strictly below the value via the
-            # binary-search CASE tree (depth O(log B); NULL values
-            # land in bucket 0, matching NULLS FIRST), monotone
-            # because bigint→double casts are monotone even where
-            # lossy
-            v = F.col(first).cast("double")
-            bucket = _binary_search_bucket(
-                v, [F.lit(float(b)) for b in mbounds]
-            )
-        else:
-            bucket = F.lit(0)
+            if cuts
+            else F.lit(0)
+        )
     read = src
     if n_est is not None:
-        try:
-            cur = src.rdd.getNumPartitions()
-        except Exception:  # noqa: BLE001 — connect-mode or API drift
-            cur = 0
-        parts = max(2, min(cur, int(n_est) // _ROWS_PER_PART + 2))
-        if cur and parts < cur:
-            # narrow coalesce over the SAME cached partitions: the
-            # base and offsets map stages run |parts| tasks instead of
-            # the inherited count; nothing recomputes, nothing shuffles
+        cur = src.rdd.getNumPartitions()
+        parts = parts_for(int(n_est), cur, _ROWS_PER_PART)
+        if parts < cur:
+            # narrow coalesce over the cached partitions: the base and
+            # offsets map stages run |parts| tasks instead of the
+            # inherited count, with no shuffle. Once a boundary job has
+            # filled the cache nothing recomputes; with caller-supplied
+            # ``bounds`` there is no boundary job, so the first action
+            # also BUILDS the cache through this coalesce, at |parts|
+            # tasks instead of the inherited count.
             read = src.coalesce(parts)
     tagged = read.withColumn("_p", bucket)
     part = Window.partitionBy("_p", *keys).orderBy(*order_cols).rowsBetween(
@@ -661,7 +537,7 @@ def rfm_segments(
             "monetary_scaled",
         )
     )
-    per_user = _bounded_persist(per_user)
+    per_user = pin(per_user, "ranking.rfm_users")
     # descending metric, ascending user tiebreak — mirror with
     # negation so the boundary pass sees one consistent sort key
     r = ntile_exact(

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from datalake_backend_spark.core.materialize import pin
+
 
 def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """Undominated (x, y) pairs, both dimensions maximized. Returns
@@ -59,7 +61,7 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     # <=64 metadata rows. NULL x lands in bucket 0 and sorts last
     # within it under DESC — consistent with a global DESC NULLS LAST
     # sweep because every non-null bucket is visited "before" it.
-    loc = ranking._bounded_persist(loc)
+    loc = pin(loc, "skyline.pruned")
     n_buckets = ranking._bucket_count(df.sparkSession)
     splitters, _ = ranking._sample_splitters(loc, [x_col], n_buckets)
     tagged = loc.withColumn(

@@ -17,11 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from datalake_backend_spark.core.cache import BoundedFrameCache
-
-#: bounded share-the-scan persists for this family's multi-consumer
-#: aggregate frames (round-15 scan audit); eviction = recompute
-_TS_CACHE = BoundedFrameCache(floor=4)
+from datalake_backend_spark.core.materialize import pin
 
 #: supported granularities, finest → coarsest (date_trunc units)
 LEVELS = ("minute", "hour", "day", "week", "month")
@@ -1012,17 +1008,18 @@ def autocorrelation(
         )
     shift = bucket_shift[bucket]
     factor = 10**scale
-    # bounded-persisted (round-15 scan audit): every lag consumes the
+    # pinned (round-15 scan audit): every lag consumes the
     # series TWICE (shifted + current side of the self-join), so N
     # lags re-ran the raw-data groupBy 2·N times without the cache
-    daily = _TS_CACHE.persist(
+    daily = pin(
         df.groupBy(
             *keys, F.to_date(F.date_trunc(bucket, F.col(ts_col))).alias("_d")
         ).agg(
             F.sum(
                 F.floor(F.col(value_col) * F.lit(factor)).cast("long")
             ).alias("_v")
-        )
+        ),
+        "timeseries.series",
     )
     dec = "decimal(38,0)"
     outs = []

@@ -47,6 +47,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datalake_backend_spark.core.materialize import checkpoint
 from datalake_backend_spark.operators.distributions import (
     top_k_per_group,
     value_distribution,
@@ -9075,7 +9076,8 @@ def r227_streaming_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl = VersionedTable(f"{base}/tbl")
         assert [m["op"] for m in tbl.history()] == ["bitmap-merge"] * 2
         out = finalize_bitmap(tbl.read(spark), ["event_type"])
-        out = out.localCheckpoint()
+        # materialize before the fixture dies
+        out = checkpoint(out, "queries.r227")
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out
@@ -10490,7 +10492,8 @@ def r254_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl = VersionedTable(f"{base}/tbl")
         assert [m["op"] for m in tbl.history()] == ["kmv-merge"] * 2
         out = finalize_kmv(tbl.read(spark), ["event_type"], k=128)
-        out = out.localCheckpoint()
+        # materialize before the fixture dies
+        out = checkpoint(out, "queries.r254")
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out
@@ -12018,7 +12021,8 @@ def r96_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dec_sum("value").alias("sum_value"),
             )
         )
-        out = out.localCheckpoint()  # materialize before the fixture dies
+        # materialize before the fixture dies
+        out = checkpoint(out, "queries.r96")
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out
@@ -12119,7 +12123,8 @@ def r111_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dec_sum("o_totalprice").alias("sum_price"),
             )
         )
-        out = out.localCheckpoint()  # materialize before the fixture dies
+        # materialize before the fixture dies
+        out = checkpoint(out, "queries.r111")
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out
@@ -13074,7 +13079,8 @@ def r105_streaming_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_max",
             "value_avg",
         )
-        out = out.localCheckpoint()
+        # materialize before the fixture dies
+        out = checkpoint(out, "queries.r105")
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out

@@ -75,9 +75,9 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, Observation]:
     partial count, and one that prunes the scan down to
     ``_corrupt_record`` alone is rejected by Spark
     (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN). A caller
-    that consumes ``clean`` more than once caches ``df`` itself and
-    unpersists it when done, as the engine does for its probe and
-    silver write.
+    that consumes ``clean`` more than once pins ``df`` itself
+    (``core.materialize``), as the engine does for its probe and silver
+    write.
     """
     corrupt = Observation()
     observed = df.observe(

@@ -172,3 +172,35 @@ def test_merge_pair_expr_greedy_scan_semantics(spark):
             .m
         )
         assert got == _merge_word(syms, a, b), (syms, a, b, got)
+
+
+def test_bpe_distributed_round_fills_vocab_in_one_job(spark, monkeypatch):
+    """Each merge round pins the rewritten vocab eagerly, and the fill
+    is ONE Spark job (``core.onetask.count_rows``) — ``DataFrame.count()``
+    on a persisted frame runs three under AQE. Counted per pin call by
+    job group through ``statusTracker``."""
+    from datalake_backend_spark.core import materialize
+    from datalake_backend_spark.datapipe import bpe as bpe_mod
+
+    sc = spark.sparkContext
+    jobs_per_pin = []
+
+    def counted_pin(df, name, eager=False):
+        group = f"bpe-pin-{len(jobs_per_pin)}"
+        sc.setJobGroup(group, group)
+        try:
+            return materialize.pin(df, name, eager=eager)
+        finally:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+            jobs_per_pin.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(bpe_mod, "pin", counted_pin)
+    docs = spark.createDataFrame(
+        [("low low low lower lowest",), ("new newer newest low wide widest",)],
+        "text string",
+    ).repartition(3)
+    merges = bpe_mod.bpe_train_distributed(docs, 4, checkpoint_every=100)
+    assert merges == bpe_train(docs, 4)
+    assert jobs_per_pin == [1, 1, 1, 1]

@@ -281,6 +281,42 @@ def test_local_driver_heap_fits_host(monkeypatch):
     assert config._local_driver_mem() == "16g"
 
 
+def test_python_worker_rows_run_outside_the_repository(tmp_path):
+    """``get_spark()`` ships the package to the session's Python
+    workers: a registry row whose operators run Python on executors
+    (r49's media decoders, ``mapInPandas``) works from a working
+    directory outside the repository, with the package on the driver's
+    ``sys.path`` only, not on ``PYTHONPATH``."""
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "run.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from datalake_backend_spark import get_spark
+        from datalake_backend_spark.queries import QUERIES
+
+        spark = get_spark("outside", master="local[2]")
+        print(QUERIES["r49_media_dedup"].fn(spark, {SF_DIR!r}).count())
+        spark.stop()
+    """))
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k != "PYTHONPATH" and not k.startswith("SPARK_GRAFT_")
+    }
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"  # a second JVM beside the suite's
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert int(out.stdout.strip().splitlines()[-1]) > 0
+
+
 def test_versioned_gold_upload_log(engine, spark, tmp_path):
     """versioned_gold=True turns the gold zone into a commit log: each
     upload is a snapshot, re-uploads stay time-travelable, and the
@@ -590,35 +626,21 @@ def test_copurchase_edges_sweeps_dead_pid_dirs(spark):
         shutil.rmtree(mine, ignore_errors=True)
 
 
-def test_two_phase_checkpoint_storage_released(spark):
+def test_two_phase_operators_release_storage(spark):
     """The two-phase prefix-sum operators (all routed through
-    ranking.keyed_running_sum since round 13) hold a share-the-scan
-    persist of their input in a bounded FIFO (`_cache_keep()` entries,
-    explicit unpersist on eviction — no localCheckpoint, no
-    GC-dependent release on the hot path). This proves storage does
-    NOT grow unboundedly across 50 repeated two-phase calls on ONE
-    session: the live persisted-RDD count stays within the FIFO bound
-    of wherever it started (it may DROP below the baseline — the FIFO
-    evicts frames earlier tests left cached), and release_caches() +
-    a GC settle it back to (near) baseline instead of +50."""
-    import gc
-    import time
-
+    ranking.keyed_running_sum since round 13) pin their input. Run 50
+    times on ONE session, each call inside its own scope, they leave no
+    persisted RDD behind; run outside every scope, they grow storage
+    by at most the session FIFO's keep count, and ``release_all()``
+    drops those."""
+    from datalake_backend_spark.core import materialize
     from datalake_backend_spark.datapipe.dedup import (
         sorted_neighborhood_pairs,
     )
     from datalake_backend_spark.datapipe.packing import token_stream_offsets
     from datalake_backend_spark.operators.distributions import ecdf_percentile
 
-    jsc = spark.sparkContext._jsc.sc()
-
-    def n_persistent():
-        # getRDDStorageInfo reports RDDs with LIVE blocks — the real
-        # storage. (getPersistentRDDs is a Guava weakValues map whose
-        # size() keeps counting already-collected stale entries until
-        # the map is next written, so it over-reports after a GC.)
-        return len(jsc.getRDDStorageInfo())
-
+    jsc = spark.sparkContext._jsc
     probe = spark.createDataFrame(
         [(i, float(i % 7)) for i in range(20)], "pid int, v double"
     )
@@ -626,39 +648,23 @@ def test_two_phase_checkpoint_storage_released(spark):
     docs = spark.createDataFrame(
         [(i, "tok " * (i % 5 + 1)) for i in range(20)], "doc_id int, text string"
     )
+    calls = (
+        lambda: ecdf_percentile(probe, "v", ref, "x", keep_cols=["pid"]),
+        lambda: token_stream_offsets(docs, key_col="doc_id"),
+        lambda: sorted_neighborhood_pairs(docs, "text", id_col="doc_id"),
+    )
 
-    baseline = n_persistent()
+    def persisted() -> set:
+        return set(jsc.getPersistentRDDs().keys())
+
+    materialize.release_all()
+    before = persisted()
     for i in range(50):
-        which = i % 3
-        if which == 0:
-            out = ecdf_percentile(probe, "v", ref, "x", keep_cols=["pid"])
-        elif which == 1:
-            out = token_stream_offsets(docs, key_col="doc_id")
-        else:
-            out = sorted_neighborhood_pairs(docs, "text", id_col="doc_id")
-        assert out.count() > 0
-        del out
-    grew = n_persistent()
-    # the FIFO bound: 50 calls may not add more than the cache-keep
-    # window (+ slack for async unpersists still draining); a +50
-    # growth would mean the eviction path broke
-    from datalake_backend_spark.operators.ranking import (
-        _cache_keep,
-        release_caches,
-    )
-
-    assert grew <= baseline + _cache_keep() + 4, (baseline, grew)
-    # release the FIFO + memo, force a JVM GC, let the cleaner drain
-    release_caches()
-    gc.collect()
-    final = None
-    for _ in range(30):
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(1)
-        final = n_persistent()
-        if final <= baseline + 5:
-            break
-    assert final <= baseline + 5, (
-        f"checkpoint blocks not released: baseline={baseline}, "
-        f"after 50 two-phase calls={grew}, after GC={final}"
-    )
+        with materialize.scope("two-phase"):
+            assert calls[i % 3]().count() > 0
+        assert persisted() - before == set(), i
+    for i in range(12):
+        assert calls[i % 3]().count() > 0
+    assert len(persisted() - before) <= materialize._SESSION_KEEP
+    materialize.release_all()
+    assert persisted() - before == set()

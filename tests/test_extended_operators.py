@@ -2514,39 +2514,33 @@ def test_exact_percentiles_matches_numpy_linear(spark):
     assert got["solo"] == (42.5, 42.5, 42.5)
 
 
-def test_keyed_running_sum_boundary_memo_reuse(spark):
-    """Boundary-cut memo (operators/ranking.py, round 13): cut points
-    are frozen literals that only affect bucket balance, so a repeat
-    call with the SAME analyzed plan must (a) hit the memo and (b)
-    return row-identical results — the steady-state contract the
-    bench's sequential-after-concurrent pass relies on."""
+def test_keyed_running_sum_repeat_calls_release_their_input(spark):
+    """The kernel pins its input under the caller's owner: a repeat call
+    inside a scope returns row-identical results, and leaving the scope
+    releases every frame both calls pinned."""
+    from datalake_backend_spark.core.materialize import scope
     from datalake_backend_spark.operators import ranking
 
-    ranking.release_caches()
     df = spark.createDataFrame(
         [(f"k{i % 3}", i, (i * 7) % 11 + 1) for i in range(400)],
         "k string, v bigint, w bigint",
     )
-    first = {
-        (r.k, r.v): r.cum
-        for r in ranking.keyed_running_sum(
-            df, ["k"], ["v"], "w", out_col="cum"
-        ).collect()
-    }
-    assert len(ranking._BOUNDS_MEMO) == 1
-    memo_bounds = next(iter(ranking._BOUNDS_MEMO.values()))
-    second = {
-        (r.k, r.v): r.cum
-        for r in ranking.keyed_running_sum(
-            df, ["k"], ["v"], "w", out_col="cum"
-        ).collect()
-    }
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+
+    def run():
+        return {
+            (r.k, r.v): r.cum
+            for r in ranking.keyed_running_sum(
+                df, ["k"], ["v"], "w", out_col="cum"
+            ).collect()
+        }
+
+    with scope("repeat"):
+        first, second = run(), run()
+        assert set(jsc.getPersistentRDDs().keys()) - before
     assert first == second
-    # still exactly one entry — the repeat call reused it
-    assert len(ranking._BOUNDS_MEMO) == 1
-    assert next(iter(ranking._BOUNDS_MEMO.values())) == memo_bounds
-    ranking.release_caches()
-    assert not ranking._BOUNDS_MEMO
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
 
 
 def test_tuple_splitters_split_tie_heavy_leading_metric(spark):
@@ -2722,13 +2716,11 @@ def test_percentile_bounds_path_survives_nan(spark):
     df = spark.createDataFrame(rows, "v double, w bigint")
     from datalake_backend_spark.operators import ranking
 
-    ranking.release_caches()
     out = ranking.global_running_sum(df, ["v"], "w", out_col="cum")
     cums = [r.cum for r in out.collect()]
     # 520 rows of weight 1: the inclusive prefix sums must be a
     # permutation-free 1..520 (any bucket/offset corruption breaks this)
     assert sorted(cums) == list(range(1, 521))
-    ranking.release_caches()
 
 
 def test_rfm_segments_null_user_preserved(spark):
@@ -2758,12 +2750,10 @@ def test_rfm_segments_null_user_preserved(spark):
     assert set("123") >= set(null_row.segment)
 
 
-def test_bounds_memo_invalidates_on_data_growth(spark, tmp_path):
-    """Memo invalidation (round-13 VERDICT ask #3): the boundary-cut
-    memo folds a data fingerprint (file count + bytes + mtime) into
-    its key, so growing the table 10x under an IDENTICAL plan must
-    yield fresh cut points sized to the new distribution — stale
-    bounds would funnel the new mass through one hot bucket."""
+def test_keyed_running_sum_correct_after_data_growth(spark, tmp_path):
+    """A long-lived session that re-runs the same plan over a table
+    grown 10x into a disjoint, higher value range: the boundary job runs
+    on every call, so the prefix sums stay exact at both sizes."""
     from datalake_backend_spark.operators import ranking
 
     path = str(tmp_path / "grow")
@@ -2775,87 +2765,13 @@ def test_bounds_memo_invalidates_on_data_growth(spark, tmp_path):
         df = spark.read.parquet(path)
         return ranking.keyed_running_sum(df, [], ["v"], "w", out_col="cum")
 
-    ranking.release_caches()
-    run().count()
-    assert len(ranking._BOUNDS_MEMO) == 1
-    # memo entries are (bounds, row_count) since round 15 — the count
-    # rides the boundary job and sizes the read-side coalesce
-    old_bounds, old_n = list(ranking._BOUNDS_MEMO.values())[0]
-    assert old_bounds and max(old_bounds) < 100.0
-    assert old_n == 1000
-
-    # grow 10x into a disjoint, higher value range
+    assert sorted(r.cum for r in run().collect()) == list(range(1, 1001))
     spark.createDataFrame(
         [(100.0 + float(i % 900), 1) for i in range(9000)],
         "v double, w bigint",
     ).write.mode("append").parquet(path)
-
-    out = run()
-    cums = sorted(r.cum for r in out.collect())
+    cums = sorted(r.cum for r in run().collect())
     assert cums == list(range(1, 10001))  # correctness at the new size
-    # a FRESH memo entry exists whose bounds reflect the new range
-    assert len(ranking._BOUNDS_MEMO) == 2, (
-        "fingerprint did not change -> stale cut points reused"
-    )
-    new_bounds, new_n = [
-        v for v in ranking._BOUNDS_MEMO.values() if v[0] != old_bounds
-    ][0]
-    assert max(new_bounds) > 100.0, (old_bounds, new_bounds)
-    assert new_n == 10000
-    # balance at the new size: bucket counts from the new cut points
-    # stay within 2x of ideal (the VERDICT's done-bar)
-    values = [float(i % 100) for i in range(1000)] + [
-        100.0 + float(i % 900) for i in range(9000)
-    ]
-    import bisect
-
-    # bucket id = #cut points strictly below v (matches _binary_search_bucket)
-    counts = [0] * (len(new_bounds) + 1)
-    for v in values:
-        counts[bisect.bisect_left(new_bounds, v)] += 1
-    ideal = len(values) / len(counts)
-    assert max(counts) <= 2 * ideal, (counts, new_bounds)
-    ranking.release_caches()
-
-
-def test_concurrent_kernel_cache_sized_by_expected_concurrency(spark, monkeypatch):
-    """Refcount-free fix for round-13 watch-item #1: the share-the-scan
-    FIFO scales with the ENGINE-owned SPARK_GRAFT_EXPECTED_CONCURRENCY
-    (round-14 VERDICT #5 renamed it from the bench-named var) so N
-    concurrent kernel-backed queries never evict each other's persists
-    mid-flight. Six concurrent calls under concurrency=6 must leave
-    ALL six inputs still persisted (keep=12 >= 6); the sequential
-    default (keep=4) is unchanged."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from datalake_backend_spark.operators import ranking
-
-    monkeypatch.delenv("SPARK_GRAFT_EXPECTED_CONCURRENCY", raising=False)
-    assert ranking._cache_keep() == 4
-    monkeypatch.setenv("SPARK_GRAFT_EXPECTED_CONCURRENCY", "6")
-    assert ranking._cache_keep() == 12
-
-    ranking.release_caches()
-    frames = [
-        spark.createDataFrame(
-            [(f"k{i % 3}", i * (j + 1), 1) for i in range(200)],
-            "k string, v bigint, w bigint",
-        )
-        for j in range(6)
-    ]
-
-    def work(df):
-        return ranking.keyed_running_sum(df, ["k"], ["v"], "w").count()
-
-    with ThreadPoolExecutor(max_workers=6) as ex:
-        assert all(c == 200 for c in ex.map(work, frames))
-    with ranking._CACHE_LOCK:
-        live = list(ranking._LIVE_CACHE)
-    assert len(live) == 6
-    assert all(df.storageLevel.useMemory for df in live), (
-        "a concurrent kernel call's persist was evicted mid-suite"
-    )
-    ranking.release_caches()
 
 
 def test_skyline_adversarial_all_frontier_two_phase(spark):
@@ -2870,7 +2786,6 @@ def test_skyline_adversarial_all_frontier_two_phase(spark):
     from datalake_backend_spark.operators import ranking
     from datalake_backend_spark.operators.skyline import skyline_2d
 
-    ranking.release_caches()
     n = 5000
     rows = [(float(i), float(n - i)) for i in range(n)]  # all undominated
     df = spark.createDataFrame(rows, "x double, y double").repartition(8)
@@ -2889,22 +2804,18 @@ def test_skyline_adversarial_all_frontier_two_phase(spark):
     # data window leads with the _b partition column
     for spec in unpart:
         assert "_b" in spec, plan
-    ranking.release_caches()
 
 
-def test_family_persist_caches_do_not_grow_monotonically(spark):
-    """Round-14 VERDICT #4: the bm25/tfidf/association/ssj persists had
-    no unpersist path, so a long-lived session accumulated one cached
-    frame per call. All of them now route through bounded family FIFOs
-    (core.cache.BoundedFrameCache): running the paths repeatedly must
-    leave the JVM's persisted-RDD count FLAT between rounds, and each
-    family cache at most its keep() size."""
-    from datalake_backend_spark.core import cache as core_cache
+def test_family_pins_bounded_unscoped_and_released_in_scope(spark):
+    """The share-the-scan pins of the text, dedup and association
+    families: called outside every scope, repeated rounds leave the
+    JVM's persisted-RDD count flat (the session FIFO keeps 8); called
+    inside a scope, each round leaves no persisted RDD behind."""
+    from datalake_backend_spark.core import materialize
     from datalake_backend_spark.datapipe import dedup
     from datalake_backend_spark.datapipe import text as textmod
     from datalake_backend_spark.operators import association
 
-    core_cache.release_all()
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta w{i % 5}") for i in range(40)],
         "doc_id long, text string",
@@ -2913,29 +2824,28 @@ def test_family_persist_caches_do_not_grow_monotonically(spark):
         [(i % 7, f"i{i % 5}") for i in range(60)],
         "basket long, item string",
     )
+    jsc = spark.sparkContext._jsc
 
-    def jvm_persisted() -> int:
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    def persisted() -> set:
+        return set(jsc.getPersistentRDDs().keys())
 
-    # baseline BEFORE the loop: earlier tests may leave localCheckpoint
-    # RDDs in storage (they unpersist on GC, not release_all), so the
-    # assertions below are deltas against this, never absolute zero
-    baseline = jvm_persisted()
-    sizes = []
-    for _ in range(3):
+    def one_round() -> None:
         textmod.bm25_scores(docs, ["alpha", "beta"]).count()
         textmod.bm25_multi_query(docs, {"q1": ["alpha"], "q2": ["beta"]}).count()
         textmod.tfidf_top_terms(docs).count()
         association.association_lift(baskets, "basket", "item").count()
         dedup.set_similarity_join(docs, 1, 2).count()
-        sizes.append(jvm_persisted())
-    # steady state: the 2nd and 3rd rounds add nothing (FIFO evicts)
-    assert sizes[1] == sizes[2], sizes
-    assert len(textmod._TEXT_CACHE._frames) <= textmod._TEXT_CACHE.keep()
-    assert len(dedup._DEDUP_CACHE._frames) <= dedup._DEDUP_CACHE.keep()
-    assert (
-        len(association._ASSOC_CACHE._frames)
-        <= association._ASSOC_CACHE.keep()
-    )
-    core_cache.release_all()
-    assert jvm_persisted() <= baseline
+
+    materialize.release_all()
+    before = persisted()
+    sizes = []
+    for _ in range(3):
+        one_round()
+        sizes.append(len(persisted() - before))
+    assert sizes[1] == sizes[2] <= materialize._SESSION_KEEP, sizes
+    materialize.release_all()
+    assert persisted() - before == set()
+    for _ in range(2):
+        with materialize.scope("family"):
+            one_round()
+        assert persisted() - before == set()

@@ -97,9 +97,8 @@ def test_one_task_matches_distributed(spark, monkeypatch, op, kind):
 def test_one_task_null_ids_match_distributed(spark, monkeypatch, op):
     """NULL ids never match a join, but each forms its own group and
     frontier row: the solvers mirror that, NULL seeds included.
-    (Components are left out: there the distributed loop's own two
-    algorithms disagree on NULL, and the one-task path keeps the
-    large-star/small-star answer.)"""
+    (Components drop NULL endpoints instead; see
+    test_components_drop_null_endpoints_on_every_path.)"""
     ids, edges, absent = _graph(5, "string", nodes=12, n_edges=40)
     edges += [(None, ids[3]), (ids[4], None), (None, None), (ids[7], None)]
     if op == "kcore_peel":
@@ -130,6 +129,23 @@ def test_one_task_long_chain_components(spark, monkeypatch):
     local, dist = _both_paths(monkeypatch, lambda: cluster_near_dups(df))
     assert local == dist
     assert local[1] == Counter({**{(i, 0): 1 for i in range(301)}, (999, 999): 1})
+
+
+def test_components_drop_null_endpoints_on_every_path(spark, monkeypatch):
+    """A pair with a NULL endpoint is dropped before the components are
+    found, so min-label propagation, the large-star/small-star fallback
+    (``star_after=0``) and the one-task solver give the same rows."""
+    df = _frame(spark, [(1, 2), (2, None), (5, 6)], "bigint", cols=("id_a", "id_b"))
+
+    def rows(**kw):
+        return Counter(map(tuple, cluster_near_dups(df, **kw).collect()))
+
+    local = rows()
+    with monkeypatch.context() as m:
+        m.setattr(onetask, "_LOCAL_ROWS", -1)
+        propagated, star = rows(), rows(star_after=0)
+    want = Counter({(1, 1): 1, (2, 1): 1, (5, 5): 1, (6, 5): 1})
+    assert local == propagated == star == want
 
 
 def _jobs(spark, group: str, call) -> int:

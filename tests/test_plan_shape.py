@@ -480,12 +480,8 @@ def test_rfm_score_joins_stay_equi_joins(spark):
     BNLJ is the 1-row recency-anchor broadcast, which has no _jk)."""
     import datetime as dt
 
-    from datalake_backend_spark.operators.ranking import (
-        release_caches,
-        rfm_segments,
-    )
+    from datalake_backend_spark.operators.ranking import rfm_segments
 
-    release_caches()
     df = spark.createDataFrame(
         [
             (f"u{i % 40}", dt.datetime(2024, 1, 1 + i % 27), float(i % 9 + 1))
@@ -513,4 +509,3 @@ def test_rfm_score_joins_stay_equi_joins(spark):
     ]
     assert len(equi) >= 3, plan  # the three score joins
     assert not any("BroadcastNestedLoopJoin" in ln for ln in join_lines), plan
-    release_caches()

@@ -2,22 +2,26 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB at the given scale factor, then compares row count, column names,
-and an order-insensitive value multiset (exact where possible).
+and an order-insensitive value multiset (exact where possible). Each
+query runs inside its own materialization scope; a query that leaves a
+persisted RDD behind once that scope exits also fails.
 
 Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datalake_backend_spark import get_spark  # noqa: E402
+from datalake_backend_spark.core.materialize import scope  # noqa: E402
 from datalake_backend_spark.sources.readers import TESTDATA_TABLES  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -42,19 +46,26 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
         sql = oracles.get(name)
         status, detail = "", ""
+        before = set(persisted().keys())
         try:
-            sdf = fn(spark, sf_dir)
-            spark_cols = sorted(sdf.columns)
-            spark_rows = [
-                row_key([r[c] for c in spark_cols]) for r in sdf.collect()
-            ]
-            if sql is None:
+            with scope(name):
+                sdf = fn(spark, sf_dir)
+                spark_cols = sorted(sdf.columns)
+                spark_rows = [
+                    row_key([r[c] for c in spark_cols]) for r in sdf.collect()
+                ]
+            left = set(persisted().keys()) - before
+            if left:
+                status = "FAIL"
+                detail = f"left {len(left)} persisted RDDs: {sorted(left)}"
+            elif sql is None:
                 status = f"ROWS-ONLY ({len(spark_rows)} rows)"
             else:
                 # Driver-hash trap guard: DuckDB HUGEINT (uncast SUM of an
