@@ -194,8 +194,8 @@ def get_spark(
     if master and master.startswith("local"):
         # in local mode the driver JVM IS every executor; Spark's 1g
         # default heap OOMs on broadcast/window state far below the
-        # data sizes the same code handles on a cluster (hit by the
-        # 10x scale-stress). Only effective for the process's FIRST
+        # data sizes the same code handles on a cluster (hit by a
+        # 10x scale run). Only effective for the process's FIRST
         # session (the JVM is launched with it); later get_spark calls
         # reuse the running JVM. SPARK_GRAFT_DRIVER_MEM overrides.
         conf.setdefault(

@@ -3,7 +3,6 @@
 Re-implements the reference's shared cleaning helpers (SURVEY §2.3
 F1-F5) as pure functions that chain with ``DataFrame.transform``:
 
-* ``enforce_schema``    — F3, ``preprocessing/common.py:6-13``
 * ``clean_strings``     — F1, ``preprocessing/common.py:15-22``
 * ``apply_null_defaults`` — F2, ``preprocessing/common.py:24-35``
 * ``parse_timestamps``  — F4+F5, ``preprocessing/common.py:37-45`` with
@@ -31,28 +30,6 @@ TS_FORMAT = "yyyy-MM-dd HH:mm:ss"
 
 #: Suffixes the producers are known to append; stripped before parsing.
 _TS_SUFFIX_RE = r"(\+\d{2}:\d{2}|\s*UTC)$"
-
-
-def enforce_schema(df: DataFrame, expected: T.StructType) -> DataFrame:
-    """Project ``df`` onto ``expected``: missing columns appear as typed
-    nulls, present columns are cast, extra columns are dropped.
-
-    The additive-and-cast behavior matches the reference's
-    ``validate_schema`` (``preprocessing/common.py:6-13``) but as a single
-    ``select`` so Catalyst sees one projection (the reference loops
-    ``withColumn``, growing the plan linearly in column count).
-    """
-    existing = {f.name: f for f in df.schema.fields}
-    cols: list[Column] = []
-    for field in expected.fields:
-        if field.name in existing:
-            src = df[field.name]
-            if existing[field.name].dataType != field.dataType:
-                src = src.cast(field.dataType)
-            cols.append(src.alias(field.name))
-        else:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*cols)
 
 
 def clean_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -126,15 +103,6 @@ def parse_timestamps(
             for name in df.columns
         ]
     )
-
-
-def require_columns(df: DataFrame, required: list[str]) -> list[str]:
-    """Names from ``required`` missing in ``df`` (P3 guard,
-    ``basic_preprocessing_vehicle.py:8-14``). Empty list == valid; the
-    caller decides whether to raise or skip — the engine surfaces errors
-    instead of the reference's silent ``status -1``."""
-    have = set(df.columns)
-    return [c for c in required if c not in have]
 
 
 def non_empty(df: DataFrame) -> bool:

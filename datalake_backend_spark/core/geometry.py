@@ -1,11 +1,9 @@
-"""Geometry column helpers: bbox expansion, centers, grid keys, motion.
+"""Geometry column helpers: bbox expansion, centers, grid keys.
 
-Covers SURVEY §2.3 F6-F8 and the per-step trajectory math that the
-reference computes on the driver after ``collect()``
-(``advanced_preprocessing_vehicle.py:122-139``,
-``advanced_preprocessing_safety.py:100-111``) — here they are plain
-column expressions usable inside window frames, so trajectory metrics
-stay distributed.
+Covers SURVEY §2.3 F6-F8 as plain column expressions. The per-step
+trajectory math (W4) the reference computes on the driver after
+``collect()`` is inlined in the vehicle and safety golds
+(``pipelines/vehicle.py``, ``pipelines/safety.py``).
 """
 
 from __future__ import annotations
@@ -68,17 +66,6 @@ def grid_key(
         F.floor(cx / F.lit(cell)).cast("long").cast("string"),
         F.floor(cy / F.lit(cell)).cast("long").cast("string"),
     )
-
-
-def step_distance(prev_x: Column, prev_y: Column, x: Column, y: Column) -> Column:
-    """Euclidean distance between consecutive centers (W4)."""
-    return F.hypot(x - prev_x, y - prev_y)
-
-
-def step_angle(prev_x: Column, prev_y: Column, x: Column, y: Column) -> Column:
-    """Movement angle in degrees between consecutive centers (W4 —
-    driver-side ``math.atan2`` at ``advanced_preprocessing_vehicle.py:131-135``)."""
-    return F.degrees(F.atan2(y - prev_y, x - prev_x))
 
 
 def zorder_key(*cols: Column, bits: int = 16) -> Column:

@@ -5,37 +5,17 @@ it twice, badly: parking coerces struct→map with a to_json/from_json
 round-trip (``basic_preprocessing_parkingLot.py:32-39``), and
 tracking_data HARDCODES the key list to build array<struct>
 (``preprocessing/tracking_data.py:45-57`` — silently drops unknown ids).
-This module generalizes both: any struct-typed column whose field names
-are really data becomes a MapType or exploded (key, value) rows, no key
-list anywhere.
+Here the declared bronze schemas read both objects as MapType
+(``schemas/domains.py``), so ``pipelines/parking.py`` and
+``pipelines/tracking.py`` explode them with no key list (q52, q55).
+This module parses JSON text columns into the same map shape.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def struct_to_map(col: Column, value_type: T.DataType) -> Column:
-    """struct<k1:V, k2:V, ...> → map<string, V> without naming the keys
-    (to_json/from_json pair — one codegen'd expression, not a write/read
-    round-trip like the reference's)."""
-    return F.from_json(F.to_json(col), T.MapType(T.StringType(), value_type))
-
-
-def explode_object(
-    df: DataFrame,
-    col: str,
-    value_type: T.DataType,
-    key_col: str = "key",
-    value_col: str = "value",
-) -> DataFrame:
-    """One row per (key, value) entry of a JSON-object column, keeping
-    all other columns (the generalized F19 — no hardcoded id list)."""
-    m = struct_to_map(F.col(col), value_type)
-    others = [c for c in df.columns if c != col]
-    return df.select(*others, F.explode(m).alias(key_col, value_col))
 
 
 def parse_json_map(

@@ -52,7 +52,7 @@ def shingles_of_tokens(toks: Column, n: int = 1) -> Column:
     column. For n > 1, pass a BOUND column (projected in its own step),
     not an inline ``tokens(...)`` expression — higher-order lambdas have
     no subexpression elimination, so an inlined split re-runs once per
-    shingle (see ``text.rolling_fingerprints``)."""
+    shingle (see ``text.chunk_fingerprint_projection``)."""
     if n == 1:
         return F.array_sort(F.array_distinct(toks))
     seq = F.sequence(F.lit(1), F.greatest(F.size(toks) - n + 1, F.lit(1)))
@@ -657,24 +657,6 @@ def contamination(
     joined = tr.join(ev, "fp")
     # chunk_fps is distinct per doc, so plain count == distinct count
     return joined.groupBy(id_col).agg(F.count("*").alias("n_shared_chunks"))
-
-
-def decontaminate(
-    train_df: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 8,
-    max_shared: int = 0,
-) -> DataFrame:
-    """Drop training documents sharing more than ``max_shared`` chunk
-    fingerprints with the eval set (left-anti join against the
-    :func:`contamination` hit list — train rows pass through
-    untouched, no re-tokenization of survivors)."""
-    hits = contamination(train_df, eval_df, text_col, id_col, window).where(
-        F.col("n_shared_chunks") > max_shared
-    )
-    return train_df.join(hits.select(id_col), id_col, "left_anti")
 
 
 def build_bloom_filter(

@@ -658,11 +658,6 @@ def _synthetic_image_table(docs, id_col, codec_of) -> DataFrame:
     )
 
 
-def synthetic_ppm_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """All-PPM variant of :func:`_synthetic_image_table`."""
-    return _synthetic_image_table(docs, id_col, lambda i: "ppm")
-
-
 def synthetic_image_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Mixed-codec variant: id mod 3 picks PPM P6 / 24-bit BMP / PNG.
     Exercises all three byte-level decoders in one scan; the q75 oracle
@@ -981,23 +976,6 @@ def audio_stats(
             yield pd.DataFrame(recs)
 
     return df.select(id_col, payload_col).mapInPandas(batches, AUDIO_STATS_SCHEMA)
-
-
-def sample_frames(
-    df: DataFrame,
-    every_ms: int = 1000,
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Frame-sampling plumbing for video rows: one output row per
-    sampled timestamp (payload NOT duplicated — a real decoder seeks)."""
-    offsets = F.sequence(
-        F.lit(0),
-        F.greatest(F.coalesce(F.col("meta.duration_ms"), F.lit(0)) - 1, F.lit(0)),
-        F.lit(every_ms),
-    )
-    return df.select(
-        id_col, F.explode(offsets).alias("frame_ms"), F.col("meta")
-    )
 
 
 def encode_rawvideo(frames: np.ndarray, fps: int) -> bytes:

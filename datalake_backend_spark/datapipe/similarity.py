@@ -70,40 +70,10 @@ def cosine_to(
     """Exact cosine similarity of every row's vector to ``query``.
 
     JVM-side left fold — right for modest dims (≤ a few hundred) and
-    when bit-exact cross-engine reproducibility matters. For
-    high-dimensional embeddings (768/1536+) prefer
-    :func:`cosine_to_pandas`: Arrow-vectorized numpy is ~10-50× faster
-    per element at those widths (at the cost of summation-order float
-    differences in the last ulp)."""
+    when bit-exact cross-engine reproducibility matters."""
     v = _as_double_array(vec_col)
     qn = sum(float(x) * float(x) for x in query) ** 0.5
     return df.withColumn(out_col, dot(v, query) / (norm(v) * F.lit(qn)))
-
-
-def cosine_to_pandas(
-    df: DataFrame,
-    query: list[float],
-    vec_col: str = "embedding",
-    out_col: str = "cosine",
-) -> DataFrame:
-    """Arrow-batched cosine via a Pandas UDF — the high-dim fast path.
-
-    The query vector travels inside the serialized UDF (small, constant);
-    each batch does one matmul. Results differ from :func:`cosine_to`
-    only by float summation order (pairwise vs sequential)."""
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(query, dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-
-    @pandas_udf("double")
-    def _cos(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.map(lambda v: np.asarray(v, dtype=np.float64)))
-        dots = m @ q
-        norms = np.sqrt((m * m).sum(axis=1))
-        return pd.Series(dots / (norms * qn))
-
-    return df.withColumn(out_col, _cos(F.col(vec_col)))
 
 
 def brute_force_topk(
@@ -479,62 +449,6 @@ def pq_topk(
     return scored.orderBy(F.desc("pq_cosine"), id_col).limit(k)
 
 
-def ivf_pq_index(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_lists: int = 16,
-    m: int = 8,
-    k: int = 16,
-    seed: int = 42,
-) -> tuple[DataFrame, list[list[float]], list[list[list[float]]]]:
-    """IVF-PQ index — the FAISS production shape composed from the two
-    tiers this module already has: coarse KMeans lists for pruning
-    (IVF) and per-vector PQ codes for in-list scoring. The indexed
-    table carries only ``(id, ivf_list, pq_codes)`` — m bytes of codes
-    per vector — and SHOULD be written partitioned by ``ivf_list`` so
-    a query scans only its probed lists' files (compose with
-    `VersionedTable.commit(partition_by=['ivf_list'])` or
-    `read_where`). Returns (indexed_df, centroids, codebooks)."""
-    assigned, centroids = ivf_index(df, vec_col, n_lists, seed)
-    cbs = pq_train(df, vec_col, m=m, k=k, seed=seed)
-    codes = pq_encode(assigned, cbs, vec_col, id_col)
-    indexed = codes.join(
-        assigned.select(id_col, "ivf_list"), id_col
-    ).select(id_col, "ivf_list", "pq_codes")
-    return indexed, centroids, cbs
-
-
-def ivf_pq_topk(
-    indexed: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    query: list[float],
-    topk: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ANN query over the IVF-PQ index: prune to the ``nprobe`` lists
-    whose centroids are nearest the query (driver-side math over
-    n_lists rows), then asymmetric-distance top-k over ONLY those
-    lists' PQ codes — the float vectors are never read. With the index
-    partitioned by ``ivf_list``, the `isin` filter becomes partition
-    pruning and the scan touches nprobe/n_lists of the files."""
-    q = np.asarray(query, dtype=np.float64)
-    qn = float(np.sqrt((q**2).sum()))
-
-    def cos(c):
-        cv = np.asarray(c)
-        n = float(np.sqrt((cv**2).sum()))
-        return float(cv @ q) / (n * qn) if n and qn else 0.0
-
-    probed = sorted(range(len(centroids)), key=lambda i: -cos(centroids[i]))[
-        :nprobe
-    ]
-    subset = indexed.where(F.col("ivf_list").isin(probed))
-    return pq_topk(subset, codebooks, query, k=topk, id_col=id_col)
-
-
 def semantic_dedup(
     df: DataFrame,
     threshold: float = 0.95,
@@ -632,16 +546,6 @@ def random_projection(
             ).alias(f"y{j}")
         )
     return df.select(*keep, *outs)
-
-
-def dot_cols(a: Column, b: Column) -> Column:
-    """Column-to-column dot product as the same sequential left fold
-    :func:`dot` uses — bit-exact in any engine that folds left."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def maxsim_scores(

@@ -1,4 +1,4 @@
-"""Text analysis: tokenization, quality scoring, language-ID, fingerprints.
+"""Text analysis: tokens, normalization, PII redaction, fingerprints, scoring.
 
 All pure column expressions (JVM-side, codegen'd) — a 100 TB corpus pays
 one map stage, no shuffle, for every per-document metric here.
@@ -15,19 +15,12 @@ from datalake_backend_spark.core.materialize import pin
 #: oracles — keep in sync with regexp_split_to_array(trim(x), '\s+')).
 TOKEN_RE = r"\s+"
 
-#: BPE-ish subword splitter: word pieces, numbers, punctuation runs —
-#: approximates tokenizer token counts without a vocab file.
-BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
 PUNCT_CHARS = ".,!?;:'\"()-"
 
-#: Minimal stopword lists per language for the n-gram/stopword
-#: language-ID heuristic (top function words; public knowledge).
+#: Minimal stopword list per language (top function words; public
+#: knowledge).
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "was", "for"],
-    "fr": ["le", "la", "les", "et", "de", "des", "un", "une", "est", "que"],
-    "es": ["el", "la", "los", "las", "de", "que", "y", "en", "un", "es"],
-    "de": ["der", "die", "das", "und", "ist", "von", "ein", "eine", "nicht", "mit"],
 }
 
 
@@ -69,69 +62,10 @@ def doc_lengths(
     )
 
 
-def bpe_token_count(col: Column | str) -> Column:
-    """Approximate subword token count via the BPE-ish regex."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(BPE_RE), F.lit(0)))
-
-
 def punct_count(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     stripped = F.translate(c, PUNCT_CHARS, "")
     return F.length(c) - F.length(stripped)
-
-
-def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
-    toks = tokens(col)
-    hits = F.size(
-        F.filter(toks, lambda t: F.lower(t).isin(*STOPWORDS[lang]))
-    )
-    return hits.cast("double") / F.greatest(F.size(toks), F.lit(1))
-
-
-def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality features (the length/punct/stopword family
-    used by C4/Gopher-style filters): token count, mean token length,
-    punctuation ratio, stopword ratio, uppercase ratio."""
-    c = F.col(text_col)
-    toks = tokens(c)
-    n_tok = F.size(toks)
-    return df.withColumns(
-        {
-            "n_tokens": n_tok,
-            "mean_token_len": F.length(F.trim(c)).cast("double")
-            / F.greatest(n_tok, F.lit(1)),
-            "punct_ratio": punct_count(c).cast("double")
-            / F.greatest(F.length(c), F.lit(1)),
-            "stopword_ratio_en": stopword_ratio(c, "en"),
-            "upper_ratio": F.length(F.regexp_replace(c, r"[^A-Z]", "")).cast("double")
-            / F.greatest(F.length(c), F.lit(1)),
-        }
-    )
-
-
-def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
-    """Heuristic language ID: CJK script detection first, else the
-    stopword-hit argmax across known languages (deterministic tie-break
-    by language code). A real deployment swaps in fastText/CLD3 behind
-    the same column contract."""
-    c = F.col(text_col)
-    toks = F.transform(tokens(c), F.lower)
-    scores = [
-        F.struct(
-            (-F.size(F.filter(toks, lambda t: t.isin(*words)))).cast("long").alias("n"),
-            F.lit(lang).alias("lang"),
-        )
-        for lang, words in sorted(STOPWORDS.items())
-    ]
-    best = F.array_min(F.array(*scores))
-    cjk = F.length(F.regexp_replace(c, r"[^一-鿿぀-ヿ]", ""))
-    return df.withColumn(
-        out_col,
-        F.when(cjk > F.length(c) * 0.2, F.lit("zh"))
-        .when(-best.getField("n") > 0, best.getField("lang"))
-        .otherwise(F.lit("unknown")),
-    )
 
 
 #: scrub patterns for normalize_text (applied in order)
@@ -323,36 +257,6 @@ def chunk_fingerprint_projection(
     return staged.select(
         F.col(id_col), F.array_sort(F.array_distinct(shingles)).alias(out_col)
     )
-
-
-def rolling_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    window: int = 8,
-    out_col: str = "chunk_fps",
-    hash_fn=None,
-) -> DataFrame:
-    """Rolling token-window fingerprints (document-chunk hashes for
-    partial-overlap detection): hash of each ``window``-token shingle,
-    distinct + sorted for set semantics. ``hash_fn`` defaults to
-    xxhash64 (fastest JVM path); pass ``dedup.portable_hash60`` when the
-    fingerprints must be reproducible in another SQL engine."""
-    hash_fn = hash_fn or F.xxhash64
-    # two-step projection: bind the token array to its own column first.
-    # Inlining tokens() into the transform lambda makes the interpreter
-    # re-split the text once PER SHINGLE (no subexpression elimination
-    # inside higher-order lambdas, and CollapseProject declines to merge
-    # a multiply-referenced alias) — measured 4× slower at sf0.1.
-    staged = df.withColumn("_rf_toks", tokens(F.col(text_col)))
-    toks = F.col("_rf_toks")
-    n = F.size(toks)
-    shingles = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1))),
-        lambda i: hash_fn(F.concat_ws(" ", F.slice(toks, i, window))),
-    )
-    return staged.withColumn(
-        out_col, F.array_sort(F.array_distinct(shingles))
-    ).drop("_rf_toks")
 
 
 def tfidf_top_terms(

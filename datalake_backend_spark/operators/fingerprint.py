@@ -79,35 +79,3 @@ def table_fingerprint(
     if group_by:
         return hashed.groupBy(*group_by).agg(*aggs)
     return hashed.agg(*aggs)
-
-
-def fingerprint_diff(
-    a: DataFrame,
-    b: DataFrame,
-    cols: list[str],
-    group_by: list[str],
-) -> DataFrame:
-    """Groups whose fingerprints DISAGREE between two tables — the
-    drill-down step after a top-level mismatch: full-outer join of the
-    two per-group fingerprints, keeping groups missing on either side
-    or differing in count/sum. Empty result == tables match at this
-    granularity. One aggregate per side + a join on the (small) group
-    key space."""
-    fa, fb = table_fingerprint(a, cols, group_by), table_fingerprint(b, cols, group_by)
-    sel_a = fa.select(
-        *group_by,
-        F.col("row_count").alias("row_count_a"),
-        F.col("content_sum").alias("content_sum_a"),
-    )
-    sel_b = fb.select(
-        *group_by,
-        F.col("row_count").alias("row_count_b"),
-        F.col("content_sum").alias("content_sum_b"),
-    )
-    joined = sel_a.join(sel_b, on=group_by, how="full_outer")
-    return joined.where(
-        ~(
-            F.col("row_count_a").eqNullSafe(F.col("row_count_b"))
-            & F.col("content_sum_a").eqNullSafe(F.col("content_sum_b"))
-        )
-    )

@@ -28,9 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: state columns appended per value column
-_STATE_SUFFIXES = ("n", "sum", "min", "max")
-
 
 def rollup_state(
     df: DataFrame, keys: list[str], value_cols: list[str]

@@ -36,28 +36,3 @@ def renest_frames(
         df.groupBy(*frame_cols)
         .agg(F.array_sort(F.collect_list(packed)).alias(out_col))
     )
-
-
-def renest_document(
-    df: DataFrame,
-    frame_cols: list[str],
-    out_col: str = "frame_detections",
-    frame_sort: list[str] | None = None,
-) -> DataFrame:
-    """Second-level re-nest: frame rows → ONE document row holding the
-    ordered frame array (the wrapped single-object output shape,
-    ``minio_connector.py:82-112`` / ``basic_processing_common.py:56-60``).
-
-    Produces a 1-row DataFrame; the sink writes it without the
-    reference's write-temp-JSON→re-read→collect round-trip (S2).
-    """
-    frame_sort = frame_sort or frame_cols[:1]
-    ordered = [*frame_sort, *[c for c in frame_cols if c not in frame_sort]]
-    extra = [c for c in df.columns if c not in frame_cols]
-    packed_full = F.struct(
-        *[F.col(c).alias(c) for c in ordered],
-        *[F.col(c).alias(c) for c in extra],
-    )
-    return df.select(packed_full.alias("_f")).agg(
-        F.array_sort(F.collect_list("_f")).alias(out_col)
-    )

@@ -1,98 +1,21 @@
-"""Per-entity rollups (SURVEY §2.6 A1-A6) — one hash aggregate.
+"""Conditional counts for the per-domain gold rollups (SURVEY §2.6 A12).
 
-The reference's advanced preprocessors all share a shape: group the
-exploded detection table by a track/event/product key, take min/max/
-count/avg, keep first/last attributes, and collect attribute lists that
-driver-side Python then reduces (mode, stddev, conditional counts —
-A10-A12). This module expresses the WHOLE reduction inside one
-``groupBy().agg()``:
-
-* first/last in *time order* via ``min_by``/``max_by`` (the reference's
-  ``F.first/F.last(ignorenulls)`` are partition-order-dependent —
-  ``advanced_preprocessing_vehicle.py:65-69`` — a nondeterminism we fix
-  by construction);
-* conditional counts via ``count_if``-style ``sum(when)`` (A12 — no
-  ``collect_list`` + driver ``.count()`` as in
-  ``advanced_preprocessing_safety.py:64-77``);
-* sample stddev via ``stddev_samp`` matching ``statistics.stdev``
-  (A11, ``advanced_preprocessing_vehicle.py:140``).
-
-Map-side partial aggregation makes this scale: the shuffle carries one
-partially-reduced row per (task, key), not the raw detections.
+The reference counts a condition by collecting a list and calling
+``.count()`` on the driver (``advanced_preprocessing_safety.py:64-77``);
+here it is one ``sum(when)`` inside the gold's ``groupBy().agg()``, so
+map-side partial aggregation applies. The rollups themselves (A1-A6)
+are each domain's ``gold()``; q04/q05 check the same rollup shape
+(count, min/max, deterministic first/last via ``min_by``/``max_by``,
+stddev) on the registry tables.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def first_by(value: str | Column, order: str | Column) -> Column:
-    """Value at the smallest ``order`` (deterministic ``first``)."""
-    return F.min_by(value, order)
-
-
-def last_by(value: str | Column, order: str | Column) -> Column:
-    """Value at the largest ``order`` (deterministic ``last``)."""
-    return F.max_by(value, order)
 
 
 def count_if(cond: Column) -> Column:
     """A12/F17: ``sum(CASE WHEN cond THEN 1 ELSE 0 END)`` with a 0 (not
     null) result on empty/never-true groups."""
     return F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0)).cast("long")
-
-
-def track_rollup(
-    df: DataFrame,
-    key_cols: list[str],
-    time_col: str | None = None,
-    numeric_cols: list[str] | None = None,
-    attr_cols: list[str] | None = None,
-    bool_count_cols: list[str] | None = None,
-    extra_aggs: list[Column] | None = None,
-) -> DataFrame:
-    """Generic track/event/product rollup.
-
-    Per ``key_cols`` group emits:
-
-    * ``frame_count`` (rows), ``first_detection``/``last_detection`` +
-      ``duration_seconds`` when ``time_col`` given;
-    * ``avg_/max_/min_/stddev_<c>`` for each numeric column;
-    * ``initial_/final_<c>`` (time-ordered) for each attribute column;
-    * ``<c>_count`` (true occurrences) for each boolean column;
-    * any caller-supplied aggregate expressions.
-
-    This single operator instantiates A1 (vehicle), A2 (people), A3
-    (safety), A5 (school) and A6 (retail) with different column lists —
-    the reference writes each out by hand (~30 LoC each).
-    """
-    numeric_cols = numeric_cols or []
-    attr_cols = attr_cols or []
-    bool_count_cols = bool_count_cols or []
-    aggs: list[Column] = [F.count("*").alias("frame_count")]
-    if time_col:
-        tsec = F.col(time_col).cast("double")
-        aggs += [
-            F.min(time_col).alias("first_detection"),
-            F.max(time_col).alias("last_detection"),
-            (F.max(tsec) - F.min(tsec)).alias("duration_seconds"),
-        ]
-    for c in numeric_cols:
-        aggs += [
-            F.avg(c).alias(f"avg_{c}"),
-            F.max(c).alias(f"max_{c}"),
-            F.min(c).alias(f"min_{c}"),
-            F.stddev_samp(c).alias(f"stddev_{c}"),
-        ]
-    order = F.col(time_col) if time_col else F.monotonically_increasing_id()
-    for c in attr_cols:
-        aggs += [
-            first_by(F.col(c), order).alias(f"initial_{c}"),
-            last_by(F.col(c), order).alias(f"final_{c}"),
-        ]
-    for c in bool_count_cols:
-        aggs.append(count_if(F.col(c)).alias(f"{c}_count"))
-    if extra_aggs:
-        aggs += list(extra_aggs)
-    return df.groupBy(*key_cols).agg(*aggs)

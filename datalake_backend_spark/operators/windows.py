@@ -1,4 +1,4 @@
-"""Adjacent-row window metrics (SURVEY §2.7 W1-W6, W9).
+"""Adjacent-row window metrics (SURVEY §2.7 W1-W3, W5, W6).
 
 The reference collects per-track arrays to the driver and walks
 consecutive elements in Python (``advanced_preprocessing_vehicle.py:97-140``).
@@ -13,8 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from datalake_backend_spark.core.geometry import step_angle, step_distance
 
 
 def _w(entity_cols: list[str], order_cols: list[str]):
@@ -94,45 +92,6 @@ def conditional_duration(
     )
 
 
-def trajectory_metrics(
-    df: DataFrame,
-    entity_cols: list[str],
-    order_cols: list[str],
-    x_col: str = "center_x",
-    y_col: str = "center_y",
-) -> DataFrame:
-    """Total path distance + per-step movement angles per entity (W4 —
-    ``advanced_preprocessing_vehicle.py:122-139``,
-    ``advanced_preprocessing_safety.py:100-111``). Emits
-    ``total_distance``, ``avg_movement_angle``, ``movement_angles``
-    (step angles in time order, reproducing the reference's list)."""
-    w = _w(entity_cols, order_cols)
-    px, py = F.lag(F.col(x_col)).over(w), F.lag(F.col(y_col)).over(w)
-    dist = step_distance(px, py, F.col(x_col), F.col(y_col))
-    ang = step_angle(px, py, F.col(x_col), F.col(y_col))
-    stepped = df.select(
-        *entity_cols,
-        *[F.col(c) for c in order_cols],
-        dist.alias("_dist"),
-        ang.alias("_ang"),
-    )
-    return stepped.groupBy(*entity_cols).agg(
-        F.coalesce(F.sum("_dist"), F.lit(0.0)).alias("total_distance"),
-        F.avg("_ang").alias("avg_movement_angle"),
-        F.array_compact(
-            F.collect_list(
-                F.struct(*[F.col(c) for c in order_cols], F.col("_ang").alias("a"))
-            )
-        ).alias("_angs"),
-    ).withColumn(
-        "movement_angles",
-        F.filter(
-            F.transform(F.array_sort(F.col("_angs")), lambda s: s.getField("a")),
-            lambda a: a.isNotNull(),
-        ),
-    ).drop("_angs")
-
-
 def first_event_time(
     df: DataFrame,
     entity_cols: list[str],
@@ -145,29 +104,6 @@ def first_event_time(
     ``min(when(flag, ts))`` — a plain hash aggregate, no window needed."""
     return df.groupBy(*entity_cols).agg(
         F.min(F.when(flag, F.col(time_col))).alias(out_col)
-    )
-
-
-def frame_gap_durations(
-    df: DataFrame,
-    entity_cols: list[str],
-    frame_col: str = "frame_number",
-    frame_seconds: float = 1.0 / 30.0,
-    out_col: str = "duration_seconds",
-) -> DataFrame:
-    """Per-entity duration from frame counts with gap awareness (W9 —
-    ``split_pose_data/split_pose.py:80-86``): each frame contributes
-    ``frame_seconds`` unless the previous frame is missing (gap > 1),
-    in which case the gap contributes a single frame's time."""
-    w = _w(entity_cols, [frame_col])
-    gap = F.col(frame_col) - F.lag(F.col(frame_col)).over(w)
-    contrib = F.when(gap.isNull() | (gap > 1), F.lit(frame_seconds)).otherwise(
-        gap.cast("double") * F.lit(frame_seconds)
-    )
-    return (
-        df.select(*entity_cols, contrib.alias("_dur"))
-        .groupBy(*entity_cols)
-        .agg(F.sum("_dur").alias(out_col))
     )
 
 

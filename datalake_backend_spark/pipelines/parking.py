@@ -18,10 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datalake_backend_spark.operators.sessionize import (
-    sessionize,
-    sessionized_summary,
-)
+from datalake_backend_spark.operators.sessionize import sessionized_summary
 
 
 def silver(raw: DataFrame) -> DataFrame:
@@ -52,17 +49,6 @@ def free_slots_per_frame(silver_df: DataFrame) -> DataFrame:
     return silver_df.groupBy("video_source", "frame_number", "timestamp_sec").agg(
         F.sum((~F.col("occupied")).cast("long")).alias("free_slots"),
         F.count("*").alias("total_slots"),
-    )
-
-
-def slot_sessions(silver_df: DataFrame) -> DataFrame:
-    """Occupancy sessions per slot: entry/exit/duration (W7)."""
-    return sessionize(
-        silver_df,
-        ["video_source", "slot_id"],
-        "timestamp_sec",
-        "occupied",
-        active_value=True,
     )
 
 

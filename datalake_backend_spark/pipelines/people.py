@@ -1,11 +1,10 @@
-"""People domain: double-nested frames, empty-frame preservation, J1 join.
+"""People domain: double-nested frames, empty-frame preservation (J1).
 
 Silver reproduces ``basic_preprocessing_people.py``: the double explode
 (E2) uses ``explode_outer`` (E3) so frames whose detections were all
 filtered away still appear; the reference instead re-attaches them with
 a distinct + left join (J1, ``basic_preprocessing_people.py:149-163``) —
-``explode_outer`` gets the same result in zero extra jobs, and
-:func:`frames_with_detections` shows the J1 join form for parity.
+``explode_outer`` gets the same result in zero extra jobs.
 
 Gold reproduces ``advanced_preprocessing_people.py`` incl. its
 driver-side enrichment: age/gender/carrying modes excluding 'Unknown'
@@ -47,36 +46,6 @@ def silver(raw: DataFrame) -> DataFrame:
     out = apply_null_defaults(out, NULL_DEFAULTS["people"])
     out = parse_timestamps(out, TIMESTAMP_COLUMNS["people"])
     return expand_bbox(out)
-
-
-def frames_with_detections(silver_df: DataFrame) -> DataFrame:
-    """J1 parity form: distinct frames ⟕ re-grouped detections with
-    ``coalesce(detections, array())`` restoring empties
-    (``basic_preprocessing_people.py:149-163``). The grouped side is
-    aggregated-per-frame (small), so it broadcasts."""
-    frames = silver_df.select("frame_number", "timestamp").distinct()
-    grouped = (
-        silver_df.where(F.col("tracker_id") != -1)
-        .groupBy("frame_number")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("tracker_id").alias("tracker_id"),
-                        F.col("class_name").alias("class_name"),
-                        F.col("confidence").alias("confidence"),
-                    )
-                )
-            ).alias("detections")
-        )
-    )
-    return frames.join(F.broadcast(grouped), "frame_number", "left").select(
-        "frame_number",
-        "timestamp",
-        F.coalesce(
-            "detections", F.array().cast(grouped.schema["detections"].dataType)
-        ).alias("detections"),
-    )
 
 
 def gold(silver_df: DataFrame) -> DataFrame:

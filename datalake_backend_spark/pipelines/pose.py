@@ -34,9 +34,10 @@ def silver(raw: DataFrame) -> DataFrame:
 def gold(silver_df: DataFrame, fps: float = 30.0) -> DataFrame:
     """Per-action summary with gap-aware duration (W9).
 
-    The W9 gap contribution (operators/windows.py
-    ``frame_gap_durations``) is computed in the same projection that
-    feeds the stats aggregate — a separate durations branch + join
+    Each frame contributes ``1/fps`` seconds; after a gap (a missing
+    previous frame) it contributes a single frame's time. The
+    contribution is computed in the same projection that feeds the
+    stats aggregate — a separate durations branch + join
     re-scans silver (different column pruning defeats exchange reuse)
     and added two exchanges at the q57 driver check. The groupBy
     reuses the window's ``action`` partitioning: one Exchange."""

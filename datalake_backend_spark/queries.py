@@ -4077,11 +4077,9 @@ def r130_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-trainer statistics driver check (`dbs.datapipe.bpe
     .bpe_pair_counts`): the initial adjacent-symbol pair counts
     (characters + the </w> end-of-word marker) weighted by corpus word
-    frequency — iteration 0 of byte-pair-encoding training, and the
-    trainer's only distributed stage (merge learning is a driver-side
-    fold over the bounded word-count dict; pinned by
-    tests/test_bpe.py). The DuckDB twin recomputes the identical pair
-    table relationally (word counts -> per-position substr pairs), so
+    frequency — iteration 0 of byte-pair-encoding training. The DuckDB
+    twin recomputes the identical pair table relationally (word counts
+    -> per-position substr pairs), so
     a tokenization drift, a lost end-of-word pair, or a miscounted
     weight breaks the value hash."""
     from datalake_backend_spark.datapipe.bpe import bpe_pair_counts
@@ -4259,8 +4257,7 @@ def r133_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     column-order swap, a separator change, or a lost row all break the
     hash. This is the operational check behind every 'bit-identical'
     lakehouse claim (clone == source, CDC apply == target, restore ==
-    old version); order/partition independence and the full-outer
-    drill-down (`fingerprint_diff`) are pinned by
+    old version); order/partition independence is pinned by
     tests/test_fingerprint.py."""
     from datalake_backend_spark.operators.fingerprint import table_fingerprint
 

@@ -13,7 +13,6 @@ from datalake_backend_spark.schemas.domains import (
     NULL_DEFAULTS,
     RENAMES,
     TIMESTAMP_COLUMNS,
-    raw_schema,
 )
 
 __all__ = [
@@ -21,5 +20,4 @@ __all__ = [
     "NULL_DEFAULTS",
     "RENAMES",
     "TIMESTAMP_COLUMNS",
-    "raw_schema",
 ]

@@ -514,8 +514,3 @@ TIMESTAMP_COLUMNS: dict[str, list[str]] = {
     "retail": ["timestamp"],
     "parking": ["processing_date"],
 }
-
-
-def raw_schema(domain: str) -> T.StructType:
-    """Declared bronze schema for ``domain`` (KeyError on unknown)."""
-    return DOMAIN_SCHEMAS[domain]

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datalake_backend_spark.config import _ship_package
 from datalake_backend_spark.schemas import DOMAIN_SCHEMAS
 
 CORRUPT_COL = "_corrupt_record"
@@ -97,7 +98,12 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     normalize it to TimestampType at microsecond precision — the same
     truncation DuckDB applies when casting TIMESTAMP_NS to TIMESTAMP,
     so oracle comparisons agree exactly.
+
+    The driver contract passes a plain session, so this also ships the
+    package to its Python workers (once per SparkContext), as
+    ``get_spark()`` does for the engine's own session.
     """
+    _ship_package(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # NTZ-vs-TZ normalization: parquet ms timestamps (isAdjustedToUTC=false)
     # arrive as TIMESTAMP_NTZ in Spark 4; the engine standardizes on
@@ -113,11 +119,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if ntz:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
     return df
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for the SQL API."""
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            table(spark, sf_dir, name).createOrReplaceTempView(name)

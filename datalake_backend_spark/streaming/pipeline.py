@@ -22,30 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from datalake_backend_spark.schemas import DOMAIN_SCHEMAS
-
-
-def read_raw_stream(
-    spark: SparkSession,
-    path: str,
-    domain: str | None = None,
-    schema: T.StructType | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming bronze scan over a landing directory of JSON documents."""
-    if schema is None:
-        if domain is None:
-            raise ValueError("pass either domain or schema")
-        schema = DOMAIN_SCHEMAS[domain]
-    reader = (
-        spark.readStream.schema(schema)
-        .option("multiLine", "true")
-        .option("mode", "PERMISSIVE")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(path)
-
 
 def read_event_stream(
     spark: SparkSession, path: str, schema: T.StructType
@@ -464,21 +440,6 @@ def streaming_session(spark: SparkSession, shuffle_partitions: int = 8):
     oracle sweep) never see it."""
     ns = spark.newSession()
     ns.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    return ns
-
-
-def streaming_tws_session(spark: SparkSession, shuffle_partitions: int = 8):
-    """:func:`streaming_session` plus the RocksDB state-store provider —
-    ``transformWithState`` is implemented only on RocksDB (the default
-    HDFS-backed in-memory provider raises at plan time). Scoped to the
-    cloned session so batch queries and the applyInPandasWithState
-    streams keep the default provider."""
-    ns = streaming_session(spark, shuffle_partitions)
-    ns.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     return ns
 
 

@@ -111,103 +111,3 @@ def track_slot_state(stream: DataFrame, slot_col: str = "slot_id") -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# --- transformWithState (Spark 4 "Arbitrary Stateful Processing v2") ---
-#
-# applyInPandasWithState (above) carries ONE flat tuple per key.
-# transformWithState is its successor: named composite state variables
-# (value / list / map), optional per-variable TTL, timers, and an
-# initial-state relation — the API a long-lived keyed aggregation
-# actually wants. running_user_profile demonstrates it with the two
-# shapes the old API couldn't express cleanly: a scalar ValueState for
-# totals PLUS an unbounded-key MapState for per-event-type counts
-# (previously you'd serialize the map into a string column and re-parse
-# it every batch).
-#
-# Requires the RocksDB state store (transformWithState is implemented
-# only there) — streaming_tws_session() sets the provider conf.
-#
-# SANDBOX GAP: the Python side of transformWithState speaks a protobuf
-# protocol to the JVM state server, and this container has no
-# `google.protobuf` (install disallowed). The operator is complete and
-# its test runs wherever protobuf exists (pytest skips on ImportError);
-# in this sandbox the equivalent semantics stay covered by the
-# applyInPandasWithState tracker above (driver row q74). Verified
-# failure mode: STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE from
-# `import google.protobuf` in transform_with_state_driver_worker.
-
-_TWS_OUTPUT_SCHEMA = (
-    "user_id BIGINT, n_events BIGINT, sum_value_scaled BIGINT, "
-    "n_types BIGINT, top_type_cnt BIGINT"
-)
-
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-)
-
-
-class UserProfileProcessor(StatefulProcessor):
-    """Per-user running profile: event count, integer-scaled value sum
-    (``Σ FLOOR(1000·value)`` — order-independent BIGINT, bit-exact in
-    any engine), distinct event-type count and the hottest type's
-    count. State: one ValueState (totals) + one MapState (type →
-    count); both survive across micro-batches and restarts."""
-
-    def init(self, handle) -> None:
-        self._totals = handle.getValueState("totals", "n BIGINT, sv BIGINT")
-        self._types = handle.getMapState("types", "t STRING", "c BIGINT")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import numpy as np
-        import pandas as pd
-
-        (uid,) = key
-        n, sv = (self._totals.get() or (0, 0)) if self._totals.exists() else (0, 0)
-        type_add: dict[str, int] = {}
-        for pdf in rows:
-            n += len(pdf)
-            sv += int(
-                np.floor(pdf["value"].to_numpy() * 1000.0).astype("int64").sum()
-            )
-            for t, c in pdf["event_type"].value_counts().items():
-                type_add[t] = type_add.get(t, 0) + int(c)
-        for t, c in type_add.items():
-            prev = (
-                self._types.getValue((t,)) if self._types.containsKey((t,)) else None
-            )
-            prev_c = int(prev[0]) if prev is not None else 0
-            self._types.updateValue((t,), (prev_c + c,))
-        self._totals.update((n, sv))
-        n_types = 0
-        top = 0
-        for v in self._types.values():
-            n_types += 1
-            top = max(top, int(v[0]))
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": int(uid),
-                    "n_events": n,
-                    "sum_value_scaled": sv,
-                    "n_types": n_types,
-                    "top_type_cnt": top,
-                }
-            ]
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_profile(stream: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Apply the transformWithState user profiler to a stream with
-    columns (user_id, event_type, value). Update output mode; emits one
-    cumulative row per user per batch the user appears in."""
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=UserProfileProcessor(),
-        outputStructType=_TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -9,26 +9,9 @@ from pyspark.sql import types as T
 from datalake_backend_spark.core.cleaning import (
     apply_null_defaults,
     clean_strings,
-    enforce_schema,
     non_empty,
     parse_timestamps,
-    require_columns,
 )
-
-
-def test_enforce_schema_adds_missing_and_casts(spark):
-    df = spark.createDataFrame([("1", "x")], ["a", "extra"])
-    expected = T.StructType(
-        [
-            T.StructField("a", T.IntegerType()),
-            T.StructField("b", T.StringType()),
-        ]
-    )
-    out = enforce_schema(df, expected)
-    assert [f.name for f in out.schema.fields] == ["a", "b"]
-    assert out.schema["a"].dataType == T.IntegerType()
-    row = out.collect()[0]
-    assert row.a == 1 and row.b is None
 
 
 def test_clean_strings_trims_and_preserves_nulls(spark):
@@ -80,9 +63,7 @@ def test_cleaning_idempotent(spark):
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
 
 
-def test_require_columns_and_non_empty(spark):
+def test_non_empty(spark):
     df = spark.createDataFrame([(1,)], ["a"])
-    assert require_columns(df, ["a"]) == []
-    assert require_columns(df, ["a", "z"]) == ["z"]
     assert non_empty(df)
     assert not non_empty(df.where("a > 1"))

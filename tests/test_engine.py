@@ -281,28 +281,37 @@ def test_local_driver_heap_fits_host(monkeypatch):
     assert config._local_driver_mem() == "16g"
 
 
-def test_python_worker_rows_run_outside_the_repository(tmp_path):
-    """``get_spark()`` ships the package to the session's Python
-    workers: a registry row whose operators run Python on executors
-    (r49's media decoders, ``mapInPandas``) works from a working
-    directory outside the repository, with the package on the driver's
-    ``sys.path`` only, not on ``PYTHONPATH``."""
+@pytest.mark.parametrize(
+    "session",
+    [
+        'from datalake_backend_spark import get_spark\n'
+        'spark = get_spark("outside", master="local[2]")',
+        # the driver contract: a plain session, rows from queries()
+        'from pyspark.sql import SparkSession\n'
+        'spark = SparkSession.builder.master("local[2]").getOrCreate()',
+    ],
+    ids=["get_spark", "plain"],
+)
+def test_python_worker_rows_run_outside_the_repository(tmp_path, session):
+    """The package reaches the session's Python workers: a registry row
+    whose operators run Python on executors (r49's media decoders,
+    ``mapInPandas``) works from a working directory outside the
+    repository, with the package on the driver's ``sys.path`` only, not
+    on ``PYTHONPATH`` — under ``get_spark()`` and under the plain
+    session the driver contract passes to ``__spark_entry__``."""
     import subprocess
     import sys
-    import textwrap
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = tmp_path / "run.py"
-    script.write_text(textwrap.dedent(f"""
-        import sys
-        sys.path.insert(0, {repo!r})
-        from datalake_backend_spark import get_spark
-        from datalake_backend_spark.queries import QUERIES
-
-        spark = get_spark("outside", master="local[2]")
-        print(QUERIES["r49_media_dedup"].fn(spark, {SF_DIR!r}).count())
-        spark.stop()
-    """))
+    script.write_text("\n".join([
+        "import sys",
+        f"sys.path.insert(0, {repo!r})",
+        "import __spark_entry__",
+        session,
+        f'print(__spark_entry__.queries()["r49_media_dedup"](spark, {SF_DIR!r}).count())',
+        "spark.stop()",
+    ]))
     env = {
         k: v
         for k, v in os.environ.items()

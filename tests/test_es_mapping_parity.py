@@ -1,5 +1,8 @@
-"""ES-mapping parity: the bulk export's field names/types match the
-reference's de-facto schema registry, one fixture per domain.
+"""ES-mapping parity: ``es_export_frame``'s projection has the field
+names/types of the reference's de-facto schema registry, one fixture per
+domain. This holds for that projection only: the engine's upload
+``export_index`` writes gold unprojected, so its bulk export does not
+carry these names.
 
 Each ``REFERENCE_MAPPINGS`` entry transcribes the ``PUT /datalake-*``
 body from ``Send_Data_To_DataLake/Documentations/{Domain}_Dev_Tool.txt``

@@ -5,11 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datalake_backend_spark.core.restructure import (
-    explode_object,
-    parse_json_map,
-    struct_to_map,
-)
+from datalake_backend_spark.core.restructure import parse_json_map
 from datalake_backend_spark.operators.asof import asof_join
 from datalake_backend_spark.operators.clustering import cluster_summary, kmeans_clusters
 
@@ -90,32 +86,6 @@ def test_range_join_boundary_semantics(spark):
     ).collect()
     # [start, end): t=10 excluded from [0,10), included in [10,20)
     assert [r.label for r in out] == ["open"]
-
-
-def test_struct_to_map_and_explode_object(spark):
-    """F19: dynamic keys survive without any hardcoded key list (the
-    reference drops ids absent from its literal list, tracking_data.py:50)."""
-    schema = T.StructType(
-        [
-            T.StructField("frame", T.IntegerType()),
-            T.StructField(
-                "slots",
-                T.StructType(
-                    [
-                        T.StructField("A", T.IntegerType()),
-                        T.StructField("B", T.IntegerType()),
-                        T.StructField("ZZZ", T.IntegerType()),  # unexpected key
-                    ]
-                ),
-            ),
-        ]
-    )
-    df = spark.createDataFrame([(1, (10, 20, 30))], schema)
-    m = df.select(struct_to_map(F.col("slots"), T.IntegerType()).alias("m")).collect()[0].m
-    assert m == {"A": 10, "B": 20, "ZZZ": 30}
-    rows = explode_object(df, "slots", T.IntegerType()).collect()
-    assert {(r.key, r.value) for r in rows} == {("A", 10), ("B", 20), ("ZZZ", 30)}
-    assert all(r.frame == 1 for r in rows)
 
 
 def test_parse_json_map(spark):

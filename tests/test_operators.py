@@ -11,7 +11,7 @@ from datalake_backend_spark.operators.distributions import (
 )
 from datalake_backend_spark.operators.mode import mode_agg
 from datalake_backend_spark.operators.renest import renest_frames
-from datalake_backend_spark.operators.rollup import count_if, track_rollup
+from datalake_backend_spark.operators.rollup import count_if
 from datalake_backend_spark.operators.sessionize import (
     session_summary,
     sessionize,
@@ -21,7 +21,6 @@ from datalake_backend_spark.operators.windows import (
     change_count,
     conditional_duration,
     first_event_time,
-    frame_gap_durations,
     time_in_state,
 )
 
@@ -146,33 +145,25 @@ def test_renest_deterministic_order(spark):
     assert out == {1: [1, 2, 3], 2: [1]}
 
 
-def test_track_rollup(spark):
-    rows = [
-        (1, 1.0, 10.0, "L", True),
-        (1, 2.0, 20.0, "R", False),
-        (1, 3.0, 30.0, "R", True),
-    ]
-    df = spark.createDataFrame(rows, ["tid", "t", "speed", "lane", "viol"])
-    r = track_rollup(
-        df,
-        ["tid"],
-        time_col="t",
-        numeric_cols=["speed"],
-        attr_cols=["lane"],
-        bool_count_cols=["viol"],
-    ).collect()[0]
-    assert r.frame_count == 3
-    assert r.duration_seconds == 2.0
-    assert r.avg_speed == 20.0 and r.max_speed == 30.0 and r.min_speed == 10.0
-    assert abs(r.stddev_speed - 10.0) < 1e-9  # sample stddev of 10,20,30
-    assert r.initial_lane == "L" and r.final_lane == "R"
-    assert r.viol_count == 2
-
-
 def test_count_if_empty_group(spark):
     df = spark.createDataFrame([(1, False)], ["k", "b"])
     r = df.groupBy("k").agg(count_if(F.col("b")).alias("n")).collect()[0]
     assert r.n == 0
+
+
+def test_frame_gap_durations(spark):
+    """W9, as the pose gold computes it: each frame adds one frame's
+    time, and a frame after a gap adds one frame's time too."""
+    from datalake_backend_spark.pipelines import pose
+
+    df = spark.createDataFrame(
+        [("p", 1, 0.9, []), ("p", 2, 0.9, []), ("p", 10, 0.9, [])],
+        "action string, frame_number int, confidence double, "
+        "keypoints array<struct<visibility: double>>",
+    )
+    r = pose.gold(df, fps=10.0).collect()[0]
+    # first frame 0.1, gap=1 → 0.1, gap=8>1 → 0.1
+    assert abs(r.duration_seconds - 0.3) < 1e-9
 
 
 def test_value_distribution(spark):
@@ -195,15 +186,6 @@ def test_top_k_per_group(spark):
     out = top_k_per_group(df, ["g"], "v", k=2, tie_break=["id"]).collect()
     got = sorted((r.rank, r.id) for r in out)
     assert got == [(1, 2), (2, 3)]  # tie on 9.0 broken by id
-
-
-def test_frame_gap_durations(spark):
-    df = spark.createDataFrame(
-        [("p", 1), ("p", 2), ("p", 10)], ["id", "frame_number"]
-    )
-    r = frame_gap_durations(df, ["id"], frame_seconds=0.1).collect()[0]
-    # first frame 0.1, gap=1 → 0.1, gap=8>1 → 0.1
-    assert abs(r.duration_seconds - 0.3) < 1e-9
 
 
 def test_pagerank_integer_exact(spark):

@@ -65,19 +65,6 @@ def test_people_gold_and_empty_frames(spark, tmp_path):
     assert rows[9].entered_restricted_area is False
 
 
-def test_people_frames_j1_join(spark, tmp_path):
-    from datalake_backend_spark.pipelines.people import frames_with_detections
-
-    path = write_fixture(tmp_path, "people")
-    raw = read_raw_json(spark, path, domain="people")
-    silver = get_pipeline("people").silver(raw)
-    frames = {
-        r.frame_number: r.detections for r in frames_with_detections(silver).collect()
-    }
-    assert len(frames[1]) == 1 and len(frames[2]) == 2
-    assert frames[3] == []  # restored empty
-
-
 def test_safety_gold(spark, tmp_path):
     _, gold = _run(spark, tmp_path, "safety")
     rows = {r.tracker_id: r for r in gold.collect()}

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from datalake_backend_spark.operators.sessionize import sessionize_by_gap
 from datalake_backend_spark.operators.windows import change_count
 from datalake_backend_spark.queries import QUERIES
-from datalake_backend_spark.sources.lakehouse import write_bucketed_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -81,28 +80,6 @@ def test_value_distribution_no_global_window(spark):
     out.collect()
     final = out._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in final or "ReusedQueryStage" in final, final
-
-
-def test_bucketed_join_skips_exchange(spark, tmp_path):
-    """A join between two tables bucketed on the key plans no Exchange —
-    the 100 TB co-location story, verified on the actual plan."""
-    # spark.sql.warehouse.dir is static — managed tables land in the
-    # default ./spark-warehouse; DROP TABLE below removes the data.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    left = spark.range(0, 1000).withColumn("v", F.col("id") * 2)
-    right = spark.range(0, 1000).withColumn("w", F.col("id") + 1)
-    write_bucketed_table(left, "bl", "id", n_buckets=4)
-    write_bucketed_table(right, "br", "id", n_buckets=4)
-    joined = spark.table("bl").join(spark.table("br"), "id")
-    plan = plan_of(joined)
-    try:
-        assert shuffle_count(plan) == 0, plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bl")
-        spark.sql("DROP TABLE IF EXISTS br")
 
 
 def test_repetition_metrics_map_only(spark):

@@ -239,67 +239,6 @@ def test_dedup_stream_drops_cross_batch_redelivery(spark, tmp_path):
     assert len(progs) == 2
 
 
-def test_transform_with_state_user_profile(spark, tmp_path):
-    """transformWithState running profile (streaming/stateful.py):
-    ValueState totals + MapState type counts across two micro-batches
-    equal the batch aggregate. Skips where the TWS protobuf protocol
-    dependency is absent (this sandbox — see the module comment)."""
-    import pytest as _pytest
-
-    _pytest.importorskip("google.protobuf")
-    from pyspark.sql import functions as F
-
-    from datalake_backend_spark.streaming.pipeline import (
-        start_to_memory,
-        streaming_tws_session,
-    )
-    from datalake_backend_spark.streaming.stateful import running_user_profile
-
-    ss = streaming_tws_session(spark)
-    rows1 = [(1, "a", 1.25), (1, "b", 2.5), (2, "a", 0.75)]
-    rows2 = [(1, "a", 3.0), (2, "c", 1.0), (2, "c", 2.0)]
-    schema = "user_id long, event_type string, value double"
-    for i, rows in enumerate([rows1, rows2]):
-        ss.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            f"{tmp_path}/b{i}"
-        )
-    import glob as globmod
-    import os
-
-    for i in range(2):
-        for f in globmod.glob(f"{tmp_path}/b{i}/part-*.parquet"):
-            os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
-    stream = (
-        ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{tmp_path}/b*")
-    )
-    q = start_to_memory(
-        running_user_profile(stream), "tws_profiles", output_mode="update"
-    )
-    q.awaitTermination()
-    final = {
-        r.user_id: r
-        for r in ss.table("tws_profiles")
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max_by(
-                F.struct("sum_value_scaled", "n_types", "top_type_cnt"),
-                "n_events",
-            ).alias("s"),
-        )
-        .collect()
-    }
-    assert final[1].n_events == 3
-    assert final[1].s.sum_value_scaled == 1250 + 2500 + 3000
-    assert final[1].s.n_types == 2  # a, b — map survived the boundary
-    assert final[1].s.top_type_cnt == 2  # 'a' twice
-    assert final[2].n_events == 3
-    assert final[2].s.n_types == 2  # a, c
-    assert final[2].s.top_type_cnt == 2  # 'c' twice
-
-
 def test_bitmap_state_merge_idempotent(spark):
     """bitmap_state / merge_bitmap_state (operators/incremental.py;
     r227): merging the SAME batch twice changes nothing (bit_or

@@ -19,8 +19,8 @@ from datalake_backend_spark.sources.writers import (
     wrapped_json_document,
     write_json_document,
 )
+from datalake_backend_spark.schemas import DOMAIN_SCHEMAS
 from datalake_backend_spark.streaming.pipeline import (
-    read_raw_stream,
     session_aggregate,
     start_silver_sink,
     start_to_memory,
@@ -92,11 +92,18 @@ def test_streaming_file_ingest_to_silver(spark, tmp_path):
     land = tmp_path / "landing"
     land.mkdir()
     write_fixture(land, "safety")
-    stream = read_raw_stream(spark, str(land), domain="safety")
+
+    def raw_stream():
+        return (
+            spark.readStream.schema(DOMAIN_SCHEMAS["safety"])
+            .option("multiLine", "true")
+            .json(str(land))
+        )
+
     out = str(tmp_path / "silver")
     ck = str(tmp_path / "ck")
     q = start_silver_sink(
-        stream, out, ck, transform=get_pipeline("safety").silver
+        raw_stream(), out, ck, transform=get_pipeline("safety").silver
     )
     q.awaitTermination(60)
     result = spark.read.parquet(out)
@@ -104,7 +111,7 @@ def test_streaming_file_ingest_to_silver(spark, tmp_path):
     assert "tracker_id" in result.columns
     # second drain with no new files appends nothing (checkpointed)
     q2 = start_silver_sink(
-        read_raw_stream(spark, str(land), domain="safety"), out, ck,
+        raw_stream(), out, ck,
         transform=get_pipeline("safety").silver,
     )
     q2.awaitTermination(60)
