@@ -14,7 +14,7 @@ expressions and window functions (zero row-at-a-time Python UDFs in
 hot paths), broadcast-able joins, AQE-friendly shuffles.
 """
 
-from datalake_backend_spark.config import get_spark, stop_spark
+from datalake_backend_spark.config import get_spark
 
 
 def __getattr__(name: str):
@@ -27,5 +27,5 @@ def __getattr__(name: str):
     raise AttributeError(name)
 
 
-__all__ = ["get_spark", "stop_spark", "Engine"]
+__all__ = ["get_spark", "Engine"]
 __version__ = "0.1.0"

@@ -235,11 +235,3 @@ def _ship_package(spark: SparkSession) -> None:
     sc.addPyFile(path)
     sc._datalake_backend_spark_zip = path
 
-
-def stop_spark() -> None:
-    """Stop the active session (test teardown only — the engine keeps
-    one session alive for its whole lifetime, unlike the reference's
-    session-per-request pattern)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

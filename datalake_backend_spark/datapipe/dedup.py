@@ -201,16 +201,29 @@ _WATCHERS: list = []
 _MAX_WATCHERS = 64
 
 
-def _watch_hot_buckets(obs, threshold: int, where: str) -> None:
-    """Log the observed bucket-size stats once the plan executes.
+#: WARNING for an uncapped (band, bucket) or perceptual-hash group
+#: above the warn threshold, formatted from the observed metrics
+HOT_BUCKET_MSG = (
+    "hot LSH bucket in %(where)s: max bucket size %(max_bucket_size)d "
+    "(p99 %(p99_bucket_size)s) with no max_bucket cap — a bucket of m "
+    "docs emits m^2/2 candidate pairs; pass max_bucket to "
+    "cap_hot_buckets/near_dup_minhash to bound the quadratic blowup "
+    "(bounded recall trade)"
+)
+
+
+def _watch(obs, metric: str, threshold: int, where: str, msg: str) -> None:
+    """Log ``msg`` (formatted from the observed metrics and ``where``)
+    once the plan executes, if the observed ``metric`` exceeds
+    ``threshold``.
 
     ``Observation.get`` blocks until the first action on the observed
     DataFrame completes, so the wait lives on a daemon thread: zero
     cost if the plan is never run, an automatic WARNING if it runs and
-    a bucket breached ``threshold``. A plan that is never EXECUTED
-    leaves its waiter blocked, so the live set is capped at
-    ``_MAX_WATCHERS`` — beyond that, new uncapped plans skip the
-    watcher (answers and the observe() metrics are unaffected)."""
+    breaches ``threshold``. A plan that is never EXECUTED leaves its
+    waiter blocked, so the live set is capped at ``_MAX_WATCHERS`` —
+    beyond that, new plans skip the watcher (answers and the
+    observe() metrics are unaffected)."""
     import threading
 
     _WATCHERS[:] = [t for t in _WATCHERS if t.is_alive()]
@@ -222,17 +235,8 @@ def _watch_hot_buckets(obs, threshold: int, where: str) -> None:
             m = obs.get
         except Exception:  # session torn down before any action
             return
-        mx = m.get("max_bucket_size") or 0
-        if mx > threshold:
-            _LOG.warning(
-                "hot LSH bucket in %s: max bucket size %d (p99 %s) with no "
-                "max_bucket cap — a bucket of m docs emits m^2/2 candidate "
-                "pairs; pass max_bucket to cap_hot_buckets/near_dup_minhash "
-                "to bound the quadratic blowup (bounded recall trade)",
-                where,
-                mx,
-                m.get("p99_bucket_size"),
-            )
+        if (m.get(metric) or 0) > threshold:
+            _LOG.warning(msg, dict(m, where=where))
 
     t = threading.Thread(target=_wait, daemon=True)
     t.start()
@@ -273,7 +277,7 @@ def cap_hot_buckets(
             F.max("_bn").alias("max_bucket_size"),
             F.percentile_approx("_bn", 0.99).alias("p99_bucket_size"),
         )
-        _watch_hot_buckets(obs, warn_above, "lsh_candidates")
+        _watch(obs, "max_bucket_size", warn_above, "lsh_candidates", HOT_BUCKET_MSG)
         return observed.drop("_bn")
     return with_n.where(F.col("_bn") <= max_bucket).drop("_bn")
 
@@ -358,7 +362,7 @@ def jaccard_pairs(
       counts the full blowup).
     - ``max_pairs`` unset → an ``observe()`` watcher WARNs when the
       executed plan verified more than :data:`PAIR_WARN` candidates,
-      mirroring :func:`_watch_hot_buckets`.
+      mirroring :func:`cap_hot_buckets`.
     """
     if max_pairs is not None:
         probe = pairs.limit(max_pairs + 1).count()
@@ -375,7 +379,15 @@ def jaccard_pairs(
 
         obs = Observation()
         pairs = pairs.observe(obs, F.count(F.lit(1)).alias("n_pairs"))
-        _watch_pair_count(obs, PAIR_WARN, "jaccard_pairs")
+        _watch(
+            obs,
+            "n_pairs",
+            PAIR_WARN,
+            "jaccard_pairs",
+            "oversized candidate frame in %(where)s: %(n_pairs)d pairs "
+            "verified with no max_pairs cap — pass max_pairs to fail "
+            "fast, or generate candidates with a bounded blocker",
+        )
     # deliberately NOT persisted (round-14, measured): the verify join
     # reads sh on both pair sides, but the subtree is a narrow
     # scan+tokenize with no shuffle — the two sides build in parallel
@@ -386,37 +398,6 @@ def jaccard_pairs(
     # feeds the k-hash signature pass AND verification.
     sh = shingle_projection(df, text_col, id_col, n)
     return _jaccard_on_shingles(sh, pairs, id_col)
-
-
-def _watch_pair_count(obs, threshold: int, where: str) -> None:
-    """WARN (on a daemon thread, post-execution) when a caller-supplied
-    candidate frame turned out larger than ``threshold`` — the
-    pair-frame twin of :func:`_watch_hot_buckets`, sharing its
-    bounded ``_WATCHERS`` pool."""
-    import threading
-
-    _WATCHERS[:] = [t for t in _WATCHERS if t.is_alive()]
-    if len(_WATCHERS) >= _MAX_WATCHERS:
-        return
-
-    def _wait() -> None:
-        try:
-            m = obs.get
-        except Exception:  # session torn down before any action
-            return
-        n = m.get("n_pairs") or 0
-        if n > threshold:
-            _LOG.warning(
-                "oversized candidate frame in %s: %d pairs verified with "
-                "no max_pairs cap — pass max_pairs to fail fast, or "
-                "generate candidates with a bounded blocker",
-                where,
-                n,
-            )
-
-    t = threading.Thread(target=_wait, daemon=True)
-    t.start()
-    _WATCHERS.append(t)
 
 
 def near_dup_minhash(

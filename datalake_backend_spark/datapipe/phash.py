@@ -150,7 +150,7 @@ def _cap_hot_keys(
     un-cap either."""
     from pyspark.sql import Window
 
-    from datalake_backend_spark.datapipe.dedup import _watch_hot_buckets
+    from datalake_backend_spark.datapipe.dedup import HOT_BUCKET_MSG, _watch
 
     if max_group is None and warn_above is None:
         return df
@@ -165,7 +165,7 @@ def _cap_hot_keys(
             F.max("_gn").alias("max_bucket_size"),
             F.percentile_approx("_gn", 0.99).alias("p99_bucket_size"),
         )
-        _watch_hot_buckets(obs, warn_above, where)
+        _watch(obs, "max_bucket_size", warn_above, where, HOT_BUCKET_MSG)
         return observed.drop("_gn")
     return with_n.where(F.col("_gn") <= max_group).drop("_gn")
 

@@ -436,27 +436,6 @@ class Engine:
 # Silver graph tables: derive once, read many
 # ---------------------------------------------------------------------------
 
-_EDGE_TABLE_LOCK = __import__("threading").Lock()
-
-
-def _sweep_stale_edge_tables(warehouse: str, prefix: str) -> None:
-    """Remove pid-scoped edge-table dirs left by dead processes (same
-    contract as the replay-fixture sweeper in ``queries.py``: each
-    process owns exactly one dir, stale == pid no longer exists)."""
-    import glob as globmod
-    import shutil
-
-    for d in globmod.glob(os.path.join(warehouse, prefix + "*")):
-        pid = d.rsplit("_", 1)[-1]
-        if not pid.isdigit() or int(pid) == os.getpid():
-            continue
-        try:
-            os.kill(int(pid), 0)
-        except ProcessLookupError:
-            shutil.rmtree(d, ignore_errors=True)
-        except OSError:
-            pass  # alive but not ours (or unsupported) — leave it
-
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized customer↔supplier co-purchase edge table, served
@@ -475,40 +454,34 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-side union preserves the exact row multiset the inline
     derivation produced (value hashes unchanged).
 
-    Thread-safe under the bench runner's concurrent query threads
-    (double-checked build under a module lock); pid-scoped dirs keep
+    Built through ``sources.derived.derive_once``: thread-safe under
+    the bench runner's concurrent query threads, pid-scoped so
     concurrent *processes* (driver correctness sweep vs local bench)
-    isolated, and dirs from dead pids are swept on the next build.
+    stay isolated, and dirs from dead pids are swept on every call.
     """
     from pyspark.sql import functions as F
 
+    from datalake_backend_spark.sources.derived import derive_once
     from datalake_backend_spark.sources.readers import table
     from datalake_backend_spark.sources.versioned import VersionedTable
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    tag = f"{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}"
-    base = os.path.join(warehouse, f"graph_edges_{tag}")
-    tbl = VersionedTable(base)
-    with _EDGE_TABLE_LOCK:
-        _sweep_stale_edge_tables(warehouse, "graph_edges_")
-        if tbl.latest_version() is None:
-            orders = table(spark, sf_dir, "orders")
-            lineitem = table(spark, sf_dir, "lineitem")
-            e0 = (
-                orders.join(
-                    lineitem, orders.o_orderkey == lineitem.l_orderkey
-                )
-                .select(
-                    F.concat(F.lit("c"), F.col("o_custkey")).alias("c"),
-                    F.concat(F.lit("s"), F.col("l_suppkey")).alias("s"),
-                )
-                .distinct()
+    def build(base: str) -> None:
+        orders = table(spark, sf_dir, "orders")
+        lineitem = table(spark, sf_dir, "lineitem")
+        e0 = (
+            orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+            .select(
+                F.concat(F.lit("c"), F.col("o_custkey")).alias("c"),
+                F.concat(F.lit("s"), F.col("l_suppkey")).alias("s"),
             )
-            # coalesce, not repartition: the distinct already shuffled,
-            # so merging its output partitions is a narrow dependency —
-            # no second full shuffle just to control file count
-            tbl.commit(e0.coalesce(8), op="graph-edges-silver")
+            .distinct()
+        )
+        # coalesce, not repartition: the distinct already shuffled,
+        # so merging its output partitions is a narrow dependency —
+        # no second full shuffle just to control file count
+        VersionedTable(base).commit(e0.coalesce(8), op="graph-edges-silver")
+
+    tbl = VersionedTable(derive_once(sf_dir, "graph_edges", build))
     e0 = tbl.read(spark)
     return e0.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
         e0.select(F.col("s").alias("src"), F.col("c").alias("dst"))

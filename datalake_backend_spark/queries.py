@@ -40,7 +40,6 @@ Cross-engine exactness rules (validated bit-for-bit on testdata):
 from __future__ import annotations
 
 import os
-import threading
 from dataclasses import dataclass
 from typing import Callable
 
@@ -59,6 +58,12 @@ from datalake_backend_spark.operators.windows import (
     conditional_duration,
     first_event_time,
     time_in_state,
+)
+from datalake_backend_spark.sources.derived import (
+    derive_once,
+    fixture_path,
+    fresh_dir,
+    replay_batches,
 )
 from datalake_backend_spark.sources.readers import table
 
@@ -3603,24 +3608,9 @@ FROM off GROUP BY lang
 """
 
 
-def _sweep_stale_fixtures(warehouse: str, prefix: str) -> None:
-    """Remove pid-scoped replay-fixture dirs left by prior processes:
-    each run cleans only its OWN pid's path, so dirs from crashed or
-    finished bench/oracle runs would otherwise accumulate unboundedly.
-    A dir is stale when the pid in its name no longer exists."""
-    import glob as globmod
-    import shutil
-
-    for d in globmod.glob(os.path.join(warehouse, prefix + "*")):
-        pid = d.rsplit("_", 1)[-1]
-        if not pid.isdigit() or int(pid) == os.getpid():
-            continue
-        try:
-            os.kill(int(pid), 0)
-        except ProcessLookupError:
-            shutil.rmtree(d, ignore_errors=True)
-        except OSError:
-            pass  # alive but not ours (or unsupported) — leave it
+def _halves(df: DataFrame, col: str, mid) -> list[DataFrame]:
+    """Two replay batches: rows with ``col <= mid``, then the rest."""
+    return [df.where(F.col(col) <= mid), df.where(F.col(col) > mid)]
 
 
 def q74_stateful_slot_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3642,9 +3632,6 @@ def q74_stateful_slot_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark = streaming_session(spark)
-    import glob as globmod
-    import shutil
-
     from datalake_backend_spark.streaming.stateful import track_slot_state
     from datalake_backend_spark.streaming.pipeline import start_to_memory
 
@@ -3656,39 +3643,21 @@ def q74_stateful_slot_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lo, hi = long.agg(F.min("timestamp_sec"), F.max("timestamp_sec")).first()
     mid = (lo + hi) / 2.0
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    base = os.path.join(
-        repo_root,
-        "spark-warehouse",
-        # pid-scoped: concurrent processes running this query must not
-        # race on the replay fixture
-        f"q74_src_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    _sweep_stale_fixtures(os.path.dirname(base), "q74_src_")
-    shutil.rmtree(base, ignore_errors=True)
-    try:
-        long.where(F.col("timestamp_sec") <= mid).coalesce(1).write.parquet(
-            f"{base}/b1"
-        )
-        long.where(F.col("timestamp_sec") > mid).coalesce(1).write.parquet(
-            f"{base}/b2"
-        )
-        for i, d in enumerate(["b1", "b2"]):
-            for f in globmod.glob(f"{base}/{d}/part-*.parquet"):
-                os.utime(f, (1_000_000_000 + i * 100, 1_000_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(long.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{base}/b*")
-        )
+    # the memory sink holds the results — the parquet replay fixture
+    # is dead weight once the stream has drained
+    with replay_batches(
+        spark,
+        sf_dir,
+        "q74_src",
+        [
+            long.where(F.col("timestamp_sec") <= mid),
+            long.where(F.col("timestamp_sec") > mid),
+        ],
+    ) as (stream, _base):
         q = start_to_memory(
             track_slot_state(stream), "q74_slots", output_mode="update"
         )
         q.awaitTermination()
-    finally:
-        # the memory sink holds the results — the parquet replay
-        # fixture is dead weight once the stream has drained
-        shutil.rmtree(base, ignore_errors=True)
     # update mode emits one row per slot per batch it appeared in; the
     # final state is the row with the greatest last_ts (strictly
     # increasing per slot — (user, ts) is unique in events).
@@ -3958,29 +3927,20 @@ def r129_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle recomputes v1 directly from orders, so a restore that
     leaks the delete, publishes a torn snapshot, or rewinds history
     instead of committing breaks the value hash. Deterministic
-    pid-scoped fixture, serialized like r91's."""
-    import shutil
-
+    derived fixture, like r91's."""
     from datalake_backend_spark.sources.versioned import VersionedTable
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r129_vt_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    tbl = VersionedTable(base)
-    with _VT_BUILD_LOCK:
-        _sweep_stale_fixtures(warehouse, "r129_vt_")
-        if tbl.latest_version() != 3:
-            shutil.rmtree(base, ignore_errors=True)
-            orders = table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderpriority", "o_totalprice"
-            )
-            tbl.commit(orders.where(F.pmod("o_orderkey", F.lit(7)) == 0))
-            tbl.delete_where(spark, F.pmod("o_orderkey", F.lit(3)) == 0)
-            v = tbl.restore(1)
-            assert v == 3
+    def build(base: str) -> None:
+        tbl = VersionedTable(base)
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderpriority", "o_totalprice"
+        )
+        tbl.commit(orders.where(F.pmod("o_orderkey", F.lit(7)) == 0))
+        tbl.delete_where(spark, F.pmod("o_orderkey", F.lit(3)) == 0)
+        v = tbl.restore(1)
+        assert v == 3
+
+    tbl = VersionedTable(derive_once(sf_dir, "r129_vt", build))
     return (
         tbl.read(spark, 3)
         .groupBy("o_orderpriority")
@@ -4014,7 +3974,7 @@ def r135_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     masquerading as a DV delete fails the hash. Concurrency, appends
     over vectors, compaction materialization, fragmentation fallback,
     and fsck validation are pinned by tests/test_versioned.py.
-    Deterministic pid-scoped fixture, serialized like r91's.
+    Deterministic derived fixture, like r91's.
 
     SF bound (round-12 sf1.0 sweep): at sf1.0 the every-13th delete
     lands ~115k SINGLETON ranges (hash-shuffled file positions) —
@@ -4023,29 +3983,20 @@ def r135_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads False, and the twin's hardcoded True diverges while every
     aggregate stays exact. Expected behavior, not a bug: the cap IS
     the contract (an unbounded inline manifest is the real hazard)."""
-    import shutil
-
     from datalake_backend_spark.sources.versioned import VersionedTable
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r135_vt_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    tbl = VersionedTable(base)
-    with _VT_BUILD_LOCK:
-        _sweep_stale_fixtures(warehouse, "r135_vt_")
-        if tbl.latest_version() != 2:
-            shutil.rmtree(base, ignore_errors=True)
-            orders = table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderpriority", "o_totalprice"
-            )
-            tbl.commit(orders.repartition(4))
-            v = tbl.delete_where(
-                spark, F.pmod("o_orderkey", F.lit(13)) == 0, mode="dv"
-            )
-            assert v == 2
+    def build(base: str) -> None:
+        tbl = VersionedTable(base)
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderpriority", "o_totalprice"
+        )
+        tbl.commit(orders.repartition(4))
+        v = tbl.delete_where(
+            spark, F.pmod("o_orderkey", F.lit(13)) == 0, mode="dv"
+        )
+        assert v == 2
+
+    tbl = VersionedTable(derive_once(sf_dir, "r135_vt", build))
     m1, m2 = tbl.manifest(1), tbl.manifest(2)
     metadata_only = (
         m2["op"] == "delete-dv"
@@ -4400,8 +4351,6 @@ def r137_media_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks the binary column's bytes fails the hash; filter pushdown
     (media_id/codec equality pruned at planning time) and bin-packing
     are pinned by tests/test_media_source.py."""
-    import shutil
-
     import numpy as np
 
     from datalake_backend_spark.datapipe.multimodal import (
@@ -4413,12 +4362,6 @@ def r137_media_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_media_source(spark)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r137_media_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
     ids = [
         r[0]
         for r in table(spark, sf_dir, "documents")
@@ -4426,24 +4369,17 @@ def r137_media_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .collect()
     ]
-    with _VT_BUILD_LOCK:
-        _sweep_stale_fixtures(warehouse, "r137_media_")
-        marker = os.path.join(base, ".complete")
-        if not os.path.exists(marker):
-            shutil.rmtree(base, ignore_errors=True)
-            os.makedirs(base)
-            for i in ids:
-                w, h = 4 + i % 5, 3 + i % 4
-                r = np.arange(h).reshape(h, 1, 1)
-                c = np.arange(w).reshape(1, w, 1)
-                ch = np.arange(3).reshape(1, 1, 3)
-                img = ((i * 31 + r * 7 + c * 3 + ch * 11) % 256).astype(
-                    np.uint8
-                )
-                with open(os.path.join(base, f"{i}.gif"), "wb") as fh:
-                    fh.write(encode_gif(img))
-            with open(marker, "w") as fh:
-                fh.write("ok")
+    def build(base: str) -> None:
+        for i in ids:
+            w, h = 4 + i % 5, 3 + i % 4
+            r = np.arange(h).reshape(h, 1, 1)
+            c = np.arange(w).reshape(1, w, 1)
+            ch = np.arange(3).reshape(1, 1, 3)
+            img = ((i * 31 + r * 7 + c * 3 + ch * 11) % 256).astype(np.uint8)
+            with open(os.path.join(base, f"{i}.gif"), "wb") as fh:
+                fh.write(encode_gif(img))
+
+    base = derive_once(sf_dir, "r137_media", build)
     media = (
         spark.read.format("mediafile")
         .option("path", base)
@@ -5108,30 +5044,23 @@ def r150_deep_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from datalake_backend_spark.sources.versioned import VersionedTable
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    tag = f"{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}"
-    src_base = os.path.join(warehouse, f"r150_src_{tag}")
-    cl_base = os.path.join(warehouse, f"r150_clone_{tag}")
-    clone = VersionedTable(cl_base)
-    with _VT_BUILD_LOCK:
-        _sweep_stale_fixtures(warehouse, "r150_src_")
-        _sweep_stale_fixtures(warehouse, "r150_clone_")
-        if clone.latest_version() != 1:
-            shutil.rmtree(src_base, ignore_errors=True)
-            shutil.rmtree(cl_base, ignore_errors=True)
-            tbl = VersionedTable(src_base)
-            cust = table(spark, sf_dir, "customer").select(
-                "c_custkey", "c_mktsegment", "c_acctbal"
-            )
-            tbl.commit(cust.repartition(4))
-            v = tbl.delete_where(
-                spark, F.pmod("c_custkey", F.lit(7)) == 0, mode="dv"
-            )
-            assert v == 2
-            tbl.deep_clone_to(cl_base)
-            # the whole point: the clone owes the source nothing
-            shutil.rmtree(src_base)
+    def build_src(src_base: str) -> None:
+        tbl = VersionedTable(src_base)
+        cust = table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_mktsegment", "c_acctbal"
+        )
+        tbl.commit(cust.repartition(4))
+        v = tbl.delete_where(spark, F.pmod("c_custkey", F.lit(7)) == 0, mode="dv")
+        assert v == 2
+
+    def build(cl_base: str) -> None:
+        src_base = derive_once(sf_dir, "r150_src", build_src)
+        VersionedTable(src_base).deep_clone_to(cl_base)
+        # the whole point: the clone owes the source nothing
+        shutil.rmtree(src_base)
+
+    clone = VersionedTable(derive_once(sf_dir, "r150_clone", build))
+    src_base = fixture_path(sf_dir, "r150_src")
     man = clone.manifest(1)
     independent = (
         man["op"] == "deep_clone"
@@ -5278,13 +5207,6 @@ def r153_media_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from datalake_backend_spark.engine import Engine
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r153_life_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    incoming = os.path.join(base, "incoming")
     mask = (1 << 64) - 1
 
     def _mix(x: int) -> int:
@@ -5307,33 +5229,28 @@ def r153_media_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .collect()
     ]
-    with _VT_BUILD_LOCK:
-        _sweep_stale_fixtures(warehouse, "r153_life_")
-        marker = os.path.join(base, ".complete")
-        if not os.path.exists(marker):
-            shutil.rmtree(base, ignore_errors=True)
-            os.makedirs(incoming)
-            for i in ids:
-                img = _img(i // 8)
-                gif = encode_gif(img)
-                with open(os.path.join(incoming, f"{i}.gif"), "wb") as fh:
+    def build(base: str) -> None:
+        incoming = os.path.join(base, "incoming")
+        os.makedirs(incoming)
+        for i in ids:
+            img = _img(i // 8)
+            gif = encode_gif(img)
+            with open(os.path.join(incoming, f"{i}.gif"), "wb") as fh:
+                fh.write(gif)
+            if i % 16 == 0:  # byte-identical copy → exact dup
+                with open(os.path.join(incoming, f"{i + 1}.gif"), "wb") as fh:
                     fh.write(gif)
-                if i % 16 == 0:  # byte-identical copy → exact dup
-                    with open(
-                        os.path.join(incoming, f"{i + 1}.gif"), "wb"
-                    ) as fh:
-                        fh.write(gif)
-                if i % 24 == 0:  # same pixels, new container → phash dup
-                    with open(
-                        os.path.join(incoming, f"{i + 2}.png"), "wb"
-                    ) as fh:
-                        fh.write(encode_png(img))
-            with open(marker, "w") as fh:
-                fh.write("ok")
-        # fresh zone per call so `version` is deterministically 1
-        zone_root = os.path.join(base, "lake")
-        shutil.rmtree(zone_root, ignore_errors=True)
-        res = Engine(spark).process_media_dir(incoming, zone_root)
+            if i % 24 == 0:  # same pixels, new container → phash dup
+                with open(os.path.join(incoming, f"{i + 2}.png"), "wb") as fh:
+                    fh.write(encode_png(img))
+
+    base = derive_once(sf_dir, "r153_life", build)
+    # fresh zone per call so `version` is deterministically 1
+    zone_root = os.path.join(base, "lake")
+    shutil.rmtree(zone_root, ignore_errors=True)
+    res = Engine(spark).process_media_dir(
+        os.path.join(base, "incoming"), zone_root
+    )
     row = [
         (
             int(res["n_files"]),
@@ -5649,33 +5566,24 @@ def r161_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever yields a single-status or empty half, the Spark side emits
     FALSE and this row goes red for a FIXTURE reason, not an engine
     bug — rebalance the split, don't chase the pruning code."""
-    import shutil
-
     from datalake_backend_spark.sources.versioned import VersionedTable
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r161_pevo_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    tbl = VersionedTable(base)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
     mid = orders.agg(
         F.percentile_approx("o_orderkey", 0.5, 1).alias("m")
     ).first()[0]
-    with _VT_BUILD_LOCK:
-        _sweep_stale_fixtures(warehouse, "r161_pevo_")
-        if tbl.latest_version() != 2:
-            shutil.rmtree(base, ignore_errors=True)
-            tbl.commit(orders.where(F.col("o_orderkey") <= mid))
-            tbl.commit(
-                orders.where(F.col("o_orderkey") > mid),
-                mode="append",
-                partition_by=["o_orderstatus"],
-            )
+    def build(base: str) -> None:
+        tbl = VersionedTable(base)
+        tbl.commit(orders.where(F.col("o_orderkey") <= mid))
+        tbl.commit(
+            orders.where(F.col("o_orderkey") > mid),
+            mode="append",
+            partition_by=["o_orderstatus"],
+        )
+
+    tbl = VersionedTable(derive_once(sf_dir, "r161_pevo", build))
     man = tbl.manifest()
     specs = man.get("partition_specs", {})
     evolved = len({tuple(s) for s in specs.values()}) > 1
@@ -6987,36 +6895,24 @@ def r188_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     nondeterminism hazard at 100 TB) and aggregated per category.
     The DuckDB twin recomputes the aggregate straight from the
     arithmetic, so a row lost to tag framing, a type coerced wrong,
-    or a writer/reader escaping mismatch breaks the hash. Fixture dir
-    is pid-scoped + marker-gated like every replay fixture; stale
-    dirs from dead pids are swept."""
-    import shutil
+    or a writer/reader escaping mismatch breaks the hash. The fixture
+    is derived once (`sources.derived.derive_once`)."""
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r188_xml_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    data_dir = os.path.join(base, "data")
-    with _VT_BUILD_LOCK:
-        _sweep_stale_fixtures(warehouse, "r188_xml_")
-        marker = os.path.join(base, ".complete")
-        if not os.path.exists(marker):
-            shutil.rmtree(base, ignore_errors=True)
-            (
-                table(spark, sf_dir, "documents")
-                .select(
-                    F.col("doc_id"),
-                    F.pmod("doc_id", F.lit(5)).cast("int").alias("cat"),
-                    F.pmod(F.col("doc_id") * 7, F.lit(1000)).alias("val"),
-                )
-                .write.format("xml")
-                .option("rowTag", "rec")
-                .option("rootTag", "recs")
-                .save(data_dir)
+    def build(base: str) -> None:
+        (
+            table(spark, sf_dir, "documents")
+            .select(
+                F.col("doc_id"),
+                F.pmod("doc_id", F.lit(5)).cast("int").alias("cat"),
+                F.pmod(F.col("doc_id") * 7, F.lit(1000)).alias("val"),
             )
-            open(marker, "w").close()
+            .write.format("xml")
+            .option("rowTag", "rec")
+            .option("rootTag", "recs")
+            .save(os.path.join(base, "data"))
+        )
+
+    data_dir = os.path.join(derive_once(sf_dir, "r188_xml", build), "data")
     recs = (
         spark.read.format("xml")
         .option("rowTag", "rec")
@@ -7103,37 +6999,25 @@ def r190_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     lakehouse ingests under daily (new producers add fields; old
     files stay valid). Aggregated per lang against an arithmetic
     twin, so a dropped batch, a column misaligned by position instead
-    of name, or a NULL-fill drift breaks the hash. Fixture dir is
-    pid-scoped + marker-gated; the two batches are written by Spark
-    itself (append with a wider schema)."""
-    import shutil
+    of name, or a NULL-fill drift breaks the hash. The fixture is
+    derived once; the two batches are written by Spark itself (append
+    with a wider schema)."""
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r190_sm_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    data_dir = os.path.join(base, "data")
-    with _VT_BUILD_LOCK:
-        _sweep_stale_fixtures(warehouse, "r190_sm_")
-        marker = os.path.join(base, ".complete")
-        if not os.path.exists(marker):
-            shutil.rmtree(base, ignore_errors=True)
-            docs = table(spark, sf_dir, "documents")
-            (
-                docs.where(F.pmod("doc_id", F.lit(2)) == 1)
-                .select("doc_id", "lang")
-                .write.parquet(data_dir, mode="overwrite")
-            )
-            (
-                docs.where(F.pmod("doc_id", F.lit(2)) == 0)
-                .select(
-                    "doc_id", "lang", (F.col("doc_id") * 3).alias("extra")
-                )
-                .write.parquet(data_dir, mode="append")
-            )
-            open(marker, "w").close()
+    def build(base: str) -> None:
+        data_dir = os.path.join(base, "data")
+        docs = table(spark, sf_dir, "documents")
+        (
+            docs.where(F.pmod("doc_id", F.lit(2)) == 1)
+            .select("doc_id", "lang")
+            .write.parquet(data_dir, mode="overwrite")
+        )
+        (
+            docs.where(F.pmod("doc_id", F.lit(2)) == 0)
+            .select("doc_id", "lang", (F.col("doc_id") * 3).alias("extra"))
+            .write.parquet(data_dir, mode="append")
+        )
+
+    data_dir = os.path.join(derive_once(sf_dir, "r190_sm", build), "data")
     merged = spark.read.option("mergeSchema", "true").parquet(data_dir)
     return merged.groupBy("lang").agg(
         F.count("*").alias("n_rows"),
@@ -9026,9 +8910,6 @@ def r227_streaming_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     event type — must be bit-identical to the twin's single-pass
     COUNT(DISTINCT): the streaming counter that scalar aggregate
     state cannot maintain, r219's bitmap mechanism under ingest."""
-    import glob as globmod
-    import shutil
-
     from datalake_backend_spark.operators.incremental import (
         finalize_bitmap,
     )
@@ -9043,29 +8924,9 @@ def r227_streaming_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "user_id"
     )
     mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).first()[0]
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r227_reach_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    _sweep_stale_fixtures(warehouse, "r227_reach_")
-    shutil.rmtree(base, ignore_errors=True)
-    try:
-        ev.where(F.col("event_id") <= mid).coalesce(1).write.parquet(
-            f"{base}/src/b1"
-        )
-        ev.where(F.col("event_id") > mid).coalesce(1).write.parquet(
-            f"{base}/src/b2"
-        )
-        for i, d in enumerate(["b1", "b2"]):
-            for f in globmod.glob(f"{base}/src/{d}/part-*.parquet"):
-                os.utime(f, (1_000_000_000 + i * 100,) * 2)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{base}/src/b*")
-        )
+    with replay_batches(
+        spark, sf_dir, "r227_reach", _halves(ev, "event_id", mid)
+    ) as (stream, base):
         q = start_bitmap_reach_sink(
             stream, f"{base}/tbl", f"{base}/ck", ["event_type"], "user_id"
         )
@@ -9075,8 +8936,6 @@ def r227_streaming_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = finalize_bitmap(tbl.read(spark), ["event_type"])
         # materialize before the fixture dies
         out = checkpoint(out, "queries.r227")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return out
 
 
@@ -10442,10 +10301,6 @@ def r254_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     global k-minimum, so the finalized snapshot must be BIT-IDENTICAL
     to the one-shot KMV over all data — which is what the twin
     computes relationally (no tolerance, unlike HLL)."""
-    import glob as globmod
-    import os
-    import shutil
-
     from datalake_backend_spark.operators.incremental import finalize_kmv
     from datalake_backend_spark.sources.versioned import VersionedTable
     from datalake_backend_spark.streaming.pipeline import (
@@ -10458,29 +10313,9 @@ def r254_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "user_id"
     )
     mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).first()[0]
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r254_kmv_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    _sweep_stale_fixtures(warehouse, "r254_kmv_")
-    shutil.rmtree(base, ignore_errors=True)
-    try:
-        ev.where(F.col("event_id") <= mid).coalesce(1).write.parquet(
-            f"{base}/src/b1"
-        )
-        ev.where(F.col("event_id") > mid).coalesce(1).write.parquet(
-            f"{base}/src/b2"
-        )
-        for i, d in enumerate(["b1", "b2"]):
-            for f in globmod.glob(f"{base}/src/{d}/part-*.parquet"):
-                os.utime(f, (1_000_000_000 + i * 100,) * 2)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{base}/src/b*")
-        )
+    with replay_batches(
+        spark, sf_dir, "r254_kmv", _halves(ev, "event_id", mid)
+    ) as (stream, base):
         q = start_kmv_reach_sink(
             stream, f"{base}/tbl", f"{base}/ck", ["event_type"],
             "user_id", k=128,
@@ -10491,8 +10326,6 @@ def r254_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = finalize_kmv(tbl.read(spark), ["event_type"], k=128)
         # materialize before the fixture dies
         out = checkpoint(out, "queries.r254")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return out
 
 
@@ -11011,8 +10844,6 @@ def q80_streaming_silver_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark = streaming_session(spark)
-    import shutil
-
     from datalake_backend_spark.streaming.pipeline import (
         read_event_stream,
         start_silver_sink,
@@ -11032,17 +10863,9 @@ def q80_streaming_silver_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").cast("decimal(18,4)").alias("value_dec"),
         )
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    base = os.path.join(
-        repo_root,
-        "spark-warehouse",
-        # pid-scoped: see q74
-        f"q80_zone_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    # own dir must OUTLIVE this call (the returned DataFrame lazily
-    # reads {base}/silver), so only dead-pid leftovers are swept here
-    _sweep_stale_fixtures(os.path.dirname(base), "q80_zone_")
-    shutil.rmtree(base, ignore_errors=True)
+    # the dir must OUTLIVE this call: the returned DataFrame lazily
+    # reads {base}/silver
+    base = fresh_dir(sf_dir, "q80_zone")
     q = start_silver_sink(
         stream, f"{base}/silver", f"{base}/ck", transform=silver
     )
@@ -11588,11 +11411,6 @@ FROM g GROUP BY user_id
 """
 
 
-#: r91/r92/r93 share one on-disk fixture; concurrent bench threads must
-#: not rebuild it under each other
-_VT_BUILD_LOCK = threading.Lock()
-
-
 def _versioned_orders(spark: SparkSession, sf_dir: str):
     """Build (once per process) the 4-version orders table that backs
     r91/r92/r93 (`dbs.sources.versioned.VersionedTable`):
@@ -11603,29 +11421,19 @@ def _versioned_orders(spark: SparkSession, sf_dir: str):
       v4 delete     key % 11 == 0
 
     Deterministic in (sf_dir), so concurrent pids build identical
-    tables; the path is pid-scoped like the streaming replay fixtures.
-    r91/r92/r93 share this fixture and a bench/driver may run them on
-    concurrent THREADS of one process, so the build is serialized
-    behind a module lock — losers find v4 committed and just read.
+    tables. r91/r92/r93 share this fixture and a bench/driver may run
+    them on concurrent THREADS of one process; ``derive_once``
+    serializes the build and the losers just read.
     """
-    import shutil
-
     from datalake_backend_spark.sources.versioned import VersionedTable
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r91_vt_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
+    return VersionedTable(
+        derive_once(
+            sf_dir,
+            "r91_vt",
+            lambda base: _build_versioned_orders(spark, sf_dir, VersionedTable(base)),
+        )
     )
-    tbl = VersionedTable(base)
-    with _VT_BUILD_LOCK:
-        _sweep_stale_fixtures(warehouse, "r91_vt_")
-        if tbl.latest_version() == 4:
-            return tbl  # already built in this process
-        shutil.rmtree(base, ignore_errors=True)
-        _build_versioned_orders(spark, sf_dir, tbl)
-    return tbl
 
 
 def _build_versioned_orders(spark, sf_dir, tbl) -> None:
@@ -11901,9 +11709,6 @@ def r95_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark = streaming_session(spark)
-    import glob as globmod
-    import shutil
-
     from datalake_backend_spark.streaming.pipeline import (
         dedup_stream,
         start_to_memory,
@@ -11912,34 +11717,17 @@ def r95_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
     )
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r95_src_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    _sweep_stale_fixtures(warehouse, "r95_src_")
-    shutil.rmtree(base, ignore_errors=True)
-    try:
-        ev.coalesce(1).write.parquet(f"{base}/b1")
-        ev.where(F.pmod("event_id", F.lit(3)) == 0).coalesce(1).write.parquet(
-            f"{base}/b2"
-        )
-        for i, d in enumerate(["b1", "b2"]):
-            for f in globmod.glob(f"{base}/{d}/part-*.parquet"):
-                os.utime(f, (1_000_000_000 + i * 100, 1_000_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{base}/b*")
-        )
+    with replay_batches(
+        spark,
+        sf_dir,
+        "r95_src",
+        [ev, ev.where(F.pmod("event_id", F.lit(3)) == 0)],
+    ) as (stream, _base):
         deduped = dedup_stream(
             stream, ["event_id"], time_col="ts", watermark="3650 days"
         )
         q = start_to_memory(deduped, "r95_dedup", output_mode="append")
         q.awaitTermination()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return (
         spark.table("r95_dedup")
         .groupBy("event_type")
@@ -11971,9 +11759,6 @@ def r96_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark = streaming_session(spark)
-    import glob as globmod
-    import shutil
-
     from datalake_backend_spark.sources.versioned import VersionedTable
     from datalake_backend_spark.streaming.pipeline import start_versioned_sink
 
@@ -11981,25 +11766,9 @@ def r96_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value"
     )
     mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).first()[0]
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r96_vs_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    _sweep_stale_fixtures(warehouse, "r96_vs_")
-    shutil.rmtree(base, ignore_errors=True)
-    try:
-        ev.where(F.col("event_id") <= mid).coalesce(1).write.parquet(f"{base}/src/b1")
-        ev.where(F.col("event_id") > mid).coalesce(1).write.parquet(f"{base}/src/b2")
-        for i, d in enumerate(["b1", "b2"]):
-            for f in globmod.glob(f"{base}/src/{d}/part-*.parquet"):
-                os.utime(f, (1_000_000_000 + i * 100, 1_000_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{base}/src/b*")
-        )
+    with replay_batches(
+        spark, sf_dir, "r96_vs", _halves(ev, "event_id", mid)
+    ) as (stream, base):
         q = start_versioned_sink(
             stream,
             f"{base}/tbl",
@@ -12020,8 +11789,6 @@ def r96_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the fixture dies
         out = checkpoint(out, "queries.r96")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return out
 
 
@@ -12050,9 +11817,6 @@ def r111_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark = streaming_session(spark)
-    import glob as globmod
-    import shutil
-
     from datalake_backend_spark.sources.versioned import VersionedTable
     from datalake_backend_spark.streaming.pipeline import start_upsert_sink
 
@@ -12082,25 +11846,7 @@ def r111_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b2 = repriced.unionByName(tombstones)
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r111_up_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    _sweep_stale_fixtures(warehouse, "r111_up_")
-    shutil.rmtree(base, ignore_errors=True)
-    try:
-        b1.coalesce(1).write.parquet(f"{base}/src/b1")
-        b2.coalesce(1).write.parquet(f"{base}/src/b2")
-        for i, d in enumerate(["b1", "b2"]):
-            for f in globmod.glob(f"{base}/src/{d}/part-*.parquet"):
-                os.utime(f, (1_000_000_000 + i * 100, 1_000_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(b1.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{base}/src/b*")
-        )
+    with replay_batches(spark, sf_dir, "r111_up", [b1, b2]) as (stream, base):
         q = start_upsert_sink(
             stream,
             f"{base}/tbl",
@@ -12122,8 +11868,6 @@ def r111_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the fixture dies
         out = checkpoint(out, "queries.r111")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return out
 
 
@@ -12517,6 +12261,17 @@ GROUP BY o_orderkey % 10
 """
 
 
+def _range_clustered_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders range-clustered on o_orderkey — the layout OPTIMIZE
+    produces, shared by the r109/r140 skipping fixtures."""
+    return (
+        table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_totalprice")
+        .repartitionByRange(8, "o_orderkey")
+        .sortWithinPartitions("o_orderkey")
+    )
+
+
 def r109_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-skipping driver check (`dbs.sources.versioned
     .VersionedTable.read_where`): orders committed range-clustered on
@@ -12527,28 +12282,17 @@ def r109_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed from prune_files and pinned true in both engines. A
     skipping bug that reads everything still returns correct rows but
     flips the flag; one that over-prunes breaks the row hash."""
-    import shutil
-
     from datalake_backend_spark.sources.versioned import VersionedTable
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r109_sk_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
+    tbl = VersionedTable(
+        derive_once(
+            sf_dir,
+            "r109_sk",
+            lambda base: VersionedTable(base).commit(
+                _range_clustered_orders(spark, sf_dir), op="optimize-clustered"
+            ),
+        )
     )
-    tbl = VersionedTable(base)
-    with _VT_BUILD_LOCK:
-        _sweep_stale_fixtures(warehouse, "r109_sk_")
-        if tbl.latest_version() is None:
-            shutil.rmtree(base, ignore_errors=True)
-            clustered = (
-                table(spark, sf_dir, "orders")
-                .select("o_orderkey", "o_totalprice")
-                .repartitionByRange(8, "o_orderkey")
-                .sortWithinPartitions("o_orderkey")
-            )
-            tbl.commit(clustered, op="optimize-clustered")
     preds = [("o_orderkey", ">=", 10000), ("o_orderkey", "<", 20000)]
     _kept, total, n_kept = tbl.prune_files(preds)
     return tbl.read_where(spark, preds).agg(
@@ -12583,33 +12327,20 @@ def r140_dv_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors second, residual filter last). The oracle is the plain
     double filter; `dv_delete_metadata_only` additionally pins that
     the delete reused the clustered dirs."""
-    import shutil
-
     from datalake_backend_spark.sources.versioned import VersionedTable
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r140_dvsk_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    tbl = VersionedTable(base)
-    with _VT_BUILD_LOCK:
-        _sweep_stale_fixtures(warehouse, "r140_dvsk_")
-        if tbl.latest_version() != 2:
-            shutil.rmtree(base, ignore_errors=True)
-            clustered = (
-                table(spark, sf_dir, "orders")
-                .select("o_orderkey", "o_totalprice")
-                .repartitionByRange(8, "o_orderkey")
-                .sortWithinPartitions("o_orderkey")
-            )
-            tbl.commit(clustered, op="optimize-clustered")
-            tbl.delete_where(
-                spark,
-                (F.col("o_orderkey") >= 12000) & (F.col("o_orderkey") < 14000),
-                mode="dv",
-            )
+    def build(base: str) -> None:
+        tbl = VersionedTable(base)
+        tbl.commit(
+            _range_clustered_orders(spark, sf_dir), op="optimize-clustered"
+        )
+        tbl.delete_where(
+            spark,
+            (F.col("o_orderkey") >= 12000) & (F.col("o_orderkey") < 14000),
+            mode="dv",
+        )
+
+    tbl = VersionedTable(derive_once(sf_dir, "r140_dvsk", build))
     preds = [("o_orderkey", ">=", 10000), ("o_orderkey", "<", 20000)]
     _kept, total, n_kept = tbl.prune_files(preds)
     head = tbl.latest_version()
@@ -13032,9 +12763,6 @@ def r105_streaming_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark = streaming_session(spark)
-    import glob as globmod
-    import shutil
-
     from datalake_backend_spark.operators.incremental import finalize_rollup
     from datalake_backend_spark.sources.versioned import VersionedTable
     from datalake_backend_spark.streaming.pipeline import (
@@ -13043,25 +12771,9 @@ def r105_streaming_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).first()[0]
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    warehouse = os.path.join(repo_root, "spark-warehouse")
-    base = os.path.join(
-        warehouse,
-        f"r105_mv_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    _sweep_stale_fixtures(warehouse, "r105_mv_")
-    shutil.rmtree(base, ignore_errors=True)
-    try:
-        ev.where(F.col("event_id") <= mid).coalesce(1).write.parquet(f"{base}/src/b1")
-        ev.where(F.col("event_id") > mid).coalesce(1).write.parquet(f"{base}/src/b2")
-        for i, d in enumerate(["b1", "b2"]):
-            for f in globmod.glob(f"{base}/src/{d}/part-*.parquet"):
-                os.utime(f, (1_000_000_000 + i * 100, 1_000_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{base}/src/b*")
-        )
+    with replay_batches(
+        spark, sf_dir, "r105_mv", _halves(ev, "event_id", mid)
+    ) as (stream, base):
         q = start_incremental_rollup_sink(
             stream, f"{base}/tbl", f"{base}/ck", ["event_type"], ["value"]
         )
@@ -13078,8 +12790,6 @@ def r105_streaming_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the fixture dies
         out = checkpoint(out, "queries.r105")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return out
 
 

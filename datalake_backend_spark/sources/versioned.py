@@ -17,13 +17,17 @@ tree, reduced to what plain parquet + an atomic file create can carry:
   directory in that snapshot. Readers resolve a manifest once and read
   only directories it names; a concurrent commit can never make them
   see a torn table.
-* **Optimistic concurrency** — the manifest is created with
-  ``open(..., "x")`` (atomic create-exclusive on POSIX; on an object
-  store this maps to a conditional PUT / If-None-Match, which is
-  exactly how Delta commits to S3). A loser re-reads the head and
+* **Optimistic concurrency** — :meth:`VersionedTable._publish` is the
+  only commit point: it writes the full manifest to a temp file and
+  hard-links it to the version name (``os.link`` is create-exclusive
+  on POSIX and the name appears with its content complete; on an
+  object store this maps to a conditional PUT / If-None-Match, which
+  is exactly how Delta commits to S3). A loser re-reads the head and
   retries against the next version; its already-written data directory
   is reused, so conflict cost is one small JSON retry, not a data
-  rewrite.
+  rewrite. Read-modify-write commits (MERGE, DELETE, streaming state
+  merges) go through one loop, :meth:`VersionedTable.rederive`, that
+  re-derives from the new head instead.
 * **Time travel** — ``read(spark, version=N)`` resolves the historical
   manifest. Old data directories are never mutated, only vacuumed.
 * **MERGE / DELETE** — ``merge`` routes through
@@ -70,6 +74,11 @@ from pyspark.sql import functions as F
 
 class CommitConflict(RuntimeError):
     """Another writer published this version first (after retries)."""
+
+
+#: attempts per publish (lost version races) and per re-derive (lost
+#: head races) before :class:`CommitConflict` surfaces
+RETRIES = 5
 
 
 class ConstraintViolation(RuntimeError):
@@ -391,7 +400,7 @@ class VersionedTable:
         df: DataFrame,
         mode: str = "overwrite",
         op: str | None = None,
-        max_retries: int = 5,
+        max_retries: int = RETRIES,
         metadata: dict | None = None,
         partition_by: list[str] | None = None,
         expected_head: int | None = None,
@@ -413,20 +422,11 @@ class VersionedTable:
         current spec across the whole table.
 
         The data directory is written ONCE; only the tiny manifest
-        create is retried on conflict.
-
-        ``expected_head`` is the optimistic-concurrency guard for
-        read-modify-write commits (MERGE/DELETE/compact): the snapshot
-        the caller DERIVED this dataframe from. If another writer has
-        published past it, retrying at a later version would silently
-        throw away that writer's commit — so the commit raises
-        :class:`CommitConflict` immediately and the caller re-derives
-        from the new head (Delta's ConcurrentModificationException
-        contract). Plain appends commute and need no guard.
+        create is retried on conflict. ``expected_head`` is the
+        read-modify-write guard described at :meth:`_publish`.
         """
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-        os.makedirs(self.log_dir, exist_ok=True)
         obs = None
         if constraints:
             # Delta-style CHECK constraints: row-level rules ride the
@@ -479,96 +479,51 @@ class VersionedTable:
         num_rows = sum(e["rows"] for e in file_entries)
 
         schema_json = json.loads(df.schema.json())
-        for _ in range(max_retries):
-            head = self.latest_version()
-            # expected_head=0 means "I derived from an EMPTY table":
-            # versions start at 1, so (head or 0) lets first-commit
-            # read-modify-writes be guarded too
-            if expected_head is not None and (head or 0) != expected_head:
-                raise CommitConflict(
-                    f"head moved {expected_head} -> {head} at {self.path}; "
-                    "re-derive from the new snapshot"
-                )
-            version = (head or 0) + 1
-            mixed = False
-            if mode == "append" and head is not None:
-                prev = self.manifest(head)
-                # partition-spec EVOLUTION (Iceberg-style): an append
-                # may use a different scheme than the snapshot it
-                # extends — each data dir records its own spec and
-                # reads recover every dir under its own basePath. Old
-                # data is never rewritten; rows from dirs that lack a
-                # partition column surface it from their file data (or
-                # as NULL), exactly Iceberg's evolved-spec contract.
-                prev_specs = prev.get("partition_specs") or {
-                    d: prev.get("partition_by", []) for d in prev["dirs"]
-                }
-                specs = dict(prev_specs)
-                specs[rel_dir] = partition_by or []
-                dirs = prev["dirs"] + [rel_dir]
-                total = prev["num_rows"] + num_rows
-                files = prev.get("files", []) + file_entries
-                # deletion vectors ride along: the new dir has none,
-                # existing files keep theirs (merge-on-read survives
-                # appends; only full rewrites materialize them away)
-                dvs = prev.get("dvs", [])
-                # schema evolution: appending a widened/changed schema
-                # flags the snapshot so reads merge parquet footers
-                mixed = prev.get("mixed_schema", False) or (
-                    prev.get("schema") != schema_json
-                )
-            else:
-                dirs = [rel_dir]
-                total = num_rows
-                files = file_entries
-                dvs = []
-                specs = {rel_dir: partition_by or []}
+        spec = partition_by or []
+
+        def build(prev: dict, _version: int) -> dict:
             man = {
-                "version": version,
-                "op": op or mode,
-                "ts": time.time(),
-                "dirs": dirs,
-                "num_rows": total,
-                "partition_by": partition_by or [],
+                "dirs": [rel_dir],
+                "num_rows": num_rows,
                 # per-dir partition scheme (Iceberg spec evolution);
-                # partition_by above stays the CURRENT spec
-                "partition_specs": specs,
+                # partition_by stays the CURRENT spec
+                "partition_by": spec,
+                "partition_specs": {rel_dir: spec},
                 # per-file footer stats (Delta add-action "stats"):
                 # the data-skipping index, O(files) manifest cost
-                "files": files,
+                "files": file_entries,
                 "schema": schema_json,
                 # snapshot spans data dirs with differing schemas →
                 # reads must merge footers (schema evolution)
-                "mixed_schema": mixed,
+                "mixed_schema": False,
                 # merge-on-read deletion vectors (Delta's inline DV
                 # encoding): [{path, ranges: [[lo, hi]...], rows}]
-                "dvs": dvs,
+                "dvs": [],
                 # caller-supplied commit tags (e.g. a streaming epoch id
                 # for replay-idempotent sinks)
                 "metadata": metadata or {},
             }
-            # Atomic commit point: write the FULL manifest to a temp
-            # file, then hard-link it to the final name — link() is
-            # create-exclusive AND the content is complete the instant
-            # the name appears (a bare open('x') would expose an empty
-            # file mid-write; a concurrent reader caught exactly that
-            # in the 8-writer stress test). On an object store this is
-            # a conditional PUT of the whole object.
-            tmp = self._manifest_path(version) + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                json.dump(man, fh)
-            try:
-                os.link(tmp, self._manifest_path(version))
-                return version
-            except FileExistsError:
-                continue  # lost the race; retry against new head
-            finally:
-                os.unlink(tmp)
-        raise CommitConflict(
-            f"lost {max_retries} commit races at {self.path}; giving up"
-        )
+            if mode == "append" and prev:
+                # partition-spec EVOLUTION (Iceberg-style): each data
+                # dir records its own spec and reads recover every dir
+                # under its own basePath; old data is never rewritten.
+                # Deletion vectors ride along (the new dir has none),
+                # and appending a changed schema flags the snapshot so
+                # reads merge parquet footers.
+                man.update(
+                    dirs=prev["dirs"] + [rel_dir],
+                    num_rows=prev["num_rows"] + num_rows,
+                    partition_specs={**_dir_specs(prev), rel_dir: spec},
+                    files=prev.get("files", []) + file_entries,
+                    dvs=prev.get("dvs", []),
+                    mixed_schema=prev.get("mixed_schema", False)
+                    or prev.get("schema") != schema_json,
+                )
+            return man
 
-    def restore(self, version: int, max_retries: int = 5) -> int:
+        return self._publish(build, op or mode, expected_head, max_retries)
+
+    def restore(self, version: int) -> int:
         """RESTORE TABLE TO VERSION AS OF — publish a NEW commit whose
         snapshot is exactly ``version``'s (Delta's RESTORE semantics):
         O(1) metadata, zero bytes copied — the new manifest re-points
@@ -590,27 +545,9 @@ class VersionedTable:
                 f"cannot restore to v{version}: data dirs vacuumed away: "
                 f"{missing}"
             )
-        for _ in range(max_retries):
-            new_v = (self.latest_version() or 0) + 1
-            new_man = dict(
-                man,
-                version=new_v,
-                op="restore",
-                ts=time.time(),
-                metadata={"restored_from": version},
-            )
-            tmp = self._manifest_path(new_v) + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                json.dump(new_man, fh)
-            try:
-                os.link(tmp, self._manifest_path(new_v))
-                return new_v
-            except FileExistsError:
-                continue  # lost the race; re-point at the new head + 1
-            finally:
-                os.unlink(tmp)
-        raise CommitConflict(
-            f"lost {max_retries} restore races at {self.path}; giving up"
+        return self._publish(
+            lambda _prev, _v: dict(man, metadata={"restored_from": version}),
+            "restore",
         )
 
     def fsck(self, version: int | None = None) -> dict:
@@ -732,18 +669,33 @@ class VersionedTable:
         )
         return out.drop("_dv_file", "_dv_ri")
 
-    def _metadata_commit(
+    def _publish(
         self,
-        build_man,
+        build_manifest,
         op: str,
         expected_head: int | None = None,
-        max_retries: int = 5,
+        max_retries: int = RETRIES,
     ) -> int:
-        """Publish a manifest-ONLY commit (no new data dir): the atomic
-        temp-write + hard-link protocol shared by restore and DV
-        deletes. ``build_man(prev_manifest, new_version)`` returns the
-        new manifest dict; ``expected_head`` carries the same
-        optimistic-concurrency contract as :meth:`commit`."""
+        """The table's only commit point. ``build_manifest(prev, version)``
+        returns the new manifest from the head's (``{}`` on an empty
+        table); it is rebuilt against each new head after a lost race.
+
+        The FULL manifest goes to a temp file that is then hard-linked
+        to the version name: ``link()`` is create-exclusive AND the
+        content is complete the instant the name appears (a bare
+        ``open('x')`` would expose an empty file mid-write; a concurrent
+        reader caught exactly that in an 8-writer stress test). On an
+        object store this is a conditional PUT of the whole object.
+
+        ``expected_head`` is the optimistic-concurrency guard for
+        read-modify-write commits: the version the caller DERIVED its
+        snapshot from (0 = an empty table). If another writer has
+        published past it, retrying at a later version would silently
+        throw away that writer's commit, so this raises
+        :class:`CommitConflict` at once and the caller re-derives from
+        the new head (Delta's ConcurrentModificationException contract;
+        see :meth:`rederive`). Plain appends commute and need no guard."""
+        os.makedirs(self.log_dir, exist_ok=True)
         for _ in range(max_retries):
             head = self.latest_version()
             if expected_head is not None and (head or 0) != expected_head:
@@ -751,21 +703,22 @@ class VersionedTable:
                     f"head moved {expected_head} -> {head} at {self.path}; "
                     "re-derive from the new snapshot"
                 )
-            new_v = (head or 0) + 1
+            version = (head or 0) + 1
             man = dict(
-                build_man(self.manifest(head) if head else {}, new_v),
-                version=new_v,
+                build_manifest(self.manifest(head) if head else {}, version),
+                version=version,
                 op=op,
                 ts=time.time(),
             )
-            tmp = self._manifest_path(new_v) + f".tmp-{uuid.uuid4().hex[:8]}"
+            path = self._manifest_path(version)
+            tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
             with open(tmp, "w") as fh:
                 json.dump(man, fh)
             try:
-                os.link(tmp, self._manifest_path(new_v))
-                return new_v
+                os.link(tmp, path)
+                return version
             except FileExistsError:
-                continue
+                continue  # lost the race; retry against the new head
             finally:
                 os.unlink(tmp)
         raise CommitConflict(
@@ -918,30 +871,51 @@ class VersionedTable:
         )
 
     # ----------------------------------------------- table mutations
-    def _rmw_commit(
-        self, spark: SparkSession, derive, op: str, rederive_retries: int = 5
-    ) -> int:
-        """Read-modify-write with the optimistic guard: derive the new
-        snapshot FROM the head we read, commit pinned to that head, and
-        on :class:`CommitConflict` re-derive from the new head — never
-        publish a result computed against a stale base (which would
-        silently erase the winner's commit)."""
+    def rederive(self, attempt, epoch=None) -> int | None:
+        """The one read-modify-write loop: ``attempt(head)`` derives the
+        new snapshot FROM version ``head`` (None on an empty table) and
+        publishes pinned to it; on :class:`CommitConflict` it re-runs
+        against the new head — never publish a result computed against
+        a stale base (which would silently erase the winner's commit).
+
+        With ``epoch``, a streaming micro-batch whose epoch is already
+        tagged on a committed manifest is a replay: the loop returns
+        None without committing. The check runs after the head is read,
+        so a replay that lands in between trips the head guard and is
+        caught on the retry."""
         last: CommitConflict | None = None
-        for _ in range(rederive_retries):
+        for _ in range(RETRIES):
             head = self.latest_version()
-            man = self.manifest(head)
+            if epoch is not None and epoch in self.committed_epochs():
+                return None
             try:
-                return self.commit(
-                    derive(self.read(spark, head)),
-                    op=op,
-                    # copy-on-write ops keep the snapshot's partitioning
-                    partition_by=man.get("partition_by") or None,
-                    expected_head=head,
-                )
+                return attempt(head)
             except CommitConflict as e:
                 last = e
-                continue
-        raise last if last is not None else CommitConflict("no commits")
+        # never fall through silently: a streaming caller would report
+        # success and advance its checkpoint past dropped rows
+        raise last
+
+    def rewrite(
+        self, spark: SparkSession, derive, op: str, epoch=None
+    ) -> int | None:
+        """Copy-on-write read-modify-write through :meth:`rederive`:
+        ``derive(base)`` maps the head snapshot (None on an empty table)
+        to the new one, committed with the snapshot's partition scheme
+        and, when given, the streaming ``epoch`` tag. Returns the new
+        version, or None for a replayed epoch."""
+
+        def attempt(head):
+            man = self.manifest(head) if head else {}
+            return self.commit(
+                derive(self.read(spark, head) if head else None),
+                op=op,
+                partition_by=man.get("partition_by") or None,
+                metadata=None if epoch is None else {"epoch": epoch},
+                expected_head=head or 0,
+            )
+
+        return self.rederive(attempt, epoch)
 
     def merge(
         self, spark: SparkSession, updates: DataFrame, key_cols: list[str]
@@ -949,12 +923,17 @@ class VersionedTable:
         """MERGE INTO (upsert) as copy-on-write: last-writer-wins by
         key against the latest snapshot, committed as a new version.
         Concurrent writers re-derive on conflict instead of clobbering
-        each other (see :meth:`_rmw_commit`)."""
+        each other (see :meth:`rederive`)."""
         from datalake_backend_spark.operators.merge import upsert
 
-        return self._rmw_commit(
+        self._require_snapshot()
+        return self.rewrite(
             spark, lambda base: upsert(base, updates, key_cols), "merge"
         )
+
+    def _require_snapshot(self) -> None:
+        if self.latest_version() is None:
+            raise FileNotFoundError(f"no snapshot at {self.path}")
 
     def delete_where(
         self,
@@ -962,7 +941,6 @@ class VersionedTable:
         predicate,
         mode: str = "copy",
         max_range_entries: int = 100_000,
-        rederive_retries: int = 5,
     ) -> int:
         """DELETE FROM ... WHERE.
 
@@ -989,19 +967,14 @@ class VersionedTable:
 
         Both modes return the committed version; a 'dv' delete
         matching zero rows is a no-op returning the current head."""
+        self._require_snapshot()
         if mode == "copy":
-            return self._rmw_commit(
-                spark, lambda base: base.where(~predicate), "delete"
-            )
+            return self.rewrite(spark, lambda base: base.where(~predicate), "delete")
         if mode != "dv":
             raise ValueError(f"mode must be copy|dv, got {mode!r}")
         from pyspark.sql import Window
 
-        last: CommitConflict | None = None
-        for _ in range(rederive_retries):
-            head = self.latest_version()
-            if head is None:
-                raise FileNotFoundError(f"no snapshot at {self.path}")
+        def attempt(head: int) -> int:
             prev_man = self.manifest(head)
             n_prev_ranges = sum(
                 len(e["ranges"]) for e in prev_man.get("dvs", [])
@@ -1034,7 +1007,7 @@ class VersionedTable:
             if not matched:
                 return head
             if len(matched) > budget:
-                return self._rmw_commit(
+                return self.rewrite(
                     spark, lambda base: base.where(~predicate), "delete"
                 )
             new_dvs: dict[str, list[list[int]]] = {}
@@ -1073,23 +1046,18 @@ class VersionedTable:
                 }
                 for rel, ranges in sorted(merged.items())
             ]
-
-            def build(prev: dict, _v: int, dvs=dvs, n=n_deleted) -> dict:
-                return dict(
+            return self._publish(
+                lambda prev, _v: dict(
                     prev,
                     dvs=dvs,
-                    num_rows=prev["num_rows"] - n,
-                    metadata={"rows_deleted": n},
-                )
+                    num_rows=prev["num_rows"] - n_deleted,
+                    metadata={"rows_deleted": n_deleted},
+                ),
+                "delete-dv",
+                expected_head=head,
+            )
 
-            try:
-                return self._metadata_commit(
-                    build, op="delete-dv", expected_head=head
-                )
-            except CommitConflict as e:
-                last = e
-                continue
-        raise last if last is not None else CommitConflict("no commits")
+        return self.rederive(attempt)
 
     def changes(
         self,
@@ -1233,9 +1201,6 @@ class VersionedTable:
         src_specs = _dir_specs(man)
         new_man = dict(
             man,
-            version=1,
-            op="clone",
-            ts=time.time(),
             dirs=src_dirs,
             # per-dir partition specs are keyed by dir NAME — remap the
             # keys alongside the relpath'd dirs or a partitioned (or
@@ -1255,13 +1220,7 @@ class VersionedTable:
                 for e in man.get("files", [])
             ],
         )
-        tmp = dst._manifest_path(1) + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(new_man, fh)
-        try:
-            os.link(tmp, dst._manifest_path(1))
-        finally:
-            os.unlink(tmp)
+        dst._publish(lambda _prev, _v: new_man, "clone", expected_head=0)
         return dst
 
     def deep_clone_to(self, dest_path: str) -> "VersionedTable":
@@ -1294,21 +1253,12 @@ class VersionedTable:
             )
         new_man = dict(
             man,
-            version=1,
-            op="deep_clone",
-            ts=time.time(),
             metadata={
                 "cloned_from": self.path,
                 "source_version": man["version"],
             },
         )
-        tmp = dst._manifest_path(1) + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(new_man, fh)
-        try:
-            os.link(tmp, dst._manifest_path(1))
-        finally:
-            os.unlink(tmp)
+        dst._publish(lambda _prev, _v: new_man, "deep_clone", expected_head=0)
         return dst
 
     def vacuum(

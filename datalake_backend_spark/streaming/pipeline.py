@@ -131,6 +131,17 @@ def start_to_memory(
     )
 
 
+def _start_foreach_batch(df: DataFrame, write, checkpoint: str) -> StreamingQuery:
+    """Drain ``df`` through ``write(batch, epoch_id)`` once, checkpointed
+    at ``checkpoint`` — the one runner behind every foreachBatch sink."""
+    return (
+        df.writeStream.foreachBatch(write)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def idempotent_epoch_write(batch: DataFrame, path: str, epoch_id: int) -> None:
     """Replay-safe micro-batch parquet write: partition by the
     (checkpointed, replay-stable) ``epoch_id`` and dynamically overwrite
@@ -164,12 +175,7 @@ def start_silver_sink(
         out = transform(batch) if transform else batch
         idempotent_epoch_write(out, path, epoch_id)
 
-    return (
-        df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(df, _write, checkpoint)
 
 
 def versioned_epoch_commit(tbl, batch: DataFrame, epoch_id: int, transform=None) -> bool:
@@ -227,12 +233,7 @@ def start_versioned_sink(
             except CommitConflict:
                 pass  # another writer landed mid-rewrite; next epoch retries
 
-    return (
-        df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(df, _write, checkpoint)
 
 
 def upsert_epoch_commit(
@@ -254,17 +255,15 @@ def upsert_epoch_commit(
     row either upserts or, when ``delete_col`` is true, deletes the
     key. Marker columns never reach the table.
 
-    The MERGE is a read-modify-write, so it carries the optimistic
-    ``expected_head`` guard (mirroring ``VersionedTable._rmw_commit``):
-    the snapshot is derived FROM the head we read and the commit is
-    pinned to it; if a concurrent writer (CLI OPTIMIZE, another merge)
-    lands in between, the commit raises ``CommitConflict`` and the
-    whole derive re-runs from the new head — including the epoch-dedup
-    check, in case the concurrent writer WAS this epoch's replay."""
+    The MERGE is a read-modify-write through
+    ``VersionedTable.rewrite``: derived FROM the head it read, pinned to
+    it, and re-derived from the new head when a concurrent writer (CLI
+    OPTIMIZE, another merge) lands in between — including the
+    epoch-dedup check, in case that writer WAS this epoch's replay.
+    The table keeps its partition scheme."""
     from pyspark.sql import Window
 
     from datalake_backend_spark.operators.merge import upsert
-    from datalake_backend_spark.sources.versioned import CommitConflict
 
     def _orderable(dt) -> bool:
         from pyspark.sql import types as T
@@ -299,30 +298,17 @@ def upsert_epoch_commit(
         ups = b.where(~F.col(delete_col)).drop(delete_col)
     else:
         deletes, ups = None, b
-    last: CommitConflict | None = None
-    for _ in range(5):
-        head = tbl.latest_version()
-        committed = tbl.committed_epochs()
-        if epoch_id in committed:
-            return False
-        if head is None:
-            new = ups
-        else:
-            new = upsert(tbl.read(batch.sparkSession, head), ups, key_cols)
+
+    def derive(base):
+        new = ups if base is None else upsert(base, ups, key_cols)
         if deletes is not None:
             new = new.join(F.broadcast(deletes), key_cols, "left_anti")
-        try:
-            tbl.commit(
-                new,
-                op="merge",
-                metadata={"epoch": epoch_id},
-                expected_head=head or 0,
-            )
-            return True
-        except CommitConflict as e:
-            last = e
-            continue
-    raise last if last is not None else CommitConflict("upsert never committed")
+        return new
+
+    return (
+        tbl.rewrite(batch.sparkSession, derive, "merge", epoch=epoch_id)
+        is not None
+    )
 
 
 def start_upsert_sink(
@@ -350,11 +336,49 @@ def start_upsert_sink(
     def _write(batch: DataFrame, epoch_id: int) -> None:
         upsert_epoch_commit(tbl, batch, epoch_id, key_cols, seq_col, delete_col)
 
+    return _start_foreach_batch(df, _write, checkpoint)
+
+
+def start_state_merge_sink(
+    df: DataFrame,
+    table_path: str,
+    checkpoint: str,
+    fold,
+    merge,
+    op: str,
+) -> StreamingQuery:
+    """Streaming sink that maintains a mergeable STATE table: each
+    micro-batch folds alone (``fold(batch)``), merges into the current
+    state snapshot (``merge(base, batch_state)``) and commits one
+    epoch-tagged copy-on-write version through
+    ``VersionedTable.rewrite`` — derived from the head it read, pinned
+    to it, re-derived on a lost race, and a no-op for a replayed epoch.
+    Readers get a consistent snapshot at every micro-batch boundary
+    and can time travel to any earlier one; only the two small state
+    tables shuffle, stream history is never re-scanned."""
+    from datalake_backend_spark.sources.versioned import VersionedTable
+
+    tbl = VersionedTable(table_path)
+
+    def _write(batch: DataFrame, epoch_id: int) -> None:
+        state_merge_commit(tbl, batch, epoch_id, fold, merge, op)
+
+    return _start_foreach_batch(df, _write, checkpoint)
+
+
+def state_merge_commit(tbl, batch: DataFrame, epoch_id: int, fold, merge, op: str) -> bool:
+    """Fold one micro-batch and merge it into the state table,
+    exactly-once. Returns whether a commit happened — the core of
+    :func:`start_state_merge_sink`, exposed for direct testing."""
+    bstate = fold(batch)
     return (
-        df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        tbl.rewrite(
+            batch.sparkSession,
+            lambda base: bstate if base is None else merge(base, bstate),
+            op,
+            epoch=epoch_id,
+        )
+        is not None
     )
 
 
@@ -366,62 +390,22 @@ def start_incremental_rollup_sink(
     value_cols: list[str],
 ) -> StreamingQuery:
     """Streaming MATERIALIZED VIEW: maintain a per-key aggregate STATE
-    table (`operators/incremental.py`) under a stream.
-
-    Each micro-batch aggregates alone (`rollup_state`) and merges into
-    the current state snapshot (`merge_rollup_state`), committed as a
-    new `VersionedTable` version tagged with the epoch id — replays
-    skip via the commit log, so the view is exactly-once; readers get
-    a consistent snapshot at every micro-batch boundary and can time
-    travel to any earlier one. The merge shuffles only the two small
-    STATE tables, never re-scans stream history — the streaming twin
-    of the reference's reaggregate-everything-per-upload gold step."""
+    table (`operators/incremental.py`) under a stream — each batch
+    aggregates alone (`rollup_state`) and merges into the snapshot
+    (`merge_rollup_state`). The streaming twin of the reference's
+    reaggregate-everything-per-upload gold step."""
     from datalake_backend_spark.operators.incremental import (
         merge_rollup_state,
         rollup_state,
     )
-    from datalake_backend_spark.sources.versioned import VersionedTable
 
-    tbl = VersionedTable(table_path)
-
-    def _write(batch: DataFrame, epoch_id: int) -> None:
-        from datalake_backend_spark.sources.versioned import CommitConflict
-
-        bstate = rollup_state(batch, keys, value_cols)
-        last: CommitConflict | None = None
-        # read-modify-write: pin the commit to the head the merge read
-        # (expected_head), re-derive on conflict — same contract as
-        # upsert_epoch_commit / VersionedTable._rmw_commit
-        for _ in range(5):
-            head = tbl.latest_version()
-            committed = tbl.committed_epochs()
-            if epoch_id in committed:
-                return
-            merged = bstate
-            if head is not None:
-                merged = merge_rollup_state(
-                    tbl.read(batch.sparkSession, head), bstate, keys
-                )
-            try:
-                tbl.commit(
-                    merged, mode="overwrite", op="rollup-merge",
-                    metadata={"epoch": epoch_id},
-                    expected_head=head or 0,
-                )
-                return
-            except CommitConflict as e:
-                last = e
-                continue
-        # NEVER fall through silently: foreachBatch would report
-        # success and the checkpoint would advance past a batch whose
-        # rows were dropped — raise so the stream retries the epoch
-        raise last
-
-    return (
-        df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_state_merge_sink(
+        df,
+        table_path,
+        checkpoint,
+        lambda batch: rollup_state(batch, keys, value_cols),
+        lambda base, state: merge_rollup_state(base, state, keys),
+        "rollup-merge",
     )
 
 
@@ -521,53 +505,21 @@ def start_bitmap_reach_sink(
     a stream — the unique-visitors / reach counter that plain
     aggregate state cannot maintain because distinct counts don't
     merge as scalars, while their bitmaps merge with an idempotent
-    ``bit_or`` (a replayed batch changes NOTHING, which composes with
-    the epoch-commit-log exactly-once into belt-and-suspenders).
-    Per micro-batch: fold the batch's ids to words, ``bit_or``-merge
-    into the snapshot, commit epoch-tagged with expected-head RMW —
-    only word rows (metadata-sized) ever shuffle; stream history is
-    never re-scanned. Same commit discipline as
-    :func:`start_incremental_rollup_sink`."""
+    ``bit_or`` (a replayed batch changes NOTHING, on top of the
+    epoch-commit-log exactly-once). Only word rows (metadata-sized)
+    ever shuffle."""
     from datalake_backend_spark.operators.incremental import (
         bitmap_state,
         merge_bitmap_state,
     )
-    from datalake_backend_spark.sources.versioned import VersionedTable
 
-    tbl = VersionedTable(table_path)
-
-    def _write(batch: DataFrame, epoch_id: int) -> None:
-        from datalake_backend_spark.sources.versioned import CommitConflict
-
-        bstate = bitmap_state(batch, keys, id_col)
-        last: CommitConflict | None = None
-        for _ in range(5):
-            head = tbl.latest_version()
-            committed = tbl.committed_epochs()
-            if epoch_id in committed:
-                return
-            merged = bstate
-            if head is not None:
-                merged = merge_bitmap_state(
-                    tbl.read(batch.sparkSession, head), bstate, keys
-                )
-            try:
-                tbl.commit(
-                    merged, mode="overwrite", op="bitmap-merge",
-                    metadata={"epoch": epoch_id},
-                    expected_head=head or 0,
-                )
-                return
-            except CommitConflict as e:
-                last = e
-                continue
-        raise last
-
-    return (
-        df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_state_merge_sink(
+        df,
+        table_path,
+        checkpoint,
+        lambda batch: bitmap_state(batch, keys, id_col),
+        lambda base, state: merge_bitmap_state(base, state, keys),
+        "bitmap-merge",
     )
 
 
@@ -583,51 +535,21 @@ def start_kmv_reach_sink(
     KMV companion to :func:`start_bitmap_reach_sink` — the bitmap is
     exact but its word count grows with the id range, while the KMV
     sketch holds a FIXED k hashes per key at any cardinality, and its
-    union (re-take the k smallest) is just as idempotent, so replays
-    remain harmless on top of the epoch commit log. Per micro-batch:
-    fold the batch to per-key k-minima (two-phase rank), merge with
-    the snapshot over ≤ 2k metadata rows per key, commit epoch-tagged
-    with expected-head RMW. The finalized estimate is bit-identical
-    to the one-shot ``distributions.kmv_distinct`` over the union of
-    all batches — merging k-minima IS the global k-minimum."""
+    union (re-take the k smallest) is just as idempotent. Each batch
+    folds to per-key k-minima (two-phase rank) and merges over ≤ 2k
+    rows per key. The finalized estimate is bit-identical to the
+    one-shot ``distributions.kmv_distinct`` over the union of all
+    batches — merging k-minima IS the global k-minimum."""
     from datalake_backend_spark.operators.incremental import (
         kmv_state,
         merge_kmv_state,
     )
-    from datalake_backend_spark.sources.versioned import VersionedTable
 
-    tbl = VersionedTable(table_path)
-
-    def _write(batch: DataFrame, epoch_id: int) -> None:
-        from datalake_backend_spark.sources.versioned import CommitConflict
-
-        bstate = kmv_state(batch, keys, id_col, k=k)
-        last: CommitConflict | None = None
-        for _ in range(5):
-            head = tbl.latest_version()
-            committed = tbl.committed_epochs()
-            if epoch_id in committed:
-                return
-            merged = bstate
-            if head is not None:
-                merged = merge_kmv_state(
-                    tbl.read(batch.sparkSession, head), bstate, keys, k=k
-                )
-            try:
-                tbl.commit(
-                    merged, mode="overwrite", op="kmv-merge",
-                    metadata={"epoch": epoch_id},
-                    expected_head=head or 0,
-                )
-                return
-            except CommitConflict as e:
-                last = e
-                continue
-        raise last
-
-    return (
-        df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_state_merge_sink(
+        df,
+        table_path,
+        checkpoint,
+        lambda batch: kmv_state(batch, keys, id_col, k=k),
+        lambda base, state: merge_kmv_state(base, state, keys, k=k),
+        "kmv-merge",
     )

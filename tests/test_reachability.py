@@ -67,7 +67,11 @@ def _names(node: ast.AST, strings: bool = False) -> set[str]:
     """Identifiers a node references: names, attributes, imported names
     and, with ``strings``, the dotted identifiers in string literals (a
     surface may look an engine name up by string, as perfbench's tracer
-    does)."""
+    does).
+
+    With ``strings`` (a surface file), a bare name the surface defines
+    itself at top level refers to that definition, not to a package
+    definition of the same name."""
     docstrings = {
         id(sub.body[0].value)
         for sub in ast.walk(node)
@@ -75,10 +79,16 @@ def _names(node: ast.AST, strings: bool = False) -> set[str]:
         and sub.body
         and _is_docstring(sub.body[0])
     }
+    own = {
+        stmt.name
+        for stmt in getattr(node, "body", ())
+        if strings and isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+    }
     out: set[str] = set()
     for sub in ast.walk(node):
         if isinstance(sub, ast.Name):
-            out.add(sub.id)
+            if sub.id not in own:
+                out.add(sub.id)
         elif isinstance(sub, ast.Attribute):
             out.add(sub.attr)
         elif isinstance(sub, ast.alias):
@@ -174,3 +184,12 @@ def test_keep_list_entries_exist_and_are_needed():
     stale = [k for k in KEEP if k not in tools and k not in bare]
     stale += [k for k in tools if not (ROOT / k).is_file()]
     assert not stale, stale
+
+
+def test_a_surface_name_for_its_own_definition_reaches_nothing():
+    """A surface calling its own ``stop_spark`` does not reach a package
+    function of that name; an attribute call still does."""
+    own = ast.parse("def stop_spark(s):\n    s.stop()\n\nstop_spark(None)\n")
+    assert "stop_spark" not in _names(own, strings=True)
+    other = ast.parse("import config\nconfig.stop_spark()\n")
+    assert "stop_spark" in _names(other, strings=True)

@@ -1312,25 +1312,25 @@ def test_dv_delete_concurrent_with_append(spark, tmp_path):
     """DV positions are derived from a pinned head; a commit landing
     in between forces a re-derive, never a lost update."""
     tbl = _dv_tbl(spark, tmp_path)
-    orig_commit = tbl._metadata_commit
+    orig_publish = tbl._publish
     raced = {"done": False}
 
-    def racing(build, op, expected_head=None, max_retries=5):
-        if not raced["done"]:
+    def racing(build, op, *args, **kwargs):
+        if op == "delete-dv" and not raced["done"]:
             raced["done"] = True
             extra = spark.range(500, 505).select(
                 F.col("id").cast("long"), F.lit(0).cast("long").alias("v")
             )
             tbl.commit(extra, mode="append")  # moves the head
-        return orig_commit(
-            build, op, expected_head=expected_head, max_retries=max_retries
-        )
+        return orig_publish(build, op, *args, **kwargs)
 
-    tbl._metadata_commit = racing
+    tbl._publish = racing
     try:
         tbl.delete_where(spark, F.col("v") == 0, mode="dv")
     finally:
-        tbl._metadata_commit = orig_commit
+        tbl._publish = orig_publish
+    assert raced["done"]
+    assert [m["op"] for m in tbl.history()][-2:] == ["append", "delete-dv"]
     # BOTH effects present: append landed, and its v==0 rows were seen
     # by the re-derived delete
     assert tbl.read(spark).where(F.col("v") == 0).count() == 0
@@ -1544,3 +1544,102 @@ def test_versioned_random_walk_matches_model(spark, tbl):
     for v in sorted(snapshots):
         got = {r.key: r.val for r in tbl.read(spark, version=v).collect()}
         assert got == snapshots[v], f"version {v}"
+
+
+def test_streaming_upsert_keeps_partition_scheme(spark, tbl):
+    """A streaming MERGE rewrites the table under its existing
+    partition scheme, exactly like a batch ``merge``."""
+    from datalake_backend_spark.streaming.pipeline import upsert_epoch_commit
+
+    df = spark.createDataFrame(
+        [(1, "x"), (2, "y"), (3, "x")], "key int, part string"
+    )
+    tbl.commit(df, partition_by=["part"])
+    tbl.merge(spark, spark.createDataFrame([(4, "y")], "key int, part string"), ["key"])
+    assert tbl.manifest()["partition_by"] == ["part"]
+    batch = spark.createDataFrame([(5, "z")], "key int, part string")
+    assert upsert_epoch_commit(tbl, batch, 0, ["key"])
+    man = tbl.manifest()
+    assert man["partition_by"] == ["part"]
+    assert list(man["partition_specs"].values()) == [["part"]]
+    assert {(r.key, r.part) for r in tbl.read(spark).collect()} == {
+        (1, "x"), (2, "y"), (3, "x"), (4, "y"), (5, "z")
+    }
+
+
+def _state_sink_triple(monkeypatch, name):
+    """The (fold, merge, op) a public state sink hands the shared
+    state-merge sink."""
+    from datalake_backend_spark.streaming import pipeline
+
+    got = {}
+
+    def capture(df, table_path, checkpoint, fold, merge, op):
+        got.update(fold=fold, merge=merge, op=op)
+
+    monkeypatch.setattr(pipeline, "start_state_merge_sink", capture)
+    args = {
+        "start_incremental_rollup_sink": (["k"], ["v"]),
+        "start_bitmap_reach_sink": (["k"], "v"),
+        "start_kmv_reach_sink": (["k"], "v"),
+    }[name]
+    getattr(pipeline, name)(None, "unused", "unused", *args)
+    return got["fold"], got["merge"], got["op"]
+
+
+_STATE_SINKS = [
+    "start_incremental_rollup_sink",
+    "start_bitmap_reach_sink",
+    "start_kmv_reach_sink",
+]
+
+
+def _state_rows(df):
+    return sorted(map(str, df.collect()))
+
+
+@pytest.mark.parametrize("sink", _STATE_SINKS)
+def test_state_sink_replayed_epoch_is_noop(spark, tbl, monkeypatch, sink):
+    from datalake_backend_spark.streaming.pipeline import state_merge_commit
+
+    fold, merge, op = _state_sink_triple(monkeypatch, sink)
+    b0 = spark.createDataFrame([("a", 1), ("a", 3), ("b", 10)], "k string, v long")
+    b1 = spark.createDataFrame([("a", 5), ("c", 7)], "k string, v long")
+    assert state_merge_commit(tbl, b0, 0, fold, merge, op)
+    assert state_merge_commit(tbl, b1, 1, fold, merge, op)
+    before = _state_rows(tbl.read(spark))
+    assert not state_merge_commit(tbl, b1, 1, fold, merge, op)
+    assert tbl.latest_version() == 2
+    assert _state_rows(tbl.read(spark)) == before
+    assert [m["op"] for m in tbl.history()] == [op, op]
+
+
+@pytest.mark.parametrize("sink", _STATE_SINKS)
+def test_state_sink_race_rederives_without_lost_update(spark, tbl, monkeypatch, sink):
+    """A commit that lands between the derive and the publish trips the
+    head guard; the batch re-derives from the new head, so the final
+    state holds both batches."""
+    from datalake_backend_spark.streaming.pipeline import state_merge_commit
+
+    fold, merge, op = _state_sink_triple(monkeypatch, sink)
+    b0 = spark.createDataFrame([("a", 1), ("b", 10)], "k string, v long")
+    b1 = spark.createDataFrame([("a", 5), ("c", 7)], "k string, v long")
+    b2 = spark.createDataFrame([("a", 2), ("b", 11)], "k string, v long")
+    state_merge_commit(tbl, b0, 0, fold, merge, op)
+    orig_publish = tbl._publish
+    attempts = []
+
+    def racing(build, op_, *args, **kwargs):
+        attempts.append(op_)
+        if len(attempts) == 1:
+            # a concurrent writer commits epoch 2 first
+            state_merge_commit(VersionedTable(tbl.path), b2, 2, fold, merge, op)
+        return orig_publish(build, op_, *args, **kwargs)
+
+    monkeypatch.setattr(tbl, "_publish", racing)
+    assert state_merge_commit(tbl, b1, 1, fold, merge, op)
+    assert len(attempts) == 2  # lost once, re-derived once
+    epochs = [m["metadata"]["epoch"] for m in tbl.history()]
+    assert epochs == [0, 2, 1]
+    want = merge(merge(fold(b0), fold(b2)), fold(b1))
+    assert _state_rows(tbl.read(spark)) == _state_rows(want)
