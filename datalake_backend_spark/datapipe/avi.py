@@ -17,9 +17,10 @@ module supplies the demuxer side:
   demux: one frame's JPEG bytes come straight from its ``idx1`` entry
   without touching any other frame, the same O(1)-per-frame seek
   contract as the RAWV path (``multimodal.decode_video_frame``).
-- :func:`mjpeg_frame_stats` — the Spark surface: an Arrow
-  ``mapInPandas`` stage that demuxes each payload, baseline-JPEG-
-  decodes every ``every_n``-th frame, and emits exact pixel sums.
+- :func:`mjpeg_frame_stats` — the Spark surface: an Arrow payload
+  map (``multimodal.map_payloads``) that demuxes each payload,
+  baseline-JPEG-decodes every ``every_n``-th frame, and emits exact
+  pixel sums.
   Map-only, no shuffle: the 100 TB shape is "frames never leave the
   executor that holds their container bytes".
 - :func:`synthetic_mjpeg_avi_table` — deterministic fixtures on the
@@ -39,14 +40,16 @@ from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 import numpy as np
+from pyspark.sql import DataFrame
 
-from pyspark.sql import DataFrame, functions as F
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from datalake_backend_spark.datapipe.jpeg import decode_jpeg, encode_jpeg
+from datalake_backend_spark.datapipe.multimodal import (
+    FRAME_STATS_SCHEMA,
+    map_payloads,
+    synthetic_media,
+)
 
 _AVIF_HASINDEX = 0x00000010
 _AVIIF_KEYFRAME = 0x00000010
@@ -257,33 +260,16 @@ def mjpeg_frame_stats(
     huffman + dequant + IDCT + YCbCr→RGB), emit exact pixel sums.
     One Arrow map stage, no shuffle; unsampled frames' bytes are
     skipped via the idx1 index, never decoded."""
-    from datalake_backend_spark.datapipe.jpeg import decode_jpeg
-    from datalake_backend_spark.datapipe.multimodal import FRAME_STATS_SCHEMA
 
-    import pandas as pd
+    def one(i: int, b: bytes) -> Iterator[tuple]:
+        meta = parse_avi_meta(b)
+        for fi in range(0, meta["n_frames"], every_n):
+            img = decode_jpeg(avi_frame_jpeg(b, fi, meta))
+            s = int(img.sum(dtype=np.int64))
+            mean = s / (img.shape[0] * img.shape[1] * 3)
+            yield i, fi, meta["n_frames"], meta["fps"], s, mean
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            recs = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(p)
-                meta = parse_avi_meta(b)
-                for fi in range(0, meta["n_frames"], every_n):
-                    img = decode_jpeg(avi_frame_jpeg(b, fi, meta))
-                    s = int(img.sum(dtype=np.int64))
-                    recs.append(
-                        {
-                            "media_id": int(i),
-                            "frame_idx": fi,
-                            "n_frames": meta["n_frames"],
-                            "fps": meta["fps"],
-                            "sum_rgb": s,
-                            "mean_rgb": s / (img.shape[0] * img.shape[1] * 3),
-                        }
-                    )
-            yield pd.DataFrame(recs)
-
-    return df.select(id_col, payload_col).mapInPandas(batches, FRAME_STATS_SCHEMA)
+    return map_payloads(df, one, FRAME_STATS_SCHEMA, id_col, payload_col)
 
 
 def synthetic_mjpeg_avi_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -297,42 +283,17 @@ def synthetic_mjpeg_avi_table(docs: DataFrame, id_col: str = "doc_id") -> DataFr
     128 — the ``synthetic_jpeg_table`` argument), so DuckDB recomputes
     every decoded frame sum in closed form while the bytes cross the
     full RIFF/idx1/Huffman/DPCM machinery."""
-    from datalake_backend_spark.datapipe.jpeg import encode_jpeg as _enc
-    from datalake_backend_spark.datapipe.multimodal import MEDIA_SCHEMA
 
-    import pandas as pd
+    def make(i: int) -> tuple:
+        w, h = 8 * (1 + i % 3), 8 * (1 + i % 2)
+        n, fps = 2 + i % 3, 5 + i % 3
+        br = np.arange(h // 8).reshape(-1, 1)
+        bc = np.arange(w // 8).reshape(1, -1)
+        frames = []
+        for fi in range(n):
+            vals = ((i * 37 + fi * 13 + br * 17 + bc * 29) % 256).astype(np.uint8)
+            img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
+            frames.append(encode_jpeg(img, quality=75))
+        return encode_avi_mjpeg(frames, w, h, fps), "mjpeg", w, h, n * 1000 // fps
 
-    def gen(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            ids = pdf["media_id"].to_numpy()
-            payloads, metas = [], []
-            for i in ids:
-                i = int(i)
-                w, h = 8 * (1 + i % 3), 8 * (1 + i % 2)
-                n, fps = 2 + i % 3, 5 + i % 3
-                frames = []
-                br = np.arange(h // 8).reshape(-1, 1)
-                bc = np.arange(w // 8).reshape(1, -1)
-                for fi in range(n):
-                    vals = (
-                        (i * 37 + fi * 13 + br * 17 + bc * 29) % 256
-                    ).astype(np.uint8)
-                    img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                    frames.append(_enc(img, quality=75))
-                payloads.append(encode_avi_mjpeg(frames, w, h, fps))
-                metas.append(
-                    {
-                        "mime": "video/x-msvideo",
-                        "width": w,
-                        "height": h,
-                        "duration_ms": int(n * 1000 / fps),
-                        "codec": "mjpeg",
-                    }
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "meta": metas}
-            )
-
-    return docs.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        gen, MEDIA_SCHEMA
-    )
+    return synthetic_media(docs, id_col, make)

@@ -247,26 +247,32 @@ def cap_hot_buckets(
     banded: DataFrame,
     max_bucket: int | None,
     warn_above: int | None = HOT_BUCKET_WARN,
+    keys: tuple[str, ...] = ("band", "bucket"),
+    where: str = "lsh_candidates",
 ) -> DataFrame:
-    """Drop (band, bucket) groups holding more than ``max_bucket``
-    members before the candidate self-join. A boilerplate bucket of m
-    docs costs m²/2 candidate pairs — one template shared by 10⁶ pages
-    is 5·10¹¹ pairs from a single bucket at web scale. Capping trades
-    bounded recall (only pairs whose EVERY shared band is hot are
-    lost — for true near-dups that means boilerplate-identical docs,
-    which exact dedup upstream already collapses) for a hard quadratic
-    bound. One extra count-over-window pass on the banded projection;
-    ``None`` disables the CAP but not the OBSERVABILITY: bucket-size
-    stats still ride the plan via ``observe()`` (the window shuffles on
-    the same (band, bucket) key the candidate join needs, so the
-    exchange is reused, not added) and a daemon watcher logs a WARNING
-    when any bucket exceeds ``warn_above`` — answers unchanged, hazard
-    visible. ``warn_above=None`` restores the bare pass-through."""
+    """Drop ``keys`` groups — by default (band, bucket) — holding more
+    than ``max_bucket`` members before the candidate self-join. A
+    boilerplate bucket of m docs costs m²/2 candidate pairs — one
+    template shared by 10⁶ pages is 5·10¹¹ pairs from a single bucket
+    at web scale. Capping trades bounded recall (only pairs whose EVERY
+    shared band is hot are lost — for true near-dups that means
+    boilerplate-identical docs, which exact dedup upstream already
+    collapses) for a hard quadratic bound. One extra count-over-window
+    pass on the banded projection; ``None`` disables the CAP but not
+    the OBSERVABILITY: bucket-size stats still ride the plan via
+    ``observe()`` (the window shuffles on the same key the candidate
+    join needs, so the exchange is reused, not added) and a daemon
+    watcher logs a WARNING naming ``where`` when any bucket exceeds
+    ``warn_above`` — answers unchanged, hazard visible.
+    ``warn_above=None`` restores the bare pass-through. The perceptual
+    tier caps its hot hash and signature groups (a site logo repeated
+    across 10⁶ pages) through this same function with its own
+    ``keys``."""
     from pyspark.sql import Window
 
     if max_bucket is None and warn_above is None:
         return banded
-    w = Window.partitionBy("band", "bucket")
+    w = Window.partitionBy(*keys)
     with_n = banded.withColumn("_bn", F.count(F.lit(1)).over(w))
     if max_bucket is None:
         from pyspark.sql import Observation
@@ -277,7 +283,7 @@ def cap_hot_buckets(
             F.max("_bn").alias("max_bucket_size"),
             F.percentile_approx("_bn", 0.99).alias("p99_bucket_size"),
         )
-        _watch(obs, "max_bucket_size", warn_above, "lsh_candidates", HOT_BUCKET_MSG)
+        _watch(obs, "max_bucket_size", warn_above, where, HOT_BUCKET_MSG)
         return observed.drop("_bn")
     return with_n.where(F.col("_bn") <= max_bucket).drop("_bn")
 

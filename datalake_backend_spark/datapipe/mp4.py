@@ -19,23 +19,26 @@ oracle fixtures:
 - :func:`encode_mp4_meta` — write a structurally valid metadata-only
   mp4 for the closed-form fixtures (real nested box sizes, real
   fixed-point fields, real stts run-length entries).
-- :func:`mp4_track_stats` — the Spark operator: Arrow-batched
-  ``mapInPandas`` over ``(media_id, payload)``, one output row per
-  track.
+- :func:`mp4_track_stats` — the Spark operator: the Arrow payload
+  map (``multimodal.map_payloads``) over ``(media_id, payload)``, one
+  output row per track.
 
 Scale shape: parsing touches only header bytes — ``mdat`` is skipped
 via its size field, never read. On object storage this is the
 "ranged GET of the moov box" access pattern; per-file work is O(box
 count), embarrassingly parallel, and the operator is a single
-narrow ``mapInPandas`` with no shuffle.
+narrow Arrow map with no shuffle.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+from datalake_backend_spark.datapipe.multimodal import map_payloads, synthetic_media
 
 _U32 = struct.Struct(">I")
 _U64 = struct.Struct(">Q")
@@ -383,43 +386,22 @@ def mp4_track_stats(media: DataFrame) -> DataFrame:
     """One row per (file, track) of demuxed container metadata.
 
     ``movie_dur_ms`` is exact integer division (duration * 1000 div
-    timescale) so the value is engine-independent. Arrow-batched
-    ``mapInPandas`` over (media_id, payload); no shuffle, no codec
-    work — the 100 TB shape is "read moov bytes, emit a few rows".
+    timescale) so the value is engine-independent. One Arrow payload
+    map over (media_id, payload); no shuffle, no codec work — the
+    100 TB shape is "read moov bytes, emit a few rows".
     """
-    import pandas as pd
 
-    def demux(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                meta = parse_mp4_meta(bytes(payload))
-                ms = (
-                    meta["duration"] * 1000 // meta["timescale"]
-                    if meta["timescale"]
-                    else 0
-                )
-                for t in meta["tracks"]:
-                    rows.append(
-                        (
-                            int(mid), meta["brand"], ms, t["track_id"],
-                            t["handler"], t["codec"], t["width"],
-                            t["height"], t["n_samples"],
-                            t["sample_dur_sum"], t["media_timescale"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "brand", "movie_dur_ms", "track_id",
-                    "handler", "codec", "width", "height", "n_samples",
-                    "sample_dur_sum", "media_timescale",
-                ],
+    def demux(i: int, b: bytes) -> Iterator[tuple]:
+        meta = parse_mp4_meta(b)
+        ms = meta["duration"] * 1000 // meta["timescale"] if meta["timescale"] else 0
+        for t in meta["tracks"]:
+            yield (
+                i, meta["brand"], ms, t["track_id"], t["handler"], t["codec"],
+                t["width"], t["height"], t["n_samples"], t["sample_dur_sum"],
+                t["media_timescale"],
             )
 
-    return media.select("media_id", "payload").mapInPandas(
-        demux, _TRACK_SCHEMA
-    )
+    return map_payloads(media, demux, T.StructType.fromDDL(_TRACK_SCHEMA))
 
 
 def synthetic_mp4_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -431,9 +413,8 @@ def synthetic_mp4_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     64-bit largesize mdat (id%5==0), and version-1 movie/media
     headers (id%11==0), so a parser that assumes one fixed layout
     breaks the hash. mdat filler is splitmix64 bit noise (never
-    parsed — its only job is to be skipped correctly)."""
-    import pandas as pd
-
+    parsed — its only job is to be skipped correctly). ``meta`` carries
+    the video track's dims and the movie duration in ms."""
     mask = (1 << 64) - 1
 
     def _mix(x: int) -> int:
@@ -442,56 +423,38 @@ def synthetic_mp4_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         x = (x ^ (x >> 27)) * 0x94D049BB133111EB & mask
         return x ^ (x >> 31)
 
-    def gen(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            ids = pdf["media_id"].to_numpy()
-            payloads = []
-            for i in ids:
-                i = int(i)
-                nv = 2 + i % 5
-                stts_v = (
-                    [(nv - 1, 1001), (1, 2002)] if nv >= 4 else [(nv, 1001)]
-                )
-                tracks = [
-                    {
-                        "track_id": 1, "handler": "vide", "codec": "avc1",
-                        "width": 16 * (1 + i % 4),
-                        "height": 16 * (1 + i % 3),
-                        "media_timescale": 30000, "stts": stts_v,
-                    }
-                ]
-                if i % 2 == 0:
-                    na = 3 + i % 4
-                    stts_a = (
-                        [(na - 1, 1024), (1, 2048)]
-                        if na >= 4
-                        else [(na, 1024)]
-                    )
-                    tracks.append(
-                        {
-                            "track_id": 2, "handler": "soun",
-                            "codec": "mp4a", "width": 0, "height": 0,
-                            "media_timescale": 48000, "stts": stts_a,
-                        }
-                    )
-                filler = bytes(
-                    _mix(i * 131 + k + 1) & 0xFF for k in range(16 + i % 17)
-                )
-                payloads.append(
-                    encode_mp4_meta(
-                        b"mp42" if i % 2 == 0 else b"isom",
-                        movie_timescale=600 * (1 + i % 3),
-                        movie_duration=123 + i % 1000,
-                        tracks=tracks,
-                        mdat_payload=filler,
-                        mdat_first=i % 3 == 0,
-                        mdat_largesize=i % 5 == 0,
-                        v1_headers=i % 11 == 0,
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def make(i: int) -> tuple:
+        nv = 2 + i % 5
+        stts_v = [(nv - 1, 1001), (1, 2002)] if nv >= 4 else [(nv, 1001)]
+        w, h = 16 * (1 + i % 4), 16 * (1 + i % 3)
+        tracks = [
+            {
+                "track_id": 1, "handler": "vide", "codec": "avc1",
+                "width": w, "height": h, "media_timescale": 30000, "stts": stts_v,
+            }
+        ]
+        if i % 2 == 0:
+            na = 3 + i % 4
+            stts_a = [(na - 1, 1024), (1, 2048)] if na >= 4 else [(na, 1024)]
+            tracks.append(
+                {
+                    "track_id": 2, "handler": "soun", "codec": "mp4a",
+                    "width": 0, "height": 0, "media_timescale": 48000,
+                    "stts": stts_a,
+                }
+            )
+        filler = bytes(_mix(i * 131 + k + 1) & 0xFF for k in range(16 + i % 17))
+        timescale, duration = 600 * (1 + i % 3), 123 + i % 1000
+        payload = encode_mp4_meta(
+            b"mp42" if i % 2 == 0 else b"isom",
+            movie_timescale=timescale,
+            movie_duration=duration,
+            tracks=tracks,
+            mdat_payload=filler,
+            mdat_first=i % 3 == 0,
+            mdat_largesize=i % 5 == 0,
+            v1_headers=i % 11 == 0,
+        )
+        return payload, "mp4", w, h, duration * 1000 // timescale
 
-    return (
-        docs.selectExpr(f"CAST({id_col} AS BIGINT) AS media_id")
-        .mapInPandas(gen, "media_id bigint, payload binary")
-    )
+    return synthetic_media(docs, id_col, make)

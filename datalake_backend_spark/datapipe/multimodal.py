@@ -1,33 +1,41 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-The Spark-side contract — schemas, partition-aware ``mapInPandas``
-plumbing, Arrow batch shapes — is real and tested, and so are the
-codecs, all dependency-free byte-level parsers: images
-(:func:`decode_image`: PPM P6, 24-bit BMP, PNG, GIF — real LZW — and
-baseline JPEG via :mod:`datapipe.jpeg` — real Huffman + DCT), audio
-(:func:`decode_wav`: RIFF/WAVE PCM s16le), and video
+The Spark-side contract — schemas, Arrow batch shapes — is real and
+tested, and so are the codecs, all dependency-free byte-level parsers:
+images (:func:`decode_image`: PPM P6, 24-bit BMP, PNG, GIF — real LZW
+— and baseline JPEG via :mod:`datapipe.jpeg` — real Huffman + DCT),
+audio (:func:`decode_wav`: RIFF/WAVE PCM s16le), and video
 (:func:`decode_video_frame`: the RAWV concatenated-frame container,
 with true per-frame seeking). RAWV stands in for mp4/h264 — whose
 decoders aren't in this environment — with identical Spark-side
 plumbing. Payloads in none of these formats fall back to content-hash
 features — decode never silently fakes pixel data.
 
+Each job of the media tier has one implementation here: :data:`CODECS`
+knows every container format (mime, extensions, magic bytes, encoder,
+decoder, header probe), :func:`synthetic_media` generates every
+synthetic media table, :func:`map_payloads` runs Python over
+``(id, payload)`` rows in Arrow batches, and :func:`_rewrite_payloads`
+rewrites payloads in place (resize, resample).
+
 Scale notes: media bytes stay in a ``binary`` column co-located with
 metadata (one table, no URI-chasing joins); feature extraction is an
 Arrow-batched map stage — no shuffle; frame sampling explodes only the
 sampled offsets, not the media.
 """
-
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from datalake_backend_spark.datapipe.jpeg import decode_jpeg, encode_jpeg
 
 #: media metadata struct carried next to every binary payload
 MEDIA_META = T.StructType(
@@ -452,32 +460,124 @@ def _decode_gif(payload: bytes) -> np.ndarray:
     raise ValueError("GIF contains no image data")
 
 
-def decode_image(payload: bytes) -> np.ndarray:
-    """Dependency-free byte-level image decode → ``(h, w, 3)`` uint8.
+def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
+    """RIFF/WAVE encoder (PCM 16-bit little-endian): ``(frames,)`` or
+    ``(frames, channels)`` int16 array → canonical 44-byte header +
+    interleaved data chunk. Inverse of :func:`decode_wav`; pure byte
+    construction, no audio library."""
+    if samples.ndim == 1:
+        samples = samples.reshape(-1, 1)
+    frames, ch = samples.shape
+    data = samples.astype("<i2").tobytes()
+    block = ch * 2
 
-    Supports binary PPM (P6: '#' comments and arbitrary whitespace in
-    the header, exactly one whitespace byte after maxval, then raw
-    ``w*h*3`` samples), 24-bit uncompressed BMP (see
-    :func:`_decode_bmp`) and 8-bit non-interlaced PNG (see
-    :func:`_decode_png` — real zlib inflate + scanline unfiltering).
-    Raises ``ValueError`` for any other format — callers that can
-    tolerate undecodable payloads (feature extraction over mixed media)
-    catch it and fall back to hash features."""
-    if payload and payload[:2] == b"BM":
-        return _decode_bmp(payload)
-    if payload and payload[: len(_PNG_SIG)] == _PNG_SIG:
-        return _decode_png(payload)
-    if payload and payload[:2] == b"\xff\xd8":
-        from datalake_backend_spark.datapipe.jpeg import decode_jpeg
+    def le(v: int, n: int) -> bytes:
+        return int(v).to_bytes(n, "little")
 
-        return decode_jpeg(payload)
-    if payload and payload[:4] == b"GIF8":
-        return _decode_gif(payload)
-    if not payload or payload[:2] != b"P6":
-        raise ValueError(
-            "unsupported image format (supported: PPM P6, BMP24, PNG, "
-            "GIF, baseline JPEG)"
-        )
+    fmt = (
+        b"fmt " + le(16, 4) + le(1, 2) + le(ch, 2) + le(sample_rate, 4)
+        + le(sample_rate * block, 4) + le(block, 2) + le(16, 2)
+    )
+    body = b"WAVE" + fmt + b"data" + le(len(data), 4) + data
+    return b"RIFF" + le(len(body), 4) + body
+
+
+def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
+    """RIFF/WAVE decoder → ``((frames, channels) int16, sample_rate)``.
+
+    Walks the chunk list (skipping unknown chunks like LIST/INFO, with
+    odd-size pad bytes per the RIFF spec), requires PCM (format tag 1)
+    at 16 bits; anything else raises ``ValueError`` so mixed-media
+    callers can fall back, mirroring :func:`decode_image`."""
+    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE payload")
+    pos, fmt, data = 12, None, None
+    while pos + 8 <= len(payload):
+        cid = payload[pos : pos + 4]
+        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
+        body = payload[pos + 8 : pos + 8 + size]
+        if cid == b"fmt ":
+            fmt = body
+        elif cid == b"data":
+            data = body
+        pos += 8 + size + (size & 1)  # chunks are word-aligned
+    if fmt is None or data is None:
+        raise ValueError("missing fmt or data chunk")
+    tag = int.from_bytes(fmt[0:2], "little")
+    ch = int.from_bytes(fmt[2:4], "little")
+    rate = int.from_bytes(fmt[4:8], "little")
+    bits = int.from_bytes(fmt[14:16], "little")
+    if tag != 1 or bits != 16 or ch < 1:
+        raise ValueError("only PCM 16-bit WAV supported")
+    frames = len(data) // (ch * 2)
+    arr = np.frombuffer(data[: frames * ch * 2], "<i2").reshape(frames, ch)
+    return arr, rate
+
+
+def encode_rawvideo(frames: np.ndarray, fps: int) -> bytes:
+    """Minimal raw-video container ("RAWV"): 20-byte header (magic,
+    n_frames, height, width, fps as little-endian u32) + concatenated
+    uncompressed RGB frames. A REAL byte-level format this engine can
+    parse end-to-end — the video twin of :func:`encode_ppm` /
+    :func:`encode_wav` — standing in for containers whose decoders
+    (mp4/h264) aren't available in this environment; the Spark-side
+    plumbing (schema, Arrow batches, frame seeking) is identical."""
+    if frames.ndim != 4 or frames.shape[3] != 3:
+        raise ValueError("encode_rawvideo expects (n, h, w, 3)")
+    n, h, w, _ = frames.shape
+
+    def le(v: int) -> bytes:
+        return int(v).to_bytes(4, "little")
+
+    return (
+        b"RAWV" + le(n) + le(h) + le(w) + le(fps)
+        + frames.astype(np.uint8).tobytes()
+    )
+
+
+def decode_video_frame(payload: bytes, frame_idx: int) -> np.ndarray:
+    """Seek-decode ONE frame from a RAWV payload without touching the
+    others — what a real decoder does with keyframe seeking; the
+    operator layer samples offsets, never materializes whole videos.
+    Raises ``ValueError`` for non-RAWV payloads or out-of-range
+    frames."""
+    if len(payload) < 20 or payload[:4] != b"RAWV":
+        raise ValueError("not a RAWV payload")
+    n = int.from_bytes(payload[4:8], "little")
+    h = int.from_bytes(payload[8:12], "little")
+    w = int.from_bytes(payload[12:16], "little")
+    if not 0 <= frame_idx < n:
+        raise ValueError(f"frame {frame_idx} out of range 0..{n - 1}")
+    fsize = h * w * 3
+    start = 20 + frame_idx * fsize
+    data = payload[start : start + fsize]
+    if len(data) != fsize:
+        raise ValueError("truncated RAWV raster")
+    return np.frombuffer(data, np.uint8).reshape(h, w, 3)
+
+
+def video_meta(payload: bytes) -> tuple[int, int, int, int]:
+    """(n_frames, height, width, fps) from a RAWV header."""
+    if len(payload) < 20 or payload[:4] != b"RAWV":
+        raise ValueError("not a RAWV payload")
+    return tuple(
+        int.from_bytes(payload[4 + 4 * i : 8 + 4 * i], "little")
+        for i in range(4)
+    )
+
+
+# ---------------------------------------------------------------------------
+# The codec table
+# ---------------------------------------------------------------------------
+
+
+def _ppm_header(payload: bytes) -> tuple[int, int, int, int]:
+    """Binary PPM (P6) header → ``(width, height, maxval,
+    raster_offset)``: '#' comments and arbitrary whitespace between
+    the tokens, exactly one whitespace byte after maxval. The one PPM
+    header parser, shared by the decoder and the probe."""
+    if payload[:2] != b"P6":
+        raise ValueError("bad PPM signature")
     pos, vals = 2, []
     while len(vals) < 3:
         ch = payload[pos : pos + 1]
@@ -493,14 +593,140 @@ def decode_image(payload: bytes) -> np.ndarray:
                 raise ValueError("malformed PPM header")
             vals.append(int(payload[pos:end]))
             pos = end
-    w, h, maxval = vals
+    return vals[0], vals[1], vals[2], pos + 1
+
+
+def _decode_ppm(payload: bytes) -> np.ndarray:
+    """8-bit binary PPM → ``(h, w, 3)`` uint8 (raw ``w*h*3`` samples
+    after the header)."""
+    w, h, maxval, pos = _ppm_header(payload)
     if maxval != 255:
         raise ValueError("only 8-bit PPM (maxval 255) supported")
-    pos += 1  # the single whitespace byte separating header and raster
     data = payload[pos : pos + w * h * 3]
     if len(data) != w * h * 3:
         raise ValueError("truncated PPM raster")
     return np.frombuffer(data, np.uint8).reshape(h, w, 3)
+
+
+def _probe_jpeg(payload: bytes) -> tuple:
+    """Walk the JPEG markers to the first SOF segment."""
+    pos = 2
+    while pos + 4 <= len(payload) and payload[pos] == 0xFF:
+        marker = payload[pos + 1]
+        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            return (
+                int.from_bytes(payload[pos + 7 : pos + 9], "big"),
+                int.from_bytes(payload[pos + 5 : pos + 7], "big"),
+                None,
+            )
+        pos += 2 + int.from_bytes(payload[pos + 2 : pos + 4], "big")
+    return None, None, None
+
+
+def _probe_wav(payload: bytes) -> tuple:
+    arr, rate = decode_wav(payload)
+    return None, None, arr.shape[0] * 1000 // rate
+
+
+def _probe_rawv(payload: bytes) -> tuple:
+    n_frames, h, w, fps = video_meta(payload)
+    return w, h, n_frames * 1000 // max(fps, 1)
+
+
+class Codec(NamedTuple):
+    """Everything the media tier knows about one container format."""
+
+    mime: str
+    #: file extensions the ``mediafile`` source lists as this codec
+    exts: tuple[str, ...]
+    #: ``(offset, bytes)`` pairs that every payload of the codec carries
+    magic: tuple[tuple[int, bytes], ...]
+    #: writer: images take an ``(h, w, 3)`` uint8 array, WAV
+    #: ``(samples, rate)``, RAWV ``(frames, fps)``
+    encode: Callable | None
+    #: image decoder: bytes → ``(h, w, 3)`` uint8
+    decode: Callable | None
+    #: header-only probe: bytes → ``(width, height, duration_ms)``
+    probe: Callable | None
+
+    def matches(self, payload: bytes) -> bool:
+        """True when ``payload`` carries this codec's magic bytes."""
+        return all(payload[o : o + len(m)] == m for o, m in self.magic)
+
+
+#: codec name → :class:`Codec`. The generators label ``meta`` from it,
+#: :func:`decode_image` and :func:`resize_images` dispatch through it,
+#: and the ``mediafile`` source lists and probes files with it.
+#: MJPEG-AVI and MP4 keep their writers and parsers in ``avi``/``mp4``
+#: (which import this module), and the source lists neither.
+CODECS: dict[str, Codec] = {
+    "ppm": Codec(
+        "image/x-portable-pixmap", (".ppm",), ((0, b"P6"),),
+        encode_ppm, _decode_ppm, lambda p: (*_ppm_header(p)[:2], None),
+    ),
+    "bmp": Codec(
+        "image/bmp", (".bmp",), ((0, b"BM"),), encode_bmp, _decode_bmp,
+        lambda p: (
+            int.from_bytes(p[18:22], "little", signed=True),
+            abs(int.from_bytes(p[22:26], "little", signed=True)),
+            None,
+        ),
+    ),
+    "png": Codec(
+        "image/png", (".png",), ((0, _PNG_SIG),), encode_png, _decode_png,
+        lambda p: (
+            int.from_bytes(p[16:20], "big"), int.from_bytes(p[20:24], "big"), None
+        ),
+    ),
+    "gif": Codec(
+        "image/gif", (".gif",), ((0, b"GIF8"),), encode_gif, _decode_gif,
+        lambda p: (
+            int.from_bytes(p[6:8], "little"), int.from_bytes(p[8:10], "little"), None
+        ),
+    ),
+    "jpeg": Codec(
+        "image/jpeg", (".jpg", ".jpeg"), ((0, b"\xff\xd8"),),
+        encode_jpeg, decode_jpeg, _probe_jpeg,
+    ),
+    "pcm_s16le": Codec(
+        "audio/wav", (".wav",), ((0, b"RIFF"), (8, b"WAVE")),
+        encode_wav, None, _probe_wav,
+    ),
+    "rawv": Codec(
+        "video/x-raw", (".rawv",), ((0, b"RAWV"),),
+        encode_rawvideo, None, _probe_rawv,
+    ),
+    "mjpeg": Codec(
+        "video/x-msvideo", (), ((0, b"RIFF"), (8, b"AVI ")), None, None, None
+    ),
+    "mp4": Codec("video/mp4", (), ((4, b"ftyp"),), None, None, None),
+}
+
+
+def sniff_codec(payload: bytes) -> str | None:
+    """Name of the codec whose magic bytes ``payload`` carries."""
+    return next((n for n, c in CODECS.items() if c.matches(payload)), None)
+
+
+def decode_image(payload: bytes) -> np.ndarray:
+    """Dependency-free byte-level image decode → ``(h, w, 3)`` uint8.
+
+    The payload's magic bytes pick the decoder from :data:`CODECS`:
+    binary PPM (P6, see :func:`_ppm_header`), 24-bit uncompressed BMP
+    (see :func:`_decode_bmp`), 8-bit non-interlaced PNG (see
+    :func:`_decode_png` — real zlib inflate + scanline unfiltering),
+    GIF (real LZW) and baseline JPEG (:mod:`datapipe.jpeg`).
+    Raises ``ValueError`` for any other format — callers that can
+    tolerate undecodable payloads (feature extraction over mixed media)
+    catch it and fall back to hash features."""
+    codec = sniff_codec(payload)
+    decode = CODECS[codec].decode if codec else None
+    if decode is None:
+        raise ValueError(
+            "unsupported image format (supported: PPM P6, BMP24, PNG, "
+            "GIF, baseline JPEG)"
+        )
+    return decode(payload)
 
 
 def _pooled_feature(img: np.ndarray, dim: int) -> list[float]:
@@ -559,6 +785,125 @@ def media_fingerprint(
     )
 
 
+# ---------------------------------------------------------------------------
+# The payload maps and the synthetic-media generator
+# ---------------------------------------------------------------------------
+
+_INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _to_pandas(rows: list[tuple], schema: T.StructType) -> pd.DataFrame:
+    """Rows in ``schema`` order → one pandas batch. Integer columns use
+    the nullable ``Int64`` dtype, so a column that is NULL in some or
+    all rows still converts to its declared integer type."""
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    return pd.DataFrame(
+        {
+            f.name: pd.Series(
+                c, dtype="Int64" if isinstance(f.dataType, _INT_TYPES) else None
+            )
+            for f, c in zip(schema.fields, cols)
+        }
+    )
+
+
+def map_payloads(
+    df: DataFrame,
+    fn: Callable[[int, bytes], Iterable[tuple]],
+    schema: T.StructType,
+    id_col: str = "media_id",
+    payload_col: str = "payload",
+) -> DataFrame:
+    """The media tier's one per-row Arrow map: ``fn(id, payload)``
+    yields zero or more output tuples in ``schema`` order for every
+    ``(id_col, payload_col)`` row; a NULL payload arrives as ``b""``.
+    ``mapInPandas`` so each task processes whole record batches —
+    map-only, no shuffle."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [
+                out
+                for i, p in zip(pdf[id_col], pdf[payload_col])
+                for out in fn(int(i), b"" if p is None else bytes(p))
+            ]
+            yield _to_pandas(rows, schema)
+
+    return df.select(id_col, payload_col).mapInPandas(batches, schema)
+
+
+def _rewrite_payloads(
+    df: DataFrame,
+    fn: Callable[[bytes], tuple[bytes, dict | None]],
+    payload_col: str,
+    meta_fields: tuple[str, ...],
+) -> DataFrame:
+    """The one payload-rewrite map (resize, resample): keeps every input
+    column and replaces each payload with ``fn(payload)[0]``.
+    ``fn(payload)[1]`` holds the new values of ``meta_fields`` (integer
+    fields of :data:`MEDIA_META`), or
+    None when the payload did not decode — then the bytes pass through
+    unchanged and ``meta`` is left as it was, so meta never claims
+    what the bytes don't have. The map emits a per-row decoded flag and
+    the ``meta`` rewrite is conditional on it."""
+    flags = [T.StructField("_decoded", T.BooleanType())] + [
+        T.StructField(f"_{f}", MEDIA_META[f].dataType) for f in meta_fields
+    ]
+    cols = df.columns + [f.name for f in flags]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            outs = [fn(b"" if p is None else bytes(p)) for p in pdf[payload_col]]
+            pdf[payload_col] = [b for b, _ in outs]
+            pdf["_decoded"] = [m is not None for _, m in outs]
+            for f in meta_fields:
+                pdf[f"_{f}"] = pd.array(
+                    [m and m[f] for _, m in outs], dtype="Int64"
+                )
+            yield pdf[cols]
+
+    out = df.mapInPandas(batches, T.StructType(df.schema.fields + flags))
+    if "meta" in df.columns:
+        out = out.withColumn(
+            "meta",
+            F.when(
+                F.col("_decoded"),
+                F.struct(
+                    *[
+                        F.col(f"_{f}" if f in meta_fields else f"meta.{f}").alias(f)
+                        for f in MEDIA_META.fieldNames()
+                    ]
+                ),
+            ).otherwise(F.col("meta")),
+        )
+    return out.drop(*[f.name for f in flags])
+
+
+def synthetic_media(
+    docs: DataFrame,
+    id_col: str,
+    make: Callable[[int], tuple],
+) -> DataFrame:
+    """The one synthetic-media generator: row ``id`` of ``docs`` becomes
+    a MEDIA_SCHEMA row from ``make(id) = (payload, codec, width,
+    height, duration_ms)``; the mime comes from :data:`CODECS`.
+    Encoding runs in the Arrow batch (:func:`map_payloads`), the same
+    path a real ingest would use."""
+
+    def row(i: int, _payload: bytes) -> Iterator[tuple]:
+        payload, codec, w, h, dur = make(i)
+        mime = CODECS[codec].mime
+        yield i, payload, dict(
+            mime=mime, width=w, height=h, duration_ms=dur, codec=codec
+        )
+
+    ids = docs.select(
+        F.col(id_col).cast("long").alias("media_id"),
+        F.lit(None).cast("binary").alias("payload"),
+    )
+    return map_payloads(ids, row, MEDIA_SCHEMA)
+
+
 def extract_image_features(
     df: DataFrame,
     payload_col: str = "payload",
@@ -566,11 +911,9 @@ def extract_image_features(
     dim: int = IMAGE_FEATURE_DIM,
 ) -> DataFrame:
     """Arrow-batched feature extraction: binary → array<float>.
-
-    ``mapInPandas`` so each task processes whole record batches.
-    Decodable images (PPM) get real pooled-pixel features; anything
-    else gets content-hash features — mixed media tables work without
-    a per-format pipeline split."""
+    Decodable images get real pooled-pixel features; anything else
+    gets content-hash features — mixed media tables work without a
+    per-format pipeline split."""
     out_schema = T.StructType(
         [
             T.StructField(id_col, T.LongType()),
@@ -578,102 +921,48 @@ def extract_image_features(
         ]
     )
 
-    def one(p) -> list[float]:
-        b = bytes(p) if p is not None else b""
+    def one(i: int, b: bytes) -> Iterator[tuple]:
         try:
-            return _pooled_feature(decode_image(b), dim)
+            yield i, _pooled_feature(decode_image(b), dim)
         except ValueError:
-            return _hash_feature(b, dim)
+            yield i, _hash_feature(b, dim)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "features": [one(p) for p in pdf[payload_col]],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(batches, out_schema)
+    return map_payloads(df, one, out_schema, id_col, payload_col)
 
 
-#: codec name → (encoder, mime); the shared synthetic-table generator
-#: and resize_images both dispatch through this
-def encode_jpeg(img: np.ndarray, quality: int = 75, subsampling: str = "4:4:4") -> bytes:
-    """Baseline JFIF encoder — see :mod:`datapipe.jpeg`."""
-    from datalake_backend_spark.datapipe.jpeg import encode_jpeg as _enc
-
-    return _enc(img, quality, subsampling)
-
-
-_CODECS: dict[str, tuple] = {
-    "ppm": (encode_ppm, "image/x-portable-pixmap"),
-    "bmp": (encode_bmp, "image/bmp"),
-    "png": (encode_png, "image/png"),
-    "jpeg": (encode_jpeg, "image/jpeg"),
-    "gif": (encode_gif, "image/gif"),
-}
-
-
-def _synthetic_image_table(docs, id_col, codec_of) -> DataFrame:
-    """Deterministic REAL image table: each row becomes a genuine binary
-    image whose dims and pixels are closed-form functions of the id —
-    ``w = 4 + id%5``, ``h = 3 + id%4``, ``pixel(r,c,ch) = (id*31 + r*7
-    + c*3 + ch*11) % 256`` — so a SQL oracle can recompute any decoded
-    statistic without an image library. ``codec_of(id)`` picks the
-    container ('ppm' or 'bmp') per row; the pixel formula is codec-
-    independent, so decoded statistics don't depend on the choice.
-    Encoding runs in the Arrow batch (mapInPandas), the same path a
-    real ingest would use."""
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["media_id"].to_numpy()
-            payloads, metas = [], []
-            for i in ids:
-                i = int(i)
-                w, h = 4 + i % 5, 3 + i % 4
-                r = np.arange(h).reshape(h, 1, 1)
-                c = np.arange(w).reshape(1, w, 1)
-                ch = np.arange(3).reshape(1, 1, 3)
-                img = ((i * 31 + r * 7 + c * 3 + ch * 11) % 256).astype(np.uint8)
-                codec = codec_of(i)
-                encoder, mime = _CODECS[codec]
-                payloads.append(encoder(img))
-                metas.append(
-                    {
-                        "mime": mime,
-                        "width": w,
-                        "height": h,
-                        "duration_ms": None,
-                        "codec": codec,
-                    }
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "meta": metas}
-            )
-
-    return docs.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        gen, MEDIA_SCHEMA
-    )
+def synthetic_image(i: int, codec: str) -> tuple:
+    """``make`` row of the deterministic REAL image family: a genuine
+    ``codec`` image whose dims and pixels are closed-form functions of
+    the id — ``w = 4 + id%5``, ``h = 3 + id%4``, ``pixel(r,c,ch) =
+    (id*31 + r*7 + c*3 + ch*11) % 256`` — so a SQL oracle can recompute
+    any decoded statistic without an image library. The pixel formula
+    is codec-independent, so decoded statistics don't depend on the
+    container."""
+    w, h = 4 + i % 5, 3 + i % 4
+    r = np.arange(h).reshape(h, 1, 1)
+    c = np.arange(w).reshape(1, w, 1)
+    ch = np.arange(3).reshape(1, 1, 3)
+    img = ((i * 31 + r * 7 + c * 3 + ch * 11) % 256).astype(np.uint8)
+    return CODECS[codec].encode(img), codec, w, h, None
 
 
 def synthetic_image_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Mixed-codec variant: id mod 3 picks PPM P6 / 24-bit BMP / PNG.
-    Exercises all three byte-level decoders in one scan; the q75 oracle
-    is unchanged because decoded statistics are codec-independent."""
-    return _synthetic_image_table(
-        docs, id_col, lambda i: ("ppm", "bmp", "png")[i % 3]
+    """Mixed-codec variant of :func:`synthetic_image`: id mod 3 picks
+    PPM P6 / 24-bit BMP / PNG. Exercises all three byte-level decoders
+    in one scan; the q75 oracle is unchanged because decoded
+    statistics are codec-independent."""
+    return synthetic_media(
+        docs, id_col, lambda i: synthetic_image(i, ("ppm", "bmp", "png")[i % 3])
     )
 
 
 def synthetic_gif_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """All-GIF variant of :func:`_synthetic_image_table`: every payload
-    is a genuine GIF89a bitstream (palette + real LZW sub-blocks), so a
+    """All-GIF variant of :func:`synthetic_image`: every payload is a
+    genuine GIF89a bitstream (palette + real LZW sub-blocks), so a
     decoded-statistics oracle exercises the full LZW decompressor. The
     pixel formula (≤ 48 pixels per image) always fits a 256-color
     palette."""
-    return _synthetic_image_table(docs, id_col, lambda i: "gif")
+    return synthetic_media(docs, id_col, lambda i: synthetic_image(i, "gif"))
 
 
 def synthetic_jpeg_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -690,36 +979,16 @@ def synthetic_jpeg_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     while the SQL twin only needs the closed-form block sums. General
     lossy content is pinned by tests/test_jpeg.py tolerances instead
     (a lossy reconstruction is decoder-defined, not SQL-checkable)."""
-    from datalake_backend_spark.datapipe.jpeg import encode_jpeg as _enc
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["media_id"].to_numpy()
-            payloads, metas = [], []
-            for i in ids:
-                i = int(i)
-                w, h = 8 * (1 + i % 3), 8 * (1 + i % 2)
-                br = np.arange(h // 8).reshape(-1, 1)
-                bc = np.arange(w // 8).reshape(1, -1)
-                vals = ((i * 37 + br * 17 + bc * 29) % 256).astype(np.uint8)
-                img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                payloads.append(_enc(img, quality=75))
-                metas.append(
-                    {
-                        "mime": "image/jpeg",
-                        "width": w,
-                        "height": h,
-                        "duration_ms": None,
-                        "codec": "jpeg",
-                    }
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "meta": metas}
-            )
+    def make(i: int) -> tuple:
+        w, h = 8 * (1 + i % 3), 8 * (1 + i % 2)
+        br = np.arange(h // 8).reshape(-1, 1)
+        bc = np.arange(w // 8).reshape(1, -1)
+        vals = ((i * 37 + br * 17 + bc * 29) % 256).astype(np.uint8)
+        img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
+        return encode_jpeg(img, quality=75), "jpeg", w, h, None
 
-    return docs.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        gen, MEDIA_SCHEMA
-    )
+    return synthetic_media(docs, id_col, make)
 
 
 IMAGE_STATS_SCHEMA = T.StructType(
@@ -747,144 +1016,39 @@ def image_stats(
     Integer sums divided by exact pixel counts → bit-identical doubles
     in any engine. Map-only (one Arrow stage, no shuffle)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                img = decode_image(bytes(p))
-                h, w, ch = img.shape
-                s = img.reshape(-1, ch).sum(axis=0, dtype=np.int64)
-                n = h * w
-                recs.append(
-                    {
-                        "media_id": int(i),
-                        "width": w,
-                        "height": h,
-                        "channels": ch,
-                        "n_pixels": n,
-                        "sum_r": int(s[0]),
-                        "sum_g": int(s[1]),
-                        "sum_b": int(s[2]),
-                        "mean_r": int(s[0]) / n,
-                        "mean_g": int(s[1]) / n,
-                        "mean_b": int(s[2]) / n,
-                    }
-                )
-            yield pd.DataFrame(recs)
+    def one(i: int, b: bytes) -> Iterator[tuple]:
+        img = decode_image(b)
+        h, w, ch = img.shape
+        s = [int(v) for v in img.reshape(-1, ch).sum(axis=0, dtype=np.int64)]
+        n = h * w
+        yield i, w, h, ch, n, *s, *(v / n for v in s)
 
-    return df.select(id_col, payload_col).mapInPandas(batches, IMAGE_STATS_SCHEMA)
+    return map_payloads(df, one, IMAGE_STATS_SCHEMA, id_col, payload_col)
 
 
 def resize_images(
     df: DataFrame, width: int, height: int, payload_col: str = "payload"
 ) -> DataFrame:
-    """Real image resize over the Arrow batch: decodable payloads (PPM,
-    BMP or PNG) are decoded, nearest-neighbor resampled to ``(height,
-    width)``, and re-encoded in their ORIGINAL container; non-decodable
+    """Real image resize over the Arrow batch: decodable payloads (any
+    image codec of :data:`CODECS`) are decoded, nearest-neighbor
+    resampled to ``(height, width)``, and re-encoded in their ORIGINAL
+    container through the sniffed codec's encoder; non-decodable
     payloads pass through byte-unchanged, and their metadata dims are
-    left untouched too — the decode stage emits a per-row flag and the
-    meta rewrite is conditional on it, so meta never claims dims the
-    bytes don't have. Map-only — one ``mapInPandas`` stage, no
-    shuffle."""
+    left untouched too (:func:`_rewrite_payloads`). Map-only — one
+    Arrow stage, no shuffle."""
 
-    def one(p) -> tuple[bytes, bool]:
-        b = bytes(p) if p is not None else b""
+    def one(b: bytes) -> tuple[bytes, dict | None]:
         try:
             img = decode_image(b)
         except ValueError:
-            return b, False
+            return b, None
         h, w, _ = img.shape
         rows = (np.arange(height) * h) // height
         cols = (np.arange(width) * w) // width
-        if b[:2] == b"BM":
-            encoder = encode_bmp
-        elif b[: len(_PNG_SIG)] == _PNG_SIG:
-            encoder = encode_png
-        else:
-            encoder = encode_ppm
-        return encoder(img[rows][:, cols]), True
+        encode = CODECS[sniff_codec(b)].encode
+        return encode(img[rows][:, cols]), {"width": width, "height": height}
 
-    cols_out = df.columns
-    flagged_schema = T.StructType(
-        df.schema.fields + [T.StructField("_decoded", T.BooleanType())]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            pairs = [one(p) for p in pdf[payload_col]]
-            pdf[payload_col] = [b for b, _ in pairs]
-            pdf["_decoded"] = [d for _, d in pairs]
-            yield pdf[cols_out + ["_decoded"]]
-
-    resized = df.mapInPandas(batches, flagged_schema)
-    return resized.withColumn(
-        "meta",
-        F.when(
-            F.col("_decoded"),
-            F.struct(
-                F.col("meta.mime").alias("mime"),
-                F.lit(width).alias("width"),
-                F.lit(height).alias("height"),
-                F.col("meta.duration_ms").alias("duration_ms"),
-                F.col("meta.codec").alias("codec"),
-            ),
-        ).otherwise(F.col("meta")),
-    ).drop("_decoded")
-
-
-def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
-    """RIFF/WAVE encoder (PCM 16-bit little-endian): ``(frames,)`` or
-    ``(frames, channels)`` int16 array → canonical 44-byte header +
-    interleaved data chunk. Inverse of :func:`decode_wav`; pure byte
-    construction, no audio library."""
-    if samples.ndim == 1:
-        samples = samples.reshape(-1, 1)
-    frames, ch = samples.shape
-    data = samples.astype("<i2").tobytes()
-    block = ch * 2
-
-    def le(v: int, n: int) -> bytes:
-        return int(v).to_bytes(n, "little")
-
-    fmt = (
-        b"fmt " + le(16, 4) + le(1, 2) + le(ch, 2) + le(sample_rate, 4)
-        + le(sample_rate * block, 4) + le(block, 2) + le(16, 2)
-    )
-    body = b"WAVE" + fmt + b"data" + le(len(data), 4) + data
-    return b"RIFF" + le(len(body), 4) + body
-
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """RIFF/WAVE decoder → ``((frames, channels) int16, sample_rate)``.
-
-    Walks the chunk list (skipping unknown chunks like LIST/INFO, with
-    odd-size pad bytes per the RIFF spec), requires PCM (format tag 1)
-    at 16 bits; anything else raises ``ValueError`` so mixed-media
-    callers can fall back, mirroring :func:`decode_image`."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt or data chunk")
-    tag = int.from_bytes(fmt[0:2], "little")
-    ch = int.from_bytes(fmt[2:4], "little")
-    rate = int.from_bytes(fmt[4:8], "little")
-    bits = int.from_bytes(fmt[14:16], "little")
-    if tag != 1 or bits != 16 or ch < 1:
-        raise ValueError("only PCM 16-bit WAV supported")
-    frames = len(data) // (ch * 2)
-    arr = np.frombuffer(data[: frames * ch * 2], "<i2").reshape(frames, ch)
-    return arr, rate
+    return _rewrite_payloads(df, one, payload_col, ("width", "height"))
 
 
 def synthetic_wav_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -894,38 +1058,17 @@ def synthetic_wav_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     id%2``, ``rate = 8000 + (id%3)*4000``, ``sample(t,c) = ((id*37 +
     t*13 + c*5) % 4096) - 2048`` — so a SQL oracle recomputes any
     decoded statistic without an audio library. Same design as
-    :func:`_synthetic_image_table`; encoding runs in the Arrow batch."""
+    :func:`synthetic_image`."""
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["media_id"].to_numpy()
-            payloads, metas = [], []
-            for i in ids:
-                i = int(i)
-                frames, ch = 100 + i % 50, 1 + i % 2
-                rate = 8000 + (i % 3) * 4000
-                t = np.arange(frames).reshape(frames, 1)
-                c = np.arange(ch).reshape(1, ch)
-                samples = ((i * 37 + t * 13 + c * 5) % 4096 - 2048).astype(
-                    np.int16
-                )
-                payloads.append(encode_wav(samples, rate))
-                metas.append(
-                    {
-                        "mime": "audio/wav",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": frames * 1000 // rate,
-                        "codec": "pcm_s16le",
-                    }
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "meta": metas}
-            )
+    def make(i: int) -> tuple:
+        frames, ch = 100 + i % 50, 1 + i % 2
+        rate = 8000 + (i % 3) * 4000
+        t = np.arange(frames).reshape(frames, 1)
+        c = np.arange(ch).reshape(1, ch)
+        samples = ((i * 37 + t * 13 + c * 5) % 4096 - 2048).astype(np.int16)
+        return encode_wav(samples, rate), "pcm_s16le", None, None, frames * 1000 // rate
 
-    return docs.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        gen, MEDIA_SCHEMA
-    )
+    return synthetic_media(docs, id_col, make)
 
 
 AUDIO_STATS_SCHEMA = T.StructType(
@@ -952,82 +1095,15 @@ def audio_stats(
     Map-only (one Arrow stage, no shuffle) — the audio twin of
     :func:`image_stats`."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                arr, rate = decode_wav(bytes(p))
-                frames, ch = arr.shape
-                a = np.abs(arr.astype(np.int64))
-                sum_abs = int(a.sum())
-                n = frames * ch
-                recs.append(
-                    {
-                        "media_id": int(i),
-                        "sample_rate": rate,
-                        "channels": ch,
-                        "n_frames": frames,
-                        "duration_ms": frames * 1000 // rate,
-                        "sum_abs": sum_abs,
-                        "peak": int(a.max()) if n else 0,
-                        "mean_abs": sum_abs / n if n else 0.0,
-                    }
-                )
-            yield pd.DataFrame(recs)
+    def one(i: int, b: bytes) -> Iterator[tuple]:
+        arr, rate = decode_wav(b)
+        frames, ch = arr.shape
+        a = np.abs(arr.astype(np.int64))
+        sum_abs, n = int(a.sum()), frames * ch
+        peak, mean_abs = (int(a.max()), sum_abs / n) if n else (0, 0.0)
+        yield i, rate, ch, frames, frames * 1000 // rate, sum_abs, peak, mean_abs
 
-    return df.select(id_col, payload_col).mapInPandas(batches, AUDIO_STATS_SCHEMA)
-
-
-def encode_rawvideo(frames: np.ndarray, fps: int) -> bytes:
-    """Minimal raw-video container ("RAWV"): 20-byte header (magic,
-    n_frames, height, width, fps as little-endian u32) + concatenated
-    uncompressed RGB frames. A REAL byte-level format this engine can
-    parse end-to-end — the video twin of :func:`encode_ppm` /
-    :func:`encode_wav` — standing in for containers whose decoders
-    (mp4/h264) aren't available in this environment; the Spark-side
-    plumbing (schema, Arrow batches, frame seeking) is identical."""
-    if frames.ndim != 4 or frames.shape[3] != 3:
-        raise ValueError("encode_rawvideo expects (n, h, w, 3)")
-    n, h, w, _ = frames.shape
-
-    def le(v: int) -> bytes:
-        return int(v).to_bytes(4, "little")
-
-    return (
-        b"RAWV" + le(n) + le(h) + le(w) + le(fps)
-        + frames.astype(np.uint8).tobytes()
-    )
-
-
-def decode_video_frame(payload: bytes, frame_idx: int) -> np.ndarray:
-    """Seek-decode ONE frame from a RAWV payload without touching the
-    others — what a real decoder does with keyframe seeking; the
-    operator layer samples offsets, never materializes whole videos.
-    Raises ``ValueError`` for non-RAWV payloads or out-of-range
-    frames."""
-    if len(payload) < 20 or payload[:4] != b"RAWV":
-        raise ValueError("not a RAWV payload")
-    n = int.from_bytes(payload[4:8], "little")
-    h = int.from_bytes(payload[8:12], "little")
-    w = int.from_bytes(payload[12:16], "little")
-    if not 0 <= frame_idx < n:
-        raise ValueError(f"frame {frame_idx} out of range 0..{n - 1}")
-    fsize = h * w * 3
-    start = 20 + frame_idx * fsize
-    data = payload[start : start + fsize]
-    if len(data) != fsize:
-        raise ValueError("truncated RAWV raster")
-    return np.frombuffer(data, np.uint8).reshape(h, w, 3)
-
-
-def video_meta(payload: bytes) -> tuple[int, int, int, int]:
-    """(n_frames, height, width, fps) from a RAWV header."""
-    if len(payload) < 20 or payload[:4] != b"RAWV":
-        raise ValueError("not a RAWV payload")
-    return tuple(
-        int.from_bytes(payload[4 + 4 * i : 8 + 4 * i], "little")
-        for i in range(4)
-    )
+    return map_payloads(df, one, AUDIO_STATS_SCHEMA, id_col, payload_col)
 
 
 def synthetic_video_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1037,38 +1113,17 @@ def synthetic_video_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     SQL oracle recomputes any sampled-frame statistic. Same design as
     the image/audio synthetic tables."""
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["media_id"].to_numpy()
-            payloads, metas = [], []
-            for i in ids:
-                i = int(i)
-                n, w, h = 2 + i % 4, 4 + i % 3, 3 + i % 2
-                fps = 5 + i % 3
-                f = np.arange(n).reshape(n, 1, 1, 1)
-                r = np.arange(h).reshape(1, h, 1, 1)
-                c = np.arange(w).reshape(1, 1, w, 1)
-                ch = np.arange(3).reshape(1, 1, 1, 3)
-                frames = (
-                    (i * 31 + f * 17 + r * 7 + c * 3 + ch * 11) % 256
-                ).astype(np.uint8)
-                payloads.append(encode_rawvideo(frames, fps))
-                metas.append(
-                    {
-                        "mime": "video/x-raw",
-                        "width": w,
-                        "height": h,
-                        "duration_ms": n * 1000 // fps,
-                        "codec": "rawvideo",
-                    }
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "meta": metas}
-            )
+    def make(i: int) -> tuple:
+        n, w, h = 2 + i % 4, 4 + i % 3, 3 + i % 2
+        fps = 5 + i % 3
+        f = np.arange(n).reshape(n, 1, 1, 1)
+        r = np.arange(h).reshape(1, h, 1, 1)
+        c = np.arange(w).reshape(1, 1, w, 1)
+        ch = np.arange(3).reshape(1, 1, 1, 3)
+        frames = ((i * 31 + f * 17 + r * 7 + c * 3 + ch * 11) % 256).astype(np.uint8)
+        return encode_rawvideo(frames, fps), "rawv", w, h, n * 1000 // fps
 
-    return docs.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        gen, MEDIA_SCHEMA
-    )
+    return synthetic_media(docs, id_col, make)
 
 
 FRAME_STATS_SCHEMA = T.StructType(
@@ -1095,28 +1150,13 @@ def sampled_frame_stats(
     indices, never over pixels, and unsampled frames are never
     materialized — the shape a 100 TB video corpus needs."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(p)
-                n, h, w, fps = video_meta(b)
-                for fi in range(0, n, every_n):
-                    img = decode_video_frame(b, fi)
-                    s = int(img.sum(dtype=np.int64))
-                    recs.append(
-                        {
-                            "media_id": int(i),
-                            "frame_idx": fi,
-                            "n_frames": n,
-                            "fps": fps,
-                            "sum_rgb": s,
-                            "mean_rgb": s / (h * w * 3),
-                        }
-                    )
-            yield pd.DataFrame(recs)
+    def one(i: int, b: bytes) -> Iterator[tuple]:
+        n, h, w, fps = video_meta(b)
+        for fi in range(0, n, every_n):
+            s = int(decode_video_frame(b, fi).sum(dtype=np.int64))
+            yield i, fi, n, fps, s, s / (h * w * 3)
 
-    return df.select(id_col, payload_col).mapInPandas(batches, FRAME_STATS_SCHEMA)
+    return map_payloads(df, one, FRAME_STATS_SCHEMA, id_col, payload_col)
 
 
 def resample_linear(x: np.ndarray, src_rate: int, dst_rate: int) -> np.ndarray:
@@ -1154,53 +1194,16 @@ def resample_audio(
     same honest contract as :func:`resize_images`. Map-only — one
     Arrow stage, no shuffle."""
 
-    def one(p) -> tuple[bytes, bool, int]:
-        b = bytes(p) if p is not None else b""
+    def one(b: bytes) -> tuple[bytes, dict | None]:
         try:
             samples, rate = decode_wav(b)
         except ValueError:
-            return b, False, 0
+            return b, None
         out = resample_linear(samples, rate, target_rate)
-        return encode_wav(out, target_rate), True, out.shape[0]
+        dur = out.shape[0] * 1000 // target_rate
+        return encode_wav(out, target_rate), {"duration_ms": dur}
 
-    cols_out = df.columns
-    flagged = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("_decoded", T.BooleanType()),
-            T.StructField("_frames", T.IntegerType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            trip = [one(p) for p in pdf[payload_col]]
-            pdf[payload_col] = [b for b, _, _ in trip]
-            pdf["_decoded"] = [d for _, d, _ in trip]
-            pdf["_frames"] = [n for _, _, n in trip]
-            yield pdf[cols_out + ["_decoded", "_frames"]]
-
-    out = df.mapInPandas(batches, flagged)
-    if "meta" in df.columns:
-        out = out.withColumn(
-            "meta",
-            F.when(
-                F.col("_decoded"),
-                F.struct(
-                    F.col("meta.mime").alias("mime"),
-                    F.col("meta.width").alias("width"),
-                    F.col("meta.height").alias("height"),
-                    (
-                        F.col("_frames").cast("long")
-                        * 1000
-                        / F.lit(target_rate)
-                    ).cast("long").alias("duration_ms"),
-                    F.col("meta.codec").alias("codec"),
-                ),
-            ).otherwise(F.col("meta")),
-        )
-    return out.drop("_decoded", "_frames")
+    return _rewrite_payloads(df, one, payload_col, ("duration_ms",))
 
 
 FRAME_DIFF_SCHEMA = T.StructType(
@@ -1228,31 +1231,17 @@ def frame_diffs(
     pair's predecessor), and only the per-transition SUMS leave the
     stage — pixels never shuffle. Non-video payloads are skipped."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(p)
-                try:
-                    n, h, w, _fps = video_meta(b)
-                except ValueError:
-                    continue
-                prev = None
-                for fi in range(n):
-                    cur = decode_video_frame(b, fi).astype(np.int64)
-                    if prev is not None:
-                        s = int(np.abs(cur - prev).sum())
-                        m = s / (h * w * 3)
-                        recs.append(
-                            {
-                                "media_id": int(i),
-                                "frame_idx": fi,
-                                "sum_abs_diff": s,
-                                "mean_abs_diff": m,
-                                "is_scene_change": bool(m > threshold),
-                            }
-                        )
-                    prev = cur
-            yield pd.DataFrame(recs)
+    def one(i: int, b: bytes) -> Iterator[tuple]:
+        try:
+            n, h, w, _fps = video_meta(b)
+        except ValueError:
+            return
+        prev = decode_video_frame(b, 0).astype(np.int64) if n else None
+        for fi in range(1, n):
+            cur = decode_video_frame(b, fi).astype(np.int64)
+            s = int(np.abs(cur - prev).sum())
+            m = s / (h * w * 3)
+            yield i, fi, s, m, bool(m > threshold)
+            prev = cur
 
-    return df.select(id_col, payload_col).mapInPandas(batches, FRAME_DIFF_SCHEMA)
+    return map_payloads(df, one, FRAME_DIFF_SCHEMA, id_col, payload_col)

@@ -35,12 +35,21 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datalake_backend_spark.datapipe.multimodal import decode_image
+from datalake_backend_spark.datapipe.multimodal import (
+    CODECS,
+    decode_image,
+    decode_video_frame,
+    decode_wav,
+    encode_rawvideo,
+    encode_wav,
+    map_payloads,
+    synthetic_media,
+    video_meta,
+)
 
 #: dHash grid: 8 block rows × 9 block columns → 8 comparisons per row
 GRID_ROWS, GRID_COLS = 8, 9
@@ -113,61 +122,13 @@ def perceptual_hashes(
     are smaller than the grid get NULL hashes (kept, so callers can
     count them) — hashing never silently fakes structure."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, his, los = [], [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(int(i))
-                try:
-                    hi, lo = dhash64(decode_image(bytes(p) if p is not None else b""))
-                    his.append(hi)
-                    los.append(lo)
-                except ValueError:
-                    his.append(None)
-                    los.append(None)
-            yield pd.DataFrame(
-                {"media_id": ids, "dhash_hi": his, "dhash_lo": los}
-            ).astype({"dhash_hi": "Int64", "dhash_lo": "Int64"})
+    def one(i: int, b: bytes) -> Iterator[tuple]:
+        try:
+            yield i, *dhash64(decode_image(b))
+        except ValueError:
+            yield i, None, None
 
-    return df.select(id_col, payload_col).mapInPandas(batches, _PHASH_SCHEMA)
-
-
-def _cap_hot_keys(
-    df: DataFrame,
-    key_cols: list[str],
-    max_group: int | None,
-    warn_above: int | None,
-    where: str,
-) -> DataFrame:
-    """The perceptual twin of ``dedup.cap_hot_buckets``: a key shared
-    by m items costs m²/2 pairs in the equality self-join — a site
-    logo repeated across 10⁶ pages is the image-dedup version of the
-    boilerplate LSH bucket. ``max_group`` drops hotter groups (bounded
-    recall loss, hard quadratic bound); ``None`` keeps answers
-    unchanged but still rides max/p99 group-size ``observe()`` metrics
-    on the same exchange the join needs, with the daemon watcher
-    warning above ``warn_above`` — no silent quadratic, and no silent
-    un-cap either."""
-    from pyspark.sql import Window
-
-    from datalake_backend_spark.datapipe.dedup import HOT_BUCKET_MSG, _watch
-
-    if max_group is None and warn_above is None:
-        return df
-    w = Window.partitionBy(*key_cols)
-    with_n = df.withColumn("_gn", F.count(F.lit(1)).over(w))
-    if max_group is None:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        observed = with_n.observe(
-            obs,
-            F.max("_gn").alias("max_bucket_size"),
-            F.percentile_approx("_gn", 0.99).alias("p99_bucket_size"),
-        )
-        _watch(obs, "max_bucket_size", warn_above, where, HOT_BUCKET_MSG)
-        return observed.drop("_gn")
-    return with_n.where(F.col("_gn") <= max_group).drop("_gn")
+    return map_payloads(df, one, _PHASH_SCHEMA, id_col, payload_col)
 
 
 def hash_near_dups(
@@ -179,7 +140,8 @@ def hash_near_dups(
     hamming)`` with ``id_a < id_b`` from a ``(media_id, dhash_hi,
     dhash_lo)`` frame — the shared candidate/verify join behind image
     AND audio perceptual dedup. ``max_group`` caps hot hash groups
-    (see :func:`_cap_hot_keys`); uncapped runs still observe and warn.
+    (see ``dedup.cap_hot_buckets``); uncapped runs still observe and
+    warn.
 
     ``max_hamming=0`` (exact perceptual match — re-encoded /
     container-swapped copies) is a plain equality self-join on the
@@ -190,16 +152,19 @@ def hash_near_dups(
     distance (popcount of xor, JVM ``bit_count``) filters. Never
     all-pairs; hot bands behave like hot LSH buckets (cap upstream if
     the corpus is degenerate)."""
-    from datalake_backend_spark.datapipe.dedup import HOT_BUCKET_WARN
+    from datalake_backend_spark.datapipe.dedup import (
+        HOT_BUCKET_WARN,
+        cap_hot_buckets,
+    )
 
     if not 0 <= max_hamming <= 3:
         raise ValueError("max_hamming must be in 0..3 (4 bands of 16 bits)")
     if max_hamming == 0:
-        hashes = _cap_hot_keys(
+        hashes = cap_hot_buckets(
             hashes,
-            ["dhash_hi", "dhash_lo"],
             max_group,
             HOT_BUCKET_WARN,
+            ("dhash_hi", "dhash_lo"),
             "hash_near_dups",
         )
         a, b = hashes.alias("a"), hashes.alias("b")
@@ -239,11 +204,11 @@ def hash_near_dups(
         # cap/observe hot 16-bit bands per join leg; a member dropped
         # from one hot band can still pair through its other 3 bands
         # (observe only leg 0 when uncapped — one watcher, same signal)
-        leg = _cap_hot_keys(
+        leg = cap_hot_buckets(
             banded,
-            [f"band{band}"],
             max_group,
             HOT_BUCKET_WARN if band == 0 else None,
+            (f"band{band}",),
             "hash_near_dups_banded",
         )
         a, b = leg.alias("a"), leg.alias("b")
@@ -336,26 +301,14 @@ def audio_fingerprints(
     ``(media_id, dhash_hi, dhash_lo)`` (same column contract as
     :func:`perceptual_hashes` so :func:`hash_near_dups` composes).
     Payloads that don't decode as WAV or are too short get NULLs."""
-    from datalake_backend_spark.datapipe.multimodal import decode_wav
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, his, los = [], [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(int(i))
-                try:
-                    arr, _rate = decode_wav(bytes(p) if p is not None else b"")
-                    hi, lo = audio_fingerprint64(arr)
-                    his.append(hi)
-                    los.append(lo)
-                except ValueError:
-                    his.append(None)
-                    los.append(None)
-            yield pd.DataFrame(
-                {"media_id": ids, "dhash_hi": his, "dhash_lo": los}
-            ).astype({"dhash_hi": "Int64", "dhash_lo": "Int64"})
+    def one(i: int, b: bytes) -> Iterator[tuple]:
+        try:
+            yield i, *audio_fingerprint64(decode_wav(b)[0])
+        except ValueError:
+            yield i, None, None
 
-    return df.select(id_col, payload_col).mapInPandas(batches, _PHASH_SCHEMA)
+    return map_payloads(df, one, _PHASH_SCHEMA, id_col, payload_col)
 
 
 def audio_near_dups(
@@ -384,45 +337,23 @@ def synthetic_variant_audio_table(docs: DataFrame, id_col: str = "doc_id") -> Da
     cross-multiplied one; the waveform carries base-dependent linear
     and quadratic terms so distinct bases rarely collide (measured:
     ≤2 bases share a fingerprint over 2500)."""
-    from datalake_backend_spark.datapipe.multimodal import (
-        MEDIA_SCHEMA,
-        encode_wav,
-    )
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["media_id"].to_numpy()
-            payloads, metas = [], []
-            for i in ids:
-                i = int(i)
-                base = i // 2
-                frames = AUDIO_FP_WINDOWS * (2 + base % 3)
-                rate = 8000 + (base % 3) * 4000
-                t = np.arange(frames)
-                mono = (
-                    (base * 37 + t * (13 + base % 29) + (t * t * (1 + base % 11)) % 997)
-                    % 4096
-                    - 2048
-                ).astype(np.int16)
-                ch = 1 if i % 2 == 0 else 2
-                samples = np.repeat(mono.reshape(frames, 1), ch, axis=1)
-                payloads.append(encode_wav(samples, rate))
-                metas.append(
-                    {
-                        "mime": "audio/wav",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": frames * 1000 // rate,
-                        "codec": "pcm_s16le",
-                    }
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "meta": metas}
-            )
+    def make(i: int) -> tuple:
+        base = i // 2
+        frames = AUDIO_FP_WINDOWS * (2 + base % 3)
+        rate = 8000 + (base % 3) * 4000
+        t = np.arange(frames)
+        mono = (
+            (base * 37 + t * (13 + base % 29) + (t * t * (1 + base % 11)) % 997)
+            % 4096
+            - 2048
+        ).astype(np.int16)
+        samples = np.repeat(mono.reshape(frames, 1), 1 + i % 2, axis=1)
+        return (
+            encode_wav(samples, rate), "pcm_s16le", None, None, frames * 1000 // rate
+        )
 
-    return docs.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        gen, MEDIA_SCHEMA
-    )
+    return synthetic_media(docs, id_col, make)
 
 
 def synthetic_variant_image_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -438,49 +369,20 @@ def synthetic_variant_image_table(docs: DataFrame, id_col: str = "doc_id") -> Da
     distinct bases rarely collide (measured: max 3 bases share a hash
     over 2500 — a handful of honest accidental collisions survive as
     extra pairs, which the oracle recomputes identically)."""
-    from datalake_backend_spark.datapipe.multimodal import (
-        MEDIA_SCHEMA,
-        encode_png,
-        encode_ppm,
-    )
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["media_id"].to_numpy()
-            payloads, metas = [], []
-            for i in ids:
-                i = int(i)
-                base = i // 2
-                w, h = 9 * (1 + base % 4), 8 * (1 + base % 3)
-                r = np.arange(h).reshape(h, 1, 1)
-                c = np.arange(w).reshape(1, w, 1)
-                ch = np.arange(3).reshape(1, 1, 3)
-                img = (
-                    (base * 31 + r * 7 + c * (3 + base % 11) * 5 + r * c + ch * 11)
-                    % 256
-                ).astype(np.uint8)
-                if i % 2 == 0:
-                    payloads.append(encode_ppm(img))
-                    mime, codec = "image/x-portable-pixmap", "ppm"
-                else:
-                    payloads.append(encode_png(img))
-                    mime, codec = "image/png", "png"
-                metas.append(
-                    {
-                        "mime": mime,
-                        "width": w,
-                        "height": h,
-                        "duration_ms": None,
-                        "codec": codec,
-                    }
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "meta": metas}
-            )
+    def make(i: int) -> tuple:
+        base = i // 2
+        w, h = 9 * (1 + base % 4), 8 * (1 + base % 3)
+        r = np.arange(h).reshape(h, 1, 1)
+        c = np.arange(w).reshape(1, w, 1)
+        ch = np.arange(3).reshape(1, 1, 3)
+        img = (
+            (base * 31 + r * 7 + c * (3 + base % 11) * 5 + r * c + ch * 11) % 256
+        ).astype(np.uint8)
+        codec = "ppm" if i % 2 == 0 else "png"
+        return CODECS[codec].encode(img), codec, w, h, None
 
-    return docs.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        gen, MEDIA_SCHEMA
-    )
+    return synthetic_media(docs, id_col, make)
 
 
 def video_phash_signature(
@@ -497,27 +399,16 @@ def video_phash_signature(
     padding) — the content identity a byte hash can't see. Map-only
     Arrow stage; NULL signature for undecodable payloads or frames
     below the dHash grid."""
-    from datalake_backend_spark.datapipe.multimodal import (
-        decode_video_frame,
-        video_meta,
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, sigs = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(int(i))
-                try:
-                    payload = bytes(p) if p is not None else b""
-                    n_frames = video_meta(payload)[0]
-                    parts = []
-                    for f in range(0, n_frames, every):
-                        hi, lo = dhash64(decode_video_frame(payload, f))
-                        parts.append(f"{hi}:{lo}")
-                    sigs.append(",".join(parts) if parts else None)
-                except ValueError:
-                    sigs.append(None)
-            yield pd.DataFrame({"media_id": ids, "signature": sigs})
+    def one(i: int, b: bytes) -> Iterator[tuple]:
+        try:
+            sig = ",".join(
+                "%d:%d" % dhash64(decode_video_frame(b, f))
+                for f in range(0, video_meta(b)[0], every)
+            )
+            yield i, sig or None
+        except ValueError:
+            yield i, None
 
     schema = T.StructType(
         [
@@ -525,7 +416,7 @@ def video_phash_signature(
             T.StructField("signature", T.StringType()),
         ]
     )
-    return df.select(id_col, payload_col).mapInPandas(batches, schema)
+    return map_payloads(df, one, schema, id_col, payload_col)
 
 
 def video_near_dups(
@@ -541,13 +432,16 @@ def video_near_dups(
     which sha256 dedup misses. The signature string is the join key
     (an equality join, same scale shape as the image/audio paths;
     ``max_group`` caps hot signatures, uncapped runs observe+warn)."""
-    from datalake_backend_spark.datapipe.dedup import HOT_BUCKET_WARN
+    from datalake_backend_spark.datapipe.dedup import (
+        HOT_BUCKET_WARN,
+        cap_hot_buckets,
+    )
 
     sigs = video_phash_signature(media, payload_col, id_col, every).where(
         F.col("signature").isNotNull()
     )
-    sigs = _cap_hot_keys(
-        sigs, ["signature"], max_group, HOT_BUCKET_WARN, "video_near_dups"
+    sigs = cap_hot_buckets(
+        sigs, max_group, HOT_BUCKET_WARN, ("signature",), "video_near_dups"
     )
     a, b = sigs.alias("a"), sigs.alias("b")
     return a.join(
@@ -569,43 +463,20 @@ def synthetic_variant_video_table(docs: DataFrame, id_col: str = "doc_id") -> Da
     so the signature) agrees. Dims are dHash-grid multiples; the
     formula's base-dependent gradient and saddle terms keep accidental
     collisions rare (measured: ≤3 bases share a signature over 2500)."""
-    from datalake_backend_spark.datapipe.multimodal import (
-        MEDIA_SCHEMA,
-        encode_rawvideo,
-    )
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["media_id"].to_numpy()
-            payloads, metas = [], []
-            for i in ids:
-                i = int(i)
-                base = i // 2
-                n = 2 + base % 3
-                w, h = 9 * (1 + base % 2), 8 * (1 + base % 2)
-                f = np.arange(n).reshape(n, 1, 1, 1)
-                r = np.arange(h).reshape(1, h, 1, 1)
-                c = np.arange(w).reshape(1, 1, w, 1)
-                ch = np.arange(3).reshape(1, 1, 1, 3)
-                frames = (
-                    (base * 31 + f * 53 + r * 7 + c * (3 + base % 11) * 5
-                     + r * c + ch * 11) % 256
-                ).astype(np.uint8)
-                fps = 5 if i % 2 == 0 else 10
-                payloads.append(encode_rawvideo(frames, fps))
-                metas.append(
-                    {
-                        "mime": "video/x-raw",
-                        "width": w,
-                        "height": h,
-                        "duration_ms": n * 1000 // fps,
-                        "codec": "rawv",
-                    }
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "meta": metas}
-            )
+    def make(i: int) -> tuple:
+        base = i // 2
+        n = 2 + base % 3
+        w, h = 9 * (1 + base % 2), 8 * (1 + base % 2)
+        f = np.arange(n).reshape(n, 1, 1, 1)
+        r = np.arange(h).reshape(1, h, 1, 1)
+        c = np.arange(w).reshape(1, 1, w, 1)
+        ch = np.arange(3).reshape(1, 1, 1, 3)
+        frames = (
+            (base * 31 + f * 53 + r * 7 + c * (3 + base % 11) * 5
+             + r * c + ch * 11) % 256
+        ).astype(np.uint8)
+        fps = 5 if i % 2 == 0 else 10
+        return encode_rawvideo(frames, fps), "rawv", w, h, n * 1000 // fps
 
-    return docs.select(F.col(id_col).cast("long").alias("media_id")).mapInPandas(
-        gen, MEDIA_SCHEMA
-    )
+    return synthetic_media(docs, id_col, make)

@@ -3188,8 +3188,7 @@ def q66_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     if dict(stream.dtypes).get("ts") == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     sessions = session_aggregate(stream, time_col="ts", key_col="user_id", gap="30 minutes")
-    q = start_to_memory(sessions, "q66_sessions", output_mode="complete")
-    q.awaitTermination()
+    start_to_memory(sessions, "q66_sessions", output_mode="complete")
     return (
         spark.table("q66_sessions")
         .groupBy("user_id")
@@ -3654,10 +3653,9 @@ def q74_stateful_slot_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
             long.where(F.col("timestamp_sec") > mid),
         ],
     ) as (stream, _base):
-        q = start_to_memory(
+        start_to_memory(
             track_slot_state(stream), "q74_slots", output_mode="update"
         )
-        q.awaitTermination()
     # update mode emits one row per slot per batch it appeared in; the
     # final state is the row with the greatest last_ts (strictly
     # increasing per slot — (user, ts) is unique in events).
@@ -4351,11 +4349,9 @@ def r137_media_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks the binary column's bytes fails the hash; filter pushdown
     (media_id/codec equality pruned at planning time) and bin-packing
     are pinned by tests/test_media_source.py."""
-    import numpy as np
-
     from datalake_backend_spark.datapipe.multimodal import (
-        encode_gif,
         image_stats,
+        synthetic_image,
     )
     from datalake_backend_spark.sources.media_source import (
         register_media_source,
@@ -4371,13 +4367,8 @@ def r137_media_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     def build(base: str) -> None:
         for i in ids:
-            w, h = 4 + i % 5, 3 + i % 4
-            r = np.arange(h).reshape(h, 1, 1)
-            c = np.arange(w).reshape(1, w, 1)
-            ch = np.arange(3).reshape(1, 1, 3)
-            img = ((i * 31 + r * 7 + c * 3 + ch * 11) % 256).astype(np.uint8)
             with open(os.path.join(base, f"{i}.gif"), "wb") as fh:
-                fh.write(encode_gif(img))
+                fh.write(synthetic_image(i, "gif")[0])
 
     base = derive_once(sf_dir, "r137_media", build)
     media = (
@@ -5533,8 +5524,7 @@ def r158_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("user_id").alias("max_user"),
         F.sum("event_id").cast("bigint").alias("event_id_checksum"),
     )
-    q = start_to_memory(agg, "r158_enriched", output_mode="complete")
-    q.awaitTermination()
+    start_to_memory(agg, "r158_enriched", output_mode="complete")
     return spark.table("r158_enriched")
 
 
@@ -10808,8 +10798,7 @@ def q79_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     win = windowed_counts(
         stream, time_col="ts", key_col="event_type", window="15 minutes"
     )
-    q = start_to_memory(win, "q79_windows", output_mode="complete")
-    q.awaitTermination()
+    start_to_memory(win, "q79_windows", output_mode="complete")
     return spark.table("q79_windows").select(
         F.unix_micros("window_start").alias("w_start_us"),
         "event_type",
@@ -11084,8 +11073,7 @@ def q84_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream_stream_interval_join(
         clicks, purchases, "user_id", "ts", "ts", max_delay="30 minutes"
     )
-    q = start_to_memory(joined, "q84_pairs", output_mode="append")
-    q.awaitTermination()
+    start_to_memory(joined, "q84_pairs", output_mode="append")
     return (
         spark.table("q84_pairs")
         .groupBy(F.col("l_key").alias("user_id"))
@@ -11145,8 +11133,7 @@ def q85_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         slide="10 minutes",
         watermark="1 hour",
     )
-    q = start_to_memory(win, "q85_windows", output_mode="complete")
-    q.awaitTermination()
+    start_to_memory(win, "q85_windows", output_mode="complete")
     return spark.table("q85_windows").select(
         F.unix_micros("window_start").alias("w_start_us"),
         "event_type",
@@ -11726,8 +11713,7 @@ def r95_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped = dedup_stream(
             stream, ["event_id"], time_col="ts", watermark="3650 days"
         )
-        q = start_to_memory(deduped, "r95_dedup", output_mode="append")
-        q.awaitTermination()
+        start_to_memory(deduped, "r95_dedup", output_mode="append")
     return (
         spark.table("r95_dedup")
         .groupBy("event_type")

@@ -41,27 +41,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-#: extension → codec name (the dispatch contract of datapipe.multimodal)
-_EXT_CODECS = {
-    ".ppm": "ppm",
-    ".bmp": "bmp",
-    ".png": "png",
-    ".gif": "gif",
-    ".jpg": "jpeg",
-    ".jpeg": "jpeg",
-    ".wav": "pcm_s16le",
-    ".rawv": "rawv",
-}
-
-_MIMES = {
-    "ppm": "image/x-portable-pixmap",
-    "bmp": "image/bmp",
-    "png": "image/png",
-    "gif": "image/gif",
-    "jpeg": "image/jpeg",
-    "pcm_s16le": "audio/wav",
-    "rawv": "video/x-raw",
-}
+from datalake_backend_spark.datapipe.multimodal import CODECS
 
 #: ``codec`` is surfaced top-level (as well as inside ``meta``) so an
 #: equality filter on it is pushable — the same reason file sources
@@ -79,80 +59,41 @@ def probe_media(payload: bytes, codec: str) -> tuple[int | None, int | None, int
     decode. Unknown/corrupt headers yield NULL dims rather than
     failing the scan — a quarantine-style degradation; the decode
     operators downstream will raise on the same payload if asked to
-    decode it."""
-    def dims(w: int, h: int):
-        # int.from_bytes on a short/garbage slice yields 0, not an
-        # error — implausible dims degrade to NULLs like a parse failure
-        return (w, h, None) if w > 0 and h > 0 else (None, None, None)
-
+    decode it. The probe itself is ``codec``'s entry of
+    ``multimodal.CODECS``."""
+    entry = CODECS.get(codec)
+    if entry is None or entry.probe is None or not entry.matches(payload):
+        return None, None, None
     try:
-        if codec == "ppm":
-            # the header is a few bytes: read the two dims tokens
-            # directly rather than decoding the raster
-            vals, pos = [], 2
-            while len(vals) < 2 and pos < min(len(payload), 64):
-                ch = payload[pos : pos + 1]
-                if ch.isspace():
-                    pos += 1
-                elif ch == b"#":
-                    pos = payload.index(b"\n", pos) + 1
-                else:
-                    end = pos
-                    while payload[end : end + 1].isdigit():
-                        end += 1
-                    vals.append(int(payload[pos:end]))
-                    pos = end
-            return dims(vals[0], vals[1])
-        if codec == "bmp":
-            w = int.from_bytes(payload[18:22], "little", signed=True)
-            h = abs(int.from_bytes(payload[22:26], "little", signed=True))
-            return dims(w, h)
-        if codec == "png":
-            if payload[:8] != b"\x89PNG\r\n\x1a\n":
-                return None, None, None
-            return dims(
-                int.from_bytes(payload[16:20], "big"),
-                int.from_bytes(payload[20:24], "big"),
-            )
-        if codec == "gif":
-            if payload[:4] != b"GIF8":
-                return None, None, None
-            return dims(
-                int.from_bytes(payload[6:8], "little"),
-                int.from_bytes(payload[8:10], "little"),
-            )
-        if codec == "jpeg":
-            # walk markers to the first SOF segment
-            pos = 2
-            while pos + 4 <= len(payload):
-                if payload[pos] != 0xFF:
-                    break
-                marker = payload[pos + 1]
-                if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                    h = int.from_bytes(payload[pos + 5 : pos + 7], "big")
-                    w = int.from_bytes(payload[pos + 7 : pos + 9], "big")
-                    return dims(w, h)
-                pos += 2 + int.from_bytes(payload[pos + 2 : pos + 4], "big")
-            return None, None, None
-        if codec == "pcm_s16le":
-            from datalake_backend_spark.datapipe.multimodal import decode_wav
-
-            arr, rate = decode_wav(payload)
-            return None, None, arr.shape[0] * 1000 // rate
-        if codec == "rawv":
-            from datalake_backend_spark.datapipe.multimodal import video_meta
-
-            n_frames, h, w, fps = video_meta(payload)
-            w, h, _ = dims(w, h)
-            return w, h, n_frames * 1000 // max(fps, 1)
+        w, h, dur = entry.probe(payload)
     except (ValueError, IndexError):
-        pass
-    return None, None, None
+        return None, None, None
+    # int.from_bytes on a short/garbage slice yields 0, not an error —
+    # implausible dims degrade to NULLs like a parse failure
+    if not (w and h and w > 0 and h > 0):
+        w = h = None
+    return w, h, dur
 
 
 @dataclass
 class _FilePartition(InputPartition):
     files: list  # [(media_id, abs_path, codec)]
+
+
+def _bin_pack(files: list, n: int) -> list[_FilePartition]:
+    """Greedy largest-first bin packing of ``files`` on file size into
+    at most ``n`` partitions: balanced bytes per task even when one
+    video dwarfs the thumbnails."""
+    if not files:
+        return [_FilePartition([])]
+    n = min(n, len(files))
+    bins = [[] for _ in range(n)]
+    sizes = [0] * n
+    for rec in sorted(files, key=lambda r: -os.path.getsize(r[1])):
+        i = sizes.index(min(sizes))
+        bins[i].append(rec)
+        sizes[i] += os.path.getsize(rec[1])
+    return [_FilePartition(b) for b in bins if b]
 
 
 class MediaFileReader(DataSourceReader):
@@ -186,7 +127,9 @@ class MediaFileReader(DataSourceReader):
         out = []
         for name in sorted(os.listdir(self.path)):
             stem, ext = os.path.splitext(name)
-            codec = _EXT_CODECS.get(ext.lower())
+            codec = next(
+                (n for n, c in CODECS.items() if ext.lower() in c.exts), None
+            )
             if codec is None or not stem.lstrip("-").isdigit():
                 continue
             media_id = int(stem)
@@ -198,19 +141,7 @@ class MediaFileReader(DataSourceReader):
         return out
 
     def partitions(self):
-        files = self._list_files()
-        if not files:
-            return [_FilePartition([])]
-        n = min(self.num_partitions, len(files))
-        bins = [[] for _ in range(n)]
-        sizes = [0] * n
-        # greedy largest-first bin packing on file size: balanced bytes
-        # per task even when one video dwarfs the thumbnails
-        for rec in sorted(files, key=lambda r: -os.path.getsize(r[1])):
-            i = sizes.index(min(sizes))
-            bins[i].append(rec)
-            sizes[i] += os.path.getsize(rec[1])
-        return [_FilePartition(b) for b in bins if b]
+        return _bin_pack(self._list_files(), self.num_partitions)
 
     def read(self, partition: _FilePartition):
         for media_id, path, codec in partition.files:
@@ -223,7 +154,7 @@ class MediaFileReader(DataSourceReader):
                 codec,
                 payload,
                 {
-                    "mime": _MIMES[codec],
+                    "mime": CODECS[codec].mime,
                     "width": w,
                     "height": h,
                     "duration_ms": dur,
@@ -262,16 +193,7 @@ class MediaStreamReader(DataSourceStreamReader):
         files = [
             rec for rec in self._reader._list_files() if lo < rec[0] <= hi
         ]
-        if not files:
-            return [_FilePartition([])]
-        n = min(self._reader.num_partitions, len(files))
-        bins = [[] for _ in range(n)]
-        sizes = [0] * n
-        for rec in sorted(files, key=lambda r: -os.path.getsize(r[1])):
-            i = sizes.index(min(sizes))
-            bins[i].append(rec)
-            sizes[i] += os.path.getsize(rec[1])
-        return [_FilePartition(b) for b in bins if b]
+        return _bin_pack(files, self._reader.num_partitions)
 
     def read(self, partition: _FilePartition):
         yield from self._reader.read(partition)

@@ -234,13 +234,6 @@ def _partition_can_match(rel_path: str, predicates: list[tuple]) -> bool:
             parts[c] = unquote(v)
     if not parts:
         return True
-    single = {
-        "=": lambda x, v: x == v,
-        "<": lambda x, v: x < v,
-        "<=": lambda x, v: x <= v,
-        ">": lambda x, v: x > v,
-        ">=": lambda x, v: x >= v,
-    }
     for col, op, val in predicates:
         raw = parts.get(col)
         if raw is None:
@@ -262,7 +255,7 @@ def _partition_can_match(rel_path: str, predicates: list[tuple]) -> bool:
                 x = raw
         except (TypeError, ValueError):
             continue
-        if not single[op](x, val):
+        if not PRED_COL_OPS[op](x, val):
             return False
     return True
 

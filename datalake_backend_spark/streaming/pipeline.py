@@ -120,15 +120,31 @@ def dedup_stream(
 def start_to_memory(
     df: DataFrame, name: str, output_mode: str = "append"
 ) -> StreamingQuery:
-    """Memory-sink runner for tests/smoke: drain with
-    ``q.processAllAvailable()`` then query ``SELECT * FROM <name>``."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Drain ``df`` into the in-memory table ``name`` (``availableNow``)
+    and return the finished query, whose ``recentProgress`` stays
+    readable; query the rows with ``SELECT * FROM <name>``. A failed
+    stream raises its ``StreamingQueryException``. The checkpoint lives
+    in a temp dir this call owns and removes when the stream ends,
+    failed or not — without one Spark creates a
+    ``temporary-<uuid>`` checkpoint per run and keeps it when the query
+    fails."""
+    import shutil
+    import tempfile
+
+    checkpoint = tempfile.mkdtemp(prefix="memory-sink-")
+    try:
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 def _start_foreach_batch(df: DataFrame, write, checkpoint: str) -> StreamingQuery:

@@ -465,13 +465,14 @@ def test_image_stats_mixed_codecs(spark):
     """synthetic_image_table alternates PPM/BMP per id; decoded stats
     are codec-independent, so they must equal the all-PPM table's."""
     from datalake_backend_spark.datapipe.multimodal import (
-        _synthetic_image_table,
         image_stats,
+        synthetic_image,
         synthetic_image_table,
+        synthetic_media,
     )
 
     docs = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
-    all_ppm = _synthetic_image_table(docs, "doc_id", lambda i: "ppm")
+    all_ppm = synthetic_media(docs, "doc_id", lambda i: synthetic_image(i, "ppm"))
     as_map = lambda rows: {r.media_id: tuple(r) for r in rows}  # noqa: E731
     assert as_map(image_stats(synthetic_image_table(docs)).collect()) == as_map(
         image_stats(all_ppm).collect()
@@ -486,12 +487,13 @@ def test_image_stats_decodes_real_ppm(spark):
     import numpy as np
 
     from datalake_backend_spark.datapipe.multimodal import (
-        _synthetic_image_table,
         image_stats,
+        synthetic_image,
+        synthetic_media,
     )
 
     docs = spark.createDataFrame([(i,) for i in range(7)], "doc_id long")
-    all_ppm = _synthetic_image_table(docs, "doc_id", lambda i: "ppm")
+    all_ppm = synthetic_media(docs, "doc_id", lambda i: synthetic_image(i, "ppm"))
     got = {r.media_id: r for r in image_stats(all_ppm).collect()}
     for i in range(7):
         w, h = 4 + i % 5, 3 + i % 4

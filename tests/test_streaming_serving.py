@@ -261,3 +261,36 @@ def test_stream_static_enrich_keeps_unmatched(spark, tmp_path):
     q.awaitTermination(120)
     got = {(r.event_id, r.tier) for r in spark.table("sse_test").collect()}
     assert got == {(1, "gold"), (2, "basic"), (3, None)}
+
+
+def test_start_to_memory_failed_stream_leaves_no_checkpoint(spark, tmp_path, monkeypatch):
+    """A memory-sink stream runs under a checkpoint dir start_to_memory
+    owns: a stream that fails raises, and neither that dir nor a Spark
+    ``temporary-*`` checkpoint is left behind."""
+    import os
+    import tempfile
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    owned = tmp_path / "owned"
+    owned.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(owned))
+    jvm_tmp = spark.sparkContext._jvm.System.getProperty("java.io.tmpdir")
+
+    def spark_temps():
+        return {n for n in os.listdir(jvm_tmp) if n.startswith("temporary-")}
+
+    before = spark_temps()
+    path = _event_rows(spark, tmp_path)
+    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
+    failing = stream.select(F.raise_error(F.lit("boom")).alias("x"))
+    with pytest.raises(StreamingQueryException):
+        start_to_memory(failing, "failing_stream")
+    assert os.listdir(owned) == []
+    assert spark_temps() <= before
+    # a stream that succeeds is returned finished, its checkpoint gone
+    q = start_to_memory(stream, "ok_stream")
+    assert not q.isActive and q.recentProgress
+    assert os.listdir(owned) == []
+    assert spark.table("ok_stream").count() == 4
