@@ -135,6 +135,14 @@ def release_all() -> None:
     _release(held)
 
 
+#: target rows per partition for the iterative loops' right-sized
+#: loop-invariant frames (the graph loops and the near-dup
+#: connected-components loop): graphs derived from a corpus are
+#: typically orders of magnitude smaller than the corpus, and every
+#: iteration pays the cached frame's task count as fixed overhead.
+LOOP_ROWS_PER_PART = 1_000_000
+
+
 def parts_for(rows: int, current: int, rows_per_part: int) -> int:
     """Partition count for a frame of ``rows`` rows that now has
     ``current`` partitions: about ``rows_per_part`` rows each, clamped

@@ -25,7 +25,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from datalake_backend_spark.core import onetask
-from datalake_backend_spark.core.materialize import checkpoint, parts_for, pin
+from datalake_backend_spark.core.materialize import (
+    LOOP_ROWS_PER_PART,
+    checkpoint,
+    parts_for,
+    pin,
+)
 from datalake_backend_spark.datapipe.text import tokens
 
 _LOG = logging.getLogger(__name__)
@@ -950,10 +955,9 @@ def cluster_near_dups(
     # the union inherits 2× the pair-join's partitions, and every
     # round's join/agg/convergence-probe then pays that task count as
     # fixed overhead. Duplicate-cluster graphs are typically orders of
-    # magnitude smaller than the corpus that produced them — aim for
-    # ~1M edges per partition.
+    # magnitude smaller than the corpus that produced them.
     cur = und.rdd.getNumPartitions()
-    parts = parts_for(n_edges, cur, 1_000_000)
+    parts = parts_for(n_edges, cur, LOOP_ROWS_PER_PART)
     if parts < cur:
         und = checkpoint(und.repartition(parts, "src"), "dedup.cc_edges")
     labels = checkpoint(

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datalake_backend_spark.config import _ship_package
 from datalake_backend_spark.datapipe.jpeg import decode_jpeg, encode_jpeg
 
 #: media metadata struct carried next to every binary payload
@@ -818,7 +819,9 @@ def map_payloads(
     yields zero or more output tuples in ``schema`` order for every
     ``(id_col, payload_col)`` row; a NULL payload arrives as ``b""``.
     ``mapInPandas`` so each task processes whole record batches —
-    map-only, no shuffle."""
+    map-only, no shuffle. The package ships to the session's Python
+    workers first, whatever session or source ``df`` came from."""
+    _ship_package(df.sparkSession)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -845,7 +848,9 @@ def _rewrite_payloads(
     None when the payload did not decode — then the bytes pass through
     unchanged and ``meta`` is left as it was, so meta never claims
     what the bytes don't have. The map emits a per-row decoded flag and
-    the ``meta`` rewrite is conditional on it."""
+    the ``meta`` rewrite is conditional on it. Ships the package to the
+    Python workers like :func:`map_payloads`."""
+    _ship_package(df.sparkSession)
     flags = [T.StructField("_decoded", T.BooleanType())] + [
         T.StructField(f"_{f}", MEDIA_META[f].dataType) for f in meta_fields
     ]

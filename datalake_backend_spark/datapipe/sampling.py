@@ -23,7 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalake_backend_spark.core.exact import fixed
 from datalake_backend_spark.datapipe.dedup import portable_hash60
+from datalake_backend_spark.operators.ranking import two_phase_top_k
 
 #: ceiling on the per-source count collect in :func:`mix_with_temperature`
 _MAX_SOURCES = 100_000
@@ -141,24 +143,13 @@ def cap_per_group(
     the portable (key, salt) hash order — RefinedWeb-style per-domain
     balancing (no domain may dominate the corpus).
 
-    Skew-safe two-phase top-k: a single ``row_number`` window over a hot
-    domain puts the whole domain in one task. Phase 1 ranks within
-    (group, hash-bucket) — partitions ≤ group/``buckets``; phase 2
-    re-ranks only the ≤ ``cap``·``buckets`` phase-1 survivors. The
-    global top-``cap`` by hash is always contained in the union of
-    per-bucket top-``cap``s, so the result is identical to the
-    single-window form a SQL oracle uses.
+    Skew-safe: the two-phase top-k (``ranking.two_phase_top_k``) over
+    ``buckets`` hash buckets, so a hot domain never sorts through one
+    task; the result equals the single-window form a SQL oracle uses.
     """
     h = portable_hash60(F.concat(F.col(key_col).cast("string"), F.lit(salt)))
-    bucket = F.pmod(h, F.lit(buckets))
-    w1 = Window.partitionBy(F.col(group_col), bucket).orderBy(h, F.col(key_col))
-    w2 = Window.partitionBy(group_col).orderBy(h, F.col(key_col))
-    return (
-        df.withColumn("_rn1", F.row_number().over(w1))
-        .where(F.col("_rn1") <= cap)
-        .withColumn("_rn", F.row_number().over(w2))
-        .where(F.col("_rn") <= cap)
-        .drop("_rn1", "_rn")
+    return two_phase_top_k(
+        df, [group_col], F.pmod(h, F.lit(buckets)), [h, F.col(key_col)], cap
     )
 
 
@@ -369,12 +360,9 @@ def quality_budget_keep(
     Scale shape: one per-group window cumsum over (score desc, id) —
     a single hash-partitioned sort per group, no global sort, no
     self-join; group totals ride the same window (unbounded frame)."""
-    from pyspark.sql import Window
-
     if not 0 < budget_pct <= 100:
         raise ValueError("budget_pct must be in (0, 100]")
-    factor = 10**scale
-    s = F.floor(F.col(score_col) * factor).cast("bigint")
+    s = fixed(score_col, scale)
     w = Window.partitionBy(group_col).orderBy(
         F.desc(score_col), F.col(id_col)
     )
@@ -418,27 +406,17 @@ def priority_sample(
     and ``w / u`` of identical doubles is identical, so the selected
     SET (not just its size) is reproducible and oracle-checkable.
 
-    Scale shape: same skew-safe two-phase top-k as
-    :func:`cap_per_group` — phase 1 ranks within (group, hash
-    bucket), phase 2 re-ranks the ≤ k·buckets survivors. Ties (equal
-    priority) break by key ascending."""
-    from datalake_backend_spark.datapipe.dedup import portable_hash60
-
+    Scale shape: the skew-safe two-phase top-k
+    (``ranking.two_phase_top_k``) over ``buckets`` hash buckets, as in
+    :func:`cap_per_group`. Ties (equal priority) break by key
+    ascending."""
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
     h = portable_hash60(F.concat(F.col(key_col).cast("string"), F.lit(salt)))
     u = (h + F.lit(1)).cast("double") / F.lit(float(1 << 60))
-    prio = w.cast("double") / u
-    groups = [group_col] if group_col else []
-    bucket = F.pmod(h, F.lit(buckets))
-    tagged = df.withColumn("_prio", prio)
-    w1 = Window.partitionBy(*groups, bucket).orderBy(
-        F.desc("_prio"), F.col(key_col)
-    )
-    w2 = Window.partitionBy(*groups).orderBy(F.desc("_prio"), F.col(key_col))
-    return (
-        tagged.withColumn("_rn1", F.row_number().over(w1))
-        .where(F.col("_rn1") <= k)
-        .withColumn("_rn", F.row_number().over(w2))
-        .where(F.col("_rn") <= k)
-        .drop("_rn1", "_rn")
+    return two_phase_top_k(
+        df.withColumn("_prio", w.cast("double") / u),
+        [group_col] if group_col else [],
+        F.pmod(h, F.lit(buckets)),
+        [F.desc("_prio"), F.col(key_col)],
+        k,
     )

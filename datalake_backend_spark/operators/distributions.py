@@ -12,7 +12,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalake_backend_spark.core.exact import DEC, fixed, moment_sums, unscale
 from datalake_backend_spark.core.materialize import pin
+from datalake_backend_spark.operators.ranking import _bucket_count, keyed_running_sum
 
 
 def value_distribution(
@@ -244,8 +246,6 @@ def exact_percentiles(
     aggregate then folds the ≤ 2·|quantiles| selected rows per key.
     Output: one row per key with a ``p_<num>_<den>`` column per
     quantile."""
-    from datalake_backend_spark.operators.ranking import keyed_running_sum
-
     keys = keys or []
     g = (
         df.where(F.col(value_col).isNotNull())
@@ -413,29 +413,17 @@ def exact_corr(
     engines/partitionings; this is the oracle-stable replacement, at
     the cost of 10^-scale input quantization."""
     keys = keys or []
-    x, y = F.col(x_col), F.col(y_col)
-
-    def ssum(e):
-        # per-row floor(v·10^s) is an integral double < 2^53 (exact);
-        # accumulate as DECIMAL(38,0) — Σy²·10^s overflows int64 on
-        # wide-range columns (DuckDB's SUM promotes to HUGEINT, so the
-        # twin is SUM(CAST(... AS HUGEINT)))
-        return F.sum(F.floor(e * F.lit(10**scale)).cast("decimal(38,0)"))
-
+    # per-row floor(v·10^s) is an integral double < 2^53 (exact); the
+    # sums accumulate as DECIMAL(38,0) — Σy²·10^s overflows int64 on
+    # wide-range columns (DuckDB's SUM promotes to HUGEINT, so the twin
+    # is SUM(CAST(... AS HUGEINT)))
     agg = df.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n"),
-        ssum(x).alias("_sx"),
-        ssum(y).alias("_sy"),
-        ssum(x * y).alias("_sxy"),
-        ssum(x * x).alias("_sxx"),
-        ssum(y * y).alias("_syy"),
+        *moment_sums(F.col(x_col), F.col(y_col), scale),
     )
-    f = float(10**scale)
-    sx = F.col("_sx").cast("double") / f
-    sy = F.col("_sy").cast("double") / f
-    sxy = F.col("_sxy").cast("double") / f
-    sxx = F.col("_sxx").cast("double") / f
-    syy = F.col("_syy").cast("double") / f
+    sx, sy, sxy, sxx, syy = (
+        unscale(c, scale) for c in ("_sx", "_sy", "_sxy", "_sxx", "_syy")
+    )
     n = F.col("n")
     num = n * sxy - sx * sy
     den = F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
@@ -459,25 +447,13 @@ def group_ols(
     latency creeping with load?) that native ``regr_slope`` computes
     with engine-specific double accumulation order."""
     keys = keys or []
-    x, y = F.col(x_col), F.col(y_col)
-
-    def ssum(e):
-        return F.sum(F.floor(e * F.lit(10**scale)).cast("decimal(38,0)"))
-
     agg = df.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n"),
-        ssum(x).alias("_sx"),
-        ssum(y).alias("_sy"),
-        ssum(x * y).alias("_sxy"),
-        ssum(x * x).alias("_sxx"),
-        ssum(y * y).alias("_syy"),
+        *moment_sums(F.col(x_col), F.col(y_col), scale),
     )
-    f = float(10**scale)
-    sx = F.col("_sx").cast("double") / f
-    sy = F.col("_sy").cast("double") / f
-    sxy = F.col("_sxy").cast("double") / f
-    sxx = F.col("_sxx").cast("double") / f
-    syy = F.col("_syy").cast("double") / f
+    sx, sy, sxy, sxx, syy = (
+        unscale(c, scale) for c in ("_sx", "_sy", "_sxy", "_sxx", "_syy")
+    )
     n = F.col("n")
     num = n * sxy - sx * sy
     denx = n * sxx - sx * sx
@@ -507,23 +483,15 @@ def cuped_adjusted(
     trick that removes pre-period variance from an A/B readout without
     changing its expectation.
 
-    Exactness: the five moments accumulate as floor-scaled
-    DECIMAL(38,0) integers (order-independent), and only the
-    closed-form combination runs in doubles with the same expression
-    SHAPE as the SQL twin (identical IEEE results) — the
-    :func:`group_ols` discipline. One unit-level aggregate, one
-    arm-level aggregate, one broadcast of the 1-row global moments."""
-    x, y = F.col(x_col), F.col(y_col)
-
-    def ssum(e):
-        return F.sum(F.floor(e * F.lit(10**scale)).cast("decimal(38,0)"))
-
+    Exactness: the moments are ``core.exact.moment_sums`` (floor-scaled
+    DECIMAL(38,0) integers, order-independent; Σy² is not needed), and
+    only the closed-form combination runs in doubles with the same
+    expression SHAPE as the SQL twin (identical IEEE results). One
+    unit-level aggregate, one arm-level aggregate, one broadcast of the
+    1-row global moments."""
     per_arm = df.groupBy(arm_col).agg(
         F.count(F.lit(1)).alias("n"),
-        ssum(x).alias("_sx"),
-        ssum(y).alias("_sy"),
-        ssum(x * y).alias("_sxy"),
-        ssum(x * x).alias("_sxx"),
+        *moment_sums(F.col(x_col), F.col(y_col), scale)[:4],
     )
     glob = per_arm.agg(
         F.sum("n").alias("_bn"),
@@ -532,16 +500,11 @@ def cuped_adjusted(
         F.sum("_sxy").alias("_gxy"),
         F.sum("_sxx").alias("_gxx"),
     )
-    f = float(10**scale)
     bn = F.col("_bn")
-    gx = F.col("_gx").cast("double") / f
-    gy = F.col("_gy").cast("double") / f
-    gxy = F.col("_gxy").cast("double") / f
-    gxx = F.col("_gxx").cast("double") / f
+    gx, gy, gxy, gxx = (unscale(c, scale) for c in ("_gx", "_gy", "_gxy", "_gxx"))
     theta = (bn * gxy - gx * gy) / (bn * gxx - gx * gx)
     n = F.col("n")
-    sx = F.col("_sx").cast("double") / f
-    sy = F.col("_sy").cast("double") / f
+    sx, sy = unscale("_sx", scale), unscale("_sy", scale)
     return (
         per_arm.crossJoin(F.broadcast(glob))
         .select(
@@ -550,6 +513,47 @@ def cuped_adjusted(
             (sy / n).alias("mean_y"),
             (sy / n - theta * (sx / n - gx / bn)).alias("mean_y_adj"),
             theta.alias("theta"),
+        )
+    )
+
+
+def _chi2_cells(
+    df: DataFrame, row_col: str, col_col: str, scale: int
+) -> DataFrame:
+    """The contingency cells of ``row_col`` × ``col_col`` — observed
+    count ``o``, row total ``r``, column total ``c``, grand total ``t``
+    — each with its scaled χ² term ``_term`` (see
+    :func:`chi_square_contingency` for the formula and its range)."""
+    cells = df.groupBy(row_col, col_col).agg(F.count("*").alias("o"))
+    rows = cells.groupBy(row_col).agg(F.sum("o").alias("r"))
+    cols = cells.groupBy(col_col).agg(F.sum("o").alias("c"))
+    tot = cells.agg(F.sum("o").alias("t"))
+    return (
+        cells.join(rows, row_col)
+        .join(F.broadcast(cols), col_col)
+        .crossJoin(F.broadcast(tot))
+        .withColumn(
+            "_term",
+            F.expr(
+                # square and divisor in DECIMAL(38,0); the quotient is
+                # ≤ scale·T (fits bigint), so only intermediates widen.
+                # Division must be EXACT: decimal `/` rounds HALF_UP at
+                # scale 6, so floor(a/b) floors one high when the true
+                # quotient sits within 5e-7 below an integer. The outer
+                # division uses `div` (IntegralDivide: exact integer
+                # quotient, truncation == floor for these non-negative
+                # operands, matches DuckDB //). The INNER quotient
+                # r·c·t/scale can reach T³/scale ≫ bigint, where `div`
+                # silently wraps — so it uses the remainder identity
+                # (a - a % b) / b, whose quotient is an exact integer
+                # and therefore representable at the result scale.
+                f"  (cast(o * t - r * c as {DEC})"
+                f"   * cast(o * t - r * c as {DEC}))"
+                f" div greatest(cast(1 as {DEC}),"
+                f"  (cast(r as {DEC}) * c * t"
+                f"   - (cast(r as {DEC}) * c * t) % {scale})"
+                f"  / {scale})"
+            ),
         )
     )
 
@@ -579,37 +583,8 @@ def chi_square_contingency(
     selection, drift between categorical marginals, stratification
     checks). Plain two-level hash aggregation, no shuffle beyond the
     contingency groupBy."""
-    cells = df.groupBy(row_col, col_col).agg(F.count("*").alias("o"))
-    rows = cells.groupBy(row_col).agg(F.sum("o").alias("r"))
-    cols = cells.groupBy(col_col).agg(F.sum("o").alias("c"))
-    tot = cells.agg(F.sum("o").alias("t"))
     return (
-        cells.join(rows, row_col)
-        .join(F.broadcast(cols), col_col)
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "_term",
-            F.expr(
-                # square and divisor in decimal(38,0); the quotient is
-                # ≤ scale·T (fits bigint), so only intermediates widen.
-                # Division must be EXACT: decimal `/` rounds HALF_UP at
-                # scale 6, so floor(a/b) floors one high when the true
-                # quotient sits within 5e-7 below an integer. The outer
-                # division uses `div` (IntegralDivide: exact integer
-                # quotient, truncation == floor for these non-negative
-                # operands, matches DuckDB //). The INNER quotient
-                # r·c·t/scale can reach T³/scale ≫ bigint, where `div`
-                # silently wraps — so it uses the remainder identity
-                # (a - a % b) / b, whose quotient is an exact integer
-                # and therefore representable at the result scale.
-                "  (cast(o * t - r * c as decimal(38,0))"
-                "   * cast(o * t - r * c as decimal(38,0)))"
-                " div greatest(cast(1 as decimal(38,0)),"
-                f"  (cast(r as decimal(38,0)) * c * t"
-                f"   - (cast(r as decimal(38,0)) * c * t) % {scale})"
-                f"  / {scale})"
-            ),
-        )
+        _chi2_cells(df, row_col, col_col, scale)
         .groupBy(row_col)
         .agg(
             F.sum("_term").alias("chi2_part_scaled"),
@@ -664,8 +639,6 @@ def ecdf_percentile(
             *keep,
         )
     )
-    from datalake_backend_spark.operators.ranking import keyed_running_sum
-
     # secondary order key −w puts ref rows (w=1) before probe rows
     # (w=0) inside a value tie, making the prefix count inclusive
     cum = keyed_running_sum(
@@ -707,24 +680,18 @@ def welch_ttest(
     sums — no pivot shuffle, no self-join."""
     keys = keys or []
     arm = F.col(arm_col).cast("boolean")
-    s = F.floor(F.col(value_col) * F.lit(10**scale)).cast("decimal(38,0)")
-
-    def csum(cond, e):
-        return F.sum(F.when(cond, e).otherwise(F.lit(0).cast("decimal(38,0)")))
-
+    s = fixed(value_col, scale).cast(DEC)
+    zero = F.lit(0).cast(DEC)
     agg = df.groupBy(*keys).agg(
         F.sum(arm.cast("bigint")).alias("n_a"),
         F.sum((~arm).cast("bigint")).alias("n_b"),
-        csum(arm, s).alias("_sa"),
-        csum(~arm, s).alias("_sb"),
-        csum(arm, s * s).alias("_saa"),
-        csum(~arm, s * s).alias("_sbb"),
+        F.sum(F.when(arm, s).otherwise(zero)).alias("_sa"),
+        F.sum(F.when(~arm, s).otherwise(zero)).alias("_sb"),
+        F.sum(F.when(arm, s * s).otherwise(zero)).alias("_saa"),
+        F.sum(F.when(~arm, s * s).otherwise(zero)).alias("_sbb"),
     )
-    f = float(10**scale)
-    sa = F.col("_sa").cast("double") / f
-    sb = F.col("_sb").cast("double") / f
-    saa = F.col("_saa").cast("double") / (f * f)
-    sbb = F.col("_sbb").cast("double") / (f * f)
+    sa, sb = unscale("_sa", scale), unscale("_sb", scale)
+    saa, sbb = unscale("_saa", scale, 2), unscale("_sbb", scale, 2)
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
     mean_a = sa / na
@@ -767,14 +734,12 @@ def winsorized_mean(
     the round-12 sf1.0 sweep exposed in this family), a group-level
     bounds aggregate, a broadcast join of the |groups|-row bounds
     back, and the final partial-aggregable mean."""
-    from datalake_backend_spark.operators.ranking import keyed_running_sum
-
     keys = keys or []
     if not keys:
         raise ValueError("winsorized_mean needs at least one group key")
     if not 0 <= low_pct < high_pct <= 100:
         raise ValueError("need 0 <= low_pct < high_pct <= 100")
-    s = F.floor(F.col(value_col) * F.lit(10**scale)).cast("bigint")
+    s = fixed(value_col, scale)
     # per-group n = grand total of _one, riding the offsets metadata
     # (total_col) — no separate count aggregate or broadcast join
     ranked = keyed_running_sum(
@@ -844,7 +809,7 @@ def benford_profile(
     the group total, attached by one broadcast join of #keys rows.
     """
     keys = keys or []
-    n = F.floor(F.col(value_col) * F.lit(10**cents)).cast("bigint")
+    n = fixed(value_col, cents)
     digits = df.where(F.col(value_col) > 0).select(
         *keys,
         F.substring(n.cast("string"), 1, 1).cast("int").alias("digit"),
@@ -886,7 +851,7 @@ def moment_profile(
     when() guard, never an engine-formatted NaN).
     """
     keys = keys or []
-    s = F.floor(F.col(value_col) * F.lit(10**scale)).cast("decimal(38,0)")
+    s = fixed(value_col, scale).cast(DEC)
     agg = df.groupBy(*keys).agg(
         F.count("*").alias("n_obs"),
         F.sum(s).alias("_s1"),
@@ -894,12 +859,8 @@ def moment_profile(
         F.sum(s * s * s).alias("_s3"),
         F.sum(s * s * s * s).alias("_s4"),
     )
-    f = float(10**scale)
     n = F.col("n_obs").cast("double")
-    s1 = F.col("_s1").cast("double") / f
-    s2 = F.col("_s2").cast("double") / (f * f)
-    s3 = F.col("_s3").cast("double") / (f * f * f)
-    s4 = F.col("_s4").cast("double") / (f * f * f * f)
+    s1, s2, s3, s4 = (unscale(f"_s{k}", scale, k) for k in range(1, 5))
     mean = s1 / n
     m2 = s2 / n - mean * mean
     m3 = s3 / n - 3 * mean * s2 / n + 2 * mean * mean * mean
@@ -933,8 +894,8 @@ def cramers_v(
     feature actually related to that label, or just big-data
     significant?".
 
-    The chi² numerator uses :func:`chi_square_contingency`'s
-    all-BIGINT per-cell floor formula (scaled by ``scale``) PLUS the
+    The chi² numerator sums the shared per-cell term
+    (:func:`_chi2_cells`, scaled by ``scale``) PLUS the
     exact zero-cell correction that the observed-cells-only partials
     drop: a cell with o = 0 contributes (0−e)²/e = e, and
     Σ_all-cells e = T, so
@@ -946,41 +907,22 @@ def cramers_v(
     Both pieces stay in DECIMAL integers; V then comes from ONE
     closed-form float expression — exact-integer doubles through IEEE
     division and a correctly-rounded sqrt — bit-identical in any
-    IEEE-754 engine (the r204 moment recipe). Output: one row
+    IEEE-754 engine (``core.exact``). Output: one row
     ``(n_total, n_row_cats, n_col_cats, chi2_scaled, cramers_v)``.
 
     Scale shape: one contingency groupBy over the data; everything
     after aggregates #cells rows — metadata. Cardinalities must be
     categorical (cells ≪ data), which is the operator's contract.
     """
-    cells = df.groupBy(row_col, col_col).agg(F.count("*").alias("o"))
-    rows = cells.groupBy(row_col).agg(F.sum("o").alias("r"))
-    colt = cells.groupBy(col_col).agg(F.sum("o").alias("c"))
-    tot = cells.agg(F.sum("o").alias("t"))
     per_cell = (
-        cells.join(rows, row_col)
-        .join(F.broadcast(colt), col_col)
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "_term",
-            F.expr(
-                # r160's formula: see chi_square_contingency for the
-                # decimal-widening and remainder-identity rationale
-                "  (cast(o * t - r * c as decimal(38,0))"
-                "   * cast(o * t - r * c as decimal(38,0)))"
-                " div greatest(cast(1 as decimal(38,0)),"
-                f"  (cast(r as decimal(38,0)) * c * t"
-                f"   - (cast(r as decimal(38,0)) * c * t) % {scale})"
-                f"  / {scale})"
-            ),
-        )
+        _chi2_cells(df, row_col, col_col, scale)
         .withColumn(
             "_e_scaled",
             # e·scale = r·c·scale/t, exact integer via the remainder
             # identity (r·c·scale overflows int64 at ~3e9-row tables)
             F.expr(
-                f"(cast(r as decimal(38,0)) * c * {scale}"
-                f" - (cast(r as decimal(38,0)) * c * {scale}) % t) / t"
+                f"(cast(r as {DEC}) * c * {scale}"
+                f" - (cast(r as {DEC}) * c * {scale}) % t) / t"
             ),
         )
     )
@@ -990,7 +932,7 @@ def cramers_v(
     agg = per_cell.groupBy().agg(
         (
             F.sum("_term")
-            + F.max("t").cast("decimal(38,0)") * scale
+            + F.max("t").cast(DEC) * scale
             - F.sum("_e_scaled")
         ).alias("_chi2"),
         F.countDistinct(row_col).alias("n_row_cats"),
@@ -1050,10 +992,7 @@ def gini_concentration(
     measured 7.2× on 5 priority keys before this). One groupBy(keys)
     finishes.
     """
-    from datalake_backend_spark.operators.ranking import keyed_running_sum
-
-    mult = 10**scale
-    v = F.floor(F.col(value_col) * mult).cast("bigint")
+    v = fixed(value_col, scale)
     d = keyed_running_sum(
         df.withColumn("_v", v).withColumn("_one", F.lit(1).cast("bigint")),
         key_cols,
@@ -1065,7 +1004,7 @@ def gini_concentration(
         F.count("*").alias("n_rows"),
         F.sum("_v").alias("sum_scaled"),
         F.sum(
-            (F.col("_i") * F.col("_v")).cast("decimal(38,0)")
+            (F.col("_i") * F.col("_v")).cast(DEC)
         ).alias("_ix"),
     ).select(
         *key_cols,
@@ -1082,6 +1021,39 @@ def gini_concentration(
                 * F.col("sum_scaled").cast("double")
             )
         ).alias("gini"),
+    )
+
+
+def _weighted_cumulative(
+    df: DataFrame,
+    key_cols: list[str],
+    value_col: str,
+    weight_col: str,
+    scale: int,
+) -> DataFrame:
+    """Per key and distinct floor-scaled value ``_v``: the tied rows'
+    weight ``_w``, the inclusive cumulative weight ``_cum`` in value
+    order and the key's total weight ``_tot``.
+
+    Ties aggregate first, then the two-phase keyed prefix sum
+    (``ranking.keyed_running_sum``) runs over the distinct values — a
+    per-key window over a continuous value column is a single-reducer
+    sort at scale (round-12 sf1.0 sweep: 20× / exponent 1.30 on r255).
+    A crossing rule picks the same value whether the cumulative is
+    per-row or per-tie-group, because the group's inclusive cumulative
+    equals its last row's. ``_tot`` rides the kernel's offsets
+    metadata — no separate total aggregate or join."""
+    g = (
+        df.select(
+            *key_cols,
+            fixed(value_col, scale).alias("_v"),
+            F.col(weight_col).cast("bigint").alias("_w"),
+        )
+        .groupBy(*key_cols, "_v")
+        .agg(F.sum("_w").alias("_w"))
+    )
+    return keyed_running_sum(
+        g, key_cols, ["_v"], "_w", out_col="_cum", total_col="_tot"
     )
 
 
@@ -1103,39 +1075,18 @@ def weighted_median(
     rule needs (filter or abs upstream; the same contract as
     ``allocation.fifo_allocate``).
 
-    Scale shape: tie-aggregate to distinct scaled values, then the
-    two-phase keyed prefix sum (``ranking.keyed_running_sum``) carries
-    the cumulative weight; a min aggregate picks each group's crossing
-    row. Fully range-parallel even when the value column is continuous
-    and a key holds most of the data — no per-key single-reducer sort.
+    This is :func:`weighted_quantiles` at q = 1/2 with the BIGINT
+    scaled value as output; both read the same tie-aggregated
+    cumulative (:func:`_weighted_cumulative`), and a min aggregate
+    picks each group's crossing row.
     """
-    from datalake_backend_spark.operators.ranking import keyed_running_sum
-
-    mult = 10**scale
-    # aggregate ties, then the two-phase keyed prefix sum — same
-    # rationale as weighted_quantiles (a per-key window over a
-    # continuous value column is a single-reducer sort at scale); the
-    # crossing row's VALUE is identical whether the cumulative is
-    # per-row or per-tie-group
-    g = (
-        df.select(
-            *key_cols,
-            F.floor(F.col(value_col) * mult).cast("bigint").alias("_v"),
-            F.col(weight_col).cast("bigint").alias("_w"),
-        )
-        .groupBy(*key_cols, "_v")
-        .agg(F.sum("_w").alias("_w"))
-    )
-    # _totw rides the offsets metadata — no separate tot aggregate
-    cum = keyed_running_sum(
-        g, key_cols, ["_v"], "_w", out_col="_cumw", total_col="_totw"
-    )
+    cum = _weighted_cumulative(df, key_cols, value_col, weight_col, scale)
     return (
-        cum.where(F.col("_cumw") * 2 >= F.col("_totw"))
+        cum.where(F.col("_cum") * 2 >= F.col("_tot"))
         .groupBy(*key_cols)
         .agg(
             F.min("_v").alias("weighted_median_scaled"),
-            F.max("_totw").alias("total_weight"),
+            F.max("_tot").alias("total_weight"),
         )
     )
 
@@ -1183,6 +1134,7 @@ def _doubled_ranks(
     keys: list[str],
     bounds: list[float] | None = None,
     n_rows: int | None = None,
+    extra: list[Column] | None = None,
 ) -> DataFrame:
     """Per distinct value of ``value_col`` (within ``keys``), the
     DOUBLED mid-rank ``2·avg_rank`` of that value in the pooled
@@ -1197,10 +1149,11 @@ def _doubled_ranks(
     round-12 fix). Returns ``keys + [value_col, _cnt, _rank2]``.
     ``bounds``/``n_rows`` pass straight to the kernel — callers that
     rank several columns of one shared frame (spearman) precompute
-    every column's cut points in ONE job."""
-    from datalake_backend_spark.operators.ranking import keyed_running_sum
-
-    g = df.groupBy(*keys, value_col).agg(F.count("*").alias("_cnt"))
+    every column's cut points in ONE job. ``extra`` aggregates ride
+    the tie aggregate (Mann-Whitney's per-value arm count)."""
+    g = df.groupBy(*keys, value_col).agg(
+        F.count("*").alias("_cnt"), *(extra or [])
+    )
     cum = keyed_running_sum(
         g, keys, [value_col], "_cnt", out_col="_incl",
         bounds=bounds, n_rows=n_rows,
@@ -1238,8 +1191,6 @@ def mann_whitney_u(
     was a single-reducer sort (the round-12 sf1.0 spot-sweep caught
     r243 at 22.7×/exponent 1.36); the range-partitioned prefix sum
     keeps every stage parallel at any cardinality."""
-    from datalake_backend_spark.operators.ranking import keyed_running_sum
-
     keys = keys or []
     d = df.where(F.col(group_col).isin([group_a, group_b])).select(
         *keys,
@@ -1249,36 +1200,31 @@ def mann_whitney_u(
         .cast("bigint")
         .alias("_is_a"),
     )
-    g = d.groupBy(*keys, value_col).agg(
-        F.count("*").alias("_cnt"), F.sum("_is_a").alias("_na")
-    )
-    cum = keyed_running_sum(g, keys, [value_col], "_cnt", out_col="_incl")
-    ranked = cum.withColumn(
-        "_rank2", 2 * (F.col("_incl") - F.col("_cnt")) + F.col("_cnt") + 1
+    ranked = _doubled_ranks(
+        d, value_col, keys, extra=[F.sum("_is_a").alias("_na")]
     )
     # rank sums reach 2n² and the tie term n³ — past BIGINT at
-    # n ≳ 1.3M rows, so accumulate in decimal(38,0) (DuckDB HUGEINT)
+    # n ≳ 1.3M rows, so accumulate in DECIMAL(38,0) (DuckDB HUGEINT)
     # and only the final dyadic halving runs in doubles
-    dec = "decimal(38,0)"
     out = ranked.groupBy(*keys).agg(
         F.sum("_na").alias("n_a"),
         F.sum(F.col("_cnt") - F.col("_na")).alias("n_b"),
-        F.sum(F.col("_na").cast(dec) * F.col("_rank2")).alias("_r2a"),
+        F.sum(F.col("_na").cast(DEC) * F.col("_rank2")).alias("_r2a"),
         F.sum(
-            F.col("_cnt").cast(dec) * F.col("_cnt") * F.col("_cnt")
-            - F.col("_cnt").cast(dec)
+            F.col("_cnt").cast(DEC) * F.col("_cnt") * F.col("_cnt")
+            - F.col("_cnt").cast(DEC)
         ).alias("_tie"),
     )
-    na = F.col("n_a").cast(dec)
-    nb = F.col("n_b").cast(dec)
-    u2a = F.col("_r2a") - na * (na + F.lit(1).cast(dec))
+    na = F.col("n_a").cast(DEC)
+    nb = F.col("n_b").cast(DEC)
+    u2a = F.col("_r2a") - na * (na + F.lit(1).cast(DEC))
     return out.select(
         *keys,
         "n_a",
         "n_b",
         (u2a.cast("double") / F.lit(2.0)).alias("u_a"),
         (
-            (F.lit(2).cast(dec) * na * nb - u2a).cast("double") / F.lit(2.0)
+            (F.lit(2).cast(DEC) * na * nb - u2a).cast("double") / F.lit(2.0)
         ).alias("u_b"),
         F.col("_tie").cast("double").alias("tie_term"),
     )
@@ -1292,12 +1238,12 @@ def spearman_rho(
 ) -> DataFrame:
     """Spearman rank correlation (mid-rank tie handling) per key —
     the monotonic-association companion to :func:`exact_corr`'s
-    Pearson. Engine-exact by the same construction as r123/r159:
-    both variables map to INTEGER doubled mid-ranks
-    (:func:`_doubled_ranks`), the five moment sums over those
-    integers accumulate in decimal(38,0) (DuckDB HUGEINT — doubled
-    rank products reach 4n³, past BIGINT at n ≳ 1.3M rows), and only
-    the final closed form runs in doubles with the IDENTICAL
+    Pearson. Engine-exact: both variables map to INTEGER doubled
+    mid-ranks (:func:`_doubled_ranks`), the five moment sums over
+    those integers are ``core.exact.moment_sums`` in DECIMAL(38,0)
+    (DuckDB HUGEINT — doubled rank products reach 4n³, past BIGINT at
+    n ≳ 1.3M rows), the closed form combines them in decimal, and
+    only its three factors cast to doubles, with the IDENTICAL
     expression shape on both engines, so rho compares bit-exactly.
     Cross-engine caveat past ~2M rows per key: once a MOMENT exceeds
     2^64, DuckDB's HUGEINT→double cast composes two roundings and can
@@ -1318,8 +1264,6 @@ def spearman_rho(
     distinct-value to row-frequency quantiles — bucket BALANCE only,
     never results (the kernel's contract)."""
     from pyspark.sql.types import NumericType
-
-    from datalake_backend_spark.operators.ranking import _bucket_count
 
     keys = keys or []
     fact = pin(df.select(*keys, x_col, y_col), "distributions.spearman_fact")
@@ -1352,19 +1296,17 @@ def spearman_rho(
         .join(rx.drop("_cnt"), [*keys, x_col])
         .join(ry.drop("_cnt"), [*keys, y_col])
     )
-    dec = "decimal(38,0)"
     m = joined.groupBy(*keys).agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("_rx2").cast(dec)).alias("sx"),
-        F.sum(F.col("_ry2").cast(dec)).alias("sy"),
-        F.sum(F.col("_rx2").cast(dec) * F.col("_ry2")).alias("sxy"),
-        F.sum(F.col("_rx2").cast(dec) * F.col("_rx2")).alias("sxx"),
-        F.sum(F.col("_ry2").cast(dec) * F.col("_ry2")).alias("syy"),
+        F.count("*").alias("n"), *moment_sums(F.col("_rx2"), F.col("_ry2"))
     )
-    n = F.col("n").cast(dec)
-    num = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    dx = (n * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    dy = (n * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
+    n = F.col("n").cast(DEC)
+    sx, sy, sxy, sxx, syy = (
+        F.col(c) for c in ("_sx", "_sy", "_sxy", "_sxx", "_syy")
+    )
+    # combined in decimal, one cast per factor
+    num = (n * sxy - sx * sy).cast("double")
+    dx = (n * sxx - sx * sx).cast("double")
+    dy = (n * syy - sy * sy).cast("double")
     return m.select(
         *keys,
         "n",
@@ -1391,36 +1333,27 @@ def kmv_distinct(
     tolerance. When a key has fewer than k distinct values the sketch
     is exact and the estimate is the kept count itself.
 
-    Scale shape: hash + distinct is one hash aggregate; the top-k
-    uses the same skew-safe two-phase rank as ``cap_per_group``
-    (phase 1 within (key, hash-bucket), phase 2 over the ≤ k·buckets
-    survivors), so a billion-distinct key never sorts through one
-    task. The sketch is mergeable by construction (union the kept
-    hashes, re-take the k smallest)."""
-    from datalake_backend_spark.datapipe.dedup import portable_hash60
+    Scale shape: hash + distinct is one hash aggregate; the k minima
+    and the estimate are ``incremental.kmv_minima`` and
+    ``incremental.kmv_estimate``, the streaming state's own, so a
+    billion-distinct key never sorts through one task and both paths
+    produce the same bytes. The sketch is mergeable by construction
+    (union the kept hashes, re-take the k smallest)."""
+    from datalake_backend_spark.operators.incremental import (
+        kmv_estimate,
+        kmv_minima,
+    )
 
     keys = keys or []
-    dh = df.select(
-        *keys,
-        portable_hash60(F.col(value_col).cast("string")).alias("_h"),
-    ).distinct()
-    bucket = F.pmod(F.col("_h"), F.lit(buckets))
-    w1 = Window.partitionBy(*keys, bucket).orderBy("_h")
-    w2 = Window.partitionBy(*keys).orderBy("_h")
-    topk = (
-        dh.withColumn("_rn1", F.row_number().over(w1))
-        .where(F.col("_rn1") <= k)
-        .withColumn("_rn", F.row_number().over(w2))
-        .where(F.col("_rn") <= k)
-    )
-    agg = topk.groupBy(*keys).agg(
+    agg = kmv_minima(df, keys, value_col, k, buckets).groupBy(*keys).agg(
         F.count("*").alias("n_kept"), F.max("_h").alias("kth_hash")
     )
-    numerator = float((k - 1) * (1 << 60))
-    est = F.when(
-        F.col("n_kept") < k, F.col("n_kept").cast("double")
-    ).otherwise(F.lit(numerator) / F.col("kth_hash").cast("double"))
-    return agg.select(*keys, "n_kept", "kth_hash", est.alias("estimate"))
+    return agg.select(
+        *keys,
+        "n_kept",
+        "kth_hash",
+        kmv_estimate(F.col("n_kept"), F.col("kth_hash"), k).alias("estimate"),
+    )
 
 
 def key_skew_profile(
@@ -1534,17 +1467,12 @@ def block_jackknife(
     from datalake_backend_spark.datapipe.dedup import portable_hash60
 
     keys = keys or []
-    factor = 10**scale
     b = F.pmod(portable_hash60(F.col(unit_col).cast("string")), F.lit(blocks))
     per_block = (
         df.withColumn("_b", b)
         .groupBy(*keys, "_b")
         .agg(
-            F.sum(
-                F.floor(F.col(value_col) * F.lit(factor)).cast(
-                    "decimal(38,0)"
-                )
-            ).alias("_s"),
+            F.sum(fixed(value_col, scale).cast(DEC)).alias("_s"),
             F.count("*").alias("_n"),
         )
     )
@@ -1559,7 +1487,6 @@ def block_jackknife(
     mean_i = (F.col("_st") - F.col("_s")).cast("double") / (
         F.col("_nt") - F.col("_n")
     ).cast("double")
-    mfac = 10**mean_scale
     # quantize DEVIATIONS from the (scaled) grand mean, not the raw
     # leave-one-out means: deviations are se-sized, so their squares
     # stay far inside int64 where both engines' int→double casts are
@@ -1572,17 +1499,14 @@ def block_jackknife(
     center = F.col("_st").cast("double") / F.col("_nt").cast("double")
     mi = F.when(
         F.col("_nt") > F.col("_n"),
-        F.floor((mean_i - center) * F.lit(float(mfac))).cast(
-            "decimal(38,0)"
-        ),
+        fixed(mean_i - center, mean_scale).cast(DEC),
     )
     agg = loo.withColumn("_mi", mi).groupBy(*keys).agg(
         F.max("n_blocks").alias("n_blocks"),
         F.max("_nt").alias("n"),
-        (
-            (F.max("_st").cast("double") / F.lit(float(factor)))
-            / F.max("_nt").cast("double")
-        ).alias("mean"),
+        (unscale(F.max("_st"), scale) / F.max("_nt").cast("double")).alias(
+            "mean"
+        ),
         F.sum("_mi").alias("_smi"),
         F.sum(F.col("_mi") * F.col("_mi")).alias("_smi2"),
     )
@@ -1594,7 +1518,7 @@ def block_jackknife(
     # 10^scale value scaling (the leave-one-out ratio was over scaled
     # sums), so the SE unscales by both
     var_scaled = (smi2 - smi * smi / bb) * (bb - F.lit(1.0)) / bb
-    se = F.sqrt(var_scaled) / F.lit(float(mfac)) / F.lit(float(factor))
+    se = unscale(unscale(F.sqrt(var_scaled), mean_scale), scale)
     return agg.select(*keys, "n", "n_blocks", "mean", se.alias("jackknife_se"))
 
 
@@ -1638,14 +1562,11 @@ def categorical_mi(
         .join(my, "_y")
         .crossJoin(F.broadcast(total))
     )
-    tfac = float(10**term_scale)
     nd = F.col("_n").cast("double")
     pxy = F.col("_nxy").cast("double") / nd
     px = F.col("_nx").cast("double") / nd
     py = F.col("_ny").cast("double") / nd
-    mi_term = F.floor(pxy * F.log(pxy / (px * py)) * F.lit(tfac)).cast(
-        "long"
-    )
+    mi_term = fixed(pxy * F.log(pxy / (px * py)), term_scale)
     # marginal entropy terms must count each margin ONCE, not once
     # per cell: weight by the cell's share of its margin so the
     # per-cell pieces sum to the margin's term exactly in the integer
@@ -1656,11 +1577,11 @@ def categorical_mi(
     wy = Window.partitionBy("_y").orderBy("_x")
     hx_term = F.when(
         F.row_number().over(wx) == 1,
-        F.floor(-px * F.log(px) * F.lit(tfac)).cast("long"),
+        fixed(-px * F.log(px), term_scale),
     ).otherwise(F.lit(0))
     hy_term = F.when(
         F.row_number().over(wy) == 1,
-        F.floor(-py * F.log(py) * F.lit(tfac)).cast("long"),
+        fixed(-py * F.log(py), term_scale),
     ).otherwise(F.lit(0))
     agg = j.select(
         mi_term.alias("_mi"), hx_term.alias("_hx"), hy_term.alias("_hy")
@@ -1669,9 +1590,7 @@ def categorical_mi(
         F.sum("_hx").alias("_shx"),
         F.sum("_hy").alias("_shy"),
     )
-    mi = F.col("_smi").cast("double") / F.lit(tfac)
-    hx = F.col("_shx").cast("double") / F.lit(tfac)
-    hy = F.col("_shy").cast("double") / F.lit(tfac)
+    mi, hx, hy = (unscale(c, term_scale) for c in ("_smi", "_shx", "_shy"))
     return agg.select(
         F.round(hx, round_to).alias("h_x"),
         F.round(hy, round_to).alias("h_y"),
@@ -1700,35 +1619,14 @@ def weighted_quantiles(
     so asking for the 25/50/75/95 band costs the same shuffles as the
     median alone. Output: one row per key with a column per
     quantile, named ``q_<num>_<den>``."""
-    from datalake_backend_spark.operators.ranking import keyed_running_sum
-
     quantiles = quantiles or [(1, 4), (1, 2), (3, 4)]
-    mult_ = 10**scale
-    sv = F.floor(F.col(value_col) * F.lit(mult_)).cast("long")
-    iw = F.col(weight_col).cast("long")
-    # aggregate ties first (distinct scaled values), then the
-    # TWO-PHASE keyed prefix sum — a per-key window over continuous
-    # values is a single-reducer sort (round-12 sf1.0 sweep: 20× /
-    # exponent 1.30 on r255 before this); the crossing rule picks the
-    # same value whether the cumulative is per-row or per-tie-group,
-    # because the group's inclusive cumulative equals its last row's
-    g = (
-        df.select(*key_cols, sv.alias("_v"), iw.alias("_w"))
-        .groupBy(*key_cols, "_v")
-        .agg(F.sum("_w").alias("_w"))
-    )
-    # _tot rides the offsets metadata — no separate tot aggregate or
-    # join over g (round-13 bench reclaim)
-    d = keyed_running_sum(
-        g, key_cols, ["_v"], "_w", out_col="_cum", total_col="_tot"
-    )
+    d = _weighted_cumulative(df, key_cols, value_col, weight_col, scale)
     aggs = []
     for num, den in quantiles:
         crossed = F.col("_cum") * F.lit(den) >= F.col("_tot") * F.lit(num)
         aggs.append(
-            (
-                F.min(F.when(crossed, F.col("_v"))).cast("double")
-                / F.lit(float(mult_))
-            ).alias(f"q_{num}_{den}")
+            unscale(F.min(F.when(crossed, F.col("_v"))), scale).alias(
+                f"q_{num}_{den}"
+            )
         )
     return d.groupBy(*key_cols).agg(*aggs)

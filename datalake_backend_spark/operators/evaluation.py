@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datalake_backend_spark.core.exact import DEC, fixed, scaled_sum, unscale
+
 
 def confusion_at_thresholds(
     df: DataFrame,
@@ -127,10 +129,9 @@ def diff_in_diff(
     IEEE division, and the estimator combines identically-shaped
     doubles — engine-exact. Output: one row with the four means,
     four counts, and ``did``."""
-    factor = 10**scale
     is_t = F.col(group_col) == treat_value
     is_p = F.col(period_col) == post_value
-    sv = F.floor(F.col(value_col) * F.lit(factor)).cast("decimal(38,0)")
+    sv = fixed(value_col, scale).cast(DEC)
 
     def cell(t: bool, p: bool, tag: str) -> list:
         m = (is_t if t else ~is_t) & (is_p if p else ~is_p)
@@ -147,9 +148,7 @@ def diff_in_diff(
     )
 
     def mean(tag: str):
-        return (
-            F.col(f"_s_{tag}").cast("double") / F.lit(float(factor))
-        ) / F.col(f"n_{tag}").cast("double")
+        return unscale(f"_s_{tag}", scale) / F.col(f"n_{tag}").cast("double")
 
     m_tpre, m_tpost = mean("t_pre"), mean("t_post")
     m_cpre, m_cpost = mean("c_pre"), mean("c_post")
@@ -183,7 +182,6 @@ def reliability_bins(
     idiom, the rate is an IEEE division of BIGINTs — engine-exact.
     The top edge closes into the last bin (score = 1.0 is bin
     n_bins−1), matching every sklearn-style binning."""
-    factor = 10**scale
     b = F.least(
         F.floor(F.col(score_col) * F.lit(n_bins)).cast("int"),
         F.lit(n_bins - 1),
@@ -194,11 +192,7 @@ def reliability_bins(
         .agg(
             F.count("*").alias("n"),
             (
-                F.sum(
-                    F.floor(F.col(score_col) * F.lit(factor)).cast("long")
-                ).cast("double")
-                / F.lit(float(factor))
-                / F.count("*").cast("double")
+                scaled_sum(score_col, scale) / F.count("*").cast("double")
             ).alias("mean_score"),
             (
                 F.sum(F.col(label_col).cast("bigint")).cast("double")

@@ -46,14 +46,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructType
 
 from datalake_backend_spark.core import onetask
-from datalake_backend_spark.core.materialize import checkpoint, parts_for, pin, scope
-
-#: target rows per partition for right-sized loop-invariant frames —
-#: the same ~1M-rows heuristic the connected-components loop uses
-#: (datapipe/dedup.py): graphs derived from a corpus are typically
-#: orders of magnitude smaller than the corpus, and every iteration
-#: pays the cached frame's task count as fixed overhead.
-_ROWS_PER_PART = 1_000_000
+from datalake_backend_spark.core.materialize import (
+    LOOP_ROWS_PER_PART,
+    checkpoint,
+    parts_for,
+    pin,
+    scope,
+)
 
 
 def _right_size(df: DataFrame, key: str, n: int | None = None) -> DataFrame:
@@ -62,14 +61,14 @@ def _right_size(df: DataFrame, key: str, n: int | None = None) -> DataFrame:
     (materializing the cache — the loop's first iteration would pay
     that anyway), and if the frame is far smaller than its inherited
     partition count, pin it again hash-clustered on ``key`` at
-    ~``_ROWS_PER_PART`` rows per partition. Every per-iteration stage
+    ~``LOOP_ROWS_PER_PART`` rows per partition. Every per-iteration stage
     that maps over the cache then runs |parts| tasks instead of the
     inherited count. No-op at real data sizes (:func:`parts_for`). A
     caller that has already counted ``df`` passes the count as ``n``."""
     if n is None:
         n = onetask.count_rows(df)
     cur = df.rdd.getNumPartitions()
-    parts = parts_for(n, cur, _ROWS_PER_PART)
+    parts = parts_for(n, cur, LOOP_ROWS_PER_PART)
     if parts >= cur:
         return df
     return pin(df.repartition(parts, key), "graph.sized", eager=True)
@@ -186,8 +185,8 @@ def pagerank(
     # only by the per-iteration node-keyed joins, and every iteration
     # pays its cached partition count as fixed task overhead. The
     # sizing count doubles as the cache materializer; no-op at real
-    # scale by construction (n // _ROWS_PER_PART exceeds the inherited
-    # partition count).
+    # scale by construction (n // LOOP_ROWS_PER_PART exceeds the
+    # inherited partition count).
     nodes = _right_size(
         pin(
             edges.select(

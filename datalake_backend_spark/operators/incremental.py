@@ -20,13 +20,15 @@ an exactly-once incrementally-maintained gold zone.
 Exactness: count/sum/min/max merge losslessly. Sums accumulate in
 DECIMAL(18,4) so the merged result is bit-identical to a single-pass
 aggregate regardless of batch split — the cross-engine float rule the
-rest of the repo uses (queries.py module docstring).
+rest of the repo uses (``core/exact.py``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from datalake_backend_spark.operators.ranking import two_phase_top_k
 
 
 def rollup_state(
@@ -135,6 +137,33 @@ def finalize_bitmap(state: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
+def kmv_minima(
+    df: DataFrame, keys: list[str], id_col: str, k: int, buckets: int
+) -> DataFrame:
+    """Per key, the ``k`` smallest DISTINCT portable-md5 hashes ``_h``
+    of ``id_col``, one row each — the two-phase top-k
+    (``ranking.two_phase_top_k``) over ``buckets`` hash buckets, so a
+    billion-distinct key never sorts through one task."""
+    from datalake_backend_spark.datapipe.dedup import portable_hash60
+
+    dh = df.select(
+        *keys, portable_hash60(F.col(id_col).cast("string")).alias("_h")
+    ).distinct()
+    return two_phase_top_k(
+        dh, keys, F.pmod(F.col("_h"), F.lit(buckets)), [F.col("_h")], k
+    )
+
+
+def kmv_estimate(n_kept: Column, kth_hash: Column, k: int) -> Column:
+    """The KMV distinct-count estimate ``(k−1) · 2^60 / h_k``
+    (Bar-Yossef et al. 2002) from the kept count and the k-th smallest
+    hash; a key with fewer than k distinct values is counted exactly."""
+    numerator = float((k - 1) * (1 << 60))
+    return F.when(n_kept < k, n_kept.cast("double")).otherwise(
+        F.lit(numerator) / kth_hash.cast("double")
+    )
+
+
 def kmv_state(
     df: DataFrame,
     keys: list[str],
@@ -150,25 +179,11 @@ def kmv_state(
     the state is idempotent / commutative / associative like bit_or,
     at a FIXED k·8-byte budget per key no matter the cardinality.
 
-    The batch fold uses the same skew-safe two-phase rank as
-    ``distributions.kmv_distinct`` (whose finalize this state must
+    The batch fold is :func:`kmv_minima`, the same as
+    ``distributions.kmv_distinct``'s (whose finalize this state must
     reproduce bit-for-bit); only the ≤ k survivors per key collect
     into the array."""
-    from datalake_backend_spark.datapipe.dedup import portable_hash60
-
-    dh = df.select(
-        *keys, portable_hash60(F.col(id_col).cast("string")).alias("_h")
-    ).distinct()
-    bucket = F.pmod(F.col("_h"), F.lit(buckets))
-    w1 = Window.partitionBy(*keys, bucket).orderBy("_h")
-    w2 = Window.partitionBy(*keys).orderBy("_h")
-    topk = (
-        dh.withColumn("_rn1", F.row_number().over(w1))
-        .where(F.col("_rn1") <= k)
-        .withColumn("_rn", F.row_number().over(w2))
-        .where(F.col("_rn") <= k)
-    )
-    return topk.groupBy(*keys).agg(
+    return kmv_minima(df, keys, id_col, k, buckets).groupBy(*keys).agg(
         F.array_sort(F.collect_list("_h")).alias("hashes")
     )
 
@@ -200,13 +215,9 @@ def finalize_kmv(state: DataFrame, keys: list[str], k: int = 256) -> DataFrame:
     produce the same bytes."""
     n_kept = F.size("hashes").cast("long")
     kth = F.element_at(F.col("hashes"), F.size("hashes"))
-    numerator = float((k - 1) * (1 << 60))
-    est = F.when(n_kept < k, n_kept.cast("double")).otherwise(
-        F.lit(numerator) / kth.cast("double")
-    )
     return state.select(
         *keys,
         n_kept.alias("n_kept"),
         kth.alias("kth_hash"),
-        est.alias("estimate"),
+        kmv_estimate(n_kept, kth, k).alias("estimate"),
     )

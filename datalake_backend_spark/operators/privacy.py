@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from datalake_backend_spark.core.exact import fixed
+
 
 def _floor_div(num: str, den: int) -> F.Column:
     """Floor division of a BIGINT column by a positive literal.
@@ -41,7 +43,7 @@ def k_anonymity_classes(
     quasi-identifiers stay as-is. Returns one row per class with its
     size ``k_size``."""
     width = base_width_cents * (1 << level)
-    v = F.floor(F.col(numeric_col) * 100).cast("bigint")
+    v = fixed(numeric_col, 2)
     return (
         df.withColumn("_vc", v)
         .withColumn("bucket", _floor_div("_vc", width))
@@ -108,7 +110,7 @@ def l_diversity_classes(
     identifying the person — which is exactly what distinct
     l-diversity measures."""
     width = base_width_cents * (1 << level)
-    v = F.floor(F.col(numeric_col) * 100).cast("bigint")
+    v = fixed(numeric_col, 2)
     return (
         df.withColumn("_vc", v)
         .withColumn("bucket", _floor_div("_vc", width))
@@ -195,7 +197,7 @@ def t_closeness_classes(
     global value distribution onto the cells — no cross join, linear
     in distinct (class, value) pairs."""
     width = base_width_cents * (1 << level)
-    v = F.floor(F.col(numeric_col) * 100).cast("bigint")
+    v = fixed(numeric_col, 2)
     keyed = df.withColumn("_vc", v).withColumn(
         "bucket", _floor_div("_vc", width)
     )

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalake_backend_spark.core.exact import fixed
 from datalake_backend_spark.core.materialize import parts_for, pin
 
 # Bucket-count ceiling (round-12 ADVICE): the bucket assignment is a
@@ -55,11 +56,11 @@ _SAMPLE_PER_PARTITION = 64
 # Target rows per task when the kernel's cached input is read back: a
 # grouped frame far smaller than its inherited partition count pays
 # pure scheduling overhead on every branch that maps over the cache.
-# 100k/task (vs the graph loops' 1M) because the kernel's map sides do
-# real per-row work — bucket CASE tree + exchange serialization — and
-# over-coalescing serializes it (measured on r230's 594k-row rank
-# frame: 1M/task lost the win). Sizing only changes task counts,
-# never results.
+# 100k/task (vs the graph loops' ``materialize.LOOP_ROWS_PER_PART``)
+# because the kernel's map sides do real per-row work — bucket CASE
+# tree + exchange serialization — and over-coalescing serializes it
+# (measured on r230's 594k-row rank frame: 1M/task lost the win).
+# Sizing only changes task counts, never results.
 _ROWS_PER_PART = 100_000
 
 
@@ -404,6 +405,31 @@ def keyed_running_sum(
     )
 
 
+def two_phase_top_k(
+    df: DataFrame,
+    keys: list[str | Column],
+    bucket: Column,
+    order: list[Column],
+    k: int,
+) -> DataFrame:
+    """The first ``k`` rows per ``keys`` in ``order`` (a total order),
+    skew-safe: a single ``row_number`` window over a hot key puts the
+    whole key in one task, so phase 1 ranks within (keys, ``bucket``)
+    — ``bucket`` is a hash of the row, partitions ≤ key/#buckets — and
+    phase 2 re-ranks only the ≤ k·#buckets phase-1 survivors. A key's
+    top k is always contained in the union of its buckets' top k's, so
+    the result equals the single-window form a SQL twin uses."""
+    w1 = Window.partitionBy(*keys, bucket).orderBy(*order)
+    w2 = Window.partitionBy(*keys).orderBy(*order)
+    return (
+        df.withColumn("_rn1", F.row_number().over(w1))
+        .where(F.col("_rn1") <= k)
+        .withColumn("_rn", F.row_number().over(w2))
+        .where(F.col("_rn") <= k)
+        .drop("_rn1", "_rn")
+    )
+
+
 def global_running_sum(
     df: DataFrame,
     order_cols: list[str],
@@ -523,9 +549,7 @@ def rfm_segments(
         .agg(
             F.max(ts_col).alias("_last"),
             F.count("*").alias("frequency"),
-            F.sum(
-                F.floor(F.col(value_col) * F.lit(10**scale)).cast("bigint")
-            ).alias("monetary_scaled"),
+            F.sum(fixed(value_col, scale)).alias("monetary_scaled"),
         )
         .crossJoin(F.broadcast(anchor))
         .select(

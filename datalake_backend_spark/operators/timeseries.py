@@ -17,6 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalake_backend_spark.core.exact import (
+    DEC,
+    fixed,
+    moment_sums,
+    scaled_sum,
+    unscale,
+)
 from datalake_backend_spark.core.materialize import pin
 
 #: supported granularities, finest → coarsest (date_trunc units)
@@ -288,7 +295,7 @@ def rolling_robust_anomaly(
         .orderBy(*order)
         .rowsBetween(-window, -1)
     )
-    v = F.floor(F.col(value_col) * scale).cast("bigint")
+    v = fixed(value_col, factor=scale)
     out = df.withColumn("v_scaled", v).withColumn(
         "_win", F.array_sort(F.collect_list("v_scaled").over(w))
     )
@@ -345,11 +352,11 @@ def time_weighted_avg(
     us = F.unix_micros(F.col(ts_col))
     nxt = F.lead(us).over(w)
     dt = (nxt - us).alias("_dt")
-    v = F.floor(F.col(value_col) * F.lit(10**scale)).cast("decimal(38,0)")
+    v = fixed(value_col, scale).cast(DEC)
     stepped = df.select(
         *keys,
         us.alias("_us"),
-        (v * (nxt - us).cast("decimal(38,0)")).alias("_wv"),
+        (v * (nxt - us).cast(DEC)).alias("_wv"),
         (nxt - us).alias("_dt"),
     )
     return (
@@ -397,7 +404,7 @@ def cusum_stats(
     ``max_at_us`` (timestamp of the peak, earliest on ties — pinned by
     a rank over (S desc, ts asc, tiebreak)), and
     ``final_cusum_scaled``."""
-    v = F.floor(F.col(value_col) * F.lit(10**scale)).cast("long")
+    v = fixed(value_col, scale)
     order = [F.col(ts_col)] + [F.col(c) for c in (tiebreak or [])]
     wk = Window.partitionBy(*keys)
     wcum = wk.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
@@ -466,8 +473,7 @@ def seasonal_index(
     else:
         raise ValueError("period must be 'dow' or 'hour'")
     keys = keys or []
-    factor = 10**scale
-    scaled = F.floor(F.col(value_col) * factor).cast("bigint")
+    scaled = fixed(value_col, scale)
     per_bucket = df.select(
         *keys, bucket, scaled.alias("_v")
     ).groupBy(*keys, "season").agg(
@@ -516,7 +522,7 @@ def decayed_sum(
     keys = keys or []
     age = F.datediff(F.lit(anchor).cast("date"), F.col(ts_col).cast("date"))
     age = F.least(F.greatest(age, F.lit(0)), F.lit(max_age_days))
-    s = F.floor(F.col(value_col) * F.lit(10**scale)).cast("bigint")
+    s = fixed(value_col, scale)
     # pyspark's shiftright() only takes a LITERAL bit count — a
     # per-row shift needs the SQL form
     d = df.withColumn("_age", age.cast("int")).withColumn("_s", s)
@@ -635,13 +641,12 @@ def period_over_period(
     quarter, year).
     """
     keys = keys or []
-    mult = 10**scale
     bucket = F.date_trunc(period, F.col(ts_col)).cast("date")
     agg = (
         df.select(
             *keys,
             bucket.alias("period_start"),
-            F.floor(F.col(value_col) * mult).cast("bigint").alias("_v"),
+            fixed(value_col, scale).alias("_v"),
         )
         .groupBy(*keys, "period_start")
         .agg(F.sum("_v").alias("value_scaled"))
@@ -734,7 +739,6 @@ def rolling_range_sum(
     per-key DAY rows (metadata-sized). All-BIGINT.
     """
     keys = keys or []
-    mult = 10**scale
     day = (F.unix_micros(F.col(ts_col)) / F.lit(86_400_000_000)).cast(
         "bigint"
     )
@@ -742,7 +746,7 @@ def rolling_range_sum(
         df.select(
             *keys,
             day.alias("day"),
-            F.floor(F.col(value_col) * mult).cast("bigint").alias("_v"),
+            fixed(value_col, scale).alias("_v"),
         )
         .groupBy(*keys, "day")
         .agg(F.sum("_v").alias("day_sum"))
@@ -891,14 +895,12 @@ def ohlc_bars(
     composite ``struct(ts, seq)`` ordering key, so ties at the same
     timestamp resolve deterministically by ``seq_col`` (any unique
     id). Turnover sums ``floor(value·10^scale)`` BIGINTs — exact and
-    engine-independent, the repo's scaled_sum idiom. Map-side
+    engine-independent (``core.exact.scaled_sum``'s recipe). Map-side
     partial aggregation applies (plain hash agg), so at 100 TB each
     executor pre-folds its ticks before the single shuffle on
     (keys, bucket)."""
     keys = keys or []
     order = F.struct(F.col(ts_col), F.col(seq_col))
-    factor = 10**scale
-    scaled = F.floor(F.col(value_col) * F.lit(factor)).cast("long")
     return df.groupBy(
         *keys, F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts")
     ).agg(
@@ -907,9 +909,7 @@ def ohlc_bars(
         F.min(value_col).alias("low"),
         F.max_by(F.col(value_col), order).alias("close"),
         F.count("*").alias("n_ticks"),
-        (F.sum(scaled).cast("double") / F.lit(float(factor))).alias(
-            "turnover"
-        ),
+        scaled_sum(value_col, scale).alias("turnover"),
     )
 
 
@@ -941,21 +941,17 @@ def max_drawdown(
     per-partition prefix idiom (``packing.py``) applies to both
     folds; keyed telemetry never needs it."""
     keys = keys or []
-    factor = 10**scale
     w = Window.partitionBy(*keys).orderBy(ts_col, seq_col)
     run = w.rowsBetween(Window.unboundedPreceding, 0)
-    scaled = F.floor(F.col(value_col) * F.lit(factor)).cast("long")
-    cum = df.withColumn("_cum", F.sum(scaled).over(run))
+    cum = df.withColumn("_cum", F.sum(fixed(value_col, scale)).over(run))
     peaked = cum.withColumn("_peak", F.max("_cum").over(run))
     return peaked.groupBy(*keys).agg(
-        (
-            F.max(F.col("_peak") - F.col("_cum")).cast("double")
-            / F.lit(float(factor))
-        ).alias("max_drawdown"),
-        (
-            F.max_by(F.col("_cum"), F.struct(F.col(ts_col), F.col(seq_col)))
-            .cast("double")
-            / F.lit(float(factor))
+        unscale(F.max(F.col("_peak") - F.col("_cum")), scale).alias(
+            "max_drawdown"
+        ),
+        unscale(
+            F.max_by(F.col("_cum"), F.struct(F.col(ts_col), F.col(seq_col))),
+            scale,
         ).alias("final_value"),
         F.sum(
             F.when(F.col("_cum") == F.col("_peak"), 1).otherwise(0)
@@ -978,8 +974,9 @@ def autocorrelation(
     bucket with the bucket ``lag`` periods earlier (pairs form only
     where BOTH exist — missing buckets drop the pair, the standard
     sample-ACF-on-observed convention), then Pearson over the integer
-    pairs via the r123 closed form — decimal(38,0) moment sums, one
-    shared double expression, bit-exact on any engine.
+    pairs: the five moment sums are ``core.exact.moment_sums`` over the
+    integer series (DECIMAL(38,0)), combined in one shared double
+    expression, bit-exact on any engine.
 
     Scale shape: one hash aggregate collapses raw rows to the series;
     each lag is ONE equi-join of the series with itself on the
@@ -1007,21 +1004,15 @@ def autocorrelation(
             f"got {bucket!r}"
         )
     shift = bucket_shift[bucket]
-    factor = 10**scale
     # pinned (round-15 scan audit): every lag consumes the
     # series TWICE (shifted + current side of the self-join), so N
     # lags re-ran the raw-data groupBy 2·N times without the cache
     daily = pin(
         df.groupBy(
             *keys, F.to_date(F.date_trunc(bucket, F.col(ts_col))).alias("_d")
-        ).agg(
-            F.sum(
-                F.floor(F.col(value_col) * F.lit(factor)).cast("long")
-            ).alias("_v")
-        ),
+        ).agg(F.sum(fixed(value_col, scale)).alias("_v")),
         "timeseries.series",
     )
-    dec = "decimal(38,0)"
     outs = []
     for lag in lags:
         prev = daily.select(
@@ -1035,26 +1026,20 @@ def autocorrelation(
             .groupBy(*keys)
             .agg(
                 F.count("*").alias("n_pairs"),
-                F.sum(F.col("_x").cast(dec)).alias("sx"),
-                F.sum(F.col("_y").cast(dec)).alias("sy"),
-                F.sum(F.col("_x").cast(dec) * F.col("_y")).alias("sxy"),
-                F.sum(F.col("_x").cast(dec) * F.col("_x")).alias("sxx"),
-                F.sum(F.col("_y").cast(dec) * F.col("_y")).alias("syy"),
+                *moment_sums(F.col("_x"), F.col("_y")),
             )
         )
-        # combine in DOUBLES from per-moment casts (exact_corr's
-        # discipline), NOT in decimal with one giant final cast: a
+        # combine in DOUBLES from per-moment casts, NOT in decimal
+        # with a cast per final factor (spearman_rho's form): a
         # >2^64 exact integer converts to double differently across
         # engines (DuckDB's HUGEINT→double composes two roundings),
         # observed as a 1-ulp acf drift at sf0.1. Each moment must
         # stay within int64 for the casts to be correctly rounded on
         # both sides — pick ``scale`` so Σ(v²·10^2s) < 2^63.
         n = F.col("n_pairs").cast("double")
-        sx = F.col("sx").cast("double")
-        sy = F.col("sy").cast("double")
-        sxy = F.col("sxy").cast("double")
-        sxx = F.col("sxx").cast("double")
-        syy = F.col("syy").cast("double")
+        sx, sy, sxy, sxx, syy = (
+            F.col(c).cast("double") for c in ("_sx", "_sy", "_sxy", "_sxx", "_syy")
+        )
         num = n * sxy - sx * sy
         den = F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)
         outs.append(

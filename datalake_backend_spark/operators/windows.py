@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalake_backend_spark.core.exact import fixed, unscale
+
 
 def _w(entity_cols: list[str], order_cols: list[str]):
     return Window.partitionBy(*entity_cols).orderBy(*order_cols)
@@ -253,11 +255,10 @@ def cohort_ltv(
     period = F.expr(
         f"unix_micros({ts_col}) div {86_400_000_000 * bucket_days}"
     )
-    factor = 10**scale
     ev = df.select(
         F.col(user_col).alias("_u"),
         period.cast("long").alias("_p"),
-        F.floor(F.col(value_col) * F.lit(factor)).cast("long").alias("_v"),
+        fixed(value_col, scale).alias("_v"),
     )
     first = ev.groupBy("_u").agg(F.min("_p").alias("_cohort"))
     sized = first.groupBy("_cohort").agg(F.count("*").alias("n_users"))
@@ -279,9 +280,7 @@ def cohort_ltv(
             "age",
             "n_users",
             (
-                F.col("_cum").cast("double")
-                / F.lit(float(factor))
-                / F.col("n_users").cast("double")
+                unscale("_cum", scale) / F.col("n_users").cast("double")
             ).alias("ltv_per_user"),
         )
     )

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from datalake_backend_spark.config import _ship_package
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("last_occupied", T.BooleanType()),
@@ -103,7 +105,10 @@ def _track_slot(
 
 def track_slot_state(stream: DataFrame, slot_col: str = "slot_id") -> DataFrame:
     """Apply the stateful tracker to a streaming long table with columns
-    (slot_id, timestamp_sec, occupied). Update output mode."""
+    (slot_id, timestamp_sec, occupied). Update output mode. The
+    package ships to the session's Python workers first: they import
+    this module to run the tracker."""
+    _ship_package(stream.sparkSession)
     return stream.groupBy(slot_col).applyInPandasWithState(
         _track_slot,
         outputStructType=OUTPUT_SCHEMA,

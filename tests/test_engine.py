@@ -298,7 +298,9 @@ def test_python_worker_rows_run_outside_the_repository(tmp_path, session):
     ``mapInPandas``) works from a working directory outside the
     repository, with the package on the driver's ``sys.path`` only, not
     on ``PYTHONPATH`` — under ``get_spark()`` and under the plain
-    session the driver contract passes to ``__spark_entry__``."""
+    session the driver contract passes to ``__spark_entry__``. A media
+    operator over a frame that never went through ``readers.table()``
+    runs first, so the map ships the package itself."""
     import subprocess
     import sys
 
@@ -308,7 +310,11 @@ def test_python_worker_rows_run_outside_the_repository(tmp_path, session):
         "import sys",
         f"sys.path.insert(0, {repo!r})",
         "import __spark_entry__",
+        "from datalake_backend_spark.datapipe.multimodal import (",
+        "    image_stats, synthetic_image_table)",
         session,
+        'docs = spark.range(3).withColumnRenamed("id", "doc_id")',
+        "print(image_stats(synthetic_image_table(docs)).count())",
         f'print(__spark_entry__.queries()["r49_media_dedup"](spark, {SF_DIR!r}).count())',
         "spark.stop()",
     ]))
@@ -323,7 +329,8 @@ def test_python_worker_rows_run_outside_the_repository(tmp_path, session):
         capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    assert int(out.stdout.strip().splitlines()[-1]) > 0
+    n_images, n_r49 = map(int, out.stdout.strip().splitlines()[-2:])
+    assert n_images == 3 and n_r49 > 0
 
 
 def test_versioned_gold_upload_log(engine, spark, tmp_path):
